@@ -770,21 +770,6 @@ def _jaccard_for_pairs_sets(
     )
 
 
-def jaccard_for_pairs(
-    pairs: DataFrame, sh: DataFrame, threshold: float
-) -> DataFrame:
-    """Exact Jaccard computed only for the given (doc_a, doc_b) pairs,
-    from the exploded (doc_id, sh) form — folds to SETS (collect_set, so
-    duplicate gram rows are harmless), then verifies via
-    ``_jaccard_for_pairs_sets``."""
-    docsets = (
-        sh.groupBy("doc_id")
-        .agg(F.collect_set("sh").alias("shs"))
-        .withColumn("n_sh", F.size("shs"))
-    )
-    return _jaccard_for_pairs_sets(pairs, docsets, threshold)
-
-
 def incremental_dedup(
     corpus: DataFrame,
     batch: DataFrame,

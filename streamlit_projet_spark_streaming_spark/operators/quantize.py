@@ -535,12 +535,12 @@ def _lloyd_partials_mapper(n_sub: int):
             )  # (n, D)
             n, d = x.shape
             # Ragged batches must fail loudly: the fused SUM(cnt)-per-dim
-            # count downstream silently skews if dims ever vary (ADVICE
-            # r10); np.stack already rejects in-batch raggedness, this
-            # pins batch-vs-codebook agreement.
-            assert d == cb.shape[1], (
-                f"code dim {d} != codebook dim {cb.shape[1]}"
-            )
+            # count downstream silently skews if dims ever vary; np.stack
+            # already rejects in-batch raggedness, this pins
+            # batch-vs-codebook agreement (a real check, not an assert
+            # that ``python -O`` strips).
+            if d != cb.shape[1]:
+                raise ValueError(f"code dim {d} != codebook dim {cb.shape[1]}")
             jn, sub = cb.shape[0], d // n_sub
             best = np.argmin(_sub_dists(x, cb, n_sub), axis=1)  # (n, n_sub)
             xs = x.reshape(n, n_sub, sub)

@@ -517,12 +517,14 @@ def _gk_partials_mapper():
             )
             u = _gk_units(pdf["embedding"])
             # Ragged batches must fail loudly: the fused SUM(cnt)-per-dim
-            # count downstream silently skews if dims ever vary (ADVICE
-            # r10); np.stack already rejects in-batch raggedness, this
-            # pins batch-vs-codebook agreement.
-            assert u.shape[1] == cb.shape[1], (
-                f"embedding dim {u.shape[1]} != codebook dim {cb.shape[1]}"
-            )
+            # count downstream silently skews if dims ever vary; np.stack
+            # already rejects in-batch raggedness, this pins
+            # batch-vs-codebook agreement (a real check, not an assert
+            # that ``python -O`` strips).
+            if u.shape[1] != cb.shape[1]:
+                raise ValueError(
+                    f"embedding dim {u.shape[1]} != codebook dim {cb.shape[1]}"
+                )
             best = np.argmin(_gk_d2(u, cb), axis=1)
             ui = u.astype(np.int64)
             out = {"j": [], "cnt": [], "sums": []}

@@ -13,8 +13,9 @@ Differences from the reference, by design (SURVEY.md §3/§4):
 - every aggregation runs in Spark over the silver table; pandas exists
   only at the chart boundary (``.toPandas()`` on chart-sized frames),
   where the reference pulled 10k raw rows client-side;
-- the four preference views read the gold tables maintained by the
-  streaming layer (incremental cube) instead of re-querying a warehouse;
+- the four preference views read the gold tables the streaming layer
+  recomputes in full on each trigger (``consumer.refresh_gold``) instead
+  of re-querying a warehouse;
 - the refresh loop is the same poll-and-rerun shape with the reference's
   5-60 s slider (default 15 s, ``streamlit_app.py:307``).
 """

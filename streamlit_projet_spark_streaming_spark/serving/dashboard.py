@@ -179,15 +179,6 @@ def latest_orders(
     )
 
 
-def filter_options(silver: DataFrame) -> dict[str, DataFrame]:
-    """Distinct values for the UI multiselects [D18]
-    (``streamlit_app.py:982-992``)."""
-    return {
-        "categories": silver.select("category").distinct().orderBy("category"),
-        "locations": silver.select("location").distinct().orderBy("location"),
-    }
-
-
 def load_gold_snapshot(
     spark,
     gold_dir: str,

@@ -1,6 +1,6 @@
 """Batch sink layer: partitioned/sorted gold-table writes and packed
 training-shard export. Streaming sinks live in ``streaming/`` (consumer
-checkpointed append, incremental merge-on-write)."""
+checkpointed append, gold refresh)."""
 
 from .writer import write_packed_shards, write_partitioned
 

@@ -35,9 +35,6 @@ TABLES = (
     "embeddings",
 )
 
-#: Small dimension tables — always broadcast-join these against facts.
-SMALL_DIMS = frozenset({"region", "nation", "customer", "supplier", "part"})
-
 #: Every timestamp column the fixtures carry, by table. The ns-long and
 #: NTZ normalizations below apply to ALL of them — the driver has already
 #: switched encodings once (r3→r4: events.ts AND the two date columns

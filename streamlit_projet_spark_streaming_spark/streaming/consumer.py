@@ -11,7 +11,7 @@ rows by polling (``:1024-1026``). Spark realization:
         → stateless 10-column enrichment chain                  [H3]
         → writeStream file sink, append + checkpoint            [H4]
   silver → readStream → foreachBatch: recompute gold tables     [H5]
-  (4 shopping views + hourly tumbling series with watermark     [H6/H7])
+  (4 shopping views + hourly series, full recompute            [H6/H7])
 
 Two chained queries instead of one double-duty query: the silver writer
 keeps the file sink's exactly-once guarantee (sink-managed file manifest),
@@ -26,14 +26,15 @@ Scale notes:
   (column-pruned parquet scan) and the group-by cardinality (buckets ×
   categories) is tiny, so the recompute cost is one scan — the same cost
   BigQuery paid per dashboard poll.
-- The hourly series uses a watermark so a TRUE incremental streaming
-  aggregation is also provided (``hourly_series_stream``) with bounded
-  state [H7].
+- ``refresh_gold`` is the only writer of gold. Each table is written to a
+  sibling staging directory and renamed over the live one, so a polling
+  reader sees the previous or the next table, never a deleted one.
 """
 
 from __future__ import annotations
 
 import os
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -60,24 +61,15 @@ def start_ingest(
     max_files_per_trigger: int = 10,
     available_now: bool = False,
     processing_time: str = "15 seconds",
-    source_format: str = "json",
 ) -> StreamingQuery:
-    """File-source micro-batch ingest → enrich → append to silver parquet.
+    """File-source micro-batch ingest of JSON-lines files → enrich → append
+    to silver parquet.
 
     ``available_now=True`` drains all pending files then stops (test mode);
     otherwise a 15 s processingTime trigger mirrors the reference's default
     refresh interval (``streamlit_app.py:307``).
-
-    ``source_format``: ``"json"`` (JSON-lines, the reference Consumer's
-    implied format) or ``"csv"`` (header row, standard quoting) — the
-    enrichment/sink pipeline is format-agnostic downstream of the reader,
-    which is the point: producers choose the drop format, the engine
-    contract (explicit schema, PERMISSIVE malformed handling, ingestion
-    timestamp) is identical.
     """
-    if source_format not in ("json", "csv"):
-        raise ValueError(f"source_format must be json or csv, got {source_format!r}")
-    reader = (
+    raw = (
         spark.readStream.schema(RAW_ORDER_SCHEMA)
         .option("maxFilesPerTrigger", max_files_per_trigger)
         .option("timestampFormat", "yyyy-MM-dd'T'HH:mm:ss.SSSSSS")
@@ -86,11 +78,8 @@ def start_ingest(
         # millisecond-precision ISO timestamps (e.g. Python isoformat()
         # with microsecond == 0) do not become malformed rows
         .option("enableDateTimeParsingFallback", "true")
+        .json(input_dir)
     )
-    if source_format == "csv":
-        raw = reader.option("header", "true").csv(input_dir)
-    else:
-        raw = reader.json(input_dir)
     # PERMISSIVE mode turns a malformed line into an all-NULL row; drop
     # those instead of letting the coalesce below stamp a fresh
     # processed_time onto an empty record. (At prod scale this filter
@@ -122,8 +111,8 @@ def refresh_gold(spark: SparkSession, silver_dir: str, gold_dir: str) -> None:
 
     Full-table semantics by design — identical results to the reference's
     logical views at any point in time. Each gold table is tiny (bounded by
-    group cardinality) so the overwrite is cheap and atomic enough for a
-    polling reader (per-table directory swap).
+    group cardinality), so rewriting all of them per trigger is cheap; each
+    is swapped in whole by :func:`_swap_in`.
     """
     silver = spark.read.schema(enrich_schema(spark)).parquet(silver_dir)
     outputs: dict[str, DataFrame] = {
@@ -134,7 +123,23 @@ def refresh_gold(spark: SparkSession, silver_dir: str, gold_dir: str) -> None:
         "hourly_series": hourly_series_batch(silver),
     }
     for name, df in outputs.items():
-        df.write.mode("overwrite").parquet(os.path.join(gold_dir, name))
+        _swap_in(df, os.path.join(gold_dir, name))
+
+
+def _swap_in(df: DataFrame, path: str) -> None:
+    """Write ``df`` to a sibling staging directory, then rename it over
+    ``path``: a reader finds the old table or the new one, never a table
+    being deleted or half rewritten (plain parquet has no atomic commit;
+    the live directory is missing only between the two renames). A crash
+    between them leaves ``path`` absent until the next refresh, which
+    rewrites every table, so no recovery step is needed."""
+    staging, old = path + ".staging", path + ".old"
+    df.write.mode("overwrite").parquet(staging)
+    shutil.rmtree(old, ignore_errors=True)
+    if os.path.isdir(path):
+        os.rename(path, old)
+    os.rename(staging, path)
+    shutil.rmtree(old, ignore_errors=True)
 
 
 def enrich_schema(spark: SparkSession):
@@ -179,8 +184,9 @@ def start_gold_refresh(
 
 
 def hourly_series_batch(silver: DataFrame) -> DataFrame:
-    """Hourly order-count + revenue series [G2/H6], batch form
-    (``streamlit_app.py:374-379``)."""
+    """Hourly order-count + revenue series [G2/H6/H7]
+    (``streamlit_app.py:374-379``), recomputed over all of silver by each
+    gold refresh, so a late row lands in its hour at the next trigger."""
     return (
         silver.groupBy(
             F.date_trunc("hour", F.col("processed_time")).alias("hour")
@@ -190,24 +196,4 @@ def hourly_series_batch(silver: DataFrame) -> DataFrame:
             F.round(F.sum("final_amount_usd"), 4).alias("revenue"),
         )
         .orderBy("hour")
-    )
-
-
-def hourly_series_stream(silver_stream: DataFrame) -> DataFrame:
-    """TRUE incremental hourly aggregation [H6/H7]: tumbling window +
-    watermark — the scale path when full recompute is no longer
-    acceptable. The 1-hour watermark tolerates the reference's implied
-    lateness (poll interval + cache TTL ≪ 1 h) and bounds state in
-    append/update sinks; note that the ``complete``-mode consumer
-    (``incremental.start_incremental_hourly``) retains one state row per
-    distinct hour ever seen — see its docstring for the retention
-    trade-off."""
-    return (
-        silver_stream.withWatermark("processed_time", "1 hour")
-        .groupBy(F.window(F.col("processed_time"), "1 hour").alias("w"))
-        .agg(
-            F.count(F.lit(1)).alias("n_orders"),
-            F.round(F.sum("final_amount_usd"), 4).alias("revenue"),
-        )
-        .select(F.col("w.start").alias("hour"), "n_orders", "revenue")
     )

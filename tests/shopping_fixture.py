@@ -2,7 +2,6 @@
 
 from __future__ import annotations
 
-import csv
 import json
 import os
 
@@ -12,31 +11,6 @@ from streamlit_projet_spark_streaming_spark.sources.shopping import RAW_ORDER_SC
 def raw_df(spark, n_rows: int = 5000, seed: int = 42):
     rows = generate_raw_orders(n_rows, seed)
     return spark.createDataFrame(rows, RAW_ORDER_SCHEMA)
-
-
-def write_csv_chunks(rows: list[dict], out_dir: str, n_chunks: int = 5) -> list[str]:
-    """Replay files for the CSV file-source stream: header + standard
-    quoting, timestamps in the same format the JSON chunks use."""
-    os.makedirs(out_dir, exist_ok=True)
-    paths = []
-    cols = [f.name for f in RAW_ORDER_SCHEMA.fields]
-    per = (len(rows) + n_chunks - 1) // n_chunks
-    for c in range(n_chunks):
-        chunk = rows[c * per : (c + 1) * per]
-        if not chunk:
-            break
-        path = os.path.join(out_dir, f"orders_{c:04d}.csv")
-        with open(path, "w", newline="") as f:
-            w = csv.DictWriter(f, fieldnames=cols)
-            w.writeheader()
-            for r in chunk:
-                rec = dict(r)
-                rec["processed_time"] = r["processed_time"].strftime(
-                    "%Y-%m-%dT%H:%M:%S.%f"
-                )
-                w.writerow(rec)
-        paths.append(path)
-    return paths
 
 
 def write_json_chunks(rows: list[dict], out_dir: str, n_chunks: int = 5) -> list[str]:

@@ -297,3 +297,14 @@ def test_hamming_topk_finds_exact_duplicate_first(spark):
     out = hamming_topk(emb.unionByName(dup), F.col("vec_id") == 3, k=3)
     top = {r["rnk"]: r for r in out.collect()}
     assert top[1]["neighbor_id"] == 100000 and top[1]["hamming"] == 0
+
+
+def test_lloyd_partials_rejects_ragged_batch():
+    """Codes whose dimension differs from the codebook's raise ValueError,
+    which survives ``python -O`` (a bare assert would not)."""
+    import pandas as pd
+
+    cb = [[0.0, 0.0, 0.0, 0.0], [1.0, 1.0, 1.0, 1.0]]
+    pdf = pd.DataFrame({"cb": [cb, cb], "codes": [[1, 2], [3, 4]]})
+    with pytest.raises(ValueError, match="code dim 2 != codebook dim 4"):
+        next(quantize._lloyd_partials_mapper(n_sub=2)(iter([pdf])))

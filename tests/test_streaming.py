@@ -1,7 +1,8 @@
 """Streaming-layer tests (SURVEY.md §5.3): stream/batch enrichment parity,
-gold refresh equivalence, incremental hourly window parity."""
+gold refresh equivalence, stop/restart on the same checkpoint."""
 
 import os
+import time
 
 import pytest
 
@@ -11,7 +12,7 @@ from streamlit_projet_spark_streaming_spark.sources.shopping import generate_raw
 from streamlit_projet_spark_streaming_spark.streaming import consumer as C
 
 from .oracle_harness import canonical_rows
-from .shopping_fixture import raw_df, write_csv_chunks, write_json_chunks
+from .shopping_fixture import raw_df, write_json_chunks
 
 N_ROWS = 3000
 
@@ -59,36 +60,6 @@ def test_stream_batch_enrichment_parity(spark, drained):
     assert a == b
 
 
-def test_csv_ingest_matches_json_ingest(spark, tmp_path):
-    """Source-format coverage: the SAME rows dropped as CSV produce the
-    SAME silver table as batch enrichment (and therefore as the JSON
-    path, which test_stream_batch_enrichment_parity pins to batch) —
-    the pipeline is format-agnostic downstream of the reader."""
-    n = 600
-    rows = generate_raw_orders(n, seed=42)
-    input_dir, silver_dir, ckpt = (
-        str(tmp_path / "in"), str(tmp_path / "silver"), str(tmp_path / "ckpt")
-    )
-    write_csv_chunks(rows, input_dir, n_chunks=3)
-    q = C.start_ingest(
-        spark, input_dir, silver_dir, ckpt,
-        max_files_per_trigger=2, available_now=True, source_format="csv",
-    )
-    q.awaitTermination(120)
-    assert not q.isActive
-    silver = spark.read.schema(C.enrich_schema(spark)).parquet(silver_dir)
-    batch = enrich(raw_df(spark, n))
-    assert canonical_rows(silver.toPandas()) == canonical_rows(batch.toPandas())
-
-
-def test_ingest_rejects_unknown_format(spark, tmp_path):
-    with pytest.raises(ValueError, match="source_format"):
-        C.start_ingest(
-            spark, str(tmp_path), str(tmp_path), str(tmp_path),
-            source_format="xml",
-        )
-
-
 def test_gold_refresh_matches_batch(spark, drained):
     """Gold tables after stream drain == batch recomputation over silver."""
     q = C.start_gold_refresh(
@@ -101,7 +72,11 @@ def test_gold_refresh_matches_batch(spark, drained):
     q.awaitTermination(120)
     assert not q.isActive
 
-    silver = spark.read.schema(C.enrich_schema(spark)).parquet(drained["silver"])
+    _assert_gold_matches_batch(spark, drained["silver"], drained["gold"])
+
+
+def _assert_gold_matches_batch(spark, silver_dir, gold_dir):
+    silver = spark.read.schema(C.enrich_schema(spark)).parquet(silver_dir)
     expect = {
         "v_age_preferences": SV.v_age_preferences(silver),
         "v_gender_preferences": SV.v_gender_preferences(silver),
@@ -110,25 +85,63 @@ def test_gold_refresh_matches_batch(spark, drained):
         "hourly_series": C.hourly_series_batch(silver),
     }
     for name, edf in expect.items():
-        gold = spark.read.parquet(os.path.join(drained["gold"], name))
+        gold = spark.read.parquet(os.path.join(gold_dir, name))
         assert canonical_rows(gold.toPandas()) == canonical_rows(edf.toPandas()), name
+    # the staging and backup directories of the swap are gone
+    assert sorted(os.listdir(gold_dir)) == sorted(expect)
 
 
-def test_incremental_hourly_window_parity(spark, drained):
-    """True incremental windowed agg (watermark) == batch date_trunc agg."""
-    silver_stream = spark.readStream.schema(C.enrich_schema(spark)).parquet(
-        drained["silver"]
+def _stop_after_first_batch(q, timeout_s=120):
+    """Stop ``q`` once one micro-batch has run (only a batch that ran has
+    an addBatch time; gold's foreachBatch never reads its input, so its
+    numInputRows stays 0). The long processingTime trigger leaves ``q``
+    idle after that batch, so the stop lands between batches."""
+    deadline = time.monotonic() + timeout_s
+    while not any("addBatch" in p["durationMs"] for p in q.recentProgress):
+        assert q.isActive, q.exception()
+        assert time.monotonic() < deadline, "no batch within the timeout"
+        time.sleep(0.2)
+    q.stop()
+
+
+def test_stop_and_restart_on_same_checkpoint(spark, tmp_path):
+    """Ingest and gold refresh each run one batch, stop, and restart on
+    their checkpoints with availableNow: silver holds every valid input
+    row exactly once and gold equals the batch views over it."""
+    n = 800
+    dirs = {
+        k: str(tmp_path / k)
+        for k in ("input", "silver", "ckpt_ingest", "gold", "ckpt_gold")
+    }
+    paths = write_json_chunks(generate_raw_orders(n, seed=11), dirs["input"], n_chunks=4)
+    with open(paths[-1], "a") as f:
+        f.write("{not json\n")  # malformed: PERMISSIVE null row, filtered
+
+    def ingest(**trigger):
+        return C.start_ingest(
+            spark, dirs["input"], dirs["silver"], dirs["ckpt_ingest"],
+            max_files_per_trigger=1, **trigger,
+        )
+
+    def gold(**trigger):
+        return C.start_gold_refresh(
+            spark, dirs["silver"], dirs["gold"], dirs["ckpt_gold"], **trigger
+        )
+
+    def silver():
+        return spark.read.schema(C.enrich_schema(spark)).parquet(dirs["silver"])
+
+    _stop_after_first_batch(ingest(processing_time="1 hour"))
+    assert 0 < silver().count() < n  # one file of four
+    _stop_after_first_batch(gold(processing_time="1 hour"))
+    _assert_gold_matches_batch(spark, dirs["silver"], dirs["gold"])
+
+    for restart in (ingest, gold):
+        q = restart(available_now=True)
+        q.awaitTermination(120)
+        assert not q.isActive and q.exception() is None
+    assert silver().count() == n
+    assert canonical_rows(silver().toPandas()) == canonical_rows(
+        enrich(raw_df(spark, n, seed=11)).toPandas()
     )
-    agg = C.hourly_series_stream(silver_stream)
-    q = (
-        agg.writeStream.format("memory")
-        .queryName("hourly_inc")
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = spark.sql("SELECT * FROM hourly_inc")
-    silver = spark.read.schema(C.enrich_schema(spark)).parquet(drained["silver"])
-    expect = C.hourly_series_batch(silver)
-    assert canonical_rows(got.toPandas()) == canonical_rows(expect.toPandas())
+    _assert_gold_matches_batch(spark, dirs["silver"], dirs["gold"])

@@ -1,12 +1,12 @@
-"""Capture ``.explain("formatted")`` for registry queries into plans/<round>/.
+"""Capture ``.explain("formatted")`` for registry queries into a plans dir.
 
-Usage: python tools/explain_capture.py <suffix> <entry> [entry ...]
-       python tools/explain_capture.py before ivf_cell_stats ivf_maintenance_report
+Usage: python tools/explain_capture.py <out_dir> <suffix> <entry> [entry ...]
+       python tools/explain_capture.py plans/r12 before ivf_cell_stats ivf_maintenance_report
 
-The output round directory defaults to ``plans/r11`` and is overridable
-with ``$SPARK_GRAFT_PLANS_DIR`` (an absolute or repo-relative directory).
+``out_dir`` is required (absolute, or relative to the repo root), so a
+capture never overwrites an earlier round's plans by default.
 
-Writes plans/<round>/<entry>_<suffix>.txt with the formatted physical plan
+Writes <out_dir>/<entry>_<suffix>.txt with the formatted physical plan
 of the query as built (AQE initial plan — the judge checks plan claims
 against these files). Builds plans only; runs no actions beyond what plan
 construction itself triggers (the conditional-spread probe on scan-rooted
@@ -25,26 +25,22 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from streamlit_projet_spark_streaming_spark.registry import REGISTRY
 from streamlit_projet_spark_streaming_spark.session import get_spark
 
-_DEFAULT_ROUND_DIR = os.path.join("plans", "r11")
-
 
 def main() -> None:
-    if len(sys.argv) < 3:
+    if len(sys.argv) < 4:
         print(
-            "usage: python tools/explain_capture.py <suffix> <entry> [entry ...]\n"
-            "       (output dir: $SPARK_GRAFT_PLANS_DIR, default plans/r11)",
+            "usage: python tools/explain_capture.py <out_dir> <suffix> <entry> [entry ...]",
             file=sys.stderr,
         )
         raise SystemExit(2)
-    suffix = sys.argv[1]
-    names = sys.argv[2:]
+    out_dir, suffix = sys.argv[1], sys.argv[2]
+    names = sys.argv[3:]
     unknown = [n for n in names if n not in REGISTRY]
     if unknown:
         print(f"unknown registry entries: {unknown}", file=sys.stderr)
         raise SystemExit(2)
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     repo_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    out_dir = os.environ.get("SPARK_GRAFT_PLANS_DIR", _DEFAULT_ROUND_DIR)
     if not os.path.isabs(out_dir):
         out_dir = os.path.join(repo_root, out_dir)
     os.makedirs(out_dir, exist_ok=True)
