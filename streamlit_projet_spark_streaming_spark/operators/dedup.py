@@ -559,21 +559,18 @@ def minhash_signatures(
     n: int = MINHASH_NGRAM,
     num_hashes: int = MINHASH_NUM_HASHES,
     unit: str = "word",
-    portable: bool = True,
     grams: DataFrame | None = None,
 ) -> DataFrame:
     """MinHash signature per document: sig[i] = min over shingles of
     hᵢ(shingle).
 
-    ``portable=True`` (default): hᵢ = (Aᵢ·x₁ + Bᵢ·x₂ + Cᵢ) mod 2³¹−1 over
+    hᵢ = (Aᵢ·x₁ + Bᵢ·x₂ + Cᵢ) mod 2³¹−1 over
     two 28-bit md5 pieces of the shingle — a Carter–Wegman universal
     family whose values are bit-identical in DuckDB, so the driver oracle
     checks candidate generation itself (not just rows). The mod-p
     wraparound decorrelates the lanes (without it, every lane is a
     positive linear combination of (x₁,x₂) and tiny-x shingles win most
     lanes at once, which would inflate band collisions).
-    ``portable=False``: hᵢ = xxhash64(i, shingle) — one JVM hash per lane,
-    kept for benchmarking against the portable family.
 
     One groupBy computes all ``num_hashes`` minima as parallel codegen'd
     aggregates — a single shuffle regardless of signature width. min() is
@@ -584,60 +581,40 @@ def minhash_signatures(
     """
     if grams is None:
         grams = _grams(documents, n, unit)
-    if portable:
-        x1, x2 = md5_hash_pieces(F.col("sh"))
-        hashed = grams.select("doc_id", x1.alias("x1"), x2.alias("x2"))
-        aggs = [
-            F.min(
-                (F.lit(a) * F.col("x1") + F.lit(b) * F.col("x2") + F.lit(c))
-                % F.lit(MINHASH_P)
-            ).alias(f"h{i}")
-            for i, (a, b, c) in enumerate(minhash_constants(num_hashes))
-        ]
-        return hashed.groupBy("doc_id").agg(*aggs)
+    x1, x2 = md5_hash_pieces(F.col("sh"))
+    hashed = grams.select("doc_id", x1.alias("x1"), x2.alias("x2"))
     aggs = [
-        F.min(F.xxhash64(F.lit(i), F.col("sh"))).alias(f"h{i}")
-        for i in range(num_hashes)
+        F.min(
+            (F.lit(a) * F.col("x1") + F.lit(b) * F.col("x2") + F.lit(c))
+            % F.lit(MINHASH_P)
+        ).alias(f"h{i}")
+        for i, (a, b, c) in enumerate(minhash_constants(num_hashes))
     ]
-    return grams.groupBy("doc_id").agg(*aggs)
+    return hashed.groupBy("doc_id").agg(*aggs)
 
 
-def _band_buckets(
-    sig: DataFrame, num_hashes: int, bands: int, portable: bool
-) -> DataFrame:
+def _band_buckets(sig: DataFrame, num_hashes: int, bands: int) -> DataFrame:
     """LSH bucket rows (doc_id, band_id, band_hash) from a signature frame.
 
-    ``portable=True``: band digest = md5 of the comma-joined decimal lane
-    minima — DuckDB: md5(h0::VARCHAR || ',' || h1::VARCHAR || ...).
-    Long→string renders identically in both engines (no sign/zero-pad
-    drift). ``portable=False``: one xxhash64 per band (JVM-only)."""
+    Band digest = md5 of the comma-joined decimal lane minima — DuckDB:
+    md5(h0::VARCHAR || ',' || h1::VARCHAR || ...). Long→string renders
+    identically in both engines (no sign/zero-pad drift)."""
     rows_per_band = num_hashes // bands
-    if portable:
-        band_cols = [
-            F.struct(
-                F.lit(b).alias("band_id"),
-                F.md5(
-                    F.concat_ws(
-                        ",",
-                        *[
-                            F.col(f"h{b * rows_per_band + r}").cast("string")
-                            for r in range(rows_per_band)
-                        ],
-                    )
-                ).alias("band_hash"),
-            )
-            for b in range(bands)
-        ]
-    else:
-        band_cols = [
-            F.struct(
-                F.lit(b).alias("band_id"),
-                F.xxhash64(
-                    *[F.col(f"h{b * rows_per_band + r}") for r in range(rows_per_band)]
-                ).cast("string").alias("band_hash"),
-            )
-            for b in range(bands)
-        ]
+    band_cols = [
+        F.struct(
+            F.lit(b).alias("band_id"),
+            F.md5(
+                F.concat_ws(
+                    ",",
+                    *[
+                        F.col(f"h{b * rows_per_band + r}").cast("string")
+                        for r in range(rows_per_band)
+                    ],
+                )
+            ).alias("band_hash"),
+        )
+        for b in range(bands)
+    ]
     return sig.select(
         "doc_id", F.explode(F.array(*band_cols)).alias("band")
     ).select("doc_id", "band.band_id", "band.band_hash")
@@ -650,7 +627,6 @@ def minhash_lsh_pairs(
     bands: int = MINHASH_BANDS,
     threshold: float = 0.6,
     unit: str = "word",
-    portable: bool = True,
     grams: DataFrame | None = None,
 ) -> DataFrame:
     """MinHash + LSH banding near-dup candidates, exact-verified.
@@ -664,8 +640,7 @@ def minhash_lsh_pairs(
     the quadratic exact check runs only on candidates. With 32 hashes / 8
     bands / 4 rows the S-curve crosses ~0.5 Jaccard, so recall at the 0.6
     threshold is high but not guaranteed — the LSH step stays
-    probabilistic. With ``portable=True`` (default) that is no longer an
-    oracle obstacle: the whole pipeline — md5-seeded signatures
+    probabilistic. That is no longer an oracle obstacle: the whole pipeline — md5-seeded signatures
     (``minhash_signatures``), md5 band digests, bucket join, exact
     verification — is deterministic and engine-reproducible, so the DuckDB
     oracle replays candidate generation EXACTLY (the driver checks the
@@ -674,7 +649,7 @@ def minhash_lsh_pairs(
     bound vs ``ngram_jaccard_pairs``.
     """
     candidates = minhash_candidates(
-        documents, n, num_hashes, bands, unit, portable, grams=grams
+        documents, n, num_hashes, bands, unit, grams=grams
     ).localCheckpoint(eager=False)
     return _verify_candidate_pairs(
         documents, candidates, n, unit, threshold, grams=grams
@@ -687,7 +662,6 @@ def minhash_candidates(
     num_hashes: int = MINHASH_NUM_HASHES,
     bands: int = MINHASH_BANDS,
     unit: str = "word",
-    portable: bool = True,
     grams: DataFrame | None = None,
 ) -> DataFrame:
     """Raw LSH band-collision candidate pairs (doc_a < doc_b, distinct) —
@@ -695,10 +669,8 @@ def minhash_candidates(
     the quality audit (`lsh_quality_report`) can count candidates without
     replaying the pipeline. Callers should lazily checkpoint the result
     if consuming it more than once."""
-    sig = minhash_signatures(
-        documents, n, num_hashes, unit, portable=portable, grams=grams
-    )
-    buckets = _band_buckets(sig, num_hashes, bands, portable)
+    sig = minhash_signatures(documents, n, num_hashes, unit, grams=grams)
+    buckets = _band_buckets(sig, num_hashes, bands)
 
     a, b = buckets.alias("a"), buckets.alias("b")
     return (
@@ -778,7 +750,6 @@ def incremental_dedup(
     bands: int = MINHASH_BANDS,
     threshold: float = 0.6,
     unit: str = "word",
-    portable: bool = True,
 ) -> DataFrame:
     """Dedup a NEW batch against an EXISTING corpus — the continual-
     pretraining update path (each crawl snapshot is screened against
@@ -823,10 +794,10 @@ def incremental_dedup(
         "text",
     )
     c_tag, b_tag = tag(corpus, "c"), tag(batch, "b")
-    sig_c = minhash_signatures(c_tag, n, num_hashes, unit, portable=portable)
-    sig_b = minhash_signatures(b_tag, n, num_hashes, unit, portable=portable)
-    bc = _band_buckets(sig_c, num_hashes, bands, portable).alias("a")
-    bb = _band_buckets(sig_b, num_hashes, bands, portable).alias("b")
+    sig_c = minhash_signatures(c_tag, n, num_hashes, unit)
+    sig_b = minhash_signatures(b_tag, n, num_hashes, unit)
+    bc = _band_buckets(sig_c, num_hashes, bands).alias("a")
+    bb = _band_buckets(sig_b, num_hashes, bands).alias("b")
     candidates = (
         bc.join(
             bb,
@@ -988,20 +959,14 @@ def hamming_band_chunks(sig_col: str, nbits: int, max_hamming: int):
     return cols
 
 
-def simhash_signatures(
-    documents: DataFrame, nbits: int = 60, portable: bool = True
-) -> DataFrame:
+def simhash_signatures(documents: DataFrame, nbits: int = 60) -> DataFrame:
     """(doc_id, simhash) signatures — the signature subplan of
     :func:`simhash_pairs`, factored out so per-micro-batch consumers
     (the streaming near-dup screen) and the pair join share ONE
     construction. See simhash_pairs for the portability contract."""
-    if portable and nbits > 60:
+    if nbits > 60:
         raise ValueError("portable SimHash supports nbits <= 60")
-    word_hash = (
-        F.conv(F.substring(F.md5("w"), 1, 15), 16, 10).cast("long")
-        if portable
-        else F.xxhash64("w")
-    )
+    word_hash = F.conv(F.substring(F.md5("w"), 1, 15), 16, 10).cast("long")
     # NOTE (r9 perf audit): a (doc_id, w, cnt) pre-aggregation before
     # hashing — fewer md5s, weighted ±cnt bit sums — measured SLOWER
     # (2.1 vs 1.74 s interleaved A/B): the extra exchange outweighs the
@@ -1042,7 +1007,6 @@ def simhash_pairs(
     documents: DataFrame,
     max_hamming: int = 6,
     nbits: int = 60,
-    portable: bool = True,
 ) -> DataFrame:
     """SimHash near-dup pairs: ``nbits``-bit signature, Hamming ≤ k.
 
@@ -1052,12 +1016,11 @@ def simhash_pairs(
     ``F.aggregate`` fold would avoid the shuffle, but higher-order
     functions are CodegenFallback — interpreted, far slower).
 
-    ``portable=True`` (default): the word hash is the first 60 bits of
-    md5(word) (hex→int, same construction as ``md5_hash_pieces``), which
-    DuckDB reproduces bit-for-bit — so signatures, banding, and the
-    Hamming verification are all oracle-checkable; nbits is capped at 60
-    (15 hex chars keeps the value BIGINT-positive in both engines).
-    ``portable=False``: xxhash64 word hash, up to 64 bits.
+    The word hash is the first 60 bits of md5(word) (hex→int, same
+    construction as ``md5_hash_pieces``), which DuckDB reproduces
+    bit-for-bit — so signatures, banding, and the Hamming verification
+    are all oracle-checkable; nbits is capped at 60 (15 hex chars keeps
+    the value BIGINT-positive in both engines).
 
     Pairing is the LOSSLESS banded chunk join (Manku et al.'s
     multi-index scheme): the signature splits into
@@ -1068,7 +1031,7 @@ def simhash_pairs(
     candidates pay the ``bit_count(XOR)`` verification. Identical result
     set to the naive all-pairs crossJoin at any scale.
     """
-    sigs = simhash_signatures(documents, nbits=nbits, portable=portable)
+    sigs = simhash_signatures(documents, nbits=nbits)
 
     chunk_cols = hamming_band_chunks("simhash", nbits, max_hamming)
     chunks = sigs.select(

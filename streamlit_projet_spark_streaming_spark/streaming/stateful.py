@@ -685,61 +685,6 @@ def ewma_stream(hourly_points: DataFrame, window: int = 6) -> DataFrame:
     )
 
 
-def customer_running_totals_tws(silver_stream: DataFrame) -> DataFrame:
-    """``customer_running_totals`` on Spark 4's NEW arbitrary-state API
-    (``transformWithStateInPandas``) — same semantics, forward-looking
-    surface: typed ValueState instead of a raw tuple, an explicit
-    processor lifecycle (init/handleInputRows/close), and the RocksDB
-    state store (the API requires it; set
-    ``spark.sql.streaming.stateStore.providerClass`` to the RocksDB
-    provider before starting the query). Output is row-identical to the
-    old-API operator over the same stream — pytest-pinned — so either
-    surface can back the engine; state size is two scalars per key on
-    both.
-
-    ENV NOTE: the TWS python runner imports ``google.protobuf``; in
-    containers without protobuf the query fails at initialization (the
-    parity test importorskips there). No guard here — the operator is
-    plain public API and works wherever Spark 4's own dependency set is
-    complete.
-    """
-    import pandas as pd
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class _RunningTotals(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState(
-                "totals", "n LONG, s DOUBLE"
-            )
-
-        def handleInputRows(self, key, rows, timerValues):
-            n, s = self._state.get() if self._state.exists() else (0, 0.0)
-            for pdf in rows:
-                n += len(pdf)
-                s += float(pdf["final_amount_usd"].sum())
-            self._state.update((n, s))
-            yield pd.DataFrame(
-                {
-                    "customer_id": [key[0]],
-                    "n_orders": [n],
-                    "total_spend": [s],
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    return silver_stream.groupBy("customer_id").transformWithStateInPandas(
-        _RunningTotals(),
-        RUNNING_TOTALS_SCHEMA,
-        "Update",
-        "None",
-    )
-
-
 TRENDING_SCHEMA = StructType(
     [
         StructField("shard", LongType()),

@@ -27,16 +27,30 @@ TABLE_NAMES = (
     "embeddings",
 )
 
+#: DuckDB's own default is 80% of RAM. Every oracle at sf0.01 runs under
+#: 4 GB; at sf0.1 ``retrieval_mmr_rerank`` needs 5 GB (peak RSS 5.1 GB
+#: at 4 and 8 threads). The ``text_word_pmi`` and ``text_bigram_logprob``
+#: oracles on the degenerate fixture grow quadratically with its
+#: 53k-char document (the ``toks`` CTE's LATERAL carries the whole word
+#: list into every word row); uncapped, the pytest process running them
+#: beside a Spark driver exhausted a 15 GB host. At this cap they raise
+#: DuckDB's OutOfMemoryException in about 5 s instead.
+MEMORY_LIMIT = "5GB"
+
 
 def duckdb_conn(
     sf_dir: str, config: dict | None = None
 ) -> duckdb.DuckDBPyConnection:
-    """One connection with the fixture tables as views. ``config`` goes
-    to duckdb.connect (tools/duckdb_shape_audit.py varies threads /
-    insertion-order through it) — keep the view bootstrap HERE so every
-    audit shares the one registration path."""
+    """One connection with the fixture tables as views, capped at
+    ``MEMORY_LIMIT``. ``config`` goes to duckdb.connect on top of the cap
+    (the duckdb-shape audit varies threads / insertion-order through
+    it) — keep the view bootstrap HERE so every audit shares the one
+    registration path."""
     con = duckdb.connect(
-        config={k: str(v).lower() for k, v in (config or {}).items()}
+        config={
+            "memory_limit": MEMORY_LIMIT,
+            **{k: str(v).lower() for k, v in (config or {}).items()},
+        }
     )
     for t in TABLE_NAMES:
         path = os.path.join(sf_dir, f"{t}.parquet")
@@ -45,7 +59,9 @@ def duckdb_conn(
     return con
 
 
-def _canon_cell(v, strict: bool = False) -> str:
+def _canon_cell(v, strict: bool = False, float_fmt: str = ".4f") -> str:
+    """One cell as a string. ``float_fmt`` is the canonical ``.4f`` by
+    default; the bitwise audit passes ``.10g`` (10 significant digits)."""
     if v is None:
         return "∅"
     if isinstance(v, float):
@@ -53,7 +69,7 @@ def _canon_cell(v, strict: bool = False) -> str:
             return "∅"
         if v == 0:
             v = 0.0  # -0.0 → 0.0
-        return f"{v:.4f}"
+        return format(v, float_fmt)
     if isinstance(v, bool):
         return str(int(v))
     try:
@@ -62,7 +78,7 @@ def _canon_cell(v, strict: bool = False) -> str:
         if isinstance(v, np.ndarray):
             v = v.tolist()
         elif isinstance(v, np.generic):
-            return _canon_cell(v.item(), strict)
+            return _canon_cell(v.item(), strict, float_fmt)
     except ImportError:
         pass
     if isinstance(v, (list, tuple, dict)):
@@ -84,25 +100,31 @@ def _canon_cell(v, strict: bool = False) -> str:
             return (
                 "{"
                 + ",".join(
-                    f"{k}:{_canon_cell(x)}" for k, x in sorted(v.items())
+                    f"{k}:{_canon_cell(x, float_fmt=float_fmt)}"
+                    for k, x in sorted(v.items())
                 )
                 + "}"
             )
-        return "[" + ",".join(_canon_cell(x) for x in v) + "]"
+        return "[" + ",".join(_canon_cell(x, float_fmt=float_fmt) for x in v) + "]"
     return str(v)
 
 
-def canonical_rows(pdf, strict: bool = False) -> Counter:
+def canonical_rows(pdf, strict: bool = False, float_fmt: str = ".4f") -> Counter:
     cols = sorted(pdf.columns)
     pdf = pdf[cols]
     return Counter(
-        tuple(_canon_cell(v, strict) for v in row)
+        tuple(_canon_cell(v, strict, float_fmt) for v in row)
         for row in pdf.itertuples(index=False)
     )
 
 
 def compare(
-    spark_df, con, sql: str, name: str = "?", strict: bool = True
+    spark_df,
+    con,
+    sql: str,
+    name: str = "?",
+    strict: bool = True,
+    float_fmt: str = ".4f",
 ) -> list[str]:
     """Return a list of mismatch descriptions (empty = pass)."""
     problems: list[str] = []
@@ -115,7 +137,8 @@ def compare(
         return problems
     if len(spdf) != len(odf):
         problems.append(f"{name}: row count spark={len(spdf)} oracle={len(odf)}")
-    a, b = canonical_rows(spdf, strict=strict), canonical_rows(odf, strict=strict)
+    a = canonical_rows(spdf, strict, float_fmt)
+    b = canonical_rows(odf, strict, float_fmt)
     if a != b:
         only_spark = list((a - b).items())[:3]
         only_oracle = list((b - a).items())[:3]

@@ -27,16 +27,12 @@ def test_simhash_finds_near_dups(spark):
         assert 0 <= r.hamming <= 6
 
 
-def _naive_simhash_pairs(spark, docs, nbits, max_hamming, portable):
+def _naive_simhash_pairs(spark, docs, nbits, max_hamming):
     """All-pairs crossJoin over the same signature definition as
     dedup.simhash_pairs — the lossless-banding reference."""
     from pyspark.sql import functions as F
 
-    word_hash = (
-        F.conv(F.substring(F.md5("w"), 1, 15), 16, 10).cast("long")
-        if portable
-        else F.xxhash64("w")
-    )
+    word_hash = F.conv(F.substring(F.md5("w"), 1, 15), 16, 10).cast("long")
     words = (
         docs.select(F.col("doc_id"), dedup._norm(F.col("text")).alias("t"))
         .select("doc_id", F.explode(F.split(F.col("t"), " ")).alias("w"))
@@ -75,21 +71,17 @@ def _naive_simhash_pairs(spark, docs, nbits, max_hamming, portable):
 def test_simhash_banding_is_lossless(spark):
     """The banded chunk join returns EXACTLY the all-pairs result:
     max_hamming+1 disjoint chunks covering all bits guarantee any pair
-    within Hamming <= k agrees on >= 1 chunk (pigeonhole) — for both the
-    portable (60-bit md5) and the xxhash64 (64-bit) signature."""
+    within Hamming <= k agrees on >= 1 chunk (pigeonhole)."""
     docs = load_table(spark, "documents", SF_CORRECT)
-    for portable, nbits in ((True, 60), (False, 64)):
-        got = sorted(
-            (r.doc_a, r.doc_b, r.hamming)
-            for r in dedup.simhash_pairs(
-                docs, max_hamming=6, nbits=nbits, portable=portable
-            ).collect()
-        )
-        expect = sorted(
-            (r.doc_a, r.doc_b, r.hamming)
-            for r in _naive_simhash_pairs(spark, docs, nbits, 6, portable).collect()
-        )
-        assert got == expect, f"portable={portable}"
+    got = sorted(
+        (r.doc_a, r.doc_b, r.hamming)
+        for r in dedup.simhash_pairs(docs, max_hamming=6, nbits=60).collect()
+    )
+    expect = sorted(
+        (r.doc_a, r.doc_b, r.hamming)
+        for r in _naive_simhash_pairs(spark, docs, 60, 6).collect()
+    )
+    assert got == expect
 
 
 def test_rh_lsh_recall_on_planted_near_dups(spark):

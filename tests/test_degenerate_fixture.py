@@ -3,7 +3,7 @@ stay engine-consistent when the fixture contains edge-case rows the
 driver's NEXT regeneration might ship — empty/whitespace/unicode docs,
 zero or duplicate embedding vectors, boundary event values.
 
-Full sweep: `python tools/degenerate_audit.py` (all 294 entries, ~9 min)
+Full sweep: `python tools/audit.py degenerate` (all 303 entries, ~9 min)
 — run it after substantive oracle work. This pytest covers the entries
 that actually failed the r8 sweep (the ANSI DIVIDE_BY_ZERO family: one
 zero-norm vector crashed all 22 cosine consumers; one n_chars=0 doc
@@ -13,7 +13,7 @@ the class cannot silently regress.
 
 import pytest
 
-from tools.degenerate_audit import build_fixture
+from tools.audit import build_fixture
 
 from .oracle_harness import compare, duckdb_conn
 

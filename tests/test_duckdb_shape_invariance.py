@@ -1,4 +1,4 @@
-"""Fast subset of tools/duckdb_shape_audit.py: representative oracles
+"""Fast subset of ``python tools/audit.py duckdb-shape``: representative oracles
 must produce an identical canonicalized multiset under different DuckDB
 execution shapes (thread count / insertion-order preservation).
 
@@ -7,8 +7,8 @@ is evaluated in a host-dependent order; float addition is
 non-associative and the driver host's core count is not ours. This is
 the oracle-side twin of the Spark partition-invariance gate: an oracle
 whose output depends on summation order is a passes-locally-fails-there
-red that every same-shape local sweep misses. The full 294-entry × 3
-shape sweep lives in tools/duckdb_shape_audit.py; this subset re-checks
+failure that every same-shape local sweep misses. The full 303-entry × 3
+shape sweep is ``python tools/audit.py duckdb-shape``; this subset re-checks
 one representative per float-aggregation risk class each round on the
 round's own (regenerated) fixtures.
 """
@@ -18,7 +18,8 @@ from __future__ import annotations
 import pytest
 
 from tests.conftest import SF_CORRECT
-from tools.duckdb_shape_audit import audit_entry, shaped_conn
+from tests.oracle_harness import duckdb_conn
+from tools.audit import SHAPES, shape_problems
 
 # one representative per float-aggregation risk class
 ENTRIES = [
@@ -53,9 +54,7 @@ ENTRIES = [
 
 @pytest.fixture(scope="module")
 def shaped_cons():
-    from tools.duckdb_shape_audit import SHAPES
-
-    return [(name, shaped_conn(SF_CORRECT, cfg)) for name, cfg in SHAPES]
+    return [(name, duckdb_conn(SF_CORRECT, config=cfg)) for name, cfg in SHAPES]
 
 
 def _oracles():
@@ -70,5 +69,5 @@ def _oracles():
 @pytest.mark.parametrize("name", ENTRIES)
 def test_oracle_invariant_under_duckdb_shape(name, shaped_cons):
     sql = _oracles()[name]
-    problems = audit_entry(shaped_cons, sql)
+    problems = shape_problems(shaped_cons, sql)
     assert not problems, f"{name}: {problems}"

@@ -1,5 +1,7 @@
 """Permanent gate: every transcendental-bearing oracle surface must be
 invariant under a ±1e-9 relative perturbation of its ln/exp/power calls.
+The same gate as ``python tools/audit.py libm`` at its default sf0.01,
+over every transcendental oracle among the registry's 303 entries.
 
 Why 1e-9: cross-host libm divergence (JVM Math.log intrinsics vs the
 driver host's libc vs DuckDB's build) is a few ulps ~ 1e-15 relative;
@@ -15,18 +17,19 @@ cosine family). power(2, int) sites were converted to integer shifts
 in r8 (registry._BINPACK_SQL).
 """
 
-import sys
-
+import duckdb
 import pytest
 
-sys.path.insert(0, "/root/repo")
-
-from tools.libm_audit import audit_entry, entry_delta, transcendental_entries
+from tools.audit import (
+    LIBM_DELTA,
+    _wrap_calls,
+    entry_delta,
+    libm_problems,
+    transcendental_entries,
+)
 
 from .conftest import SF_CORRECT
 from .oracle_harness import duckdb_conn
-
-DELTA = 1e-9
 
 
 def _targets():
@@ -39,6 +42,17 @@ def _targets():
 def test_oracle_invariant_under_libm_perturbation(name, sql):
     con = duckdb_conn(SF_CORRECT)
     # summed-term surfaces gate at 1e-12 (coherent-perturbation
-    # pessimism — see tools.libm_audit.SUMMED_TERM_TIER)
-    problems = audit_entry(con, sql, delta=entry_delta(name, DELTA))
+    # pessimism — see tools.audit.SUMMED_TERM_TIER)
+    problems = libm_problems(con, sql, entry_delta(name, LIBM_DELTA))
     assert not problems, f"{name}: {problems}"
+
+
+def test_wrap_calls_rejects_unbalanced_parens():
+    with pytest.raises(ValueError, match="unbalanced"):
+        _wrap_calls("SELECT ln(1", "(1.0 + 1e-09)")
+
+
+def test_libm_rejects_sql_without_transcendental_call():
+    # nothing to perturb would pass vacuously; it must fail instead
+    with duckdb.connect() as con, pytest.raises(ValueError, match="no ln/exp"):
+        libm_problems(con, "SELECT sqrt(4.0) AS x", 1e-9)

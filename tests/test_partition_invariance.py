@@ -1,4 +1,4 @@
-"""Fast subset of tools/partition_audit.py: representative entries must
+"""Fast subset of ``python tools/audit.py partition``: representative entries must
 match their DuckDB oracle under adversarial parallelism settings.
 
 The driver's session shape (cores, shuffle partitions, Arrow batch
@@ -6,10 +6,11 @@ size, AQE decisions) is not ours to choose and WILL differ at 100 TB —
 any output that depends on partition count, input-split packing, or
 Arrow batch boundaries is a latent passes-locally-fails-there red (the
 r5 EliminateSorts/collect_list bug was exactly this class). The full
-294-entry × 2-config sweep lives in tools/partition_audit.py; this
-subset re-checks one representative per risk class each round on the
-round's own fixtures, using runtime-settable SQL confs on the shared
-session (master stays local[4]; core-count variation is CLI-only).
+303-entry × 2-config sweep is ``python tools/audit.py partition``; this
+subset re-checks one representative per risk class on every run against
+the current fixtures, setting the axis's runtime SQL confs
+(``PARTITION_CONFS``) on the shared session (master stays local[4];
+core-count variation is CLI-only).
 """
 
 from __future__ import annotations
@@ -18,6 +19,7 @@ import pytest
 
 from tests.conftest import SF_SMOKE
 from tests.oracle_harness import compare, duckdb_conn
+from tools.audit import PARTITION_CONFS
 
 # one representative per partition-sensitivity risk class
 ENTRIES = [
@@ -53,23 +55,6 @@ ENTRIES = [
     "events_hourly_gapfill_locf",
 ]
 
-CONFIGS = {
-    "one-partition": {
-        "spark.sql.shuffle.partitions": "1",
-        "spark.sql.adaptive.enabled": "false",
-        "spark.sql.execution.arrow.maxRecordsPerBatch": "7",
-        "spark.sql.files.maxPartitionBytes": str(64 * 1024),
-        "spark.sql.files.openCostInBytes": "0",
-    },
-    "prime-partitions": {
-        "spark.sql.shuffle.partitions": "37",
-        "spark.sql.adaptive.enabled": "true",
-        "spark.sql.adaptive.coalescePartitions.parallelismFirst": "false",
-        "spark.sql.adaptive.advisoryPartitionSizeInBytes": "16384",
-        "spark.sql.execution.arrow.maxRecordsPerBatch": "3",
-    },
-}
-
 
 @pytest.fixture(scope="module")
 def oracle_con():
@@ -78,10 +63,10 @@ def oracle_con():
     con.close()
 
 
-@pytest.fixture(params=sorted(CONFIGS), scope="module")
+@pytest.fixture(params=sorted(PARTITION_CONFS), scope="module")
 def hostile_spark(request, spark):
     """Shared session reconfigured via runtime SQL confs; restored after."""
-    cfg = CONFIGS[request.param]
+    cfg = PARTITION_CONFS[request.param]
     saved = {}
     for k, v in cfg.items():
         saved[k] = spark.conf.get(k, None)

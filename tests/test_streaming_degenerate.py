@@ -1,7 +1,7 @@
 """Degenerate rows through the STREAMING paths (r8 audit v4 extension).
 
-The batch degenerate audit feeds edge rows through every registry entry,
-but streams do NOT pass through the catalog boundary where the batch
+The batch degenerate audit (``python tools/audit.py degenerate``) feeds
+edge rows through all 303 registry entries, but streams do NOT pass through the catalog boundary where the batch
 side excludes zero vectors and normalizes encodings — a live ingest
 sees the raw row. These tests drive raw degenerate rows (zero
 embedding vector; NULL/empty/whitespace/emoji documents; NULL, zero,
@@ -19,7 +19,7 @@ from pyspark.sql import functions as F
 from streamlit_projet_spark_streaming_spark.operators import similarity as sim
 from streamlit_projet_spark_streaming_spark.sources.catalog import load_table
 from streamlit_projet_spark_streaming_spark.streaming import stateful as S
-from tools.degenerate_audit import build_fixture
+from tools.audit import build_fixture
 
 from .conftest import SF_SMOKE
 from .oracle_harness import canonical_rows

@@ -507,55 +507,6 @@ def test_ewma_stream_matches_batch(spark, tmp_path):
     assert canonical_rows(got.toPandas()) == canonical_rows(expect.toPandas())
 
 
-def test_running_totals_new_api_matches_old(spark, silver_dir):
-    """transformWithStateInPandas (Spark 4 API, RocksDB state store)
-    produces the same final running totals as the applyInPandasWithState
-    operator over the same stream.
-
-    ENV-GUARDED: the TWS python runner imports google.protobuf, which is
-    not in this container (pip disallowed) — skips there, runs anywhere
-    protobuf exists. The operator itself is plain Spark 4 API usage."""
-    pytest.importorskip("google.protobuf.descriptor")
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        totals = S.customer_running_totals_tws(_silver_stream(spark, silver_dir))
-        q = (
-            totals.writeStream.format("memory")
-            .queryName("totals_tws_out")
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set(
-                "spark.sql.streaming.stateStore.providerClass", prev
-            )
-    got = (
-        spark.sql("SELECT * FROM totals_tws_out")
-        .groupBy("customer_id")
-        .agg(F.max(F.struct("n_orders", "total_spend")).alias("last"))
-        .select(
-            "customer_id",
-            F.col("last.n_orders").alias("n_orders"),
-            F.round(F.col("last.total_spend"), 2).alias("total_spend"),
-        )
-    )
-    silver = spark.read.schema(C.enrich_schema(spark)).parquet(silver_dir)
-    expect = silver.groupBy("customer_id").agg(
-        F.count(F.lit(1)).alias("n_orders"),
-        F.round(F.sum("final_amount_usd"), 2).alias("total_spend"),
-    )
-    assert canonical_rows(got.toPandas()) == canonical_rows(expect.toPandas())
-
-
 def test_trending_stream_matches_simulation(spark, tmp_path):
     """Decayed trending top-k: the final per-shard state equals a
     pure-Python replay of the halve-then-add fold over the same
