@@ -20,7 +20,6 @@ from pyspark.sql import DataFrame, SparkSession
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from streamlit_projet_spark_streaming_spark import registry as _registry  # noqa: E402
-from streamlit_projet_spark_streaming_spark.plans.views import v_price_bucket_preferences  # noqa: E402
 
 
 def entry(spark: SparkSession) -> DataFrame:
@@ -31,8 +30,9 @@ def entry(spark: SparkSession) -> DataFrame:
     aggregate branches, ROW_NUMBER top-1, LEFT JOIN — the full relational
     spine in one query (SURVEY.md §7 Phase 0).
     """
-    orders = spark.read.parquet("/root/testdata/sf0.001/orders.parquet")
-    return v_price_bucket_preferences(orders)
+    return _registry.REGISTRY["v_price_bucket_preferences"].builder(
+        spark, "/root/testdata/sf0.001"
+    )
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

@@ -2,9 +2,11 @@
 byte-level semantic parity with ``/root/reference/bigquery_views.sql``
 (modulo the documented deterministic tie-breakers).
 
-``plans/views.py`` holds the fixture-mapped analogs the driver oracles run
-against; THIS module is the faithful reconstruction used by the streaming
-gold layer and the shopping-fixture parity tests (FIXTURES.md §B).
+:func:`stats_plus_top1` and :func:`stats_plus_top3` are the one Spark
+definition of the reference's preference-view shapes: the streaming gold
+layer and the shopping-fixture parity tests (FIXTURES.md §B) call them
+through the ``v_*`` wrappers below, and the registry's fixture-mapped
+view entries call them with TPC-H columns (FIXTURES.md §A).
 
 Environment parameterization note (SURVEY.md §2.J): the reference ships two
 byte-identical SQL files differing only in dataset (``bigquery_views.sql``
@@ -14,6 +16,8 @@ parameterization.
 """
 
 from __future__ import annotations
+
+from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -31,53 +35,85 @@ def age_bucket_col() -> F.Column:
     return bucketize(F.col("age"), AGE_EDGES, AGE_LABELS)
 
 
-def _stats_plus_top1(df: DataFrame, key: str, key_alias: str | None = None) -> DataFrame:
-    """Shared shape of views 1-2: per-key stats branch LEFT JOIN top-1
-    category branch (``bigquery_views.sql:20-43`` and ``:49-72``).
+def _ranked_categories(
+    df: DataFrame, key: str, category: str, avgs: Sequence[tuple[str, str]]
+) -> DataFrame:
+    """One row per (key, category): its count ``cnt``, the key's total
+    ``orders``, one per-key average per ``(alias, measure)`` pair, and the
+    category's rank ``rn`` within the key (count desc, category asc).
 
-    Single fact aggregation: per-(key, category) count + sums, then BOTH
-    branches come from window functions over that dimension-sized
-    intermediate — one fact scan, no join (the reference scans ``orders``
-    once per branch and joins the branches back)."""
-    key_alias = key_alias or key
-    by_cat = df.groupBy(key, "category").agg(
+    Single fact aggregation: per-(key, category) count + sums, then the
+    stats AND the ranking come from window functions over that
+    dimension-sized intermediate — one fact scan, no join (the reference
+    scans ``orders`` once per branch and joins the branches back,
+    ``bigquery_views.sql:19-43``)."""
+    by_cat = df.groupBy(key, category).agg(
         F.count(F.lit(1)).alias("cnt"),
-        F.sum("purchase_amount_usd").alias("amt"),
-        F.sum("review_rating").alias("rat"),
+        *[F.sum(m).alias(f"sum_{m}") for _, m in avgs],
         # non-null measure counts: AVG ignores NULLs, so the window
         # averages divide by these, not by COUNT(*)
-        F.count("purchase_amount_usd").alias("n_amt"),
-        F.count("review_rating").alias("n_rat"),
+        *[F.count(m).alias(f"n_{m}") for _, m in avgs],
     )
     key_w = Window.partitionBy(key)
-    rank_w = key_w.orderBy(F.desc("cnt"), F.asc("category"))
-    return (
-        by_cat.withColumn("orders", F.sum("cnt").over(key_w))
+    rank_w = key_w.orderBy(F.desc("cnt"), F.asc(category))
+    out = by_cat.withColumn("orders", F.sum("cnt").over(key_w))
+    for alias, m in avgs:
         # grid-units/count ratios rounded in exact integer space — the
         # window twin of relational.stable_avg (r6 grid-quotient rule)
-        .withColumn(
-            "avg_spend",
+        out = out.withColumn(
+            alias,
             ratio_round(
-                cents(F.sum("amt").over(key_w)), F.sum("n_amt").over(key_w) * 100, 4
+                cents(F.sum(f"sum_{m}").over(key_w)), F.sum(f"n_{m}").over(key_w) * 100, 4
             ),
         )
-        .withColumn(
-            "avg_rating",
-            ratio_round(
-                cents(F.sum("rat").over(key_w)), F.sum("n_rat").over(key_w) * 100, 4
-            ),
-        )
-        .withColumn("rn", F.row_number().over(rank_w))
+    return out.withColumn("rn", F.row_number().over(rank_w))
+
+
+def stats_plus_top1(
+    df: DataFrame,
+    key: str,
+    category: str,
+    top_name: str,
+    avgs: Sequence[tuple[str, str]],
+) -> DataFrame:
+    """Shape of views 1-2: per-key stats branch LEFT JOIN top-1 category
+    branch (``bigquery_views.sql:20-43`` and ``:49-72``). Output: ``key``,
+    orders, one column per ``avgs`` alias, ``top_name``."""
+    return (
+        _ranked_categories(df, key, category, avgs)
         .filter(F.col("rn") == 1)
-        .select(
-            F.col(key).alias(key_alias),
-            "orders",
-            "avg_spend",
-            "avg_rating",
-            F.col("category").alias("top_category"),
-        )
-        .orderBy(key_alias)
+        .select(key, "orders", *[a for a, _ in avgs], F.col(category).alias(top_name))
+        .orderBy(key)
     )
+
+
+def stats_plus_top3(
+    df: DataFrame,
+    key: str,
+    category: str,
+    top_name: str,
+    avgs: Sequence[tuple[str, str]],
+) -> DataFrame:
+    """Shape of view 3: per-key stats ∥ top-3 categories (ROW_NUMBER ≤ 3,
+    ``bigquery_views.sql:91``) → LEFT JOIN → re-GROUP BY with passthrough
+    keys (D7, ``:100``) folding the top-3 into an ordered ARRAY_AGG
+    (``:97``, count desc + category asc tie-break). Output: ``key``,
+    orders, one column per ``avgs`` alias, ``top_name`` ARRAY<STRING>."""
+    return (
+        _ranked_categories(df, key, category, avgs)
+        .filter(F.col("rn") <= 3)
+        .groupBy(key, "orders", *[a for a, _ in avgs])
+        .agg(
+            ordered_array_agg(F.col("cnt"), F.col(category), ascending=False).alias(
+                top_name
+            )
+        )
+        .orderBy(key)
+    )
+
+
+#: The reference's two averages per preference view (``:22-23``).
+_SPEND_RATING = (("avg_spend", "purchase_amount_usd"), ("avg_rating", "review_rating"))
 
 
 def v_age_preferences(orders: DataFrame) -> DataFrame:
@@ -91,15 +127,18 @@ def v_age_preferences(orders: DataFrame) -> DataFrame:
         "review_rating",
         "category",
     )
-    return _stats_plus_top1(bucketed, "age_bucket")
+    return stats_plus_top1(bucketed, "age_bucket", "category", "top_category", _SPEND_RATING)
 
 
 def v_gender_preferences(orders: DataFrame) -> DataFrame:
     """``v_gender_preferences`` (``bigquery_views.sql:46-72``): same shape
     keyed on raw ``gender`` (``:54``). Output ``:65-70``."""
-    return _stats_plus_top1(
+    return stats_plus_top1(
         orders.select("gender", "purchase_amount_usd", "review_rating", "category"),
         "gender",
+        "category",
+        "top_category",
+        _SPEND_RATING,
     )
 
 
@@ -109,30 +148,12 @@ def v_location_preferences(orders: DataFrame) -> DataFrame:
     LEFT JOIN → re-GROUP BY with ordered ARRAY_AGG (``:97``, count desc +
     category asc tie-break). Output: location, orders, avg_spend,
     top_categories ARRAY<STRING> (``:93-97``)."""
-    by_cat = orders.groupBy("location", "category").agg(
-        F.count(F.lit(1)).alias("cnt"),
-        F.sum("purchase_amount_usd").alias("amt"),
-        F.count("purchase_amount_usd").alias("n_amt"),
-    )
-    loc_w = Window.partitionBy("location")
-    rank_w = loc_w.orderBy(F.desc("cnt"), F.asc("category"))
-    return (
-        by_cat.withColumn("orders", F.sum("cnt").over(loc_w))
-        .withColumn(
-            "avg_spend",
-            ratio_round(
-                cents(F.sum("amt").over(loc_w)), F.sum("n_amt").over(loc_w) * 100, 4
-            ),
-        )
-        .withColumn("rn", F.row_number().over(rank_w))
-        .filter(F.col("rn") <= 3)
-        .groupBy("location", "orders", "avg_spend")
-        .agg(
-            ordered_array_agg(F.col("cnt"), F.col("category"), ascending=False).alias(
-                "top_categories"
-            )
-        )
-        .orderBy("location")
+    return stats_plus_top3(
+        orders,
+        "location",
+        "category",
+        "top_categories",
+        (("avg_spend", "purchase_amount_usd"),),
     )
 
 

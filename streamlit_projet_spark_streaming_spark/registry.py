@@ -40,7 +40,7 @@ from .operators.numeric import (
     stable_avg_spark_sql,
 )
 from .operators.numeric import stable_avg_sql as _savg
-from .plans import views as V
+from .plans.shopping_views import stats_plus_top1, stats_plus_top3
 from .sources.catalog import IDENTITY_COLS as _CAT_IDENT
 from .sources.catalog import MEASURE_DOUBLE_COLS as _CAT_MEASURES
 from .sources.catalog import TS_COLS as _CAT_TS
@@ -280,16 +280,39 @@ def _cc_ctes(src: str, a: str = "doc_a", b: str = "doc_b") -> str:
 
 
 # --------------------------------------------------------------------------
-# The four reference views (SURVEY.md §2.J), fixture-mapped.
+# The four reference views (SURVEY.md §2.J), fixture-mapped (FIXTURES.md §A):
+# age → o_totalprice buckets, gender → o_orderstatus, category →
+# o_orderpriority, location → c_mktsegment, spend → o_totalprice. The
+# Spark side is the shopping gold layer's builders with fixture columns.
 # --------------------------------------------------------------------------
 
-_BUCKET = V.PRICE_BUCKET_SQL
+#: Six price buckets standing in for the reference's six age buckets
+#: (``bigquery_views.sql:5-12``). Upper-bound-exclusive edges + overflow.
+PRICE_BUCKET_EDGES = (50_000.0, 100_000.0, 200_000.0, 300_000.0, 400_000.0)
+PRICE_BUCKET_LABELS = ("<50k", "50-100k", "100-200k", "200-300k", "300-400k", "400k+")
+
+#: The same bucketing as a SQL CASE fragment for the oracles.
+PRICE_BUCKET_SQL = (
+    "CASE WHEN o_totalprice < 50000 THEN '<50k' "
+    "WHEN o_totalprice < 100000 THEN '50-100k' "
+    "WHEN o_totalprice < 200000 THEN '100-200k' "
+    "WHEN o_totalprice < 300000 THEN '200-300k' "
+    "WHEN o_totalprice < 400000 THEN '300-400k' "
+    "ELSE '400k+' END"
+)
+
+
+def price_bucket_col() -> Column:
+    return bucketize(F.col("o_totalprice"), PRICE_BUCKET_EDGES, PRICE_BUCKET_LABELS)
+
+
+_PRICE_AVG = (("avg_price", "o_totalprice"),)
 
 _register(
     "v_price_bucket_preferences",
     f"""
     WITH bucketed AS (
-      SELECT {_BUCKET} AS price_bucket, o_totalprice, o_orderpriority FROM orders
+      SELECT {PRICE_BUCKET_SQL} AS price_bucket, o_totalprice, o_orderpriority FROM orders
     ), stats AS (
       SELECT price_bucket, COUNT(*) AS orders,
              {_savg('o_totalprice')} AS avg_price
@@ -310,7 +333,17 @@ _register(
     """,
     doc="View 1 / flagship: v_age_preferences analog (bigquery_views.sql:2-43)",
     tags=("view", "B3", "D1", "D2", "D3", "D4", "E1", "E3", "C1"),
-)(lambda spark, sf: V.v_price_bucket_preferences(_t(spark, sf, "orders")))
+)(
+    lambda spark, sf: stats_plus_top1(
+        _t(spark, sf, "orders").select(
+            price_bucket_col().alias("price_bucket"), "o_totalprice", "o_orderpriority"
+        ),
+        "price_bucket",
+        "o_orderpriority",
+        "top_priority",
+        _PRICE_AVG,
+    )
+)
 
 
 _register(
@@ -336,7 +369,11 @@ _register(
     """,
     doc="View 2: v_gender_preferences analog (bigquery_views.sql:46-72)",
     tags=("view", "C2", "E1"),
-)(lambda spark, sf: V.v_status_preferences(_t(spark, sf, "orders")))
+)(
+    lambda spark, sf: stats_plus_top1(
+        _t(spark, sf, "orders"), "o_orderstatus", "o_orderpriority", "top_priority", _PRICE_AVG
+    )
+)
 
 
 _register(
@@ -371,12 +408,24 @@ _register(
     "(bigquery_views.sql:75-100). The registered projection joins the "
     "ARRAY<STRING> into a '|'-separated string (order-preserving, so it "
     "carries the same information) because the driver's pandas hash "
-    "canonicalizer cannot factorize list cells; the array-valued form stays "
-    "on plans/views.v_segment_preferences and is pytest-oracle-checked.",
+    "canonicalizer cannot factorize list cells; the array-valued form is "
+    "shopping_views.stats_plus_top3's own output. The customer dimension is "
+    "broadcast, so attaching segments never shuffles the fact table.",
     tags=("view", "C3", "D6", "D7", "E2"),
 )(
-    lambda spark, sf: V.v_segment_preferences(
-        _t(spark, sf, "orders"), _t(spark, sf, "customer")
+    lambda spark, sf: stats_plus_top3(
+        _t(spark, sf, "orders").join(
+            F.broadcast(
+                _t(spark, sf, "customer").select(
+                    F.col("c_custkey").alias("o_custkey"), "c_mktsegment"
+                )
+            ),
+            "o_custkey",
+        ),
+        "c_mktsegment",
+        "o_orderpriority",
+        "top_priorities",
+        (("avg_spend", "o_totalprice"),),
     ).withColumn("top_priorities", F.array_join("top_priorities", "|"))
 )
 
@@ -384,7 +433,7 @@ _register(
 _register(
     "v_bucket_status_priority",
     f"""
-    SELECT {_BUCKET} AS price_bucket, o_orderstatus, o_orderpriority,
+    SELECT {PRICE_BUCKET_SQL} AS price_bucket, o_orderstatus, o_orderpriority,
            COUNT(*) AS orders, {_savg('o_totalprice')} AS avg_price
     FROM orders
     GROUP BY 1, 2, 3
@@ -392,7 +441,15 @@ _register(
     doc="View 4: v_age_gender_category analog — 3-key GROUP BY "
     "(bigquery_views.sql:103-126)",
     tags=("view", "D5"),
-)(lambda spark, sf: V.v_bucket_status_priority(_t(spark, sf, "orders")))
+)(
+    lambda spark, sf: _t(spark, sf, "orders")
+    .groupBy(price_bucket_col().alias("price_bucket"), "o_orderstatus", "o_orderpriority")
+    .agg(
+        F.count(F.lit(1)).alias("orders"),
+        stable_avg("o_totalprice").alias("avg_price"),
+    )
+    .orderBy("price_bucket", "o_orderstatus", "o_orderpriority")
+)
 
 
 # --------------------------------------------------------------------------
@@ -2176,7 +2233,7 @@ def _sql_interface_view(spark: SparkSession, sf: str) -> DataFrame:
         f"""
         CREATE OR REPLACE TEMP VIEW v_price_bucket_preferences_sql AS
         WITH bucketed AS (
-          SELECT {_BUCKET} AS price_bucket, o_totalprice, o_orderpriority
+          SELECT {PRICE_BUCKET_SQL} AS price_bucket, o_totalprice, o_orderpriority
           FROM orders_sql_demo
         ), stats AS (
           SELECT price_bucket, COUNT(*) AS orders,
@@ -6450,9 +6507,8 @@ _register(
     WITH norm AS (SELECT doc_id, {_NORM_SQL} AS t FROM documents),
     toks AS (
       SELECT doc_id, w, i
-      FROM (SELECT doc_id, string_split(t, ' ') AS ws FROM norm),
-           LATERAL (SELECT unnest(generate_series(1, len(ws))) AS i) gs,
-           LATERAL (SELECT ws[i] AS w) x
+      FROM (SELECT doc_id, unnest(ws) AS w, unnest(generate_series(1, len(ws))) AS i
+            FROM (SELECT doc_id, string_split(t, ' ') AS ws FROM norm))
       WHERE length(w) > 0
     ),
     bi AS (
@@ -10920,10 +10976,8 @@ _register(
     f"""
     WITH norm AS (SELECT doc_id, {_NORM_SQL} AS t FROM documents),
     toks AS (
-      SELECT doc_id, w, i
-      FROM (SELECT doc_id, string_split(t, ' ') AS ws FROM norm),
-           LATERAL (SELECT unnest(generate_series(1, len(ws))) AS i) gs,
-           LATERAL (SELECT ws[i] AS w) x
+      SELECT doc_id, unnest(ws) AS w, unnest(generate_series(1, len(ws))) AS i
+      FROM (SELECT doc_id, string_split(t, ' ') AS ws FROM norm)
     ),
     bi AS (
       SELECT a.doc_id, a.w AS x, b.w AS y

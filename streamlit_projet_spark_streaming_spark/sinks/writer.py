@@ -27,6 +27,7 @@ Scale stance (100 TB):
 from __future__ import annotations
 
 import os
+import shutil
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
@@ -66,14 +67,6 @@ def write_partitioned(
     if max_records_per_file is not None:
         w = w.option("maxRecordsPerFile", max_records_per_file)
     w.partitionBy(*partition_cols).parquet(path)
-
-
-def read_gold(spark: SparkSession, path: str) -> DataFrame:
-    """Read a gold table written by :func:`write_partitioned`. Partition
-    columns come back from directory names; filters on them prune
-    directories before any file opens (assert: ``PartitionFilters`` in
-    the scan node, shrinking ``inputFiles()``)."""
-    return spark.read.parquet(path)
 
 
 def write_packed_shards(
@@ -133,8 +126,6 @@ def _recover_backups(path: str) -> None:
     the staged rename (new data live) — drop the stale backup; if it is
     missing the crash was between the two renames — restore the backup.
     Either way the corpus is whole again before planning."""
-    import shutil
-
     for name in os.listdir(path):
         if not name.startswith(_BACKUP_PREFIX):
             continue
@@ -152,8 +143,6 @@ def _swap_bucket_dir(path: str, staging: str, bucket: int) -> None:
     crash window, and both sides of that window are recoverable (see
     :func:`_recover_backups`). Separated out so a fault-injection test
     can kill the process between buckets."""
-    import shutil
-
     final = os.path.join(path, f"bucket={bucket}")
     staged = os.path.join(staging, f"bucket={bucket}")
     backup = os.path.join(path, f"{_BACKUP_PREFIX}{bucket}")
@@ -168,7 +157,6 @@ def merge_packed_shards(
     token_col: str,
     budget: int,
     order_col: str | None = None,
-    strategy: str = "staging",
 ) -> DataFrame:
     """Apply a :func:`~..operators.sampling.shard_merge_plan` to an
     existing :func:`write_packed_shards` layout, rewriting ONLY the
@@ -176,7 +164,7 @@ def merge_packed_shards(
     a curation pipeline runs after dedup shrinks previously full packs
     (r8 verdict item 7 roadmap: the shard-merge half).
 
-    Shared mechanics (both strategies):
+    Mechanics:
 
     - the plan is computed from the CURRENT on-disk pack totals (so the
       caller deletes/dedups rows first, then consolidates);
@@ -191,45 +179,31 @@ def merge_packed_shards(
       difference between consolidating 2% of shards and re-exporting
       the corpus.
 
-    ``strategy="staging"`` (default — durable): affected buckets are
-    written to ``<path>/_staging_merge`` (underscore-prefixed, invisible
-    to readers) while the source tree stays untouched, then each bucket
-    is swapped in with two POSIX renames (old → ``_backup_bucket=N``,
-    staged → live) and the backup dropped. No executor-storage
-    checkpoint of the data is needed: the write's lineage reads the
-    original files because it writes elsewhere. Crash windows: during
-    the staging write, the source tree is untouched; between the two
-    renames, ``_backup_bucket=N`` holds the bucket and the next run's
-    :func:`_recover_backups` restores it; after the staged rename, the
-    new data is live and the stale backup is dropped on the next run.
-    A mid-run kill therefore leaves every bucket either fully old or
-    fully new — per-bucket atomicity, cross-bucket progress. Requires a
-    posix-renameable path (local/NFS; on HDFS the same two-rename
-    protocol holds via the FileSystem API, but object stores without
-    atomic rename should use ``inplace``).
-
-    ``strategy="inplace"`` (opt-in): dynamic partition overwrite of the
-    affected buckets. One job, no renames, works on any committer — but
-    the affected rows must be eagerly ``localCheckpoint``-ed first
-    (Spark cannot overwrite files its own plan is reading), and a crash
-    after that checkpoint but mid-write leaves recovery to the parquet
-    commit protocol rather than an untouched source tree.
+    Affected buckets are written to ``<path>/_staging_merge``
+    (underscore-prefixed, invisible to readers) while the source tree
+    stays untouched, then each bucket is swapped in with two POSIX
+    renames (old → ``_backup_bucket=N``, staged → live) and the backup
+    dropped. No executor-storage checkpoint of the data is needed: the
+    write's lineage reads the original files because it writes
+    elsewhere. Crash windows: during the staging write, the source tree
+    is untouched; between the two renames, ``_backup_bucket=N`` holds
+    the bucket and the next run's :func:`_recover_backups` restores it;
+    after the staged rename, the new data is live and the stale backup
+    is dropped on the next run. A mid-run kill therefore leaves every
+    bucket either fully old or fully new — per-bucket atomicity,
+    cross-bucket progress. Requires a posix-renameable path (local/NFS):
+    any ``scheme://`` path other than ``file://`` raises ``ValueError``.
 
     Returns the plan DataFrame (already consumed for the rewrite; the
     caller typically persists it as the consolidation audit record).
     """
     from ..operators.sampling import shard_merge_plan
 
-    if strategy not in ("staging", "inplace"):
-        raise ValueError(f"unknown strategy: {strategy!r}")
-    is_remote = "://" in path and not path.startswith("file://")
-    if strategy == "staging":
-        if is_remote:
-            raise ValueError(
-                "staging strategy needs a posix-renameable path; use "
-                "strategy='inplace' for object-store paths"
-            )
-        _recover_backups(path)
+    if "://" in path and not path.startswith("file://"):
+        raise ValueError(
+            f"merge_packed_shards needs a posix-renameable local path, got {path!r}"
+        )
+    _recover_backups(path)
     current = spark.read.parquet(path)
     plan = shard_merge_plan(current, token_col, budget=budget)
     # EAGER: the plan is both consumed below AND returned to the caller
@@ -265,37 +239,19 @@ def merge_packed_shards(
         .drop("merged_pack_ix", "_off")
     )
     sort_tail = [order_col] if order_col else []
-    if strategy == "staging":
-        import shutil
-
-        staging = os.path.join(path, _STAGING_DIR)
-        if os.path.exists(staging):
-            shutil.rmtree(staging)  # leftover from a crashed run
-        # source tree untouched while this job runs: lineage reads the
-        # original files, the write lands in the staging dir
-        (
-            rewritten.repartition("bucket")
-            .sortWithinPartitions("bucket", "pack_ix", *sort_tail, "doc_id")
-            .write.mode("overwrite")
-            .partitionBy("bucket")
-            .parquet(staging)
-        )
-        for b in sorted(affected_buckets):
-            _swap_bucket_dir(path, staging, b)
-        shutil.rmtree(staging)
-        return plan
-    # inplace: EAGER materialization breaks the read-path lineage — the
-    # write below overwrites the very files the plan scans (Spark
-    # rejects a direct self-overwrite, and a lazy checkpoint would
-    # still read during the write job). Cost is bounded by the AFFECTED
-    # buckets' rows on executor storage.
-    rewritten = rewritten.localCheckpoint(eager=True)
+    staging = os.path.join(path, _STAGING_DIR)
+    if os.path.exists(staging):
+        shutil.rmtree(staging)  # leftover from a crashed run
+    # source tree untouched while this job runs: lineage reads the
+    # original files, the write lands in the staging dir
     (
         rewritten.repartition("bucket")
         .sortWithinPartitions("bucket", "pack_ix", *sort_tail, "doc_id")
         .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
         .partitionBy("bucket")
-        .parquet(path)
+        .parquet(staging)
     )
+    for b in sorted(affected_buckets):
+        _swap_bucket_dir(path, staging, b)
+    shutil.rmtree(staging)
     return plan

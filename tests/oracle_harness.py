@@ -29,12 +29,9 @@ TABLE_NAMES = (
 
 #: DuckDB's own default is 80% of RAM. Every oracle at sf0.01 runs under
 #: 4 GB; at sf0.1 ``retrieval_mmr_rerank`` needs 5 GB (peak RSS 5.1 GB
-#: at 4 and 8 threads). The ``text_word_pmi`` and ``text_bigram_logprob``
-#: oracles on the degenerate fixture grow quadratically with its
-#: 53k-char document (the ``toks`` CTE's LATERAL carries the whole word
-#: list into every word row); uncapped, the pytest process running them
-#: beside a Spark driver exhausted a 15 GB host. At this cap they raise
-#: DuckDB's OutOfMemoryException in about 5 s instead.
+#: at 4 and 8 threads). An oracle that outgrows the cap raises DuckDB's
+#: OutOfMemoryException in seconds instead of exhausting a host shared
+#: with the Spark driver.
 MEMORY_LIMIT = "5GB"
 
 

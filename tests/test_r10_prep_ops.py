@@ -188,12 +188,11 @@ def test_shard_merge_plan_on_greedy_pack_after_dedup(spark):
     )
 
 
-@pytest.mark.parametrize("strategy", ["staging", "inplace"])
-def test_merge_packed_shards_applier(spark, tmp_path, strategy):
-    """Consolidation applier (both strategies): shards written at budget
-    200 then merged at budget 400 — under-filled packs coalesce to fresh
-    per-bucket ids, keeps stay byte-stable, untouched bucket dirs are
-    not rewritten, and no document is lost."""
+def test_merge_packed_shards_applier(spark, tmp_path):
+    """Consolidation applier: shards written at budget 200 then merged
+    at budget 400 — under-filled packs coalesce to fresh per-bucket ids,
+    keeps stay byte-stable, untouched bucket dirs are not rewritten, and
+    no document is lost."""
     import os as _os
 
     from streamlit_projet_spark_streaming_spark.sinks.writer import (
@@ -214,7 +213,7 @@ def test_merge_packed_shards_applier(spark, tmp_path, strategy):
         if d.startswith("bucket=")
     }
 
-    plan = merge_packed_shards(spark, path, "n_tokens", budget=400, strategy=strategy)
+    plan = merge_packed_shards(spark, path, "n_tokens", budget=400)
     plan_rows = plan.collect()
     after = spark.read.parquet(path).select("doc_id", "bucket", "pack_ix")
     after_rows = {r["doc_id"]: (r["bucket"], r["pack_ix"]) for r in after.collect()}
@@ -239,11 +238,20 @@ def test_merge_packed_shards_applier(spark, tmp_path, strategy):
             assert new_pack == merge_map[(b, old_pack)], (doc_id, b, old_pack)
         else:
             assert new_pack == old_pack, (doc_id, b, old_pack)
-    # dynamic overwrite: bucket dirs with no merge rows were not touched
+    # bucket dirs with no merge rows were not touched
     for d, t in mtime_before.items():
         b = int(d.split("=")[1])
         if b not in affected_buckets:
             assert _os.path.getmtime(_os.path.join(path, d)) == t, d
+
+
+def test_merge_packed_shards_rejects_remote_path():
+    """The two-rename swap needs a local path; an object-store path is
+    refused before any Spark work (so no session is needed here)."""
+    from streamlit_projet_spark_streaming_spark.sinks.writer import merge_packed_shards
+
+    with pytest.raises(ValueError, match="posix-renameable"):
+        merge_packed_shards(None, "s3a://bucket/shards", "n_tokens", budget=400)
 
 
 def _pack_docs(spark):

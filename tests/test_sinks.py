@@ -15,7 +15,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from streamlit_projet_spark_streaming_spark.sinks import write_packed_shards, write_partitioned
-from streamlit_projet_spark_streaming_spark.sinks.writer import read_gold
 from streamlit_projet_spark_streaming_spark.sources.catalog import load_table
 
 from .conftest import SF_SMOKE
@@ -33,7 +32,7 @@ def test_write_partitioned_layout_and_parity(spark, docs, tmp_path):
     langs = {r["lang"] for r in docs.select("lang").distinct().collect()}
     dirs = {d for d in os.listdir(path) if d.startswith("lang=")}
     assert dirs == {f"lang={l}" for l in langs}
-    back = read_gold(spark, path)
+    back = spark.read.parquet(path)
     assert back.count() == docs.count()
     assert set(back.columns) == set(docs.columns)
 
@@ -44,7 +43,7 @@ def test_partition_filter_prunes_directories(spark, docs, tmp_path):
     partition, and no data filter remains for the partition column."""
     path = str(tmp_path / "gold")
     write_partitioned(docs, path, ["lang"])
-    back = read_gold(spark, path)
+    back = spark.read.parquet(path)
     one = back.filter(F.col("lang") == "en")
     plan = one._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters: [" in plan and "lang" in plan.split("PartitionFilters:")[1]
@@ -62,7 +61,7 @@ def test_sorted_within_files(spark, docs, tmp_path):
     that makes parquet row-group min/max stats selective)."""
     path = str(tmp_path / "gold")
     write_partitioned(docs, path, ["lang"], sort_cols=["n_chars"])
-    back = read_gold(spark, path).withColumn("f", F.input_file_name())
+    back = spark.read.parquet(path).withColumn("f", F.input_file_name())
     rows = back.select("f", "n_chars").collect()
     by_file: dict[str, list[int]] = {}
     for r in rows:
@@ -76,7 +75,7 @@ def test_max_records_per_file(spark, docs, tmp_path):
     """maxRecordsPerFile bounds every written file."""
     path = str(tmp_path / "gold")
     write_partitioned(docs, path, ["lang"], max_records_per_file=50)
-    back = read_gold(spark, path).withColumn("f", F.input_file_name())
+    back = spark.read.parquet(path).withColumn("f", F.input_file_name())
     counts = back.groupBy("f").count().collect()
     assert counts and all(r["count"] <= 50 for r in counts)
 
@@ -86,7 +85,7 @@ def test_spread_splits_hot_partition(spark, docs, tmp_path):
     write-side salt), without changing the row contents."""
     path = str(tmp_path / "gold")
     write_partitioned(docs, path, ["lang"], spread=4)
-    back = read_gold(spark, path).withColumn("f", F.input_file_name())
+    back = spark.read.parquet(path).withColumn("f", F.input_file_name())
     per_part = (
         back.groupBy("lang")
         .agg(F.countDistinct("f").alias("nf"), F.count(F.lit(1)).alias("n"))
@@ -94,7 +93,7 @@ def test_spread_splits_hot_partition(spark, docs, tmp_path):
     )
     biggest = max(per_part, key=lambda r: r["n"])
     assert biggest["nf"] >= 2
-    assert read_gold(spark, path).count() == docs.count()
+    assert spark.read.parquet(path).count() == docs.count()
 
 
 def test_packed_shards_layout(spark, docs, tmp_path):
