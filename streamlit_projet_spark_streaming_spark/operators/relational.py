@@ -41,6 +41,30 @@ def spread_if_few_splits(df: DataFrame) -> DataFrame:
     return df
 
 
+def gather_if_small(df: DataFrame) -> DataFrame:
+    """Move an input to ONE partition ONLY when it is provably small.
+
+    A single partition satisfies every distribution a group-by, window or
+    sort asks for, so each plan over the gathered input runs as one job
+    of one task with no exchange. On a dimension-sized input the cost of
+    a plan is its per-job and per-stage overhead, not its data, so this
+    is the fast plan there (the gold refresh: 23 jobs → 5 per trigger).
+
+    "Provably small" is Spark's own broadcast test: the optimized plan's
+    ``stats.sizeInBytes`` is at most ``spark.sql.autoBroadcastJoinThreshold``
+    (-1 means never gather, as it means never broadcast). On a
+    scan-rooted plan the estimate is the listed file sizes, so the check
+    fires no job. A larger input comes back unchanged, so at scale the
+    plan stays the parallel one.
+    """
+    jdf = df._jdf
+    limit = jdf.sparkSession().sessionState().conf().autoBroadcastJoinThreshold()
+    if limit < 0:
+        return df
+    size = jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    return df.coalesce(1) if size <= limit else df
+
+
 def bucketize(col: Column, edges: Sequence[float], labels: Sequence[str]) -> Column:
     """[B3/B4] CASE-WHEN range bucketing.
 

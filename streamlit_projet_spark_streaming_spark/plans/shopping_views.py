@@ -39,8 +39,9 @@ def _ranked_categories(
     df: DataFrame, key: str, category: str, avgs: Sequence[tuple[str, str]]
 ) -> DataFrame:
     """One row per (key, category): its count ``cnt``, the key's total
-    ``orders``, one per-key average per ``(alias, measure)`` pair, and the
-    category's rank ``rn`` within the key (count desc, category asc).
+    ``orders``, one per-key average per ``(alias, measure)`` pair (from
+    the key's ``sum_<measure>`` and ``n_<measure>``), and the category's
+    rank ``rn`` within the key (count desc, category asc).
 
     Single fact aggregation: per-(key, category) count + sums, then the
     stats AND the ranking come from window functions over that
@@ -56,16 +57,23 @@ def _ranked_categories(
     )
     key_w = Window.partitionBy(key)
     rank_w = key_w.orderBy(F.desc("cnt"), F.asc(category))
-    out = by_cat.withColumn("orders", F.sum("cnt").over(key_w))
-    for alias, m in avgs:
-        # grid-units/count ratios rounded in exact integer space — the
-        # window twin of relational.stable_avg (r6 grid-quotient rule)
-        out = out.withColumn(
-            alias,
-            ratio_round(
-                cents(F.sum(f"sum_{m}").over(key_w)), F.sum(f"n_{m}").over(key_w) * 100, 4
-            ),
-        )
+    # each per-key sum is computed once into a column: ratio_round uses
+    # its operands several times, and Catalyst keeps every use of an
+    # inline window sum as its own window aggregate
+    out = by_cat.withColumns(
+        {
+            "orders": F.sum("cnt").over(key_w),
+            **{c: F.sum(c).over(key_w) for _, m in avgs for c in (f"sum_{m}", f"n_{m}")},
+        }
+    )
+    # grid-units/count ratios rounded in exact integer space — the window
+    # twin of relational.stable_avg (r6 grid-quotient rule)
+    out = out.withColumns(
+        {
+            alias: ratio_round(cents(F.col(f"sum_{m}")), F.col(f"n_{m}") * 100, 4)
+            for alias, m in avgs
+        }
+    )
     return out.withColumn("rn", F.row_number().over(rank_w))
 
 

@@ -18,7 +18,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..operators.relational import histogram, latest_n, pivot_counts, value_counts
+from ..operators.relational import (
+    gather_if_small,
+    histogram,
+    latest_n,
+    pivot_counts,
+    value_counts,
+)
 
 #: Fixed pivot level orders (the reference reindexes columns explicitly,
 #: ``streamlit_app.py:891-894``).
@@ -214,9 +220,14 @@ def load_gold_snapshot(
 def dashboard_snapshot(silver: DataFrame) -> dict[str, DataFrame]:
     """Everything the 8-tab dashboard renders, one DataFrame per chart
     (``streamlit_app.py:358-367`` tab list). The serving process calls
-    ``.toPandas()`` on each — the only place that boundary is crossed."""
+    ``.toPandas()`` on each — the only place that boundary is crossed.
+
+    A small silver is gathered into one partition first
+    (``relational.gather_if_small``), so a chart is one exchange-free job
+    instead of a multi-stage one; a large silver keeps its partitions."""
     from ..streaming.consumer import hourly_series_batch
 
+    silver = gather_if_small(silver)
     return {
         "overview_metrics": overview_metrics(silver),
         "hourly_series": hourly_series_batch(silver),

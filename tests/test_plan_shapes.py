@@ -64,6 +64,24 @@ def test_preference_views_scan_orders_once(spark, name):
     )
 
 
+def test_age_preferences_computes_each_window_sum_once(spark):
+    """``v_age_preferences`` needs five per-age-bucket window sums: the
+    order count, and a sum and a count per average. Each use of an inline
+    window sum inside ``ratio_round`` used to become its own window
+    aggregate (25 of them)."""
+    import re
+
+    from streamlit_projet_spark_streaming_spark.functions.enrichment import enrich
+    from streamlit_projet_spark_streaming_spark.plans import shopping_views as SV
+
+    from .shopping_fixture import raw_df
+
+    df = SV.v_age_preferences(enrich(raw_df(spark, 100)))
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    sums = re.findall(r"sum\([^()]*\) windowspecdefinition", plan)
+    assert 0 < len(sums) <= 5, sums
+
+
 def test_quantize_has_no_data_sized_shuffle(spark):
     """embedding_quantize_int8's only exchanges are the D-row stats
     aggregation pair, the single-row stats broadcast, and (at fixture

@@ -7,7 +7,7 @@ from pyspark.sql import functions as F
 from streamlit_projet_spark_streaming_spark.operators import relational as rel
 from streamlit_projet_spark_streaming_spark.sources.catalog import load_table
 
-from .conftest import SF_CORRECT
+from .conftest import SF_CORRECT, jobs_in_group
 
 
 def test_bucketed_interval_join_equals_naive_range_join(spark):
@@ -140,6 +140,28 @@ def test_approx_percentile_error_bound(spark):
     for k in exact:
         for e, a in zip(exact[k], approx[k]):
             assert abs(a - e) / e <= 0.02, f"{k}: {a} vs {e}"
+
+
+def test_gather_if_small_is_jobless_and_follows_broadcast_threshold(spark, tmp_path):
+    """A small scan-rooted frame is gathered into one partition, and the
+    size check fires no job; a threshold of -1 turns the gather off."""
+    path = str(tmp_path / "three_files")
+    spark.range(300).repartition(3).write.parquet(path)
+    df = spark.read.parquet(path)
+    assert df.rdd.getNumPartitions() == 3
+
+    out = []
+    assert jobs_in_group(spark, "gather_if_small", lambda: out.append(rel.gather_if_small(df))) == 0
+    assert out[0].rdd.getNumPartitions() == 1
+    assert sorted(r.id for r in out[0].collect()) == list(range(300))
+
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        assert rel.gather_if_small(df) is df
+    finally:
+        spark.conf.set(key, old)
 
 
 def test_aggonly_top1_matches_window_form(spark):

@@ -11,6 +11,7 @@ from streamlit_projet_spark_streaming_spark.plans import shopping_views as SV
 from streamlit_projet_spark_streaming_spark.sources.shopping import generate_raw_orders
 from streamlit_projet_spark_streaming_spark.streaming import consumer as C
 
+from .conftest import jobs_in_group
 from .oracle_harness import canonical_rows
 from .shopping_fixture import raw_df, write_json_chunks
 
@@ -73,6 +74,41 @@ def test_gold_refresh_matches_batch(spark, drained):
     assert not q.isActive
 
     _assert_gold_matches_batch(spark, drained["silver"], drained["gold"])
+
+
+def test_refresh_gold_is_five_jobs_in_the_callers_group(spark, drained, tmp_path):
+    """Over a small silver of several files, each gold table is one
+    exchange-free job, and the concurrent writes run in the caller's job
+    group (so stopping the query cancels them): exactly 5 jobs."""
+    assert len([f for f in os.listdir(drained["silver"]) if f.endswith(".parquet")]) > 1
+    gold_dir = str(tmp_path / "gold")
+    jobs = jobs_in_group(
+        spark, "refresh_gold", lambda: C.refresh_gold(spark, drained["silver"], gold_dir)
+    )
+    assert jobs == len(C.GOLD_VIEWS)
+    _assert_gold_matches_batch(spark, drained["silver"], gold_dir)
+
+
+def test_failed_refresh_changes_no_gold_table(spark, drained, tmp_path, monkeypatch):
+    """A refresh whose last table fails to compute publishes none of the
+    five: every live table keeps the files of the previous refresh."""
+    from pyspark.sql import functions as F
+
+    gold_dir = str(tmp_path / "gold")
+    C.refresh_gold(spark, drained["silver"], gold_dir)
+
+    def files():
+        return {n: sorted(os.listdir(os.path.join(gold_dir, n))) for n in C.GOLD_VIEWS}
+
+    before = files()
+    monkeypatch.setattr(
+        C,
+        "hourly_series_batch",
+        lambda silver: silver.select(F.raise_error(F.lit("boom")).cast("string").alias("x")),
+    )
+    with pytest.raises(Exception, match="boom"):
+        C.refresh_gold(spark, drained["silver"], gold_dir)
+    assert files() == before
 
 
 def _assert_gold_matches_batch(spark, silver_dir, gold_dir):
