@@ -505,9 +505,8 @@ def minhash_constants(num_hashes: int) -> list[tuple[int, int, int]]:
 
 
 #: Canonical NULL sentinel for checksum row serialization (the actual
-#: U+2400 SYMBOL-FOR-NULL character). Shared by the batch checksum
-#: entries, their DuckDB oracles, and the streaming twin — one constant,
-#: three consumers, zero drift.
+#: U+2400 SYMBOL-FOR-NULL character). Shared by the checksum entries
+#: and their DuckDB oracles — one constant, zero drift.
 CHECKSUM_NULL = "\u2400"
 
 
@@ -529,12 +528,11 @@ def md5_hash_pieces(col: Column) -> tuple[Column, Column]:
 
 
 def event_checksum_pieces(df: DataFrame, ts_ms: Column) -> DataFrame:
-    """Canonical event serialization → ``(day_id, x1, x2)`` md5 pieces —
-    ONE implementation shared by the batch ``events_partition_checksums``
-    entry and the streaming ``checksum_stream`` twin, so the hash always
-    computes JVM-side from identical bytes (a Python re-implementation
-    would see pandas' lossy float64 for nullable int64 columns and could
-    silently diverge past 2^53). ``day_id`` is FLOOR division of epoch
+    """Canonical event serialization → ``(day_id, x1, x2)`` md5 pieces for
+    the ``events_partition_checksums`` entry. The hash computes JVM-side
+    from the canonical bytes (a Python re-implementation would see
+    pandas' lossy float64 for nullable int64 columns and could silently
+    diverge past 2^53). ``day_id`` is FLOOR division of epoch
     millis — pre-epoch timestamps bucket to the correct (negative) day,
     matching ``date_trunc('day')`` semantics on both engines."""
     nul = F.lit(CHECKSUM_NULL)

@@ -615,20 +615,34 @@ def _cb_row_from_rows(rows: DataFrame) -> DataFrame:
     exemption to the no-HOF rule, not a data-sized stream). Row order
     into the aggregate is irrelevant (sort_array orders the pairs), and
     the (j, dim) spine of ``rows`` is exactly the old groupBy spine, so
-    the resulting ``cb`` is identical element for element."""
+    the resulting ``cb`` is identical element for element.
+
+    The reshape is only sound on a dense spine: exactly one row per
+    (j, dim) for j in [0, J) and dim in [0, D). A missing or duplicated
+    row would silently shift every later centroid, so the same aggregate
+    also takes ``max(j)`` and the select fails through ``raise_error``
+    unless the flat array holds exactly (max(j)+1)·D values — no extra
+    job."""
     flat = rows.agg(
         ordered_array_agg(
             F.struct(F.col("j"), F.col("dim")), F.col("val"), ascending=True
         ).alias("flat"),
         (F.max("dim") + F.lit(1)).cast("int").alias("d"),
+        (F.max("j") + F.lit(1)).cast("int").alias("n_j"),
     )
-    n_j = (F.size(F.col("flat")) / F.col("d")).cast("int")
+    n_flat, d, n_j = F.size(F.col("flat")), F.col("d"), F.col("n_j")
     reshaped = F.transform(
         F.sequence(F.lit(0), n_j - F.lit(1)),
-        lambda jj: F.slice(F.col("flat"), jj * F.col("d") + F.lit(1), F.col("d")),
+        lambda jj: F.slice(F.col("flat"), jj * d + F.lit(1), d),
     )
     return flat.select(
-        F.when(F.size(F.col("flat")) > 0, reshaped)
+        F.when(
+            (n_flat > 0) & (n_flat != n_j * d),
+            F.raise_error(
+                F.lit("_cb_row_from_rows: rows are not a dense (j, dim) spine")
+            ),
+        )
+        .when(n_flat > 0, reshaped)
         .otherwise(F.expr("CAST(array() AS array<array<double>>)"))
         .alias("cb")
     ).localCheckpoint(eager=False)

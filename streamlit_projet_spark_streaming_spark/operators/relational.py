@@ -1013,16 +1013,6 @@ def hourly_anomaly_flags(events: DataFrame, ts_col: str = "ts") -> DataFrame:
     hourly = events.groupBy(
         F.unix_timestamp(F.date_trunc("hour", F.col(ts_col))).alias("hour_ts")
     ).agg(F.count(F.lit(1)).alias("n_events"))
-    return anomaly_from_hourly(hourly)
-
-
-def anomaly_from_hourly(hourly: DataFrame) -> DataFrame:
-    """Anomaly flags from a prebuilt (hour_ts, n_events) series — the
-    entry point for a STREAMING-maintained gold table (the incremental
-    hourly snapshot feeds here directly; batch/stream parity pinned in
-    ``test_streaming_stateful.py``)."""
-    from .numeric import ratio_round
-
     w = (
         Window.orderBy("hour_ts")
         .rangeBetween(-24 * 3600, -3600)
@@ -1122,15 +1112,6 @@ def burst_user_flags(
     per_min = events.groupBy(
         F.col(user_col).alias("u"), minute.alias("m")
     ).agg(F.count(F.lit(1)).alias("cnt"))
-    return burst_from_minute_counts(per_min, user_col, burst_threshold)
-
-
-def burst_from_minute_counts(
-    per_min: DataFrame, user_col: str = "user_id", burst_threshold: int = 2
-) -> DataFrame:
-    """Burst flags from a prebuilt (u, m, cnt) per-minute table — the
-    entry point for a STREAM-maintained minute-counts gold table
-    (stream/batch parity pinned in ``test_streaming_stateful.py``)."""
     return (
         per_min.groupBy(F.col("u").alias(user_col))
         .agg(
@@ -1144,6 +1125,35 @@ def burst_from_minute_counts(
             "total_events",
             "active_minutes",
             (F.col("peak_minute_events") >= burst_threshold).alias("burst_flag"),
+        )
+    )
+
+
+def session_window_stats(events: DataFrame, gap: str) -> DataFrame:
+    """Per-user gap-based sessions over the event log
+    (``F.session_window``): consecutive events of one user closer than
+    ``gap`` merge into one session; one row per (user_id, session) with
+    ``session_start``/``session_end`` timestamps, the event count
+    ``n_events`` and the 4-dp ``total_value``.
+
+    Scale shape: one aggregation keyed by (session window, user). Spark
+    pre-aggregates map-side, shuffles once by ``user_id``, sorts each
+    partition by (user, window start) and merges overlapping windows in
+    that order; the output is |sessions| rows."""
+    return (
+        events.groupBy(
+            F.session_window(F.col("ts"), gap).alias("sw"), F.col("user_id")
+        )
+        .agg(
+            F.count(F.lit(1)).alias("n_events"),
+            F.round(F.sum("value"), 4).alias("total_value"),
+        )
+        .select(
+            F.col("user_id"),
+            F.col("sw.start").alias("session_start"),
+            F.col("sw.end").alias("session_end"),
+            "n_events",
+            "total_value",
         )
     )
 

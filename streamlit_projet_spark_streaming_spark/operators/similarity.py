@@ -707,9 +707,9 @@ def grid_kmeans(
 
 def kmeans_codebook_row(centroid_rows: DataFrame) -> DataFrame:
     """(centroid_id, dim, c) rows → the one-row ``cb`` form the Arrow
-    assignment mappers consume — the frozen-parameters handoff to
-    ``streaming.stateful.assign_cluster_stream`` (and any other online
-    consumer of a trained quantizer)."""
+    assignment mappers consume — the frozen-parameters handoff from a
+    trained quantizer to ``ivf_cell_stats`` and the IVF maintenance
+    entries built on it."""
     from .quantize import _cb_row_from_rows
 
     return _cb_row_from_rows(
@@ -726,8 +726,7 @@ def ivf_cell_stats(
 ) -> DataFrame:
     """Per-cell occupancy + centroid drift of an IVF coarse quantizer —
     the index-maintenance report a streaming ANN ingest reads to decide
-    which cells need offline re-training or splitting (the batch half of
-    ``streaming.stateful.ivf_cell_stats_stream``; r8 verdict item 7
+    which cells need offline re-training or splitting (r8 verdict item 7
     roadmap: "incremental IVF cell reassignment under drift").
 
     Output, one row per codebook cell: ``centroid_id``, ``n_assigned``

@@ -536,7 +536,8 @@ def _value_counts_event_type(spark: SparkSession, sf: str) -> DataFrame:
     FROM events GROUP BY 1
     """,
     doc="Hourly tumbling series [G1/G2/D11]: dt.floor('H') count+sum "
-    "(streamlit_app.py:374-379); streaming twin uses F.window (SURVEY §2.H6)",
+    "(streamlit_app.py:374-379); the Consumer's gold hourly_series is the "
+    "same date_trunc aggregate over silver (SURVEY §2.H6)",
     tags=("G1", "G2", "D11"),
 )
 def _hourly_series(spark: SparkSession, sf: str) -> DataFrame:
@@ -2267,18 +2268,7 @@ _register(
 
 
 def _session_windows_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .streaming.stateful import session_window_stats
-
-    out = session_window_stats(
-        _t(spark, sf_dir, "events"),
-        key="user_id",
-        ts_col="ts",
-        gap="10 minutes",
-        amount_col="value",
-        watermark=None,
-        count_alias="n_events",
-        sum_alias="total_value",
-    )
+    out = _rel.session_window_stats(_t(spark, sf_dir, "events"), gap="10 minutes")
     return out.select(
         "user_id",
         F.unix_micros("session_start").alias("start_us"),
@@ -10784,8 +10774,7 @@ def _events_holt_trend(spark: SparkSession, sf: str) -> DataFrame:
     key, so it runs as an Arrow ``applyInPandas`` grouped fold over the
     PRE-AGGREGATED hourly table — each group is ≤ |hours| rows (the
     distributed work is the hourly aggregation; the fold is O(hours)
-    per event type, the same per-key-serial profile as the streaming
-    EWMA state). Pure integer floor arithmetic (Python ``//`` = floor;
+    per event type). Pure integer floor arithmetic (Python ``//`` = floor;
     the oracle replays the exact recurrence as a RECURSIVE CTE with
     ``floor(x/2.0)`` — exact for |x| < 2⁵²), so every row is
     bit-identical cross-engine."""
@@ -14660,7 +14649,7 @@ _register(
 # ('a',) — every field is coalesced to this sentinel instead. The
 # actual U+2400 SYMBOL-FOR-NULL character (not its ASCII escape
 # spelling, which ordinary text — e.g. JSON — could forge). Canonical
-# home: operators/dedup.py (shared with the streaming twin).
+# home: operators/dedup.py.
 from .operators.dedup import CHECKSUM_NULL as _CK_NULL  # noqa: E402
 
 
@@ -15243,8 +15232,7 @@ def _events_partition_checksums(spark: SparkSession, sf: str) -> DataFrame:
     Scale shape: one scan, map-side-combined aggregate straight to
     |days| rows — the shuffle carries 5 cells per day. Day ids are
     exact floor-division epoch integers. Serialization + hashing live
-    in ``dedup.event_checksum_pieces``, shared with the streaming
-    twin."""
+    in ``dedup.event_checksum_pieces``."""
     from .operators.dedup import event_checksum_pieces
 
     ev = _t(spark, sf, "events")
@@ -21390,9 +21378,7 @@ _register(
     "the half-away integer mean of the vectors routed to it - exact "
     "integers end to end, so the oracle is the established kmeans SQL "
     "replay. Scale: one corpus Arrow map emitting <=k partials/batch, a "
-    "k*D aggregate, k-row spine join - no data-sized shuffle. Streaming "
-    "twin: streaming.stateful.ivf_cell_stats_stream (bit-exact parity "
-    "pytest).",
+    "k*D aggregate, k-row spine join - no data-sized shuffle.",
     tags=("ext", "similarity", "ivf", "maintenance"),
 )(_ivf_cell_stats_q)
 
@@ -21553,9 +21539,7 @@ _register(
     "occupancy band is chosen so the near-uniform fixture corpus "
     "exercises every action class. Scale: all inputs cell-sized (k / "
     "k*D rows), merge-target search k^2*D - the corpus pass lives in "
-    "ivf_cell_stats. Streaming twin: "
-    "streaming.stateful.start_cell_plan_maintenance (foreachBatch over "
-    "the bit-exact stats stream; parity pytest).",
+    "ivf_cell_stats.",
     tags=("ext", "similarity", "ivf", "maintenance"),
 )(_ivf_cell_split_plan_q)
 

@@ -1,2 +1,3 @@
-"""Structured Streaming ingest/enrichment pipeline (the reconstructed
-Consumer) + gold-table refresh."""
+"""The package's one streaming job: the reconstructed Consumer
+(``consumer.py``) — file-drop ingest into enriched silver plus the gold
+refresh that keeps the reference's views fresh."""

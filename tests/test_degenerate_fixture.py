@@ -40,6 +40,7 @@ ENTRIES = [
     "text_unigram_logprob",
     "text_word_pmi",
     "dedup_minhash_lsh",
+    "dedup_simhash",
     "corpus_dataset_card",
     # v2 (NULL-injection) catches — NULL text/lang/label/value rows:
     "embedding_cluster_cards",

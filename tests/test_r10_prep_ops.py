@@ -1,11 +1,7 @@
 """IVF index maintenance + packed-shard consolidation operators (built
 as r9's r10-prep pair, registered with full DuckDB oracles in r10):
-cell stats (batch + streaming), the cell split/merge/re-train planner
-(batch + the foreachBatch maintenance pipeline), the shard merge
+cell stats, the cell split/merge/re-train planner, the shard merge
 planner, and the staging-swap consolidation applier."""
-
-import json
-import os
 
 import pytest
 
@@ -40,10 +36,6 @@ def test_ivf_cell_stats_spine_counts_drift(spark):
         else:
             assert r["drift_d2"] >= 0
     # occupancy cross-check against the audited assignment pass
-    from streamlit_projet_spark_streaming_spark.streaming.stateful import (
-        assign_cluster_stream,  # noqa: F401  (import sanity only)
-    )
-
     assigned, _ = grid_kmeans(emb, n_clusters=8, n_iter=2)
     expect = {
         r["centroid_id"]: r["n"]
@@ -53,63 +45,6 @@ def test_ivf_cell_stats_spine_counts_drift(spark):
     }
     for j, r in rows.items():
         assert r["n_assigned"] == expect.get(j, 0), j
-
-
-def test_ivf_cell_stats_stream_matches_batch(spark, tmp_path):
-    """After all micro-batches, each cell's LAST update-mode emission is
-    bit-identical to the batch op over the union of the batches — the
-    incremental index-maintenance contract."""
-    from streamlit_projet_spark_streaming_spark.streaming.stateful import ivf_cell_stats_stream
-
-    emb, cb_row = _codebook(spark)
-    rows = emb.select("vec_id", "embedding").collect()
-    input_dir = str(tmp_path / "emb_in")
-    os.makedirs(input_dir)
-    half = len(rows) // 2
-    for i, chunk in enumerate((rows[:half], rows[half:])):
-        with open(os.path.join(input_dir, f"batch{i}.json"), "w") as f:
-            for r in chunk:
-                f.write(
-                    json.dumps(
-                        {
-                            "vec_id": r["vec_id"],
-                            "embedding": [float(x) for x in r["embedding"]],
-                        }
-                    )
-                    + "\n"
-                )
-    stream = (
-        spark.readStream.schema("vec_id long, embedding array<float>")
-        .option("maxFilesPerTrigger", 1)  # force >1 micro-batch
-        .json(input_dir)
-    )
-    out = ivf_cell_stats_stream(stream, cb_row)
-    q = (
-        out.writeStream.format("memory")
-        .queryName("ivf_cell_stream_out")
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got_pdf = spark.sql("SELECT * FROM ivf_cell_stream_out").toPandas()
-    # final state per cell = the emission with the largest n_assigned
-    # (occupancy is monotone across updates)
-    final = (
-        got_pdf.sort_values(["centroid_id", "n_assigned"])
-        .groupby("centroid_id")
-        .tail(1)
-    )
-    got = {
-        int(r.centroid_id): (int(r.n_assigned), int(r.drift_d2))
-        for r in final.itertuples()
-    }
-    expect = {
-        r["centroid_id"]: (r["n_assigned"], r["drift_d2"])
-        for r in ivf_cell_stats(emb, cb_row).collect()
-        if r["n_assigned"] > 0
-    }
-    assert got == expect
 
 
 def test_shard_merge_plan_exact_groups(spark):
@@ -444,74 +379,6 @@ def test_ivf_cell_split_plan_invariants(spark):
                 assert p["merge_into"] is None
         else:
             assert p["n_subcells"] is None and p["merge_into"] is None
-
-
-def test_cell_plan_maintenance_stream_parity(spark, tmp_path):
-    """After all micro-batches the maintained plan table is bit-identical
-    to the batch planner over the union — composition parity on top of
-    the already-proven stats-stream parity."""
-    from streamlit_projet_spark_streaming_spark.operators.similarity import (
-        ivf_cell_split_plan,
-    )
-    from streamlit_projet_spark_streaming_spark.streaming.stateful import (
-        start_cell_plan_maintenance,
-    )
-
-    emb, centroid_rows, cb_row = _split_plan_inputs(spark)
-    rows = emb.select("vec_id", "embedding").collect()
-    input_dir = str(tmp_path / "emb_in")
-    os.makedirs(input_dir)
-    half = len(rows) // 2
-    for i, chunk in enumerate((rows[:half], rows[half:])):
-        with open(os.path.join(input_dir, f"batch{i}.json"), "w") as f:
-            for r in chunk:
-                f.write(
-                    json.dumps(
-                        {
-                            "vec_id": r["vec_id"],
-                            "embedding": [float(x) for x in r["embedding"]],
-                        }
-                    )
-                    + "\n"
-                )
-    stream = (
-        spark.readStream.schema("vec_id long, embedding array<float>")
-        .option("maxFilesPerTrigger", 1)  # force >1 micro-batch
-        .json(input_dir)
-    )
-    plan_dir = str(tmp_path / "plan")
-    q = start_cell_plan_maintenance(
-        stream,
-        cb_row,
-        centroid_rows,
-        plan_dir,
-        str(tmp_path / "ckpt"),
-        hot_num=17,
-        hot_den=16,
-        cold_num=15,
-        cold_den=16,
-        drift_threshold=1_500_000_000,
-    )
-    q.awaitTermination(180)
-    got = {
-        r["centroid_id"]: (
-            r["n_assigned"], r["drift_d2"], r["action"],
-            r["n_subcells"], r["merge_into"],
-        )
-        for r in spark.read.parquet(plan_dir).collect()
-    }
-    stats = ivf_cell_stats(emb, cb_row).localCheckpoint(eager=False)
-    expect = {
-        r["centroid_id"]: (
-            r["n_assigned"], r["drift_d2"], r["action"],
-            r["n_subcells"], r["merge_into"],
-        )
-        for r in ivf_cell_split_plan(
-            stats, centroid_rows, hot_num=17, hot_den=16,
-            cold_num=15, cold_den=16, drift_threshold=1_500_000_000,
-        ).collect()
-    }
-    assert got == expect
 
 
 def test_apply_cell_plan_invariants(spark):
@@ -867,3 +734,27 @@ def test_grid_kmeans_partials_rejects_ragged_batch():
     pdf = pd.DataFrame({"cb": [cb, cb], "embedding": [[0.1, 0.2, 0.3], [0.4, 0.5, 0.6]]})
     with pytest.raises(ValueError, match="embedding dim 3 != codebook dim 2"):
         next(_gk_partials_mapper()(iter([pdf])))
+
+
+def test_grid_kmeans_assign_routes_zero_vector():
+    """A raw zero vector (the catalog boundary filters these, a caller
+    routing uncatalogued rows does not) is assigned like any other
+    vector: exact integer squared distances, ties to the smaller
+    centroid id, no NaN."""
+    import pandas as pd
+
+    from streamlit_projet_spark_streaming_spark.operators.similarity import (
+        _gk_assign_mapper,
+    )
+
+    cb = [[1e6, 0.0], [-1e6, 0.0], [0.0, 3e6]]
+    pdf = pd.DataFrame(
+        {
+            "cb": [cb] * 3,
+            "vec_id": [1, 2, 3],
+            "embedding": [[0.0, 0.0], [-0.9, 0.0], [0.0, 2.0]],
+        }
+    )
+    out = next(_gk_assign_mapper(with_d2=True)(iter([pdf])))
+    assert out["centroid_id"].tolist() == [0, 1, 2]
+    assert out["d2"].tolist() == [10**12, 10**10, 10**12]

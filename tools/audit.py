@@ -39,8 +39,8 @@ sf0.01 for libm, duckdb-shape and bitwise, sf0.001 for partition. Exit 0
 = every audited entry passes, 1 = some entry fails, 2 = unknown axis or
 entry, reported before any Spark session starts or fixture is built.
 Fast pytest subsets: tests/test_libm_robustness.py,
-test_degenerate_fixture.py, test_streaming_degenerate.py,
-test_partition_invariance.py, test_duckdb_shape_invariance.py.
+test_degenerate_fixture.py, test_partition_invariance.py,
+test_duckdb_shape_invariance.py.
 """
 
 from __future__ import annotations
