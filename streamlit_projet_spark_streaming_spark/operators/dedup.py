@@ -91,13 +91,14 @@ def exact_dedup(documents: DataFrame) -> DataFrame:
     )
 
 
-def prefix_fingerprint_dups(documents: DataFrame, prefix_len: int = 40) -> DataFrame:
+def prefix_fingerprint_dups(documents: DataFrame) -> DataFrame:
     """Fingerprint-based duplicate groups: md5 of the normalized prefix.
 
     A cheap document-fingerprint dedup (same shape as URL/host dedup in web
     corpora): groups sharing a fingerprint with >1 member are duplicate
     clusters. md5 is engine-portable (DuckDB computes the identical digest).
     """
+    prefix_len = 40
     fp = F.md5(F.substring(_norm(F.col("text")), 1, prefix_len))
     return (
         documents.select(F.col("doc_id"), fp.alias("fingerprint"))
@@ -179,7 +180,7 @@ def shingles(
     return (grams if grams is not None else _grams(documents, n, unit)).distinct()
 
 
-def span_dup_profile(documents: DataFrame, n: int = 5) -> DataFrame:
+def span_dup_profile(documents: DataFrame) -> DataFrame:
     """Per-document duplicated-span signal (the document-level summary of
     Lee et al.'s substring dedup, "Deduplicating Training Data Makes
     Language Models Better", arXiv:2107.06499): for each doc, how many of
@@ -199,6 +200,7 @@ def span_dup_profile(documents: DataFrame, n: int = 5) -> DataFrame:
     too short for any span (< n words) surface with 0 spans via the LEFT
     join from the id spine, not silently dropped.
     """
+    n = 5
     pairs = shingles(documents, n, "word")
     span_df = pairs.groupBy("sh").agg(F.count(F.lit(1)).alias("span_df"))
     spans = pairs.join(span_df, "sh")
@@ -224,10 +226,11 @@ def span_dup_profile(documents: DataFrame, n: int = 5) -> DataFrame:
     )
 
 
-def shingle_arrays(documents: DataFrame, n: int = 3, unit: str = "word") -> DataFrame:
+def shingle_arrays(documents: DataFrame, unit: str = "word") -> DataFrame:
     """Distinct shingle set per doc as an ARRAY column:
     (doc_id, shs array<string>, n_sh). One shuffle: collect_set dedups
     inside the aggregation, so no separate distinct pass."""
+    n = 3
     return (
         _grams(documents, n, unit)
         .groupBy("doc_id")
@@ -241,7 +244,6 @@ def benchmark_contamination(
     n: int = 5,
     bench_buckets: int = 500,
     ratio_threshold: float = 0.2,
-    salt: str = "bench",
     broadcast_bench: bool = True,
 ) -> DataFrame:
     """Train/eval decontamination: per corpus document, how much of its
@@ -274,6 +276,7 @@ def benchmark_contamination(
     """
     from .sampling import hash_bucket
 
+    salt = "bench"
     bucketed = documents.withColumn(
         "__bucket", hash_bucket(F.col("doc_id"), salt)
     )
@@ -393,7 +396,6 @@ def ngram_jaccard_pairs(
     documents: DataFrame,
     n: int = 3,
     threshold: float = 0.6,
-    unit: str = "word",
     grams: DataFrame | None = None,
 ) -> DataFrame:
     """EXACT n-gram Jaccard near-duplicate pairs (doc_a < doc_b, J ≥ τ),
@@ -419,6 +421,7 @@ def ngram_jaccard_pairs(
     count. At 100 TB pair the corpus down first with ``minhash_lsh_pairs``
     or raise τ; the semantics stay identical.
     """
+    unit = "word"
     sh = shingles(documents, n, unit, grams=grams)
     docsets = _rarity_docsets(sh)
     # floor (not ceil) keeps the prefix conservatively LONG under float
@@ -555,8 +558,6 @@ def event_checksum_pieces(df: DataFrame, ts_ms: Column) -> DataFrame:
 def minhash_signatures(
     documents: DataFrame,
     n: int = MINHASH_NGRAM,
-    num_hashes: int = MINHASH_NUM_HASHES,
-    unit: str = "word",
     grams: DataFrame | None = None,
 ) -> DataFrame:
     """MinHash signature per document: sig[i] = min over shingles of
@@ -577,6 +578,7 @@ def minhash_signatures(
     shuffle-free but runs interpreted (higher-order functions are
     CodegenFallback) — measured far slower than this one.
     """
+    unit = "word"
     if grams is None:
         grams = _grams(documents, n, unit)
     x1, x2 = md5_hash_pieces(F.col("sh"))
@@ -586,7 +588,7 @@ def minhash_signatures(
             (F.lit(a) * F.col("x1") + F.lit(b) * F.col("x2") + F.lit(c))
             % F.lit(MINHASH_P)
         ).alias(f"h{i}")
-        for i, (a, b, c) in enumerate(minhash_constants(num_hashes))
+        for i, (a, b, c) in enumerate(minhash_constants(MINHASH_NUM_HASHES))
     ]
     return hashed.groupBy("doc_id").agg(*aggs)
 
@@ -618,15 +620,7 @@ def _band_buckets(sig: DataFrame, num_hashes: int, bands: int) -> DataFrame:
     ).select("doc_id", "band.band_id", "band.band_hash")
 
 
-def minhash_lsh_pairs(
-    documents: DataFrame,
-    n: int = MINHASH_NGRAM,
-    num_hashes: int = MINHASH_NUM_HASHES,
-    bands: int = MINHASH_BANDS,
-    threshold: float = 0.6,
-    unit: str = "word",
-    grams: DataFrame | None = None,
-) -> DataFrame:
+def minhash_lsh_pairs(documents: DataFrame) -> DataFrame:
     """MinHash + LSH banding near-dup candidates, exact-verified.
 
     Pipeline: signatures → band hashes (bands × rows layout) → bucket join
@@ -646,20 +640,12 @@ def minhash_lsh_pairs(
     test suite additionally asserts candidates ⊆ exact pairs + a recall
     bound vs ``ngram_jaccard_pairs``.
     """
-    candidates = minhash_candidates(
-        documents, n, num_hashes, bands, unit, grams=grams
-    ).localCheckpoint(eager=False)
-    return _verify_candidate_pairs(
-        documents, candidates, n, unit, threshold, grams=grams
-    )
+    candidates = minhash_candidates(documents).localCheckpoint(eager=False)
+    return _verify_candidate_pairs(documents, candidates, MINHASH_NGRAM, "word", 0.6)
 
 
 def minhash_candidates(
     documents: DataFrame,
-    n: int = MINHASH_NGRAM,
-    num_hashes: int = MINHASH_NUM_HASHES,
-    bands: int = MINHASH_BANDS,
-    unit: str = "word",
     grams: DataFrame | None = None,
 ) -> DataFrame:
     """Raw LSH band-collision candidate pairs (doc_a < doc_b, distinct) —
@@ -667,8 +653,8 @@ def minhash_candidates(
     the quality audit (`lsh_quality_report`) can count candidates without
     replaying the pipeline. Callers should lazily checkpoint the result
     if consuming it more than once."""
-    sig = minhash_signatures(documents, n, num_hashes, unit, grams=grams)
-    buckets = _band_buckets(sig, num_hashes, bands)
+    sig = minhash_signatures(documents, MINHASH_NGRAM, grams=grams)
+    buckets = _band_buckets(sig, MINHASH_NUM_HASHES, MINHASH_BANDS)
 
     a, b = buckets.alias("a"), buckets.alias("b")
     return (
@@ -744,10 +730,6 @@ def incremental_dedup(
     corpus: DataFrame,
     batch: DataFrame,
     n: int = MINHASH_NGRAM,
-    num_hashes: int = MINHASH_NUM_HASHES,
-    bands: int = MINHASH_BANDS,
-    threshold: float = 0.6,
-    unit: str = "word",
 ) -> DataFrame:
     """Dedup a NEW batch against an EXISTING corpus — the continual-
     pretraining update path (each crawl snapshot is screened against
@@ -775,6 +757,8 @@ def incremental_dedup(
     ``b#id``), so a shared id can never merge two different documents'
     shingle sets in the union→groupBy below (ADVICE r5).
     """
+    threshold = 0.6
+    unit = "word"
     fp_of = lambda df: df.select(  # noqa: E731 — two-use local shorthand
         "doc_id", F.md5(_norm(F.col("text"))).alias("fp")
     )
@@ -792,10 +776,10 @@ def incremental_dedup(
         "text",
     )
     c_tag, b_tag = tag(corpus, "c"), tag(batch, "b")
-    sig_c = minhash_signatures(c_tag, n, num_hashes, unit)
-    sig_b = minhash_signatures(b_tag, n, num_hashes, unit)
-    bc = _band_buckets(sig_c, num_hashes, bands).alias("a")
-    bb = _band_buckets(sig_b, num_hashes, bands).alias("b")
+    sig_c = minhash_signatures(c_tag, n)
+    sig_b = minhash_signatures(b_tag, n)
+    bc = _band_buckets(sig_c, MINHASH_NUM_HASHES, MINHASH_BANDS).alias("a")
+    bb = _band_buckets(sig_b, MINHASH_NUM_HASHES, MINHASH_BANDS).alias("b")
     candidates = (
         bc.join(
             bb,
@@ -842,7 +826,7 @@ def incremental_dedup(
     )
 
 
-def duplicate_clusters(pairs: DataFrame, max_iter: int = 25) -> DataFrame:
+def duplicate_clusters(pairs: DataFrame) -> DataFrame:
     """Connected components over a near-dup pair graph: every document in
     ``pairs`` (doc_a, doc_b) gets the MIN doc_id of its component as
     ``cluster_id`` — the canonical "keep one per duplicate cluster" step
@@ -867,6 +851,7 @@ def duplicate_clusters(pairs: DataFrame, max_iter: int = 25) -> DataFrame:
     fixpoint (silently returning half-propagated labels would emit wrong
     clusters).
     """
+    max_iter = 25
     # Checkpoint the PAIRS first: both direction branches of the
     # undirected adjacency derive from them, and their projections differ
     # (a,b vs b,a) so ReuseExchange cannot dedupe the subplans — without
@@ -957,13 +942,17 @@ def hamming_band_chunks(sig_col: str, nbits: int, max_hamming: int):
     return cols
 
 
-def simhash_signatures(documents: DataFrame, nbits: int = 60) -> DataFrame:
+#: SimHash signature width: the word hash is the first 60 bits of
+#: md5(word) (15 hex chars keep the value BIGINT-positive on both
+#: engines), one signature bit per hash bit.
+SIMHASH_BITS = 60
+
+
+def simhash_signatures(documents: DataFrame) -> DataFrame:
     """(doc_id, simhash) signatures — the signature subplan of
     :func:`simhash_pairs`, factored out so per-micro-batch consumers
     (the streaming near-dup screen) and the pair join share ONE
     construction. See simhash_pairs for the portability contract."""
-    if nbits > 60:
-        raise ValueError("portable SimHash supports nbits <= 60")
     word_hash = F.conv(F.substring(F.md5("w"), 1, 15), 16, 10).cast("long")
     # NOTE (r9 perf audit): a (doc_id, w, cnt) pre-aggregation before
     # hashing — fewer md5s, weighted ±cnt bit sums — measured SLOWER
@@ -988,11 +977,11 @@ def simhash_signatures(documents: DataFrame, nbits: int = 60) -> DataFrame:
     # driver codegen at any scale.
     bit_aggs = [
         F.sum(F.shiftright(F.col("h"), i).bitwiseAND(F.lit(1))).alias(f"s{i}")
-        for i in range(nbits)
+        for i in range(SIMHASH_BITS)
     ]
     per_bit = words.groupBy("doc_id").agg(F.count(F.lit(1)).alias("nw"), *bit_aggs)
     sig_expr = None
-    for i in range(nbits):
+    for i in range(SIMHASH_BITS):
         bit = F.when(
             F.lit(2) * F.col(f"s{i}") > F.col("nw"), F.lit(1).cast("long")
         ).otherwise(F.lit(0).cast("long"))
@@ -1001,15 +990,11 @@ def simhash_signatures(documents: DataFrame, nbits: int = 60) -> DataFrame:
     return per_bit.select("doc_id", sig_expr.alias("simhash"))
 
 
-def simhash_pairs(
-    documents: DataFrame,
-    max_hamming: int = 6,
-    nbits: int = 60,
-) -> DataFrame:
-    """SimHash near-dup pairs: ``nbits``-bit signature, Hamming ≤ k.
+def simhash_pairs(documents: DataFrame) -> DataFrame:
+    """SimHash near-dup pairs: ``SIMHASH_BITS``-bit signature, Hamming ≤ 6.
 
     Signature: per word-hash, each bit contributes ±1; the sign of the
-    per-bit sum is the signature bit. Computed as ``nbits`` conditional-sum
+    per-bit sum is the signature bit. Computed as one bit-sum
     codegen'd aggregates in one groupBy (single shuffle; a per-row
     ``F.aggregate`` fold would avoid the shuffle, but higher-order
     functions are CodegenFallback — interpreted, far slower).
@@ -1017,8 +1002,7 @@ def simhash_pairs(
     The word hash is the first 60 bits of md5(word) (hex→int, same
     construction as ``md5_hash_pieces``), which DuckDB reproduces
     bit-for-bit — so signatures, banding, and the Hamming verification
-    are all oracle-checkable; nbits is capped at 60 (15 hex chars keeps
-    the value BIGINT-positive in both engines).
+    are all oracle-checkable.
 
     Pairing is the LOSSLESS banded chunk join (Manku et al.'s
     multi-index scheme): the signature splits into
@@ -1029,9 +1013,10 @@ def simhash_pairs(
     candidates pay the ``bit_count(XOR)`` verification. Identical result
     set to the naive all-pairs crossJoin at any scale.
     """
-    sigs = simhash_signatures(documents, nbits=nbits)
+    max_hamming = 6
+    sigs = simhash_signatures(documents)
 
-    chunk_cols = hamming_band_chunks("simhash", nbits, max_hamming)
+    chunk_cols = hamming_band_chunks("simhash", SIMHASH_BITS, max_hamming)
     chunks = sigs.select(
         "doc_id", "simhash", F.explode(F.array(*chunk_cols)).alias("ch")
     ).select("doc_id", "simhash", "ch.ci", "ch.cv")
@@ -1056,7 +1041,7 @@ def simhash_pairs(
     )
 
 
-def cross_source_dup_matrix(documents: DataFrame, prefix: int = 40) -> DataFrame:
+def cross_source_dup_matrix(documents: DataFrame) -> DataFrame:
     """Cross-source duplicate-leakage matrix: for every source pair, how
     many distinct fingerprints (md5 of the normalized ``prefix``-char
     text prefix, the same key as :func:`prefix_fingerprint_dups`) appear
@@ -1071,6 +1056,7 @@ def cross_source_dup_matrix(documents: DataFrame, prefix: int = 40) -> DataFrame
     subplan (ReuseExchange ships one shuffle); pair counts aggregate
     map-side. Output is at most |sources|² rows at any corpus scale.
     """
+    prefix = 40
     fp = (
         documents.select(
             F.md5(F.substring(_norm(F.col("text")), 1, prefix)).alias("fp"),
@@ -1088,9 +1074,7 @@ def cross_source_dup_matrix(documents: DataFrame, prefix: int = 40) -> DataFrame
     )
 
 
-def lsh_quality_report(
-    documents: DataFrame, threshold: float = 0.6
-) -> DataFrame:
+def lsh_quality_report(documents: DataFrame) -> DataFrame:
     """One-row quality audit of the MinHash-LSH approximation against
     exact ground truth: raw band-collision candidates, verified pairs
     (candidates whose EXACT Jaccard ≥ threshold — by construction the
@@ -1108,6 +1092,7 @@ def lsh_quality_report(
     fixture-sized sample, not the corpus — the exact side is the cost);
     the LSH path itself never needs it in production.
     """
+    threshold = 0.6
     # r10 opt: ONE lazily-checkpointed grams table threads all three
     # pipelines (LSH candidates, candidate verification, exact PPJoin) —
     # the r9 method-agreement fix applied to this audit too; without it
@@ -1145,12 +1130,7 @@ def lsh_quality_report(
     )
 
 
-def containment_pairs(
-    documents: DataFrame,
-    n: int = 3,
-    threshold: float = 0.8,
-    unit: str = "word",
-) -> DataFrame:
+def containment_pairs(documents: DataFrame, threshold: float = 0.8) -> DataFrame:
     """EXACT directed shingle-containment pairs: C(A→B) =
     |S_A ∩ S_B| / |S_A| ≥ τ with A ≠ B — the ASYMMETRIC near-dup
     relation Jaccard misses (a quote, a subsumed chunk, a doc embedded
@@ -1177,6 +1157,8 @@ def containment_pairs(
     the containment ratio rounds in exact integer space. Both
     directions of an asymmetric pair can appear — by design.
     """
+    n = 3
+    unit = "word"
     sh = shingles(documents, n, unit)
     # Shared machinery with ngram_jaccard_pairs; like there, docsets is
     # data-sized → ReuseExchange dedupes its consumers, NO checkpoint.

@@ -157,9 +157,7 @@ def pagerank_integer(edges: DataFrame, iters: int = 3) -> DataFrame:
     return pr.select("part", F.col("pr").alias("pr_scaled"))
 
 
-def ppr_integer(
-    edges: DataFrame, seeds: DataFrame, iters: int = 3
-) -> DataFrame:
+def ppr_integer(edges: DataFrame, seeds: DataFrame) -> DataFrame:
     """Personalized PageRank (damping 0.85) in exact integer arithmetic
     — the seed-set expansion primitive behind curated-corpus growth
     ("start from known-good items, walk the co-occurrence graph"):
@@ -183,6 +181,7 @@ def ppr_integer(
     ``seeds``: one column ``part``. Returns
     ``(part, ppr_scaled, is_seed)``.
     """
+    iters = 3
     edges = edges.localCheckpoint(eager=False)
     outw = edges.groupBy("src").agg(F.sum("w").alias("outw"))
     ew = edges.join(outw, "src").localCheckpoint(eager=False)
@@ -289,26 +288,17 @@ def copurchase_pairs(lineitem: DataFrame) -> DataFrame:
     )
 
 
-def _und_deg(
-    edges: DataFrame, canonical: bool = False
-) -> tuple[DataFrame, DataFrame]:
-    """Undirected edge set + node degrees from a directed edge list —
-    the front of every whole-graph statistic here. Both tables are
-    lazily checkpointed: each has multiple consumers downstream (the
-    multi-consumer-subplan rule) and the co-purchase self-join that
-    usually feeds ``edges`` is expensive to replay.
+def _und_deg(edges: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """Undirected edge set + node degrees — the front of every
+    whole-graph statistic here. Both tables are lazily checkpointed:
+    each has multiple consumers downstream (the multi-consumer-subplan
+    rule) and the co-purchase self-join that usually feeds ``edges`` is
+    expensive to replay.
 
-    ``canonical=True``: the caller guarantees ``edges`` is already
-    DISTINCT with ``src < dst`` (e.g. :func:`copurchase_pairs` output),
-    so the orientation filter + re-distinct — a full extra shuffle of
-    the edge table that dedupes nothing — is skipped (r9 perf audit)."""
-    und = (
-        edges.select("src", "dst")
-        if canonical
-        else edges.filter(F.col("src") < F.col("dst"))
-        .select("src", "dst")
-        .distinct()
-    ).localCheckpoint(eager=False)
+    Precondition: ``edges`` is already DISTINCT with ``src < dst``
+    (:func:`copurchase_pairs` output), so it is used as the undirected
+    edge set as is — no orientation filter, no re-distinct shuffle."""
+    und = edges.select("src", "dst").localCheckpoint(eager=False)
     deg = (
         und.select(F.col("src").alias("node"))
         .union(und.select(F.col("dst").alias("node")))
@@ -319,9 +309,7 @@ def _und_deg(
     return und, deg
 
 
-def degree_assortativity(
-    edges: DataFrame, canonical: bool = False
-) -> DataFrame:
+def degree_assortativity(edges: DataFrame) -> DataFrame:
     """Degree assortativity coefficient (Newman 2002) of an undirected
     graph, one row: the Pearson correlation of endpoint degrees over
     all ORDERED edge endpoint pairs (each undirected edge contributes
@@ -344,7 +332,7 @@ def degree_assortativity(
     """
     from .numeric import ratio_round
 
-    und, deg = _und_deg(edges, canonical=canonical)
+    und, deg = _und_deg(edges)
     du = deg.select(F.col("node").alias("src"), F.col("d").alias("dx"))
     dv = deg.select(F.col("node").alias("dst"), F.col("d").alias("dy"))
     ed = und.join(du, "src").join(dv, "dst")
@@ -373,12 +361,7 @@ def degree_assortativity(
 KCORE_MAX_ROUNDS = 8
 
 
-def kcore(
-    edges: DataFrame,
-    k: int,
-    max_rounds: int = KCORE_MAX_ROUNDS,
-    canonical: bool = False,
-) -> DataFrame:
+def kcore(edges: DataFrame, k: int, max_rounds: int = KCORE_MAX_ROUNDS) -> DataFrame:
     """Nodes of the k-core (maximal induced subgraph with min degree
     ≥ k) with their in-core degrees, by iterative peeling: drop every
     node of degree < k, recompute degrees on the induced subgraph,
@@ -400,7 +383,7 @@ def kcore(
     bounded by the peeling depth of the degeneracy ordering, typically
     single digits on heavy-tailed graphs.
     """
-    und, _ = _und_deg(edges, canonical=canonical)
+    und, _ = _und_deg(edges)
     cur = und
     prev: int | None = None
     for _ in range(max_rounds + 1):
@@ -434,7 +417,7 @@ def kcore(
 
 
 def _oriented_wedges(
-    edges: DataFrame, canonical: bool = False
+    edges: DataFrame,
 ) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame]:
     """Degree-ordered edge orientation + wedge enumeration — the shared
     core of :func:`triangle_stats` and :func:`local_clustering`.
@@ -446,7 +429,7 @@ def _oriented_wedges(
     its multiple consumers (the multi-consumer-subplan rule; the
     co-purchase self-join that usually feeds ``edges`` is expensive).
     """
-    und, deg = _und_deg(edges, canonical=canonical)
+    und, deg = _und_deg(edges)
     du = deg.select(F.col("node").alias("src"), F.col("d").alias("d_src"))
     dv = deg.select(F.col("node").alias("dst"), F.col("d").alias("d_dst"))
     ed = und.join(du, "src").join(dv, "dst")
@@ -479,7 +462,7 @@ def _oriented_wedges(
     return und, deg, o, wedges
 
 
-def local_clustering(edges: DataFrame, canonical: bool = False) -> DataFrame:
+def local_clustering(edges: DataFrame) -> DataFrame:
     """Per-node local clustering coefficient: lcc(v) = 2·tri(v) /
     (deg(v)·(deg(v)−1)) for every node with degree ≥ 2.
 
@@ -493,7 +476,7 @@ def local_clustering(edges: DataFrame, canonical: bool = False) -> DataFrame:
     """
     from .numeric import ratio_round
 
-    und, deg, o, wedges = _oriented_wedges(edges, canonical=canonical)
+    und, deg, o, wedges = _oriented_wedges(edges)
     closing = o.select(F.col("a").alias("wb"), F.col("b").alias("wc"))
     tri = wedges.join(closing, ["wb", "wc"], "left_semi")
     member = (
@@ -520,15 +503,12 @@ def local_clustering(edges: DataFrame, canonical: bool = False) -> DataFrame:
     )
 
 
-def triangle_stats(edges: DataFrame, canonical: bool = False) -> DataFrame:
+def triangle_stats(edges: DataFrame) -> DataFrame:
     """Global triangle census of an undirected graph: node/edge/wedge/
     triangle counts + the global clustering coefficient, as one row.
 
-    Input is a DIRECTED edge list; rows with ``src < dst`` are taken as
-    the undirected edge set, so both :func:`copurchase_edges`'
-    both-directions output and :func:`copurchase_pairs`' already-
-    oriented pairs are valid inputs (the latter avoids building the
-    unused ``dst < src`` half).
+    Input is the undirected edge set as distinct ``src < dst`` pairs
+    (:func:`copurchase_pairs` output; see :func:`_und_deg`).
 
     Algorithm — degree-ordered edge orientation (the MapReduce triangle
     scheme of Suri & Vassilvitskii 2011): orient every undirected edge
@@ -551,7 +531,7 @@ def triangle_stats(edges: DataFrame, canonical: bool = False) -> DataFrame:
     """
     from .numeric import ratio_round
 
-    und, deg, o, wedges = _oriented_wedges(edges, canonical=canonical)
+    und, deg, o, wedges = _oriented_wedges(edges)
     # ord(wb) < ord(wc), so a closing undirected edge {wb, wc} is
     # oriented exactly wb → wc: one equi-join probe, no OR condition.
     closing = o.select(F.col("a").alias("wb"), F.col("b").alias("wc"))
@@ -579,7 +559,7 @@ def triangle_stats(edges: DataFrame, canonical: bool = False) -> DataFrame:
     )
 
 
-def hits_bipartite(edges: DataFrame, iters: int = 3) -> DataFrame:
+def hits_bipartite(edges: DataFrame) -> DataFrame:
     """HITS (Kleinberg) hub/authority scores on a bipartite weighted
     edge list ``(hub, auth, w)``, in exact integer arithmetic.
 
@@ -601,8 +581,7 @@ def hits_bipartite(edges: DataFrame, iters: int = 3) -> DataFrame:
     output — plus unbounded lineage otherwise). The L1 total rides a
     lazy broadcast crossJoin, never a driver collect.
     """
-    if iters < 1:
-        raise ValueError(f"hits_bipartite needs iters >= 1, got {iters}")
+    iters = 3
     edges = edges.localCheckpoint(eager=False)
     hubs = edges.select("hub").distinct()
     nh = hubs.agg(F.count(F.lit(1)).alias("n"))
@@ -668,7 +647,6 @@ def link_prediction_cn(
     edges: DataFrame,
     k: int = 20,
     max_middle_degree: int = 1 << 20,
-    canonical_edges: bool = False,
 ) -> DataFrame:
     """Common-neighbors link prediction over an undirected graph: the
     top-``k`` NON-edges ranked by shared-neighbor count (Liben-Nowell &
@@ -706,7 +684,7 @@ def link_prediction_cn(
     degree joins on the k survivors; the final top-k is a
     TakeOrderedAndProject (map-side top-k, no global sort).
     """
-    und, deg = _und_deg(edges, canonical=canonical_edges)
+    und, deg = _und_deg(edges)
     # Hub cap on the MIDDLE: the hub set is power-law-tiny, so the
     # anti-join broadcasts; n_capped is a 1-row audit aggregate riding
     # into the k-row result via a broadcast cross join.

@@ -4,10 +4,10 @@ typed metadata, processed with Arrow-batched ``mapInPandas``.
 Design (per the north star): image/audio/video travel as ``binary`` columns
 with metadata columns beside them. Decode / feature-extract runs in
 ``mapInPandas`` — Arrow batch transfer, pandas inside, never row-at-a-time
-Python. The actual codec step is STUBBED (`decode_image` raises
-``NotImplementedError`` — image/audio libs are not in this container); the
-deterministic fake decoder exercises the identical Spark plumbing (schema,
-batching, partitioning), so swapping in a real codec changes one function.
+Python. The actual codec step is STUBBED (image/audio libs are not in this
+container): the deterministic fake decoder ``fake_decode_dims`` exercises
+the identical Spark plumbing (schema, batching, partitioning), so swapping
+in a real codec changes one function.
 
 Scale notes:
 - ``mapInPandas`` is a narrow transformation: no shuffle, parallel per
@@ -55,18 +55,6 @@ FRAME_SCHEMA = StructType(
         StructField("frame_sha256", StringType(), False),
     ]
 )
-
-
-def decode_image(payload: bytes) -> object:
-    """Real image decode — NOT available in this container (no PIL/cv2).
-
-    The Spark plumbing around this stub is real and tested; deploying with
-    an image library means replacing this one function.
-    """
-    raise NotImplementedError(
-        "image codecs are not installed in this environment; "
-        "use fake_decode_dims for the deterministic test path"
-    )
 
 
 def fake_decode_dims(payload: bytes) -> tuple[int, int]:
@@ -129,11 +117,12 @@ def extract_media_metadata(media: DataFrame) -> DataFrame:
     return _spread(media).mapInPandas(_extract, MEDIA_META_SCHEMA)
 
 
-def sample_frames(media: DataFrame, max_frames: int = 3) -> DataFrame:
+def sample_frames(media: DataFrame) -> DataFrame:
     """Frame-sampling plumbing for video-like payloads: each payload
     yields k = (n_bytes mod max_frames)+1 deterministic 'frames'
     (sha256 of payload+index). Real codec would decode at timestamps;
     the explode shape, schema, and batching are identical."""
+    max_frames = 3
 
     def _sample(batches: Iterator) -> Iterator:
         import pandas as pd
@@ -167,7 +156,7 @@ RESIZE_SCHEMA = StructType(
 )
 
 
-def resize_meta(media: DataFrame, max_w: int = 224, max_h: int = 224) -> DataFrame:
+def resize_meta(media: DataFrame) -> DataFrame:
     """Resize planning for image-like payloads: fit-in-box output dims
     (aspect-preserving, never upscale) from the decoded dimensions. The
     decode is the deterministic stub (``fake_decode_dims``); a real
@@ -176,6 +165,8 @@ def resize_meta(media: DataFrame, max_w: int = 224, max_h: int = 224) -> DataFra
     this exercises, and it is SQL-expressible so the oracle checks it
     end to end.
     """
+    max_w = 224
+    max_h = 224
 
     def _plan(batches: Iterator) -> Iterator:
         import pandas as pd
@@ -193,7 +184,7 @@ def resize_meta(media: DataFrame, max_w: int = 224, max_h: int = 224) -> DataFra
     return _spread(media).mapInPandas(_plan, RESIZE_SCHEMA)
 
 
-def extract_features(media: DataFrame, n_bins: int = 16) -> DataFrame:
+def extract_features(media: DataFrame) -> DataFrame:
     """Feature extraction over the binary payload: a byte-value histogram
     (n_bins buckets over 0-255) as an ``array<long>`` feature vector —
     REAL computation (numpy bincount per Arrow batch), the stand-in for
@@ -202,6 +193,7 @@ def extract_features(media: DataFrame, n_bins: int = 16) -> DataFrame:
     spread)."""
     from pyspark.sql.types import ArrayType
 
+    n_bins = 16
     schema = StructType(
         [
             StructField("doc_id", LongType(), False),

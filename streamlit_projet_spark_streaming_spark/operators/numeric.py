@@ -109,18 +109,6 @@ def ratio_round_ge(num: Column, den: Column, tau: float, scale: int) -> Column:
     return num * (2 * p) >= den * (2 * t_units - 1)
 
 
-def ratio_round_le(num: Column, den: Column, tau: float, scale: int) -> Column:
-    """``ratio_round(num, den, scale) <= tau`` as ONE integer comparison:
-    ``⟺ 2·10^scale·num < (2T+1)·den`` (num >= 0, den > 0; see
-    :func:`ratio_round_ge` for why filters must not touch the rounded
-    column)."""
-    p = 10**scale
-    t_units = round(tau * p)
-    if abs(t_units - tau * p) >= 1e-9:
-        raise ValueError(f"threshold {tau} off the 1e-{scale} grid")
-    return num * (2 * p) < den * (2 * t_units + 1)
-
-
 def ratio_round_spark_sql(num: str, den: str, scale: int) -> str:
     """Spark-SQL twin of :func:`ratio_round_sql` for SQL-surface plans
     (``spark.sql`` view DDL): DECIMAL(38,0) arithmetic + the ``div``
@@ -133,16 +121,18 @@ def ratio_round_spark_sql(num: str, den: str, scale: int) -> str:
     )
 
 
-def stable_avg_spark_sql(col: str, sum_decimals: int = 2, out_decimals: int = 4) -> str:
+def stable_avg_spark_sql(col: str) -> str:
     """Spark-SQL twin of :func:`stable_avg_sql` (same grid-units/count
     exact rounding, Spark syntax)."""
+    sum_decimals = 2
+    out_decimals = 4
     g = 10**sum_decimals
     return ratio_round_spark_sql(
-        cents_sql(f"SUM({col})", sum_decimals), f"COUNT({col}) * {g}", out_decimals
+        cents_sql(f"SUM({col})"), f"COUNT({col}) * {g}", out_decimals
     )
 
 
-def cents_sql(sum_expr: str, decimals: int = 2) -> str:
+def cents_sql(sum_expr: str) -> str:
     """DuckDB fragment turning a grid-rounded SUM into exact integer grid
     units: ``CAST(ROUND(ROUND(sum_expr, d) * 10^d) AS BIGINT)``. The sum
     is first rounded TO its value grid (the r5 DECIMAL-grid-sum rule:
@@ -150,24 +140,28 @@ def cents_sql(sum_expr: str, decimals: int = 2) -> str:
     the outer ROUND re-lands the scaled double on the integer before the
     cast (DuckDB CAST(double AS BIGINT) rounds, but keep it explicit and
     Spark-parallel)."""
+    decimals = 2
     g = 10**decimals
     return f"CAST(ROUND(ROUND({sum_expr}, {decimals}) * {g}) AS BIGINT)"
 
 
-def cents(sum_col: Column, decimals: int = 2) -> Column:
+def cents(sum_col: Column) -> Column:
     """Spark twin of :func:`cents_sql`: exact integer grid units of a
     grid-valued sum. The inner round snaps the float sum to the value
     grid; the outer round kills the ``*10^d`` float error BEFORE the
     (truncating!) long cast."""
+    decimals = 2
     g = 10**decimals
     return F.round(F.round(sum_col, decimals) * g).cast("long")
 
 
-def stable_avg_sql(col: str, sum_decimals: int = 2, out_decimals: int = 4) -> str:
+def stable_avg_sql(col: str) -> str:
     """DuckDB twin of ``relational.stable_avg`` (see its docstring)."""
+    sum_decimals = 2
+    out_decimals = 4
     g = 10**sum_decimals
     return ratio_round_sql(
-        cents_sql(f"SUM({col})", sum_decimals), f"COUNT({col}) * {g}", out_decimals
+        cents_sql(f"SUM({col})"), f"COUNT({col}) * {g}", out_decimals
     )
 
 

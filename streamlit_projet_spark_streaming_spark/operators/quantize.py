@@ -10,7 +10,7 @@ Neighbor Search", TPAMI 2011).
 
 Cross-engine exactness (both operators carry full DuckDB oracles):
 
-- Scalar codes: ``floor((x - mn) * (levels-1) / (mx - mn))`` — every
+- Scalar codes: ``floor((x - mn) * (QUANT_LEVELS-1) / (mx - mn))`` — every
   operand is a float32-exact double and every op is a single IEEE-754
   double operation in the same order on both engines, so the UNROUNDED
   result is bit-identical; ``floor`` of identical bits is identical (no
@@ -31,13 +31,13 @@ Scale shape:
   alternative (posexplode → join → re-assemble) would shuffle the whole
   corpus once per stage; the map-stage shape shuffles nothing.
 - The codebook anchors are a TakeOrderedAndProject over a two-column
-  projection (md5 rank, top-``n_centroids``) — map-side top-k, no global
+  projection (md5 rank, top-``PQ_CENTROIDS``) — map-side top-k, no global
   sort.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -52,6 +52,12 @@ from pyspark.sql.types import (
 from .relational import ordered_array_agg
 
 #: Output schema of scalar quantization.
+#: Scalar quantization levels: int8 codes in [0, 255].
+QUANT_LEVELS = 256
+#: PQ codebook size per subspace: the md5-lowest ``PQ_CENTROIDS``
+#: vectors anchor it (and seed the trained variant's Lloyd rounds).
+PQ_CENTROIDS = 16
+
 QUANT_SCHEMA = StructType(
     [
         StructField("vec_id", LongType()),
@@ -89,11 +95,11 @@ def _stats_row(embeddings: DataFrame) -> DataFrame:
     ).localCheckpoint(eager=False)
 
 
-def _quantize_mapper(levels: int):
+def _quantize_mapper():
     import numpy as np
     import pandas as pd
 
-    top = float(levels - 1)
+    top = float(QUANT_LEVELS - 1)
 
     def _quant(batches: Iterator) -> Iterator:
         for pdf in batches:
@@ -129,22 +135,20 @@ def _spread(df: DataFrame) -> DataFrame:
     return spread_if_few_splits(df)
 
 
-def _quantize_with_stats(with_stats: DataFrame, levels: int) -> DataFrame:
-    return with_stats.mapInPandas(_quantize_mapper(levels), QUANT_SCHEMA)
+def _quantize_with_stats(with_stats: DataFrame) -> DataFrame:
+    return with_stats.mapInPandas(_quantize_mapper(), QUANT_SCHEMA)
 
 
-def quantize_embeddings(embeddings: DataFrame, levels: int = 256) -> DataFrame:
+def quantize_embeddings(embeddings: DataFrame) -> DataFrame:
     """Scalar per-dimension quantization → (vec_id, codes: array<int>).
 
-    ``code = clip(floor((x - mn_d) * (levels-1) / (mx_d - mn_d)), 0,
-    levels-1)`` per dimension ``d``; a constant dimension (mx == mn)
+    ``code = clip(floor((x - mn_d) * (QUANT_LEVELS-1) / (mx_d - mn_d)), 0,
+    QUANT_LEVELS-1)`` per dimension ``d``; a constant dimension (mx == mn)
     quantizes to 0. See the module docstring for the exactness and scale
     arguments.
     """
     base = _spread(embeddings.select("vec_id", "embedding"))
-    return _quantize_with_stats(
-        base.crossJoin(F.broadcast(_stats_row(embeddings))), levels
-    )
+    return _quantize_with_stats(base.crossJoin(F.broadcast(_stats_row(embeddings))))
 
 
 #: Output schema of PQ assignment.
@@ -191,16 +195,11 @@ def _pq_mapper(n_sub: int):
     return _assign
 
 
-def pq_codes(
-    embeddings: DataFrame,
-    n_sub: int = 8,
-    n_centroids: int = 16,
-    levels: int = 256,
-) -> DataFrame:
+def pq_codes(embeddings: DataFrame, n_sub: int = 8) -> DataFrame:
     """Product-quantization codes over the int8-quantized embeddings.
 
     Pipeline: scalar-quantize the corpus (exact int codes) → pick
-    ``n_centroids`` anchor vectors deterministically (lowest
+    ``PQ_CENTROIDS`` anchor vectors deterministically (lowest
     ``md5(vec_id)``, rank = codebook index — SQL-replayable, so the
     oracle reconstructs the identical codebook) → for each vector and
     each of ``n_sub`` contiguous subspaces, assign the anchor with the
@@ -216,14 +215,14 @@ def pq_codes(
     (quantize, assign) + one D-row stats aggregate + one top-k anchor
     probe; zero data-sized shuffles.
     """
-    codes, _, codebook, _ = _codes_and_codebook(embeddings, n_centroids, levels)
+    codes, _, codebook, _ = _codes_and_codebook(embeddings)
     return codes.crossJoin(F.broadcast(codebook)).mapInPandas(
         _pq_mapper(n_sub), PQ_SCHEMA
     )
 
 
 def _codes_and_codebook(
-    embeddings: DataFrame, n_centroids: int, levels: int
+    embeddings: DataFrame,
 ) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame]:
     """Shared PQ front half: corpus int8 codes, per-anchor codes with
     their codebook index ``j``, the single-row codebook array, and the
@@ -234,20 +233,18 @@ def _codes_and_codebook(
     consumers would each re-scan the corpus — TakeOrderedAndProject is
     not an exchange, so ReuseExchange cannot dedupe it) and
     ``anchor_codes`` (consumed by the codebook agg and, in the search
-    ops, by the ADC table build). Both checkpoints are ``n_centroids``
+    ops, by the ADC table build). Both checkpoints are ``PQ_CENTROIDS``
     rows.
     """
     stats = _stats_row(embeddings)
     base = embeddings.select("vec_id", "embedding")
-    codes = _quantize_with_stats(
-        _spread(base).crossJoin(F.broadcast(stats)), levels
-    )
+    codes = _quantize_with_stats(_spread(base).crossJoin(F.broadcast(stats)))
 
     h = F.md5(F.col("vec_id").cast("string")).alias("h")
     anchors = (
         base.select("vec_id", "embedding", h)
         .orderBy("h", "vec_id")
-        .limit(n_centroids)
+        .limit(PQ_CENTROIDS)
         .withColumn(
             "j",
             F.row_number().over(Window.orderBy("h", "vec_id")) - F.lit(1),
@@ -255,7 +252,7 @@ def _codes_and_codebook(
         .localCheckpoint(eager=False)
     )
     anchor_codes = (
-        _quantize_with_stats(anchors.crossJoin(F.broadcast(stats)), levels)
+        _quantize_with_stats(anchors.crossJoin(F.broadcast(stats)))
         .join(F.broadcast(anchors.select("vec_id", "j")), "vec_id")
         .localCheckpoint(eager=False)
     )
@@ -282,7 +279,6 @@ def _adc_table(
     anchor_codes: DataFrame,
     stats: DataFrame,
     n_sub: int,
-    levels: int,
 ) -> DataFrame:
     """Per-query ADC lookup tables: (query_id, m, j, t) where t is the
     exact integer squared distance between the query's int8 sub-code
@@ -294,8 +290,7 @@ def _adc_table(
     qcodes = _quantize_with_stats(
         embeddings.filter(query_pred)
         .select("vec_id", "embedding")
-        .crossJoin(F.broadcast(stats)),
-        levels,
+        .crossJoin(F.broadcast(stats))
     )
     q_exp = qcodes.select(
         F.col("vec_id").alias("query_id"),
@@ -333,18 +328,11 @@ def _rank_topk(scored: DataFrame, k: int) -> DataFrame:
     )
 
 
-def pq_topk(
-    embeddings: DataFrame,
-    query_pred: Column,
-    k: int = 5,
-    n_sub: int = 8,
-    n_centroids: int = 16,
-    levels: int = 256,
-) -> DataFrame:
+def pq_topk(embeddings: DataFrame, query_pred: Column, n_sub: int = 8) -> DataFrame:
     """Approximate top-k neighbors by PQ asymmetric distance (ADC).
 
     The search half of the PQ ladder (Jégou et al. 2011): per query,
-    precompute the ``n_sub × n_centroids`` table of EXACT integer
+    precompute the ``n_sub × PQ_CENTROIDS`` table of EXACT integer
     distances between the query's int8 sub-codes and each sub-centroid;
     a document's distance is then the sum of ``n_sub`` table lookups on
     its PQ code — no per-pair vector arithmetic at all. This is how a
@@ -357,20 +345,19 @@ def pq_topk(
 
     Plan shape: corpus codes + PQ assignment are the two Arrow map
     stages of :func:`pq_codes`; the ADC tables are a broadcast-joined
-    |q|·n_sub·n_centroids-row table; scoring explodes each doc's
+    |q|·n_sub·PQ_CENTROIDS-row table; scoring explodes each doc's
     ``n_sub`` sub-codes, joins the broadcast table, and partially
     aggregates to |q| rows per doc BEFORE the one shuffle
     (groupBy(query, doc)); the final per-query top-k is a k-bounded
     rank window over |q|·n rows (same shape as ``brute_force_topk``;
     swap for per-partition top-k + merge if |q|·n outgrows a task).
     """
-    codes, anchor_codes, codebook, stats = _codes_and_codebook(
-        embeddings, n_centroids, levels
-    )
+    k = 5
+    codes, anchor_codes, codebook, stats = _codes_and_codebook(embeddings)
     pq = codes.crossJoin(F.broadcast(codebook)).mapInPandas(
         _pq_mapper(n_sub), PQ_SCHEMA
     )
-    adc = _adc_table(embeddings, query_pred, anchor_codes, stats, n_sub, levels)
+    adc = _adc_table(embeddings, query_pred, anchor_codes, stats, n_sub)
 
     doc_m = pq.select("vec_id", F.posexplode("pq_codes").alias("m", "j"))
     scored = (
@@ -382,16 +369,7 @@ def pq_topk(
     return _rank_topk(scored, k)
 
 
-def ivfpq_topk(
-    embeddings: DataFrame,
-    query_pred: Column,
-    k: int = 5,
-    centroid_modulus: int = 25,
-    nprobe: int = 2,
-    n_sub: int = 8,
-    n_centroids: int = 16,
-    levels: int = 256,
-) -> DataFrame:
+def ivfpq_topk(embeddings: DataFrame, query_pred: Column, nprobe: int = 2) -> DataFrame:
     """IVF + PQ approximate top-k — the composed production index shape
     (IVFADC, Jégou et al. 2011 §V): a coarse inverted file restricts each
     query to ``nprobe`` cells, and candidates inside a cell are scored by
@@ -414,9 +392,10 @@ def ivfpq_topk(
     """
     from .similarity import dot, ivf_assign, l2_norm
 
-    codes, anchor_codes, codebook, stats = _codes_and_codebook(
-        embeddings, n_centroids, levels
-    )
+    k = 5
+    centroid_modulus = 25
+    n_sub = 8
+    codes, anchor_codes, codebook, stats = _codes_and_codebook(embeddings)
     pq = codes.crossJoin(F.broadcast(codebook)).mapInPandas(
         _pq_mapper(n_sub), PQ_SCHEMA
     )
@@ -445,7 +424,7 @@ def ivfpq_topk(
         .select("query_id", F.col("centroid_id").alias("q_centroid"))
     )
 
-    adc = _adc_table(embeddings, query_pred, anchor_codes, stats, n_sub, levels)
+    adc = _adc_table(embeddings, query_pred, anchor_codes, stats, n_sub)
 
     doc_m = indexed.select(
         "vec_id", "centroid_id", F.posexplode("pq_codes").alias("m", "j")
@@ -656,13 +635,57 @@ def _cb_rows(cb_row: DataFrame) -> DataFrame:
     ).select("j", F.posexplode("v").alias("dim", "val"))
 
 
-def pq_codes_trained(
-    embeddings: DataFrame,
-    n_sub: int = 8,
-    n_centroids: int = 16,
-    levels: int = 256,
-    n_iter: int = 2,
+def _lloyd_update(
+    partials: DataFrame,
+    cb_row: DataFrame,
+    mean: Callable[[Column, Column], Column],
 ) -> DataFrame:
+    """One Lloyd centroid update, shared by :func:`pq_codes_trained` and
+    ``similarity.grid_kmeans``: ``partials`` holds (j, dim, s, cnt) rows
+    (per-batch unit sums and member counts), ``cb_row`` the current
+    one-row codebook; returns the next one. ``mean(s, n)`` is the new
+    centroid value of a cluster with ``n`` > 0 members.
+
+    FUSED update (r10 opt): ONE groupBy(j, dim) aggregate carries both
+    the sums and the member counts — each (batch, j) partial repeats its
+    cnt identically on every dim row, so SUM(cnt) grouped by (j, dim)
+    equals the per-j count exactly. UNION-SEED merge (r11 opt): the old
+    codebook rows ride into the SAME aggregate as zero-weight seeds
+    (s=0, cnt=0, old=val) instead of a per-round left join — n > 0 on a
+    group ⟺ the old join found a match, so `when(n > 0, mean)
+    .otherwise(old)` is value-identical to the old coalesce(newval, val),
+    and the empty-cluster fallback costs no join stage at all. The mean
+    is unchanged too (seeds add 0 to both sums)."""
+    exploded = partials.select(
+        "j", "dim", "s", "cnt", F.lit(None).cast("double").alias("old")
+    )
+    seeds = _cb_rows(cb_row).select(
+        "j",
+        "dim",
+        F.lit(0).cast("long").alias("s"),
+        F.lit(0).cast("long").alias("cnt"),
+        F.col("val").alias("old"),
+    )
+    merged = (
+        exploded.unionByName(seeds)
+        .groupBy("j", "dim")
+        .agg(
+            F.sum("s").alias("s"),
+            F.sum("cnt").alias("n"),
+            F.max("old").alias("old"),
+        )
+        .select(
+            "j",
+            "dim",
+            F.when(F.col("n") > 0, mean(F.col("s"), F.col("n")))
+            .otherwise(F.col("old"))
+            .alias("val"),
+        )
+    )
+    return _cb_row_from_rows(merged)
+
+
+def pq_codes_trained(embeddings: DataFrame, n_iter: int = 2) -> DataFrame:
     """PQ codes from a TRAINED per-subspace codebook — ``n_iter`` Lloyd
     (k-means) iterations over the int8 code space, initialized from the
     md5-anchor codebook of :func:`pq_codes`.
@@ -685,15 +708,14 @@ def pq_codes_trained(
     emits <= n_sub*J partial (count, per-dim sum) rows PER BATCH (the
     map-side combine of the centroid update — never a data-sized
     shuffle), then a tiny n_sub*J*sub-row aggregation rebuilds the
-    codebook; empty clusters keep their previous centroid (left join +
-    coalesce against the old codebook rows). The codebook rides between
+    codebook; empty clusters keep their previous centroid (the union-seed
+    merge of :func:`_lloyd_update`). The codebook rides between
     stages as ONE lazily checkpointed row, and the corpus code stream is
     checkpointed once, so iteration i+1 and the final assignment never
     replay iteration i's plan.
     """
-    codes, _, codebook_int, _ = _codes_and_codebook(
-        embeddings, n_centroids, levels
-    )
+    n_sub = 8
+    codes, _, codebook_int, _ = _codes_and_codebook(embeddings)
     codes = codes.localCheckpoint(eager=False)
     # Float init = the int anchor codebook. (transform here is one-row
     # plan sugar over J*D values, not a hot-path HOF.)
@@ -707,19 +729,9 @@ def pq_codes_trained(
         partials = codes.crossJoin(F.broadcast(cb_row)).mapInPandas(
             _lloyd_partials_mapper(n_sub), _TRAIN_PARTIAL_SCHEMA
         )
-        # FUSED update (r10 opt, the grid_kmeans Lloyd fusion): ONE
-        # groupBy(j, dim) aggregate carries sums AND counts — each
-        # (batch, m, j) partial repeats its cnt identically on every dl
-        # row of its sums array, so SUM(cnt) per (j, dim) equals the
-        # per-(m, j) count exactly (dim = m·sub + dl determines m, so
-        # the old (m, j, dim) grouping keys the same partitions).
-        # UNION-SEED merge (r11 opt, mirrors grid_kmeans): the old
-        # codebook rows enter the SAME aggregate as zero-weight seeds
-        # (s=0, cnt=0, old=val) instead of a per-round left join —
-        # n > 0 ⟺ the old join matched, so `when(n > 0, mean)
-        # .otherwise(old)` is value-identical to coalesce(newval, val)
-        # and the centroid mean stays the identical exact-integer
-        # quotient (seeds add 0 to both sums).
+        # Each (batch, m, j) partial carries the per-(m, j) count; dim =
+        # m·sub + dl determines m, so grouping by (j, dim) keys the same
+        # clusters as (m, j, dim).
         exploded = partials.select(
             "j", "cnt", "sub", "m", F.posexplode("sums").alias("dl", "s")
         ).select(
@@ -727,35 +739,10 @@ def pq_codes_trained(
             (F.col("m") * F.col("sub") + F.col("dl")).alias("dim"),
             "s",
             "cnt",
-            F.lit(None).cast("double").alias("old"),
         )
-        seeds = _cb_rows(cb_row).select(
-            "j",
-            "dim",
-            F.lit(0).cast("long").alias("s"),
-            F.lit(0).cast("long").alias("cnt"),
-            F.col("val").alias("old"),
+        cb_row = _lloyd_update(
+            exploded, cb_row, lambda s, n: s.cast("double") / n.cast("double")
         )
-        merged = (
-            exploded.unionByName(seeds)
-            .groupBy("j", "dim")
-            .agg(
-                F.sum("s").alias("s"),
-                F.sum("cnt").alias("n"),
-                F.max("old").alias("old"),
-            )
-            .select(
-                "j",
-                "dim",
-                F.when(
-                    F.col("n") > 0,
-                    F.col("s").cast("double") / F.col("n").cast("double"),
-                )
-                .otherwise(F.col("old"))
-                .alias("val"),
-            )
-        )
-        cb_row = _cb_row_from_rows(merged)
 
     return codes.crossJoin(F.broadcast(cb_row)).mapInPandas(
         _assign_float_mapper(n_sub), _PQF_SCHEMA
@@ -855,15 +842,7 @@ def _adc_res_mapper(n_sub: int):
     return _tables
 
 
-def ivfpq_topk_residual(
-    embeddings: DataFrame,
-    query_pred: Column,
-    k: int = 5,
-    centroid_modulus: int = 25,
-    nprobe: int = 2,
-    n_sub: int = 8,
-    n_centroids: int = 16,
-) -> DataFrame:
+def ivfpq_topk_residual(embeddings: DataFrame, query_pred: Column) -> DataFrame:
     """IVFADC with RESIDUAL quantization (Jégou et al. 2011 §V.A): PQ
     encodes ``x − c(x)`` — the displacement from the coarse centroid —
     instead of ``x`` itself. Residuals concentrate near the origin, so
@@ -889,6 +868,10 @@ def ivfpq_topk_residual(
     """
     from .similarity import dot, ivf_assign, l2_norm
 
+    k = 5
+    centroid_modulus = 25
+    nprobe = 2
+    n_sub = 8
     centroids = embeddings.filter(
         (F.col("vec_id") % centroid_modulus) == 0
     ).select(
@@ -901,7 +884,7 @@ def ivfpq_topk_residual(
     anchor_ids = (
         embeddings.select("vec_id", h)
         .orderBy("h", "vec_id")
-        .limit(n_centroids)
+        .limit(PQ_CENTROIDS)
         .withColumn(
             "j",
             F.row_number().over(Window.orderBy("h", "vec_id")) - F.lit(1),
@@ -1105,27 +1088,31 @@ def hamming_topk(
     )
 
 
-def rocchio_prf_topk(
-    embeddings: DataFrame,
-    query_pred: Column,
-    k_prf: int = 3,
-    k: int = 5,
-    alpha_num: int = 7,
-    beta_num: int = 3,
-    denom: int = 10,
-) -> DataFrame:
+#: Rocchio PRF policy, shared with the ``retrieval_rocchio_prf`` oracle:
+#: stage-1 PRF depth, final top-k, and the integer weights
+#: α = ROCCHIO_ALPHA / ROCCHIO_DENOM, β = ROCCHIO_BETA / ROCCHIO_DENOM.
+ROCCHIO_KPRF = 3
+ROCCHIO_K = 5
+ROCCHIO_ALPHA = 7
+ROCCHIO_BETA = 3
+ROCCHIO_DENOM = 10
+
+
+def rocchio_prf_topk(embeddings: DataFrame, query_pred: Column) -> DataFrame:
     """Two-stage retrieval with Rocchio pseudo-relevance feedback over
-    the int8-quantized corpus: stage 1 retrieves each query's ``k_prf``
-    nearest codes by EXACT integer L2; the expanded query
-    q′ = α·q + β·mean(top-k_prf) re-ranks the corpus in stage 2.
+    the int8-quantized corpus: stage 1 retrieves each query's
+    ``ROCCHIO_KPRF`` nearest codes by EXACT integer L2; the expanded
+    query q′ = α·q + β·mean(top-ROCCHIO_KPRF) re-ranks the corpus in
+    stage 2 and keeps the top ``ROCCHIO_K``.
 
     Exactness — everything stays in integer space, no floats at all:
-    with α = alpha_num/denom and β = beta_num/denom, the scaled vector
-    v = α_num·n_prf·q + β_num·Σ(prf codes) and the corpus side scales
-    by s = denom·n_prf (L2 ranking is invariant to scaling both sides),
-    so every distance is an exact BIGINT sum of squared ints and every
-    rank carries a vec_id tie-break. n_prf is the ACTUAL stage-1 yield,
-    so a query with a short PRF list still ranks correctly.
+    with α = ROCCHIO_ALPHA/ROCCHIO_DENOM and β = ROCCHIO_BETA/ROCCHIO_DENOM,
+    the scaled vector v = ROCCHIO_ALPHA·n_prf·q + ROCCHIO_BETA·Σ(prf
+    codes) and the corpus side scales by s = ROCCHIO_DENOM·n_prf (L2
+    ranking is invariant to scaling both sides), so every distance is an
+    exact BIGINT sum of squared ints and every rank carries a vec_id
+    tie-break. n_prf is the ACTUAL stage-1 yield, so a query with a
+    short PRF list still ranks correctly.
 
     Scale shape: the quantized code table is checkpointed (three
     consumers: two corpus explodes + the query side); each stage is one
@@ -1159,7 +1146,7 @@ def rocchio_prf_topk(
     wr = Window.partitionBy("qid").orderBy("d2", "vec_id")
     prf = (
         d1.withColumn("rn", F.row_number().over(wr))
-        .filter(F.col("rn") <= k_prf)
+        .filter(F.col("rn") <= ROCCHIO_KPRF)
         .select("qid", "vec_id")
     )
     sums = ex.join(F.broadcast(prf), "vec_id").groupBy("qid", "dim").agg(
@@ -1169,10 +1156,10 @@ def rocchio_prf_topk(
         "qid",
         "dim",
         (
-            F.lit(alpha_num) * F.col("n_prf") * F.col("qcode")
-            + F.lit(beta_num) * F.col("bsum")
+            F.lit(ROCCHIO_ALPHA) * F.col("n_prf") * F.col("qcode")
+            + F.lit(ROCCHIO_BETA) * F.col("bsum")
         ).alias("v"),
-        (F.lit(denom) * F.col("n_prf")).alias("s"),
+        (F.lit(ROCCHIO_DENOM) * F.col("n_prf")).alias("s"),
     )
     d2 = (
         ex.join(F.broadcast(v), "dim")
@@ -1186,7 +1173,7 @@ def rocchio_prf_topk(
         )
     )
     return (
-        _rank_topk(d2, k)  # the module's one audited tie-break rule
+        _rank_topk(d2, ROCCHIO_K)  # the module's one audited tie-break rule
         .select(
             "query_id",
             "neighbor_id",

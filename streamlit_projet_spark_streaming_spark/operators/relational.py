@@ -88,14 +88,12 @@ def top_k_per_group(
     group_cols: Sequence[str],
     order_by: Sequence[Column],
     k: int = 1,
-    rank_col: str = "_rn",
-    keep_rank: bool = False,
 ) -> DataFrame:
     """[E1/E2/E3] QUALIFY ROW_NUMBER emulation: keep top-k rows per group.
 
     Reference: ``QUALIFY ROW_NUMBER() OVER (PARTITION BY … ORDER BY COUNT(*)
     DESC) = 1`` (``/root/reference/bigquery_views.sql:34,63,91``). Spark has
-    no QUALIFY, so: window → filter → drop the rank column.
+    no QUALIFY, so: window → filter, keeping the rank as ``rnk``.
 
     Callers MUST pass a total order in ``order_by`` (deterministic
     tie-breaker) — BigQuery leaves ROW_NUMBER ties undefined; we do not
@@ -107,9 +105,8 @@ def top_k_per_group(
     aggregates, never over raw fact rows.
     """
     w = Window.partitionBy(*group_cols).orderBy(*order_by)
-    out = df.withColumn(rank_col, F.row_number().over(w))
-    out = out.filter(F.col(rank_col) <= k) if k > 1 else out.filter(F.col(rank_col) == 1)
-    return out if keep_rank else out.drop(rank_col)
+    out = df.withColumn("rnk", F.row_number().over(w))
+    return out.filter(F.col("rnk") <= k) if k > 1 else out.filter(F.col("rnk") == 1)
 
 
 def ordered_array_agg(sort_key: Column, value: Column, ascending: bool = False) -> Column:
@@ -132,12 +129,13 @@ def ordered_array_agg(sort_key: Column, value: Column, ascending: bool = False) 
     return F.transform(F.sort_array(pairs, asc=True), lambda s: s["v"])
 
 
-def value_counts(df: DataFrame, col: str, count_alias: str = "cnt") -> DataFrame:
+def value_counts(df: DataFrame, col: str) -> DataFrame:
     """[D16] pandas ``value_counts`` as groupBy-count, most frequent first.
 
     Reference: ``streamlit/streamlit_app.py:426,727,907,952,966``.
     Deterministic ordering: count desc, value asc.
     """
+    count_alias = "cnt"
     return (
         df.groupBy(col)
         .agg(F.count(F.lit(1)).alias(count_alias))
@@ -145,7 +143,7 @@ def value_counts(df: DataFrame, col: str, count_alias: str = "cnt") -> DataFrame
     )
 
 
-def stable_avg(col: str, sum_decimals: int = 2, out_decimals: int = 4) -> Column:
+def stable_avg(col: str) -> Column:
     """Cross-engine-stable AVG for fixed-decimal-valued columns (money in
     cents, integer quantities, k-decimal ratings): round the SUM to the
     column's decimal grid FIRST, then round the grid-units/count ratio in
@@ -162,9 +160,11 @@ def stable_avg(col: str, sum_decimals: int = 2, out_decimals: int = 4) -> Column
     double round (the r6 grid-quotient rule; see operators/numeric.py).
     Use ``numeric.stable_avg_sql`` for the oracle side.
     """
+    sum_decimals = 2
+    out_decimals = 4
     g = 10**sum_decimals
     return ratio_round(
-        cents(F.sum(col), sum_decimals), F.count(col) * g, out_decimals
+        cents(F.sum(col)), F.count(col) * g, out_decimals
     )
 
 
@@ -194,7 +194,6 @@ def pivot_counts(
     index_col: str,
     pivot_col: str,
     pivot_values: Sequence[str],
-    agg: Column | None = None,
 ) -> DataFrame:
     """[E4/C4] pandas ``pivot_table(fill_value=0)`` as groupBy().pivot().
 
@@ -203,7 +202,7 @@ def pivot_counts(
     Passing ``pivot_values`` explicitly (the reference's fixed level order)
     skips Spark's extra distinct-values job AND fixes output column order.
     """
-    agg = agg if agg is not None else F.count(F.lit(1))
+    agg = F.count(F.lit(1))
     return (
         df.groupBy(index_col)
         .pivot(pivot_col, list(pivot_values))
@@ -213,12 +212,7 @@ def pivot_counts(
     )
 
 
-def histogram(
-    df: DataFrame,
-    col: str,
-    nbins: int,
-    count_alias: str = "cnt",
-) -> DataFrame:
+def histogram(df: DataFrame, col: str, nbins: int) -> DataFrame:
     """[G3] Equal-width histogram: bin index + count, like ``px.histogram``.
 
     Reference: ``px.histogram(nbins=50)`` on amounts
@@ -232,6 +226,7 @@ def histogram(
     driver-side ``.collect()`` round trip (works unchanged on a stream
     snapshot or a 100 TB table).
     """
+    count_alias = "cnt"
     bounds = df.agg(
         F.min(col).alias("_lo"), F.max(col).alias("_hi")
     )
@@ -348,7 +343,6 @@ def sequence_features(
     value_col: str,
     type_col: str,
     id_col: str,
-    frame_rows: int = 3,
 ) -> DataFrame:
     """Per-key event-sequence features [window frames + lag/lead — absent
     from the reference per SURVEY §2.E, first-class here because
@@ -362,6 +356,7 @@ def sequence_features(
     is emitted in integer microseconds (exact; a seconds double would
     round) and the rolling mean rounds at output only.
     """
+    frame_rows = 3
     w = Window.partitionBy(key).orderBy(F.asc(ts_col), F.asc(id_col))
     frame = w.rowsBetween(-(frame_rows - 1), Window.currentRow)
     us = F.unix_micros(F.col(ts_col))
@@ -493,13 +488,7 @@ def ordered_dense_index(
     )
 
 
-def funnel_steps(
-    events: DataFrame,
-    stages: Sequence[str] = ("view", "click", "purchase"),
-    user_col: str = "user_id",
-    type_col: str = "event_type",
-    ts_col: str = "ts",
-) -> DataFrame:
+def funnel_steps(events: DataFrame) -> DataFrame:
     """Ordered conversion funnel over an event stream: how many users
     reach each stage IN ORDER (first ``stages[0]``, then a ``stages[1]``
     at-or-after it, then a ``stages[2]`` at-or-after that, ...), plus
@@ -520,6 +509,10 @@ def funnel_steps(
     per user. Conversion rates are exact integer ratios → ROUND(4)
     agrees across engines.
     """
+    stages = ("view", "click", "purchase")
+    user_col = "user_id"
+    type_col = "event_type"
+    ts_col = "ts"
     w = Window.partitionBy(user_col)
     out = events.select(user_col, type_col, ts_col)
     prev: Column | None = None
@@ -557,13 +550,7 @@ def funnel_steps(
     )
 
 
-def winsorize(
-    df: DataFrame,
-    value_col: str,
-    id_col: str,
-    p_lo: float = 0.01,
-    p_hi: float = 0.99,
-) -> DataFrame:
+def winsorize(df: DataFrame, value_col: str, id_col: str) -> DataFrame:
     """Percentile clipping (winsorization) of a measure column — the
     standard outlier-robustification step before a numeric column feeds
     training features or loss weighting.
@@ -579,6 +566,8 @@ def winsorize(
     (the NOTES.md r6 percentile argument); clip comparisons see
     bit-identical doubles on both engines.
     """
+    p_lo = 0.01
+    p_hi = 0.99
     bounds = df.agg(
         F.percentile(value_col, F.lit(p_lo)).alias("lo"),
         F.percentile(value_col, F.lit(p_hi)).alias("hi"),
@@ -701,7 +690,6 @@ def salted_join(
     small: DataFrame,
     on: str,
     salt_from: str,
-    n_salts: int = 8,
     how: str = "inner",
 ) -> DataFrame:
     """Skew-safe shuffle equi-join: salt the big side into ``n_salts``
@@ -730,6 +718,7 @@ def salted_join(
     equally valid witness, so semi semantics survive salting unchanged
     and the result carries the big side's columns only.
     """
+    n_salts = 8
     if how not in ("inner", "left", "left_semi"):
         raise ValueError(f"salted_join supports inner/left/left_semi, got {how!r}")
     big_s = big.withColumn(
@@ -743,9 +732,7 @@ def salted_join(
     )
 
 
-def retention_cohorts(
-    events: DataFrame, user_col: str = "user_id", ts_col: str = "ts"
-) -> DataFrame:
+def retention_cohorts(events: DataFrame) -> DataFrame:
     """Daily retention cohorts: users grouped by first-seen day, activity
     counted per day-offset — the standard dashboard retention triangle.
 
@@ -762,6 +749,8 @@ def retention_cohorts(
     events-sized subplan has exactly one consumer. Output is bounded by
     days², independent of corpus size.
     """
+    user_col = "user_id"
+    ts_col = "ts"
     day = F.unix_timestamp(F.date_trunc("day", F.col(ts_col)))
     ev = events.select(F.col(user_col).alias("u"), day.alias("d"))
     first = ev.groupBy("u").agg(F.min("d").alias("cohort_ts"))
@@ -794,7 +783,6 @@ def retention_cohorts(
 def basket_affinity(
     lineitem: DataFrame,
     part: DataFrame,
-    item_col: str = "p_brand",
     min_support: int = 10,
 ) -> DataFrame:
     """Market-basket affinity between item attributes (brands) that
@@ -815,6 +803,7 @@ def basket_affinity(
     """
     from .numeric import ratio_round
 
+    item_col = "p_brand"
     items = (
         lineitem.select("l_orderkey", "l_partkey")
         .join(
@@ -991,7 +980,7 @@ def event_transitions(events: DataFrame) -> DataFrame:
     )
 
 
-def hourly_anomaly_flags(events: DataFrame, ts_col: str = "ts") -> DataFrame:
+def hourly_anomaly_flags(events: DataFrame) -> DataFrame:
     """Trailing-window anomaly flags on the hourly event series: an hour
     spikes when its count deviates more than 2 trailing standard
     deviations from the previous 24 hours' mean (the ops-dashboard
@@ -1010,6 +999,7 @@ def hourly_anomaly_flags(events: DataFrame, ts_col: str = "ts") -> DataFrame:
     that dimension table. The unpartitioned window is deliberate and
     safe: its input is |hours| rows (~9k/year), never the data.
     """
+    ts_col = "ts"
     hourly = events.groupBy(
         F.unix_timestamp(F.date_trunc("hour", F.col(ts_col))).alias("hour_ts")
     ).agg(F.count(F.lit(1)).alias("n_events"))
@@ -1041,7 +1031,7 @@ def hourly_anomaly_flags(events: DataFrame, ts_col: str = "ts") -> DataFrame:
     )
 
 
-def active_user_counts(events: DataFrame, user_col: str = "user_id", ts_col: str = "ts") -> DataFrame:
+def active_user_counts(events: DataFrame) -> DataFrame:
     """Exact DAU / WAU / MAU per day — the engagement headline of every
     analytics dashboard: distinct users active that day, in the trailing
     7 days, and in the trailing 30 days.
@@ -1054,6 +1044,8 @@ def active_user_counts(events: DataFrame, user_col: str = "user_id", ts_col: str
     window over user data, no per-day rescans — work is
     30·|user-days|, linear in the corpus.
     """
+    user_col = "user_id"
+    ts_col = "ts"
     day = F.unix_timestamp(F.date_trunc("day", F.col(ts_col)))
     ud = (
         events.select(F.col(user_col).alias("u"), day.alias("d"))
@@ -1092,12 +1084,7 @@ def active_user_counts(events: DataFrame, user_col: str = "user_id", ts_col: str
     )
 
 
-def burst_user_flags(
-    events: DataFrame,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    burst_threshold: int = 2,
-) -> DataFrame:
+def burst_user_flags(events: DataFrame, burst_threshold: int = 2) -> DataFrame:
     """Bot/burst detection over the event stream: per user, the busiest
     single minute and total volume; users whose peak minute exceeds the
     threshold are flagged — the engagement-data analog of the web-corpus
@@ -1108,6 +1095,8 @@ def burst_user_flags(
     before their shuffle, then a per-user max/sum — and an integer
     threshold comparison; no windows, user-dimension output.
     """
+    user_col = "user_id"
+    ts_col = "ts"
     minute = F.unix_timestamp(F.date_trunc("minute", F.col(ts_col)))
     per_min = events.groupBy(
         F.col(user_col).alias("u"), minute.alias("m")
@@ -1165,7 +1154,6 @@ def top_k_per_group_salted(
     salt_src: Column,
     k: int = 1,
     salts: int = 16,
-    rank_col: str = "rnk",
 ) -> DataFrame:
     """Hub-safe top-k per group: the two-level (per-salt top-k → merge)
     pattern that :func:`top_k_per_group`'s docstrings promise as the
@@ -1186,6 +1174,7 @@ def top_k_per_group_salted(
     order (determinism rule 1), else level-1 survivors could differ
     between runs.
     """
+    rank_col = "rnk"
     salted = df.withColumn("_salt", F.pmod(F.xxhash64(salt_src), F.lit(salts)))
     w1 = Window.partitionBy(*group_cols, "_salt").orderBy(*order_by)
     survivors = (

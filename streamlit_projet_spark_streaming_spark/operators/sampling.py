@@ -51,7 +51,6 @@ def hash_split(
     df: DataFrame,
     id_col: str,
     splits: dict[str, float] | None = None,
-    salt: str = "split",
 ) -> DataFrame:
     """Assign every row to a named split by hashed id: train/val/test =
     90/5/5 by default. Adds ``bucket`` and ``split`` columns.
@@ -59,6 +58,7 @@ def hash_split(
     Thresholds are cumulative over insertion order of ``splits``; weights
     must sum to 1.0 (±1 bucket of rounding goes to the last split).
     """
+    salt = "split"
     splits = splits or {"train": 0.9, "val": 0.05, "test": 0.05}
     if abs(sum(splits.values()) - 1.0) > 1e-9:
         raise ValueError(f"split weights must sum to 1.0, got {splits}")
@@ -80,7 +80,6 @@ def greedy_pack(
     token_col: str,
     budget: int = 256,
     n_buckets: int = 32,
-    salt: str = "pack",
     order_col: str | None = None,
 ) -> DataFrame:
     """Context-window packing for pretraining: assign each document to a
@@ -109,6 +108,7 @@ def greedy_pack(
     ranking stage — the order a shard writer actually consumes).
     ``id_col`` stays as the tie-breaker so the layout is deterministic.
     """
+    salt = "pack"
     bucket = (hash_bucket(F.col(id_col), salt) % n_buckets).alias("bucket")
     order = [F.asc(order_col), F.asc(id_col)] if order_col else [F.asc(id_col)]
     w = (
@@ -136,12 +136,11 @@ def shard_merge_plan(
     token_col: str,
     budget: int = 256,
 ) -> DataFrame:
-    """Merge planner for packed training shards (r8 verdict item 7
-    roadmap: the shard-merge half of ``sinks.writer.write_packed_shards``):
-    after curation/dedup removes documents, previously full packs
-    shrink — this plans which UNDER-filled packs to coalesce into
-    target-sized merged packs, per bucket, without touching packs that
-    are still at budget.
+    """Merge planner for packed training shards (the layout of
+    :func:`greedy_pack`): after curation/dedup removes documents,
+    previously full packs shrink — this plans which UNDER-filled packs
+    to coalesce into target-sized merged packs, per bucket, without
+    touching packs that are still at budget.
 
     Input: ``greedy_pack``-shaped per-doc rows (``bucket``, ``pack_ix``,
     ``token_col``; any column subset containing these). Output, one row
@@ -240,13 +239,7 @@ def shard_merge_plan(
     return merge_rows.unionByName(keep_rows)
 
 
-def source_cap(
-    df: DataFrame,
-    stratum_col: str,
-    id_col: str,
-    cap: int,
-    salt: str = "cap",
-) -> DataFrame:
+def source_cap(df: DataFrame, stratum_col: str, id_col: str, cap: int) -> DataFrame:
     """Per-source document cap (domain rebalancing): keep at most ``cap``
     rows per stratum (source/domain/host), chosen by deterministic hash
     order — the step that stops a handful of over-crawled domains from
@@ -266,6 +259,7 @@ def source_cap(
     per-stratum fraction to knock the giant down to ~cap×2 rows first,
     then this exact cap — same final determinism, bounded sort.
     """
+    salt = "cap"
     h = F.md5(F.concat(F.lit(f"{salt}:"), F.col(id_col).cast("string")))
     w = Window.partitionBy(stratum_col).orderBy(h.asc(), F.col(id_col).asc())
     return df.select(
@@ -275,9 +269,7 @@ def source_cap(
     ).withColumn("kept", F.col("rnk") <= cap)
 
 
-def temperature_weights(
-    df: DataFrame, stratum_col: str, alpha: float = 0.5
-) -> DataFrame:
+def temperature_weights(df: DataFrame, stratum_col: str) -> DataFrame:
     """Temperature-based sampling weights per stratum (language/source):
     w_s ∝ p_s^alpha, the multilingual rebalancing rule from the XLM-R /
     mBERT lineage — alpha < 1 up-samples rare languages, alpha = 1 keeps
@@ -285,13 +277,11 @@ def temperature_weights(
     ``p``, temperature share ``w_temp``, and ``boost`` = w/p (the per-doc
     repetition factor an epoch sampler applies).
 
-    Determinism across engines: alpha = 0.5 (the default) is computed
-    with ``sqrt`` — IEEE-754 *correctly rounded*, unlike ``pow`` — and
-    the normalizing sum runs over 4-decimal DECIMAL values, so it is
-    exact and order-independent (float sums are neither, and Spark's
-    partial aggregation order differs from DuckDB's). Other alphas fall
-    back to ``pow`` and are NOT oracle-grade; callers get them for
-    exploration only.
+    Determinism across engines: alpha is 0.5, computed with ``sqrt`` —
+    IEEE-754 *correctly rounded*, unlike ``pow`` — and the normalizing
+    sum runs over 4-decimal DECIMAL values, so it is exact and
+    order-independent (float sums are neither, and Spark's partial
+    aggregation order differs from DuckDB's).
 
     Scale shape: one groupBy(stratum) over the corpus (map-side
     combined), then arithmetic over the tiny stratum table with its two
@@ -299,10 +289,7 @@ def temperature_weights(
     the data.
     """
     counts = df.groupBy(stratum_col).agg(F.count(F.lit(1)).alias("n_docs"))
-    if alpha == 0.5:
-        powed = F.sqrt(F.col("n_docs").cast("double"))
-    else:
-        powed = F.pow(F.col("n_docs").cast("double"), F.lit(alpha))
+    powed = F.sqrt(F.col("n_docs").cast("double"))
     # round each stratum's p^alpha to a 4-decimal grid and sum as
     # DECIMAL: exact, associativity-free — both engines get the same
     # normalizer no matter their aggregation order.
@@ -340,7 +327,6 @@ def stratified_sample(
     fractions: dict[str, float],
     id_col: str,
     default_fraction: float = 0.0,
-    salt: str = "sample",
 ) -> DataFrame:
     """Deterministic per-stratum downsampling: keep a row iff its hash
     bucket falls below its stratum's threshold — e.g. keep 100% of rare
@@ -351,6 +337,7 @@ def stratified_sample(
     across engines/partitionings), the kept set is a pure function of
     (id, stratum) — oracle-checkable and stable across runs.
     """
+    salt = "sample"
     bucket = hash_bucket(F.col(id_col), salt)
     thresh = None
     for value, frac in fractions.items():
@@ -373,7 +360,6 @@ DSIR_BUCKETS = 4096
 def dsir_importance_weights(
     documents: DataFrame,
     target: Column,
-    buckets: int = DSIR_BUCKETS,
     score_docs: DataFrame | None = None,
 ) -> DataFrame:
     """DSIR importance weights (Data Selection via Importance Resampling,
@@ -435,7 +421,7 @@ def dsir_importance_weights(
             )
         )
         bucket = (
-            F.conv(F.substring(F.md5("sh"), 1, 7), 16, 10).cast("long") % buckets
+            F.conv(F.substring(F.md5("sh"), 1, 7), 16, 10).cast("long") % DSIR_BUCKETS
         ).alias("bucket")
         return (
             uni.unionByName(bi)
@@ -459,8 +445,8 @@ def dsir_importance_weights(
     )
     log_ratio = F.round(
         F.log(
-            ((F.col("tgt_ct") + 1.0) / (F.col("tgt_total") + buckets))
-            / ((F.col("raw_ct") + 1.0) / (F.col("raw_total") + buckets))
+            ((F.col("tgt_ct") + 1.0) / (F.col("tgt_total") + DSIR_BUCKETS))
+            / ((F.col("raw_ct") + 1.0) / (F.col("raw_total") + DSIR_BUCKETS))
         ),
         6,
     ).cast("decimal(18, 6)")
@@ -475,8 +461,8 @@ def dsir_importance_weights(
     # doc buckets are a subset of model buckets by construction.
     default_lr = F.round(
         F.log(
-            (F.lit(1.0) / (F.col("tgt_total") + buckets))
-            / (F.lit(1.0) / (F.col("raw_total") + buckets))
+            (F.lit(1.0) / (F.col("tgt_total") + DSIR_BUCKETS))
+            / (F.lit(1.0) / (F.col("raw_total") + DSIR_BUCKETS))
         ),
         6,
     ).cast("decimal(18, 6)")
@@ -503,12 +489,16 @@ def dsir_importance_weights(
     )
 
 
-def _mixing_units(
-    documents: DataFrame,
-    stratum_col: str,
-    budget_mult: int,
-    max_epochs_units: int,
-) -> DataFrame:
+#: The mixing policy :func:`mixing_epochs` and :func:`epoch_plan` share
+#: (their oracles replay the same numbers): strata are sources, the
+#: budget is 3x the corpus tokens, and a stratum repeats at most 3.0
+#: epochs (in 1e-4 epoch units).
+MIX_STRATUM = "source"
+MIX_BUDGET_MULT = 3
+MIX_MAX_EPOCHS_UNITS = 30_000
+
+
+def _mixing_units(documents: DataFrame) -> DataFrame:
     """Shared exact-integer core of the mixing policy: the per-stratum
     table with ``capped_u`` (1e-4 epoch units, EXACT long) plus every
     intermediate. ``epoch_plan`` consumes ``capped_u`` directly —
@@ -517,7 +507,7 @@ def _mixing_units(
     from .dedup import _norm
 
     toks = F.size(F.split(_norm(F.col("text")), " ")).cast("long")
-    counts = documents.groupBy(stratum_col).agg(
+    counts = documents.groupBy(MIX_STRATUM).agg(
         F.count(F.lit(1)).alias("n_docs"), F.sum(toks).alias("tokens")
     )
     # |strata| rows, two consumers (the totals aggregate and the final
@@ -532,7 +522,7 @@ def _mixing_units(
     )
     pu = (F.col("powed") * 10_000).cast("decimal(38,0)")
     tpu = (F.col("total_powed") * 10_000).cast("decimal(38,0)")
-    budget = F.col("total_tokens").cast("decimal(38,0)") * F.lit(budget_mult)
+    budget = F.col("total_tokens").cast("decimal(38,0)") * F.lit(MIX_BUDGET_MULT)
     return (
         counts.crossJoin(F.broadcast(totals))
         .withColumn("pu", pu)
@@ -546,24 +536,19 @@ def _mixing_units(
                 "long"
             ),
         )
-        .withColumn("capped_u", F.least(F.col("epochs_u"), F.lit(max_epochs_units)))
+        .withColumn("capped_u", F.least(F.col("epochs_u"), F.lit(MIX_MAX_EPOCHS_UNITS)))
     )
 
 
-def mixing_epochs(
-    documents: DataFrame,
-    stratum_col: str = "source",
-    budget_mult: int = 3,
-    max_epochs_units: int = 35_000,
-) -> DataFrame:
+def mixing_epochs(documents: DataFrame) -> DataFrame:
     """Token-budget corpus mixing: per-stratum repeat factors ("epochs").
 
     The dataset-assembly step after curation: given a total training-token
-    budget ``B = budget_mult * total_tokens``, allocate it across strata
+    budget ``B = MIX_BUDGET_MULT * total_tokens``, allocate it across strata
     (sources/languages) by temperature weights ``w_s ∝ sqrt(tokens_s)``
     (the XLM-R/Llama rebalancing rule on TOKEN mass, not doc counts), then
     convert each stratum's allocation into the repeat factor an epoch
-    sampler applies, capped at ``max_epochs_units / 10^4`` epochs (the
+    sampler applies, capped at ``MIX_MAX_EPOCHS_UNITS / 10^4`` epochs (the
     "don't repeat data too often" rule from scaling-law practice; capped
     strata release budget that a second pass could redistribute — kept
     single-pass here, as in practice: the cap is a hard data-repetition
@@ -582,10 +567,8 @@ def mixing_epochs(
     two scalar totals broadcast-crossed in. Output is |strata| rows at any
     corpus scale; no windows, no second data pass.
     """
-    return _mixing_units(
-        documents, stratum_col, budget_mult, max_epochs_units
-    ).select(
-        stratum_col,
+    return _mixing_units(documents).select(
+        MIX_STRATUM,
         "n_docs",
         "tokens",
         ratio_round(F.col("tokens"), F.col("total_tokens"), 4).alias("token_share"),
@@ -598,13 +581,7 @@ def mixing_epochs(
     )
 
 
-def epoch_plan(
-    documents: DataFrame,
-    stratum_col: str = "source",
-    budget_mult: int = 3,
-    max_epochs_units: int = 30_000,
-    salt: str = "rep",
-) -> DataFrame:
+def epoch_plan(documents: DataFrame) -> DataFrame:
     """Materialize :func:`mixing_epochs` into the physical training plan:
     one output row per (document, repeat) with a deterministic global
     shuffle key — the table a data loader actually reads.
@@ -623,26 +600,25 @@ def epoch_plan(
     scan; the explode is output-proportional; no shuffle at all in this
     operator.
     """
-    mix = _mixing_units(
-        documents, stratum_col, budget_mult, max_epochs_units
-    ).select(stratum_col, "capped_u")
+    salt = "rep"
+    mix = _mixing_units(documents).select(MIX_STRATUM, "capped_u")
     full = (F.col("capped_u") / 10_000).cast("long")
     frac = F.col("capped_u") % 10_000
     extra = F.when(
         hash_bucket(F.col("doc_id"), salt) < frac, F.lit(1)
     ).otherwise(F.lit(0))
     planned = (
-        documents.select("doc_id", stratum_col)
-        .join(F.broadcast(mix), stratum_col)
+        documents.select("doc_id", MIX_STRATUM)
+        .join(F.broadcast(mix), MIX_STRATUM)
         .withColumn("n_rep", full + extra)
         .filter(F.col("n_rep") > 0)
     )
     rep = F.explode(F.sequence(F.lit(0), F.col("n_rep").cast("int") - 1)).alias(
         "repeat_idx"
     )
-    return planned.select("doc_id", stratum_col, rep).select(
+    return planned.select("doc_id", MIX_STRATUM, rep).select(
         "doc_id",
-        stratum_col,
+        MIX_STRATUM,
         F.col("repeat_idx").cast("int").alias("repeat_idx"),
         F.md5(
             F.concat_ws(":", F.lit("ord"), F.col("repeat_idx"), F.col("doc_id"))
@@ -650,13 +626,7 @@ def epoch_plan(
     )
 
 
-def weighted_sample_topk(
-    df: DataFrame,
-    id_col: str,
-    weight_col: str,
-    k: int = 50,
-    salt: str = "ws",
-) -> DataFrame:
+def weighted_sample_topk(df: DataFrame, id_col: str, weight_col: str) -> DataFrame:
     """Weighted sampling without replacement (Efraimidis–Spirakis,
     IPL 2006): each row draws key = u^(1/w); the k largest keys are a
     weight-proportional sample. Ranking by ln(u)/w is order-equivalent
@@ -681,6 +651,8 @@ def weighted_sample_topk(
     regenerated fixture ships an empty document (r8 degenerate-fixture
     audit catch).
     """
+    k = 50
+    salt = "ws"
     df = df.filter(F.col(weight_col) > 0)
     m = F.conv(
         F.substring(

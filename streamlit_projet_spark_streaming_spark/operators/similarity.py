@@ -88,11 +88,7 @@ def brute_force_topk(
     )
 
 
-def hard_negatives(
-    embeddings: DataFrame,
-    query_pred: Column,
-    k: int = 5,
-) -> DataFrame:
+def hard_negatives(embeddings: DataFrame, query_pred: Column) -> DataFrame:
     """Cross-label hard-negative mining: for each query vector, the top-k
     most-similar vectors carrying a DIFFERENT label — the standard
     negative-selection step for contrastive/embedding training data
@@ -106,6 +102,7 @@ def hard_negatives(
     for the IVF-bucketed candidate set exactly as ``ivf_topk`` does —
     the label filter composes unchanged.
     """
+    k = 5
     q = embeddings.filter(query_pred).select(
         F.col("vec_id").alias("query_id"),
         F.col("label").alias("query_label"),
@@ -175,13 +172,7 @@ def ivf_assign(embeddings: DataFrame, centroids: DataFrame) -> DataFrame:
     )
 
 
-def ivf_topk(
-    embeddings: DataFrame,
-    query_pred: Column,
-    k: int = 5,
-    centroid_modulus: int = 25,
-    nprobe: int = 1,
-) -> DataFrame:
+def ivf_topk(embeddings: DataFrame, query_pred: Column, nprobe: int = 1) -> DataFrame:
     """IVF (inverted-file) approximate top-k with configurable ``nprobe``.
 
     Deterministic centroid choice (``vec_id % centroid_modulus == 0``, a
@@ -196,6 +187,8 @@ def ivf_topk(
     rises monotonically with nprobe. The cluster join is an equi-join on
     ``centroid_id``, so Spark hashes both sides — no crossJoin.
     """
+    k = 5
+    centroid_modulus = 25
     centroids = embeddings.filter((F.col("vec_id") % centroid_modulus) == 0).select(
         F.col("vec_id").alias("centroid_id"), F.col("embedding").alias("c_emb")
     )
@@ -282,13 +275,14 @@ def cosine_near_dup_pairs(embeddings: DataFrame, threshold: float = 0.95) -> Dat
     )
 
 
-def planted_near_dup_corpus(embeddings: DataFrame, n_planted: int = 50) -> DataFrame:
+def planted_near_dup_corpus(embeddings: DataFrame) -> DataFrame:
     """Fixture corpus + deterministic planted near-duplicates: perturbed
     copies (cosine ≈ 0.9999) of the first ``n_planted`` vectors, ids
     offset by 1,000,000. The fixture's random vectors have no
     high-cosine pairs of their own, so recall checks for the LSH path
     need these. Shared by the registry query and the recall test so both
     always run the same corpus."""
+    n_planted = 50
     base = embeddings.select("vec_id", "embedding")
     planted = base.filter(F.col("vec_id") < n_planted).select(
         (F.col("vec_id") + 1_000_000).alias("vec_id"),
@@ -319,7 +313,7 @@ def rh_plane_sign(b: int, i: int) -> float:
     return 1.0 if int(nibble, 16) % 2 == 0 else -1.0
 
 
-def rh_signatures(embeddings: DataFrame, nbits: int = 32) -> DataFrame:
+def rh_signatures(embeddings: DataFrame) -> DataFrame:
     """Random-hyperplane (SRP) LSH signature per vector: bit b is the sign
     of <v, h_b> where h_b is a deterministic Rademacher (+/-1) hyperplane
     derived from md5("rh:b:i") — no RNG state to ship to executors, and
@@ -340,6 +334,7 @@ def rh_signatures(embeddings: DataFrame, nbits: int = 32) -> DataFrame:
     O(1)-magnitude components is measure-zero (same accepted risk class
     as every cosine comparison in this module).
     """
+    nbits = 60
     dims = 64  # fixture embedding width; weight arrays are per-dim
     elems = embeddings.select(
         "vec_id", F.posexplode("embedding").alias("i", "val")
@@ -380,12 +375,7 @@ def rh_signatures(embeddings: DataFrame, nbits: int = 32) -> DataFrame:
     return per_bit.select("vec_id", sig.alias("rh_sig"))
 
 
-def rh_near_dup_pairs(
-    embeddings: DataFrame,
-    threshold: float = 0.95,
-    nbits: int = 60,
-    max_hamming: int = 5,
-) -> DataFrame:
+def rh_near_dup_pairs(embeddings: DataFrame) -> DataFrame:
     """Near-linear embedding near-dup pairs: SRP-LSH candidates, exact
     cosine verification — the scale path for ``cosine_near_dup_pairs``
     (which stays as the exact quadratic baseline/oracle).
@@ -416,7 +406,10 @@ def rh_near_dup_pairs(
     """
     from .dedup import hamming_band_chunks
 
-    sigs = rh_signatures(embeddings, nbits)
+    threshold = 0.95
+    nbits = 60
+    max_hamming = 5
+    sigs = rh_signatures(embeddings)
     chunk_cols = hamming_band_chunks("rh_sig", nbits, max_hamming)
     chunks = sigs.select(
         "vec_id", F.explode(F.array(*chunk_cols)).alias("ch")
@@ -574,8 +567,6 @@ def _gk_assign_mapper(with_d2: bool = False):
 
 def grid_kmeans(
     embeddings: DataFrame,
-    n_clusters: int = 8,
-    n_iter: int = 2,
     with_d2: bool = False,
 ) -> tuple[DataFrame, DataFrame]:
     """Deterministic grid Lloyd k-means over the embedding corpus.
@@ -604,8 +595,10 @@ def grid_kmeans(
         StructType,
     )
 
-    from .quantize import _cb_row_from_rows, _cb_rows
+    from .quantize import _cb_row_from_rows, _cb_rows, _lloyd_update
 
+    n_clusters = 8
+    n_iter = 2
     partial_schema = StructType(
         [
             StructField("j", IntegerType()),
@@ -648,50 +641,13 @@ def grid_kmeans(
         partials = base.crossJoin(F.broadcast(cb_row)).mapInPandas(
             _gk_partials_mapper(), partial_schema
         )
-        # FUSED update (r10 opt): ONE groupBy(j, dim) aggregate carries
-        # both the unit sums and the member counts — each (batch, j)
-        # partial repeats its cnt identically on every dim row, so
-        # SUM(cnt) grouped by (j, dim) equals the per-j count exactly.
-        # UNION-SEED merge (r11 opt): the old codebook rows ride into the
-        # SAME aggregate as zero-weight seeds (s=0, cnt=0, old=val)
-        # instead of a per-round left join — n > 0 on a group ⟺ the old
-        # join found a match, so `when(n > 0, mean).otherwise(old)` is
-        # value-identical to the old coalesce(newval, val), and the
-        # empty-cluster fallback costs no join stage at all. The mean
-        # stays the identical exact half-away integer-unit quotient
-        # (seeds add 0 to both sums).
+        # The mean is the exact half-away integer-unit quotient.
         exploded = partials.select(
-            "j",
-            F.posexplode("sums").alias("dim", "s"),
-            "cnt",
-            F.lit(None).cast("double").alias("old"),
+            "j", F.posexplode("sums").alias("dim", "s"), "cnt"
         )
-        seeds = _cb_rows(cb_row).select(
-            "j",
-            "dim",
-            F.lit(0).cast("long").alias("s"),
-            F.lit(0).cast("long").alias("cnt"),
-            F.col("val").alias("old"),
+        cb_row = _lloyd_update(
+            exploded, cb_row, lambda s, n: ratio_round(s, n, 0)
         )
-        merged = (
-            exploded.unionByName(seeds)
-            .groupBy("j", "dim")
-            .agg(
-                F.sum("s").alias("s"),
-                F.sum("cnt").alias("n"),
-                F.max("old").alias("old"),
-            )
-            .select(
-                "j",
-                "dim",
-                F.when(
-                    F.col("n") > 0, ratio_round(F.col("s"), F.col("n"), 0)
-                )
-                .otherwise(F.col("old"))
-                .alias("val"),
-            )
-        )
-        cb_row = _cb_row_from_rows(merged)
 
     # NOT checkpointed here: the assignment is corpus-sized and both
     # callers consume it exactly once (semantic_dedup checkpoints its
@@ -939,8 +895,7 @@ def apply_cell_plan(
     with_embedding: bool = False,
 ) -> DataFrame:
     """Execute an :func:`ivf_cell_split_plan` over the corpus — the
-    re-index action the planner feeds (planner → applier, the same
-    chaining as ``shard_merge_plan`` → ``merge_packed_shards``).
+    re-index action the planner feeds (planner → applier).
 
     Per vector, one output row (``vec_id``, ``old_centroid_id``,
     ``new_centroid_id``, ``action``):
@@ -1283,12 +1238,7 @@ def maintenance_report(
     )
 
 
-def bitext_margin_pairs(
-    embeddings: DataFrame,
-    src_label: int = 0,
-    tgt_label: int = 1,
-    k: int = 4,
-) -> DataFrame:
+def bitext_margin_pairs(embeddings: DataFrame, k: int = 4) -> DataFrame:
     """Margin-based bitext mining between two label populations — the
     Artetxe & Schwenk (2019) ratio-margin criterion used to mine
     parallel sentence pairs from comparable corpora (LASER/CCMatrix):
@@ -1324,6 +1274,8 @@ def bitext_margin_pairs(
     normalizer aggregations + the scored join), and the scored table
     once (forward + backward rankings).
     """
+    src_label = 0
+    tgt_label = 1
     s = embeddings.filter(F.col("label") == int(src_label)).select(
         F.col("vec_id").alias("src_id"),
         F.col("embedding").alias("s_emb"),
@@ -1405,12 +1357,7 @@ def bitext_margin_pairs(
     )
 
 
-def semantic_dedup(
-    embeddings: DataFrame,
-    threshold: float = 0.95,
-    n_clusters: int = 8,
-    n_iter: int = 2,
-) -> DataFrame:
+def semantic_dedup(embeddings: DataFrame) -> DataFrame:
     """SemDeDup-style semantic deduplication (Abbas et al. 2023,
     arXiv:2303.09540): k-means-cluster the embedding space, compare
     cosine ONLY within each cluster, and drop every vector that has a
@@ -1435,9 +1382,7 @@ def semantic_dedup(
     form; pytest still bounds recall on the planted near-dup corpus
     against the exact quadratic baseline.
     """
-    assigned, pairs = semantic_dup_pairs(
-        embeddings, threshold, n_clusters, n_iter
-    )
+    assigned, pairs = semantic_dup_pairs(embeddings)
     dup_pairs = pairs.groupBy("vec_a").agg(F.min("vec_b").alias("dup_of"))
     return (
         assigned.select("vec_id", "centroid_id")
@@ -1451,18 +1396,14 @@ def semantic_dedup(
     )
 
 
-def semantic_dup_pairs(
-    embeddings: DataFrame,
-    threshold: float = 0.95,
-    n_clusters: int = 8,
-    n_iter: int = 2,
-) -> tuple[DataFrame, DataFrame]:
+def semantic_dup_pairs(embeddings: DataFrame) -> tuple[DataFrame, DataFrame]:
     """The SemDeDup pair subplan, shared by :func:`semantic_dedup` and
     the cluster roll-up entry: grid-kmeans assignment (checkpointed,
     repartitioned by cell — ONE materialization feeds both self-join
     sides) and the within-cluster near-dup pairs
     (vec_a > vec_b, cosine >= threshold)."""
-    assigned, scored = cell_pair_scores(embeddings, n_clusters, n_iter)
+    threshold = 0.95
+    assigned, scored = cell_pair_scores(embeddings)
     pairs = (
         scored.filter(F.col("vec_b") < F.col("vec_a"))
         .filter(F.col("cos") >= threshold)
@@ -1471,9 +1412,7 @@ def semantic_dup_pairs(
     return assigned, pairs
 
 
-def cell_pair_scores(
-    embeddings: DataFrame, n_clusters: int = 8, n_iter: int = 2
-) -> tuple[DataFrame, DataFrame]:
+def cell_pair_scores(embeddings: DataFrame) -> tuple[DataFrame, DataFrame]:
     """Shared cell-bounded cosine self-join: grid-kmeans assignment
     (norm hoisted, repartitioned by cell, checkpointed — ONE
     materialization feeds both join sides) and ALL ordered in-cell
@@ -1481,7 +1420,7 @@ def cell_pair_scores(
     a > b / threshold subset; the kNN-graph builder arg-maxes per
     vec_a — one audited copy of the Σ|c|² join for both."""
     par = embeddings.sparkSession.sparkContext.defaultParallelism
-    assigned_raw, _ = grid_kmeans(embeddings, n_clusters, n_iter)
+    assigned_raw, _ = grid_kmeans(embeddings)
     assigned = (
         assigned_raw.select(
             "vec_id",
@@ -1515,14 +1454,7 @@ def cell_pair_scores(
     return assigned, scored
 
 
-def ivf_topk_kmeans(
-    embeddings: DataFrame,
-    query_pred: Column,
-    k: int = 5,
-    n_clusters: int = 8,
-    nprobe: int = 3,
-    n_iter: int = 2,
-) -> DataFrame:
+def ivf_topk_kmeans(embeddings: DataFrame, query_pred: Column) -> DataFrame:
     """IVF top-k with a TRAINED coarse quantizer (:func:`grid_kmeans`) —
     the production ANN path; ``ivf_topk``'s modulus centroids exist as
     the untrained baseline, this variant is what you deploy.
@@ -1540,7 +1472,9 @@ def ivf_topk_kmeans(
     verbatim, and the cosine scoring reuses the bit-identical cosine
     form; the pytest recall bound vs brute force still applies.
     """
-    assigned, cent_rows = grid_kmeans(embeddings, n_clusters, n_iter)
+    k = 5
+    nprobe = 3
+    assigned, cent_rows = grid_kmeans(embeddings)
 
     # Probe: nprobe nearest centers per query by exact integer squared
     # distance in grid units (matches the quantizer's assignment
@@ -1664,13 +1598,7 @@ def label_centroids(embeddings: DataFrame) -> DataFrame:
     )
 
 
-def matryoshka_topk(
-    embeddings: DataFrame,
-    query_pred: Column,
-    k: int = 5,
-    d_coarse: int = 16,
-    shortlist: int = 50,
-) -> DataFrame:
+def matryoshka_topk(embeddings: DataFrame, query_pred: Column) -> DataFrame:
     """Two-stage Matryoshka retrieval (Kusupati et al. 2022, "Matryoshka
     Representation Learning"): stage 1 ranks the corpus by cosine over
     only the FIRST ``d_coarse`` dimensions (MRL-trained embeddings front-
@@ -1692,6 +1620,9 @@ def matryoshka_topk(
     candidate-sized, not corpus-sized. Rank windows operate per query on
     bounded candidate sets.
     """
+    k = 5
+    d_coarse = 16
+    shortlist = 50
     qpre = F.slice(F.col("embedding"), 1, d_coarse)
     # q feeds both stages' broadcasts — checkpoint the (small) query
     # projection so the corpus scan behind it runs once, not per stage.
@@ -1875,65 +1806,7 @@ def dim_covariance_pairs(embeddings: DataFrame) -> DataFrame:
     )
 
 
-def pca_spectrum(embeddings: DataFrame, top_k: int = 10) -> DataFrame:
-    """PCA eigenspectrum of the embedding corpus: top-k eigenvalues of
-    the sample covariance + explained-variance ratios — the dataset-card
-    diagnostic for effective dimensionality (how many dims carry signal
-    before quantization/truncation, cf. Matryoshka prefix choice).
-
-    The DISTRIBUTED work is the exact integer partial-Gram pass of
-    :func:`gram_partial_totals` (map-side-combined, one O(batches·D²)
-    shuffle, corpus never shuffles). The driver then eigendecomposes the
-    D×D covariance — a CONSTANT-size ``collect`` (D(D+1)/2 + D + 1 rows
-    for D = 64), the same class as the k-means centroid collect in
-    :func:`ivf_topk_kmeans`, not a data-sized driver loop. Eigenvalues
-    of the exact integer-derived covariance are deterministic given one
-    LAPACK build; cross-engine they are NOT SQL-expressible → rows-only
-    registry entry + a numpy parity pytest.
-    """
-    import numpy as np
-
-    rows = gram_partial_totals(embeddings, include_diag=True).collect()
-    d = max(r["i"] for r in rows) + 1
-    n = 0
-    g = np.zeros((d, d), dtype=np.float64)
-    s = np.zeros(d, dtype=np.float64)
-    for r in rows:
-        i, j, v = r["i"], r["j"], float(r["v"])
-        if i == -1:
-            n = v
-        elif j == -1:
-            s[i] = v
-        else:
-            g[i, j] = v
-            g[j, i] = v
-    # Covariance in (1e-6)² quantized units: C = (n·G − s·sᵀ) / n².
-    cov = (n * g - np.outer(s, s)) / (n * n) * 1e-12
-    evals = np.linalg.eigvalsh(cov)[::-1]
-    total = float(evals.sum())
-    k = min(top_k, d)
-    out = []
-    cum = 0.0
-    for c in range(k):
-        ev = float(evals[c])
-        cum += ev
-        out.append(
-            (
-                c + 1,
-                round(ev, 6),
-                round(ev / total, 4),
-                round(cum / total, 4),
-            )
-        )
-    spark = embeddings.sparkSession
-    return spark.createDataFrame(
-        out,
-        "component int, eigenvalue double, explained_ratio double, "
-        "cum_explained_ratio double",
-    )
-
-
-def pca_spectrum_audit(embeddings: DataFrame, top_k: int = 10) -> DataFrame:
+def pca_spectrum_audit(embeddings: DataFrame) -> DataFrame:
     """Oracle-checkable AUDIT of the PCA eigenspectrum (the
     dedup_lsh_quality pattern — VERDICT r6 item 6): the eigenVALUES are
     LAPACK outputs no SQL engine replays, but the spectrum's invariants
@@ -1943,13 +1816,17 @@ def pca_spectrum_audit(embeddings: DataFrame, top_k: int = 10) -> DataFrame:
     Σ(all eigenvalues) equals the covariance trace (checked here against
     the trace recomputed DIRECTLY from the exact integer Gram rows the
     distributed pass emitted, at 1e-9 relative tolerance). The oracle
-    replays the corpus count and asserts the booleans; the eigenvalue
-    numbers stay pinned by the numpy parity pytest.
+    replays the corpus count and asserts the booleans; the eigenvalues
+    themselves are not emitted.
 
-    Same distributed plan as :func:`pca_spectrum` (one integer
-    partial-Gram pass; constant-size driver eigendecomposition)."""
+    The DISTRIBUTED work is the exact integer partial-Gram pass of
+    :func:`gram_partial_totals` (map-side-combined, one O(batches·D²)
+    shuffle, corpus never shuffles). The driver then eigendecomposes the
+    D×D covariance — a CONSTANT-size ``collect`` (D(D+1)/2 + D + 1 rows
+    for D = 64), not a data-sized driver loop."""
     import numpy as np
 
+    top_k = 10
     rows = gram_partial_totals(embeddings, include_diag=True).collect()
     d = max(r["i"] for r in rows) + 1
     n = 0

@@ -15,10 +15,10 @@ Guarantee carried through the merge (pytest-pinned,
     true_count − N/(k+1)  ≤  estimate  ≤  true_count
 
 so every key with true_count > N/(k+1) survives with a positive
-estimate. Output sets depend on partition boundaries (a key straddling
-the decrement in one partitioning may not in another), so the registry
-entry is rows-only; the pytest bound checks the guarantee against exact
-counts, which IS the sketch's contract.
+estimate. The estimates depend on partition boundaries (a key straddling
+the decrement in one partitioning may not in another), so
+:func:`provable_heavy_hitters` emits only the exact counts of the
+provably-heavy keys — a pure function of the data, oracle-checked.
 """
 
 from __future__ import annotations
@@ -28,13 +28,6 @@ from collections.abc import Iterator
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StringType, StructField, StructType
-
-_MG_SCHEMA = StructType(
-    [
-        StructField("key", LongType()),
-        StructField("est", LongType()),
-    ]
-)
 
 #: MG summary schema for string keys (``provable_heavy_hitters``).
 _MG_STR_SCHEMA = StructType(
@@ -67,40 +60,11 @@ def _mg_partial_mapper(k: int):
     return _summarize
 
 
-def heavy_hitters(
-    df: DataFrame, key: Column, k: int = 50, top: int = 20
-) -> DataFrame:
-    """Approximate top-``top`` heavy hitters of ``key`` with ``k``
-    Misra-Gries counters per partition.
-
-    Plan shape: one Arrow map stage emits ≤ k (key, est) rows per batch
-    (the sketch IS the map-side combine); merging is a plain
-    groupBy(key).sum over ``k·partitions`` rows (summing MG estimates is
-    the mergeable-summaries union: errors add, bounded by Σ N_i/(k+1) ≤
-    N/(k+1) since each partition's decrement is at most its own
-    undercount); the final top-``top`` is a TakeOrderedAndProject.
-    Nothing anywhere is proportional to the number of DISTINCT keys —
-    the property that makes this the 100 TB path for high-cardinality
-    frequency queries.
-    """
-    from .relational import spread_if_few_splits
-
-    # CPU-bound Arrow stage over a scan-rooted projection: spread when
-    # the parquet arrives as fewer splits than cores (CLAUDE.md rule),
-    # else the whole MG pass runs as one task on small fixtures.
-    keyed = spread_if_few_splits(df.select(key.cast("long").alias("key")))
-    partials = keyed.mapInPandas(_mg_partial_mapper(k), _MG_SCHEMA)
-    merged = partials.groupBy("key").agg(F.sum("est").alias("est"))
-    return (
-        merged.orderBy(F.desc("est"), F.asc("key"))
-        .limit(top)
-        .select("key", "est")
-    )
-
-
 def provable_heavy_hitters(df: DataFrame, key: Column, k: int = 8) -> DataFrame:
     """DETERMINISTIC heavy hitters: the classic MG two-pass — pass 1 is
-    the mergeable Misra-Gries candidate sketch of :func:`heavy_hitters`,
+    the mergeable Misra-Gries candidate sketch (one Arrow map stage
+    emits ≤ ``k`` (key, est) rows per batch via
+    :func:`_mg_partial_mapper`, merged by a plain groupBy(key).sum),
     pass 2 joins the ≤ ``k·partitions`` candidates back to EXACT counts
     and keeps only the provably-heavy keys, ``true_count·(k+1) > N``
     (integer inequality — no float threshold).
@@ -171,13 +135,7 @@ def _cm_cell(j: int, key: Column, width: int) -> Column:
     )
 
 
-def count_min_estimate(
-    df: DataFrame,
-    key: Column,
-    query_keys: DataFrame,
-    depth: int = 3,
-    width: int = 256,
-) -> DataFrame:
+def count_min_estimate(df: DataFrame, key: Column, query_keys: DataFrame) -> DataFrame:
     """Count-Min frequency estimates (Cormode & Muthukrishnan 2005) for
     ``query_keys`` (a one-column ``key`` DataFrame), plus the exact
     count for comparison.
@@ -196,6 +154,8 @@ def count_min_estimate(
     keyed input (it exists for the comparison column, not the sketch
     path). No state anywhere is proportional to distinct-key count.
     """
+    depth = 3
+    width = 256
     keyed = df.select(key.cast("long").alias("key"))
     # query_keys feeds BOTH the probe explode and the exact-count
     # broadcast — without a checkpoint its (distinct) subplan replays
@@ -254,8 +214,6 @@ def bloom_prefilter_report(
     df: DataFrame,
     key: Column,
     member_pred: Column,
-    n_bits: int = 1024,
-    n_hashes: int = 3,
 ) -> DataFrame:
     """Bloom-filter semi-join prefilter with exact false-positive
     accounting — one summary row: how many distinct probe keys pass the
@@ -275,6 +233,8 @@ def bloom_prefilter_report(
     passes iff all its positions are set (count == n_hashes). The
     output is ONE row.
     """
+    n_bits = 1024
+    n_hashes = 3
     # members feeds bits + truth, probe_keys feeds probe_bits + per_key —
     # both small multi-consumer distinct sets → lazy checkpoints
     # (review catch: 4 fact scans where 2 suffice).
@@ -343,9 +303,7 @@ HLL_RHO_CAP = 29
 HLL_ALPHA_M2 = float(0.7213 / (1 + 1.079 / 64) * 64 * 64)
 
 
-def hll_distinct_estimate(
-    df: DataFrame, key: Column, group: Column, salt: str = "hll"
-) -> DataFrame:
+def hll_distinct_estimate(df: DataFrame, key: Column, group: Column) -> DataFrame:
     """Portable HyperLogLog (Flajolet et al. 2007) distinct-count
     estimate per group — like the Count-Min entry, md5-determinism
     makes this sketch fully ORACLE-CHECKED (Spark's builtin
@@ -368,6 +326,7 @@ def hll_distinct_estimate(
     """
     from .dedup import md5_hash_pieces
 
+    salt = "hll"
     piece1, piece2 = md5_hash_pieces(
         F.concat(F.lit(f"{salt}:"), key.cast("string"))
     )
@@ -441,7 +400,6 @@ def hll_set_algebra(
     key: Column,
     in_a: Column,
     in_b: Column,
-    salt: str = "hll",
 ) -> DataFrame:
     """HLL set algebra over two subsets of one key stream: distinct
     estimates for A, B, A∪B and the inclusion–exclusion overlap
@@ -462,6 +420,7 @@ def hll_set_algebra(
     """
     from .dedup import md5_hash_pieces
 
+    salt = "hll"
     piece1, piece2 = md5_hash_pieces(
         F.concat(F.lit(f"{salt}:"), key.cast("string"))
     )

@@ -107,7 +107,7 @@ def bpe_token_count(t: Column) -> Column:
     )
 
 
-def tokenizer_fertility(documents: DataFrame, keys=("lang", "source")) -> DataFrame:
+def tokenizer_fertility(documents: DataFrame) -> DataFrame:
     """Fertility (BPE-ish tokens per whitespace word) per key group in
     ONE corpus scan: the token-count expressions evaluate inside the
     scan stage and partial-aggregate straight into the small key grid —
@@ -116,6 +116,7 @@ def tokenizer_fertility(documents: DataFrame, keys=("lang", "source")) -> DataFr
     the half-grid)."""
     from .numeric import ratio_round
 
+    keys = ("lang", "source")
     t = _norm(F.col("text"))
     per_doc = documents.select(
         *keys,
@@ -447,7 +448,7 @@ def pii_scan(documents: DataFrame) -> DataFrame:
 
 
 def boilerplate_phrases(
-    documents: DataFrame, n: int = 3, min_docs: int = 5, k: int = 100
+    documents: DataFrame, min_docs: int = 5, k: int = 100
 ) -> DataFrame:
     """Corpus-level boilerplate phrase mining: the top-``k`` word
     ``n``-grams that appear in at least ``min_docs`` DISTINCT documents —
@@ -465,6 +466,7 @@ def boilerplate_phrases(
     """
     from .dedup import shingles
 
+    n = 3
     return (
         shingles(documents, n, "word")
         .groupBy("sh")
@@ -530,7 +532,7 @@ def unigram_logprob(documents: DataFrame) -> DataFrame:
     )
 
 
-def tfidf_top_terms(documents: DataFrame, k: int = 3) -> DataFrame:
+def tfidf_top_terms(documents: DataFrame) -> DataFrame:
     """Top-k terms per document by TF-IDF (tf × ln(N/df)), the classic
     keyword/feature extractor for corpus analysis.
 
@@ -543,6 +545,7 @@ def tfidf_top_terms(documents: DataFrame, k: int = 3) -> DataFrame:
     """
     from pyspark.sql import Window
 
+    k = 3
     words = (
         documents.select(
             "doc_id", F.explode(F.split(_norm(F.col("text")), " ")).alias("term")
@@ -663,11 +666,7 @@ BM25_K1 = 1.2
 BM25_B = 0.75
 
 
-def bm25_topk(
-    documents: DataFrame,
-    query_terms: tuple[str, ...] = ("spark", "join", "vector"),
-    k: int = 20,
-) -> DataFrame:
+def bm25_topk(documents: DataFrame, k: int = 20) -> DataFrame:
     """Top-k documents by BM25 against a fixed query-term set — the
     classic sparse-retrieval scorer (used in pipelines both for corpus
     search and for benchmark-decontamination retrieval).
@@ -688,6 +687,7 @@ def bm25_topk(
     sort). dl (per-doc length) is the only corpus-wide aggregate and
     shuffles by doc_id once.
     """
+    query_terms = ("spark", "join", "vector")
     words = documents.select(
         "doc_id", F.explode(F.split(_norm(F.col("text")), " ")).alias("w")
     ).filter(F.length("w") > 0)
@@ -796,7 +796,7 @@ def best_copy_per_group(documents: DataFrame) -> DataFrame:
 # --------------------------------------------------------------------------
 
 
-def remove_dup_spans(documents: DataFrame, n: int = 5) -> DataFrame:
+def remove_dup_spans(documents: DataFrame) -> DataFrame:
     """Cut globally-duplicated spans OUT of the text — the removal twin of
     ``dedup.span_dup_profile`` (Lee et al. 2107.06499 deduplicate the
     repeated substrings themselves, not whole documents). A word is
@@ -817,6 +817,7 @@ def remove_dup_spans(documents: DataFrame, n: int = 5) -> DataFrame:
     see the inline comment on why sortWithinPartitions→collect_list is
     not sound).
     """
+    n = 5
     norm = documents.select(
         "doc_id", F.split(_norm(F.col("text")), " ").alias("w")
     )
@@ -897,7 +898,7 @@ def remove_dup_spans(documents: DataFrame, n: int = 5) -> DataFrame:
     )
 
 
-def vocab_stats(documents: DataFrame, stratum_col: str = "source") -> DataFrame:
+def vocab_stats(documents: DataFrame) -> DataFrame:
     """Per-stratum vocabulary statistics: total tokens, vocabulary size,
     hapax count (words occurring once), type-token ratio, hapax fraction —
     the lexical-diversity block of a dataset card (low TTR flags
@@ -908,6 +909,7 @@ def vocab_stats(documents: DataFrame, stratum_col: str = "source") -> DataFrame:
     then a second dimension-sized aggregation per stratum. Ratios round
     as exact integer quotients (grid rule).
     """
+    stratum_col = "source"
     w = F.explode(F.split(_norm(F.col("text")), " ")).alias("w")
     wc = (
         documents.select(F.col(stratum_col), w)
@@ -932,9 +934,7 @@ def vocab_stats(documents: DataFrame, stratum_col: str = "source") -> DataFrame:
     )
 
 
-def chunk_documents(
-    documents: DataFrame, chunk_tokens: int = 16, stride: int = 12
-) -> DataFrame:
+def chunk_documents(documents: DataFrame) -> DataFrame:
     """Split each document into fixed-size token chunks with overlap —
     the context-window reshape every pretraining/RAG pipeline runs
     before packing: chunk ``i`` covers words ``[i·stride, i·stride +
@@ -950,6 +950,8 @@ def chunk_documents(
     chunking is a per-row map, embarrassingly parallel at any corpus
     size.
     """
+    chunk_tokens = 16
+    stride = 12
     words = F.split(_norm(F.col("text")), " ")
     n_chunks = F.ceil(F.size(F.col("words")) / F.lit(stride)).cast("int")
     # A NULL-text document has no chunks (filtered on BOTH engines):
@@ -1003,7 +1005,7 @@ def lang_confusion(documents: DataFrame) -> DataFrame:
     )
 
 
-def bpe_merge_stats(documents: DataFrame, top_k: int = 30) -> DataFrame:
+def bpe_merge_stats(documents: DataFrame) -> DataFrame:
     """First-round BPE merge statistics: the corpus-wide frequency of
     every adjacent CHARACTER pair inside words, weighted by word
     frequency — exactly the pair counts the first byte-pair-encoding
@@ -1017,6 +1019,7 @@ def bpe_merge_stats(documents: DataFrame, top_k: int = 30) -> DataFrame:
     trillions, so the expensive explode runs on the small table. All
     counts are exact integers; top-k ties break on the pair string.
     """
+    top_k = 30
     words = documents.select(
         "doc_id", F.explode(F.split(_norm(F.col("text")), " ")).alias("w")
     ).filter(F.length("w") > 0)
@@ -1058,9 +1061,7 @@ def doc_bigrams(documents: DataFrame) -> DataFrame:
     )
 
 
-def word_pmi_pairs(
-    documents: DataFrame, min_count: int = 5, top_k: int | None = 40
-) -> DataFrame:
+def word_pmi_pairs(documents: DataFrame, top_k: int | None = 40) -> DataFrame:
     """Pointwise mutual information of adjacent word bigrams — the
     classic collocation / phrase-mining signal (Church & Hanks 1990;
     the phrase-induction step of word2vec-style pipelines):
@@ -1083,6 +1084,7 @@ def word_pmi_pairs(
     per branch (the multi-consumer rule: these are exactly "pair
     counts" / vocab tables, far smaller than the corpus).
     """
+    min_count = 5
     bi = doc_bigrams(documents).select("x", "y")
     cxy = (
         bi.groupBy("x", "y")
@@ -1168,7 +1170,7 @@ def char_entropy(documents: DataFrame) -> DataFrame:
     )
 
 
-def ngram_novelty(documents: DataFrame, n: int = 3) -> DataFrame:
+def ngram_novelty(documents: DataFrame) -> DataFrame:
     """Per-document n-gram novelty: the fraction of the document's
     DISTINCT word n-grams whose first corpus appearance (minimum doc_id)
     is this document — the curve dataset curators watch to decide when
@@ -1188,6 +1190,7 @@ def ngram_novelty(documents: DataFrame, n: int = 3) -> DataFrame:
     """
     from .dedup import _grams
 
+    n = 3
     grams = _grams(documents, n, "word").distinct()
     totals = grams.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_grams"))
     first = grams.groupBy("sh").agg(F.min("doc_id").alias("first_doc"))
@@ -1211,9 +1214,7 @@ def ngram_novelty(documents: DataFrame, n: int = 3) -> DataFrame:
     )
 
 
-def tfidf_knn(
-    documents: DataFrame, query_pred: Column, k: int = 5
-) -> DataFrame:
+def tfidf_knn(documents: DataFrame, query_pred: Column) -> DataFrame:
     """Sparse TF-IDF cosine top-k over an inverted index — the classic
     IR retrieval shape (Salton's vector space model) and the sparse
     complement to the dense `operators.similarity` family: documents
@@ -1237,6 +1238,7 @@ def tfidf_knn(
     one (query, doc) shuffle, and ranks per query over candidate sets
     bounded by shared-term document frequency.
     """
+    k = 5
     words = documents.select(
         "doc_id", F.explode(F.split(_norm(F.col("text")), " ")).alias("term")
     ).filter(F.length("term") > 0)
@@ -1306,7 +1308,7 @@ def tfidf_knn(
     )
 
 
-def compression_signals(documents: DataFrame, level: int = 6) -> DataFrame:
+def compression_signals(documents: DataFrame) -> DataFrame:
     """zlib compressibility per document — the Gopher-family quality
     signal a SQL engine cannot express (no DuckDB twin; registry entry
     is rows-only with pytest bounds instead of an oracle).
@@ -1324,6 +1326,7 @@ def compression_signals(documents: DataFrame, level: int = 6) -> DataFrame:
     """
     from collections.abc import Iterator
 
+    level = 6
     from pyspark.sql.types import (
         BooleanType,
         DoubleType,

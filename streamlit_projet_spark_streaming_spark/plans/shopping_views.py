@@ -193,8 +193,9 @@ AGE_BUCKET_SQL = (
 )
 
 
-def oracle_sql_shopping(table: str = "shopping_orders") -> dict[str, str]:
+def oracle_sql_shopping() -> dict[str, str]:
     """DuckDB oracle SQL for the four shopping views (pytest parity gate)."""
+    table = "shopping_orders"
 
     def stats_top1(key_expr: str, key_alias: str) -> str:
         return f"""

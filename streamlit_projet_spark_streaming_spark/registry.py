@@ -872,8 +872,6 @@ def _top3_priorities_per_segment(spark: SparkSession, sf: str) -> DataFrame:
         group_cols=["c_mktsegment"],
         order_by=[F.desc("cnt"), F.asc("o_orderpriority")],
         k=3,
-        rank_col="rnk",
-        keep_rank=True,
     ).select("c_mktsegment", "o_orderpriority", "cnt", "rnk")
 
 
@@ -1060,7 +1058,7 @@ _register(
     """,
     doc="Fingerprint dedup: md5(normalized 40-char prefix) duplicate groups",
     tags=("ext", "dedup"),
-)(lambda spark, sf: _dedup.prefix_fingerprint_dups(_t(spark, sf, "documents"), 40))
+)(lambda spark, sf: _dedup.prefix_fingerprint_dups(_t(spark, sf, "documents")))
 
 
 #: Full DuckDB query for exact word-3-gram Jaccard pairs at τ=0.6 —
@@ -1495,7 +1493,7 @@ _register(
     tags=("ext", "similarity", "r6"),
 )(
     lambda spark, sf: _sim.hard_negatives(
-        _t(spark, sf, "embeddings"), F.col("vec_id") < 10, k=5
+        _t(spark, sf, "embeddings"), F.col("vec_id") < 10
     )
 )
 
@@ -1535,9 +1533,7 @@ _register(
     "oracle checks the approximation itself",
     tags=("ext", "similarity"),
 )(
-    lambda spark, sf: _sim.ivf_topk(
-        _t(spark, sf, "embeddings"), F.col("vec_id") < 10, k=5, centroid_modulus=25
-    )
+    lambda spark, sf: _sim.ivf_topk(_t(spark, sf, "embeddings"), F.col("vec_id") < 10)
 )
 
 
@@ -2710,7 +2706,7 @@ _register(
     "-> score -> ranked window, corpus size joined as a broadcast 1-row "
     "aggregate (no driver collect)",
     tags=("ext", "text", "tfidf"),
-)(lambda spark, sf: _text.tfidf_top_terms(_t(spark, sf, "documents"), k=3))
+)(lambda spark, sf: _text.tfidf_top_terms(_t(spark, sf, "documents")))
 
 
 # Malformed-JSON tolerance with cross-engine value parity. The naive
@@ -2830,8 +2826,6 @@ _register(
     lambda spark, sf: _sim.ivf_topk(
         _t(spark, sf, "embeddings"),
         F.col("vec_id") < 10,
-        k=5,
-        centroid_modulus=25,
         nprobe=2,
     )
 )
@@ -2929,7 +2923,7 @@ def _rh_near_dup_builder(spark: SparkSession, sf_dir: str) -> DataFrame:
     # builder is shared with the pytest recall bound so both always run
     # the same data.
     corpus = _sim.planted_near_dup_corpus(_t(spark, sf_dir, "embeddings"))
-    return _sim.rh_near_dup_pairs(corpus, threshold=0.95)
+    return _sim.rh_near_dup_pairs(corpus)
 
 
 def _rh_sum_sql(b: int) -> str:
@@ -3241,7 +3235,7 @@ _register(
     tags=("ext", "similarity", "ivf", "kmeans"),
 )(
     lambda spark, sf: _sim.ivf_topk_kmeans(
-        _t(spark, sf, "embeddings"), F.col("vec_id") < 10, k=5
+        _t(spark, sf, "embeddings"), F.col("vec_id") < 10
     )
 )
 
@@ -3262,7 +3256,7 @@ def _embedding_cluster_cards(spark: SparkSession, sf: str) -> DataFrame:
     vectors/cluster. Output is k rows at any corpus size.
     """
     emb = _t(spark, sf, "embeddings")
-    assigned, _ = _sim.grid_kmeans(emb, n_clusters=8, n_iter=2, with_d2=True)
+    assigned, _ = _sim.grid_kmeans(emb, with_d2=True)
     j = assigned.select("vec_id", "centroid_id", "d2").join(
         emb.select("vec_id", "label"), "vec_id"
     )
@@ -3366,9 +3360,7 @@ def _embedding_knn_graph(spark: SparkSession, sf: str) -> DataFrame:
     the aggregate's map-side combine. Vectors alone in their cell have
     no neighbor and are absent from the output (documented, oracle
     agrees)."""
-    _, scored = _sim.cell_pair_scores(
-        _t(spark, sf, "embeddings"), n_clusters=8, n_iter=2
-    )
+    _, scored = _sim.cell_pair_scores(_t(spark, sf, "embeddings"))
     # Explicit NULLS-LAST on the nullable cosine (a zero-norm vector
     # yields cos = NULL): min_by's struct comparison would rank NULL
     # first while the oracle's DESC defaults NULLS LAST — the CLAUDE.md
@@ -3441,7 +3433,7 @@ _register(
     tags=("ext", "dedup", "char"),
 )(
     lambda spark, sf: _dedup_ops.shingle_arrays(
-        _t(spark, sf, "documents"), n=3, unit="char"
+        _t(spark, sf, "documents"), unit="char"
     ).select("doc_id", F.col("n_sh").alias("n_shingles"))
 )
 
@@ -3830,7 +3822,7 @@ _register(
     tags=("ext", "text"),
 )(
     lambda spark, sf: _text.boilerplate_phrases(
-        _t(spark, sf, "documents"), n=3, min_docs=5, k=100
+        _t(spark, sf, "documents"), min_docs=5, k=100
     )
 )
 
@@ -3862,7 +3854,7 @@ _register(
     "groupBy(span) + join-back (Zipf-skew-safe — no hot-key count "
     "window), short docs kept with 0 spans via the id spine.",
     tags=("ext", "dedup", "text"),
-)(lambda spark, sf: _dedup.span_dup_profile(_t(spark, sf, "documents"), 5))
+)(lambda spark, sf: _dedup.span_dup_profile(_t(spark, sf, "documents")))
 
 
 _register(
@@ -3911,9 +3903,7 @@ _register(
     "ratio, no intermediate float division).",
     tags=("ext", "sampling", "text"),
 )(
-    lambda spark, sf: _sampling.temperature_weights(
-        _t(spark, sf, "documents"), "lang", alpha=0.5
-    )
+    lambda spark, sf: _sampling.temperature_weights(_t(spark, sf, "documents"), "lang")
 )
 
 
@@ -4058,8 +4048,6 @@ _register(
 )(
     lambda spark, sf: _sim.semantic_dedup(
         _sim.planted_near_dup_corpus(_t(spark, sf, "embeddings")),
-        threshold=0.95,
-        n_clusters=8,
     )
 )
 
@@ -4073,7 +4061,7 @@ def _embedding_semantic_clusters(spark: SparkSession, sf: str) -> DataFrame:
     (``similarity.semantic_dup_pairs``) and the iterative min-label CC
     with every other cluster roll-up (``dedup.duplicate_clusters``)."""
     corpus = _sim.planted_near_dup_corpus(_t(spark, sf, "embeddings"))
-    _, pairs = _sim.semantic_dup_pairs(corpus, threshold=0.95, n_clusters=8)
+    _, pairs = _sim.semantic_dup_pairs(corpus)
     labels = _dedup.duplicate_clusters(
         pairs.select(
             F.col("vec_a").alias("doc_a"), F.col("vec_b").alias("doc_b")
@@ -4584,10 +4572,7 @@ _register(
     "rows at any corpus scale.",
     tags=("ext", "sampling", "text"),
 )(
-    lambda spark, sf: _sampling.mixing_epochs(
-        _t(spark, sf, "documents"), "source", budget_mult=3,
-        max_epochs_units=30_000,
-    )
+    lambda spark, sf: _sampling.mixing_epochs(_t(spark, sf, "documents"))
 )
 
 
@@ -4733,9 +4718,7 @@ _register(
     "doc sub-scores to |q| rows per doc before the one shuffle.",
     tags=("ext", "similarity"),
 )(
-    lambda spark, sf: _quant.pq_topk(
-        _t(spark, sf, "embeddings"), F.col("vec_id") < 10, k=5
-    )
+    lambda spark, sf: _quant.pq_topk(_t(spark, sf, "embeddings"), F.col("vec_id") < 10)
 )
 
 
@@ -4799,8 +4782,7 @@ _register(
     tags=("ext", "similarity"),
 )(
     lambda spark, sf: _quant.ivfpq_topk(
-        _t(spark, sf, "embeddings"), F.col("vec_id") < 10, k=5,
-        centroid_modulus=25, nprobe=2,
+        _t(spark, sf, "embeddings"), F.col("vec_id") < 10, nprobe=2,
     )
 )
 
@@ -4904,7 +4886,7 @@ _register(
 )(
     lambda spark, sf: _rel.basket_affinity(
         _t(spark, sf, "lineitem"), _t(spark, sf, "part"),
-        item_col="p_brand", min_support=10,
+        min_support=10,
     )
 )
 
@@ -5628,9 +5610,9 @@ def _corpus_dataset_card(spark: SparkSession, sf: str) -> DataFrame:
     docs = _t(spark, sf, "documents")
     prof = _text.source_quality_profile(docs)
     vocab = _text.vocab_stats(docs)
-    mix = _sampling.mixing_epochs(
-        docs, "source", budget_mult=3, max_epochs_units=30_000
-    ).select("source", "token_share", "epochs", "effective_tokens")
+    mix = _sampling.mixing_epochs(docs).select(
+        "source", "token_share", "epochs", "effective_tokens"
+    )
     return prof.join(vocab, "source").join(mix, "source")
 
 
@@ -6450,7 +6432,7 @@ _register(
     tags=("ext", "similarity"),
 )(
     lambda spark, sf: _quant.ivfpq_topk_residual(
-        _t(spark, sf, "embeddings"), F.col("vec_id") < 10, k=5
+        _t(spark, sf, "embeddings"), F.col("vec_id") < 10
     ).withColumn("dist", F.round("dist", 4))
 )
 
@@ -6629,7 +6611,7 @@ _register(
     tags=("ext", "similarity"),
 )(
     lambda spark, sf: _sim.matryoshka_topk(
-        _t(spark, sf, "embeddings"), F.col("vec_id") < 10, k=5
+        _t(spark, sf, "embeddings"), F.col("vec_id") < 10
     )
 )
 
@@ -7064,9 +7046,7 @@ _register(
     "persisted index of a production deployment.",
     tags=("ext", "text", "similarity"),
 )(
-    lambda spark, sf: _text.tfidf_knn(
-        _t(spark, sf, "documents"), F.col("doc_id") < 10, k=5
-    )
+    lambda spark, sf: _text.tfidf_knn(_t(spark, sf, "documents"), F.col("doc_id") < 10)
 )
 
 
@@ -8306,7 +8286,7 @@ def _part_copurchase_ppr_expansion(spark: SparkSession, sf: str) -> DataFrame:
         .limit(10)
         .select(F.col("l_partkey").alias("part"))
     )
-    ppr = ppr_integer(copurchase_edges(li), seeds, iters=3)
+    ppr = ppr_integer(copurchase_edges(li), seeds)
     return (
         ppr.select(F.col("part").alias("l_partkey"), "ppr_scaled", "is_seed")
         .orderBy(F.desc("ppr_scaled"), F.asc("l_partkey"))
@@ -8781,7 +8761,7 @@ _register(
     tags=("ext", "sampling"),
 )(
     lambda spark, sf: _sampling.weighted_sample_topk(
-        _t(spark, sf, "documents"), "doc_id", "n_chars", k=50
+        _t(spark, sf, "documents"), "doc_id", "n_chars"
     )
 )
 
@@ -9337,7 +9317,7 @@ _register(
     tags=("ext", "dedup"),
 )(
     lambda spark, sf: _dedup.containment_pairs(
-        _t(spark, sf, "documents"), 3, 0.8
+        _t(spark, sf, "documents"), threshold=0.8
     )
 )
 
@@ -9815,7 +9795,7 @@ def _graph_triangle_census(spark: SparkSession, sf: str) -> DataFrame:
     li = _t(spark, sf, "lineitem").filter(
         F.col("l_shipdate") >= F.lit("1998-01-01 00:00:00").cast("timestamp")
     )
-    return triangle_stats(copurchase_pairs(li), canonical=True)
+    return triangle_stats(copurchase_pairs(li))
 
 
 _register(
@@ -10413,9 +10393,7 @@ _register(
     "similarity.pca_spectrum.",
     tags=("ext", "similarity", "stats", "sketch-audit"),
 )(
-    lambda spark, sf: _sim.pca_spectrum_audit(
-        _t(spark, sf, "embeddings"), top_k=10
-    )
+    lambda spark, sf: _sim.pca_spectrum_audit(_t(spark, sf, "embeddings"))
 )
 
 
@@ -13122,7 +13100,7 @@ def _docs_keyphrases(spark: SparkSession, sf: str) -> DataFrame:
     from pyspark.sql import Window as _W
 
     docs = _t(spark, sf, "documents")
-    pmi = _text.word_pmi_pairs(docs, min_count=5, top_k=None).select(
+    pmi = _text.word_pmi_pairs(docs, top_k=None).select(
         "x", "y", "pmi_e6"
     )
     bi = _text.doc_bigrams(docs).distinct()
@@ -17411,7 +17389,7 @@ def _graph_local_clustering(spark: SparkSession, sf: str) -> DataFrame:
     li = _t(spark, sf, "lineitem").filter(
         F.col("l_shipdate") >= F.lit("1998-01-01 00:00:00").cast("timestamp")
     )
-    return local_clustering(copurchase_pairs(li), canonical=True)
+    return local_clustering(copurchase_pairs(li))
 
 
 _register(
@@ -17798,7 +17776,7 @@ def _graph_degree_assortativity(spark: SparkSession, sf: str) -> DataFrame:
     li = _t(spark, sf, "lineitem").filter(
         F.col("l_shipdate") >= F.lit("1998-01-01 00:00:00").cast("timestamp")
     )
-    return degree_assortativity(copurchase_pairs(li), canonical=True)
+    return degree_assortativity(copurchase_pairs(li))
 
 
 _register(
@@ -17903,7 +17881,7 @@ def _graph_kcore(spark: SparkSession, sf: str) -> DataFrame:
     li = _t(spark, sf, "lineitem").filter(
         F.col("l_shipdate") >= F.lit("1998-01-01 00:00:00").cast("timestamp")
     )
-    return kcore(copurchase_pairs(li), _KCORE_K, canonical=True)
+    return kcore(copurchase_pairs(li), _KCORE_K)
 
 
 from .operators.graph import KCORE_MAX_ROUNDS as _KCORE_ROUNDS  # noqa: E402
@@ -17997,7 +17975,7 @@ def _graph_hits(spark: SparkSession, sf: str) -> DataFrame:
         )
         .agg(F.count(F.lit(1)).alias("w"))
     )
-    return hits_bipartite(edges, iters=3)
+    return hits_bipartite(edges)
 
 
 _register(
@@ -18313,7 +18291,7 @@ def _bootstrap_oracle_sql() -> str:
     )
     return f"""
     WITH o AS MATERIALIZED (
-      SELECT o_orderkey AS key, {cents_sql("o_totalprice", 2)} AS x
+      SELECT o_orderkey AS key, {cents_sql("o_totalprice")} AS x
       FROM orders
     ),
     hashed AS MATERIALIZED (
@@ -19178,7 +19156,7 @@ def _graph_negative_samples(spark: SparkSession, sf: str) -> DataFrame:
     )
     from .operators.graph import copurchase_pairs
 
-    und, deg = _und_deg(copurchase_pairs(li), canonical=True)
+    und, deg = _und_deg(copurchase_pairs(li))
     nodes = deg.select("node")
     ncount = nodes.agg(F.count(F.lit(1)).alias("nv"))
     idx = (
@@ -19282,11 +19260,13 @@ _register(
 )(_graph_negative_samples)
 
 
-_ROCCHIO_KPRF = 3   # stage-1 PRF depth
-_ROCCHIO_K = 5      # final top-k
-_ROCCHIO_ALPHA = 7  # alpha = _ROCCHIO_ALPHA / _ROCCHIO_DENOM
-_ROCCHIO_BETA = 3   # beta  = _ROCCHIO_BETA / _ROCCHIO_DENOM
-_ROCCHIO_DENOM = 10
+from .operators.quantize import (  # noqa: E402
+    ROCCHIO_ALPHA as _ROCCHIO_ALPHA,
+    ROCCHIO_BETA as _ROCCHIO_BETA,
+    ROCCHIO_DENOM as _ROCCHIO_DENOM,
+    ROCCHIO_K as _ROCCHIO_K,
+    ROCCHIO_KPRF as _ROCCHIO_KPRF,
+)
 
 _register(
     "retrieval_rocchio_prf",
@@ -19341,13 +19321,7 @@ _register(
     tags=("ext", "similarity", "retrieval"),
 )(
     lambda spark, sf: _quant.rocchio_prf_topk(
-        _t(spark, sf, "embeddings"),
-        F.col("vec_id") < 10,
-        k_prf=_ROCCHIO_KPRF,
-        k=_ROCCHIO_K,
-        alpha_num=_ROCCHIO_ALPHA,
-        beta_num=_ROCCHIO_BETA,
-        denom=_ROCCHIO_DENOM,
+        _t(spark, sf, "embeddings"), F.col("vec_id") < 10
     )
 )
 
@@ -20348,7 +20322,7 @@ def _graph_lpa_communities(spark: SparkSession, sf: str) -> DataFrame:
     li = _t(spark, sf, "lineitem").filter(
         F.col("l_shipdate") >= F.lit("1998-01-01 00:00:00").cast("timestamp")
     )
-    und, deg = _und_deg(copurchase_pairs(li), canonical=True)
+    und, deg = _und_deg(copurchase_pairs(li))
     # PINNED repartition by the per-round join key BEFORE the
     # checkpoint (r9): bi is LOOP-INVARIANT, so partitioning it by
     # "nbr" once lets every round's join consume the checkpoint's
@@ -20480,10 +20454,7 @@ def _graph_link_prediction(spark: SparkSession, sf: str) -> DataFrame:
     li = _t(spark, sf, "lineitem").filter(
         F.col("l_shipdate") >= F.lit("1998-01-01 00:00:00").cast("timestamp")
     )
-    # canonical_edges: copurchase_pairs output is already DISTINCT with
-    # src < dst, so _und_deg skips its re-distinct (a full extra shuffle
-    # of the edge table that dedupes nothing — r9 perf audit)
-    return link_prediction_cn(copurchase_pairs(li), k=20, canonical_edges=True)
+    return link_prediction_cn(copurchase_pairs(li), k=20)
 
 
 _register(
@@ -21331,7 +21302,7 @@ _register(
 
 def _ivf_cell_stats_q(spark: SparkSession, sf: str) -> DataFrame:
     emb = _t(spark, sf, "embeddings")
-    _, centroid_rows = _sim.grid_kmeans(emb, n_clusters=8, n_iter=2)
+    _, centroid_rows = _sim.grid_kmeans(emb)
     # lazy checkpoint at the producer: the 1-row codebook feeds three
     # consumers inside ivf_cell_stats (partials map, drift join, spine)
     # and each would otherwise replay the full Lloyd training
@@ -21445,8 +21416,8 @@ _register(
     "first chunked fill (tokens DESC, pack_ix; exact integral prefix "
     "div budget), single-pack merge groups reclassified as keeps so a "
     "converged layout is a no-op (idempotent; ADVICE r9). Keeps are "
-    "never rewritten. Applier: sinks.writer.merge_packed_shards "
-    "(staging + per-bucket atomic swap, crash-window pytest). Scale: "
+    "never rewritten. The plan is the output; no applier rewrites "
+    "shards. Scale: "
     "map-side-combined pack rollup, window over PACK-level rows per "
     "bucket, merge-group rollup join - bounded by packs/bucket.",
     tags=("ext", "sampling", "packing"),
@@ -21460,7 +21431,7 @@ _SP_DRIFT = 1_500_000_000              # retrain above this drift_d2 (grid units
 
 def _ivf_cell_split_plan_q(spark: SparkSession, sf: str) -> DataFrame:
     emb = _t(spark, sf, "embeddings")
-    _, centroid_rows = _sim.grid_kmeans(emb, n_clusters=8, n_iter=2)
+    _, centroid_rows = _sim.grid_kmeans(emb)
     # checkpoint at the producer: centroid_rows feeds both the codebook
     # handoff and the plan's pair-distance search; cb_row fans out three
     # ways inside ivf_cell_stats — each re-consumption would otherwise
@@ -21546,7 +21517,7 @@ _register(
 
 def _ivf_apply_cell_plan_q(spark: SparkSession, sf: str) -> DataFrame:
     emb = _t(spark, sf, "embeddings")
-    _, centroid_rows = _sim.grid_kmeans(emb, n_clusters=8, n_iter=2)
+    _, centroid_rows = _sim.grid_kmeans(emb)
     centroid_rows = centroid_rows.localCheckpoint(eager=False)
     cb_row = _sim.kmeans_codebook_row(centroid_rows).localCheckpoint(eager=False)
     stats = _sim.ivf_cell_stats(emb, cb_row)
@@ -21616,8 +21587,7 @@ _register(
     SELECT vec_id, old_centroid_id, new_centroid_id, action FROM capply
     """,
     doc="IVF plan applier [ext/similarity/ivf]: executes the "
-    "ivf_cell_split_plan over the corpus (planner -> applier, the "
-    "shard_merge_plan -> merge_packed_shards chaining). Merged cells "
+    "ivf_cell_split_plan over the corpus (planner -> applier). Merged cells "
     "relabel to their target; split cells partition into n_subcells "
     "new cells seeded by the n_subcells lowest-md5 member vectors "
     "(grid_kmeans init discipline per cell) with nearest-anchor "
@@ -21636,7 +21606,7 @@ _register(
 
 def _ivf_post_apply_codebook_q(spark: SparkSession, sf: str) -> DataFrame:
     emb = _t(spark, sf, "embeddings")
-    _, centroid_rows = _sim.grid_kmeans(emb, n_clusters=8, n_iter=2)
+    _, centroid_rows = _sim.grid_kmeans(emb)
     centroid_rows = centroid_rows.localCheckpoint(eager=False)
     cb_row = _sim.kmeans_codebook_row(centroid_rows).localCheckpoint(eager=False)
     stats = _sim.ivf_cell_stats(emb, cb_row)
@@ -21685,7 +21655,7 @@ _register(
 
 def _ivf_maintenance_report_q(spark: SparkSession, sf: str) -> DataFrame:
     emb = _t(spark, sf, "embeddings")
-    _, centroid_rows = _sim.grid_kmeans(emb, n_clusters=8, n_iter=2)
+    _, centroid_rows = _sim.grid_kmeans(emb)
     centroid_rows = centroid_rows.localCheckpoint(eager=False)
     cb_row = _sim.kmeans_codebook_row(centroid_rows).localCheckpoint(eager=False)
     stats = _sim.ivf_cell_stats(emb, cb_row)
@@ -21762,7 +21732,7 @@ _register(
 
 def _embedding_bitext_margin_q(spark: SparkSession, sf: str) -> DataFrame:
     emb = _t(spark, sf, "embeddings")
-    return _sim.bitext_margin_pairs(emb, src_label=0, tgt_label=1, k=4)
+    return _sim.bitext_margin_pairs(emb, k=4)
 
 
 _register(

@@ -25,6 +25,8 @@ from __future__ import annotations
 import os
 import time
 
+from ..streaming.consumer import GOLD_BUILDERS
+
 try:  # pragma: no cover - exercised only where streamlit is installed
     import streamlit as st
 
@@ -48,12 +50,9 @@ TABS = (
     "Données brutes",
 )
 
-GOLD_VIEWS = (
-    "v_age_preferences",
-    "v_gender_preferences",
-    "v_location_preferences",
-    "v_age_gender_category",
-)
+#: The four preference views the tabs render, in tab order: the ``v_``
+#: tables of the Consumer's gold (``consumer.GOLD_BUILDERS``).
+GOLD_VIEWS = tuple(name for name in GOLD_BUILDERS if name.startswith("v_"))
 
 
 def _spark():

@@ -103,8 +103,9 @@ def get_spark(
       dynamic broadcast conversion (SURVEY.md §4 "Broadcast joins").
     - ``spark.sql.session.timeZone=UTC``: parquet timestamps compare
       bit-identically against the DuckDB oracle.
-    - shuffle partitions default to the local core count; on a real
-      cluster AQE coalesces the 2000-partition initial value downward.
+    - shuffle partitions default to ``SPARK_GRAFT_CPUS`` when it is set
+      and to 32 otherwise, whatever the local core count (the master
+      defaults to ``local[*]``); AQE coalesces small shuffles downward.
     """
     if master is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")

@@ -1,5 +1,5 @@
 """Batch and streaming sources (SURVEY.md §2.A)."""
 
-from .catalog import TABLES, load_table, register_tables
+from .catalog import TABLES, load_table
 
-__all__ = ["TABLES", "load_table", "register_tables"]
+__all__ = ["TABLES", "load_table"]

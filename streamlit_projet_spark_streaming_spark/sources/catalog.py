@@ -3,9 +3,10 @@
 The reference reads one BigQuery table plus four views
 (``/root/reference/streamlit/streamlit_app.py:164-190``, view fetches
 ``:223-281``). Here the catalog is a parquet directory: one file per table,
-registered as temp views so both the DataFrame API and ``spark.sql`` reach
-them. Projection pruning and predicate pushdown reach the parquet scan
-because nothing materializes between ``spark.read.parquet`` and the query.
+read by :func:`load_table` (a caller that wants ``spark.sql`` registers the
+returned frame as a temp view itself). Projection pruning and predicate
+pushdown reach the parquet scan because nothing materializes between
+``spark.read.parquet`` and the query.
 
 Scale stance: at 100 TB these would be partitioned/bucketed tables
 (``orders`` and ``lineitem`` bucketed by their join keys, ``events``
@@ -205,14 +206,3 @@ def load_table(spark: SparkSession, name: str, sf_dir: str = DEFAULT_SF_DIR) -> 
     for c in IDENTITY_COLS.get(name, ()):
         df = df.filter(F.col(c).isNotNull())
     return df
-
-
-def register_tables(
-    spark: SparkSession,
-    sf_dir: str = DEFAULT_SF_DIR,
-    names: tuple[str, ...] = TABLES,
-) -> None:
-    """Register fixture tables as temp views (A2/A3: view scan after
-    ``createOrReplaceTempView``)."""
-    for name in names:
-        load_table(spark, name, sf_dir).createOrReplaceTempView(name)

@@ -57,13 +57,34 @@ from ..operators.relational import gather_if_small
 from ..plans import shopping_views as SV
 from ..sources.shopping import RAW_ORDER_SCHEMA
 
-GOLD_VIEWS = (
-    "v_age_preferences",
-    "v_gender_preferences",
-    "v_location_preferences",
-    "v_age_gender_category",
-    "hourly_series",
-)
+
+def hourly_series_batch(silver: DataFrame) -> DataFrame:
+    """Hourly order-count + revenue series [G2/H6/H7]
+    (``streamlit_app.py:374-379``), recomputed over all of silver by each
+    gold refresh, so a late row lands in its hour at the next trigger."""
+    return (
+        silver.groupBy(
+            F.date_trunc("hour", F.col("processed_time")).alias("hour")
+        )
+        .agg(
+            F.count(F.lit(1)).alias("n_orders"),
+            F.round(F.sum("final_amount_usd"), 4).alias("revenue"),
+        )
+        .orderBy("hour")
+    )
+
+
+#: The gold tables :func:`refresh_gold` writes, each with the builder
+#: that computes it from silver: the reference's four views, then the
+#: hourly series (swapped in last). The one list of gold table names.
+GOLD_BUILDERS: dict[str, Callable[[DataFrame], DataFrame]] = {
+    "v_age_preferences": SV.v_age_preferences,
+    "v_gender_preferences": SV.v_gender_preferences,
+    "v_location_preferences": SV.v_location_preferences,
+    "v_age_gender_category": SV.v_age_gender_category,
+    "hourly_series": hourly_series_batch,
+}
+GOLD_VIEWS = tuple(GOLD_BUILDERS)
 
 
 def start_ingest(
@@ -141,18 +162,11 @@ def refresh_gold(spark: SparkSession, silver_dir: str, gold_dir: str) -> None:
     silver = gather_if_small(
         spark.read.schema(enrich_schema(spark)).parquet(silver_dir)
     )
-    builders = {
-        "v_age_preferences": SV.v_age_preferences,
-        "v_gender_preferences": SV.v_gender_preferences,
-        "v_location_preferences": SV.v_location_preferences,
-        "v_age_gender_category": SV.v_age_gender_category,
-        "hourly_series": hourly_series_batch,
-    }
-    paths = [os.path.join(gold_dir, name) for name in builders]
-    with ThreadPoolExecutor(len(builders)) as pool:
+    paths = [os.path.join(gold_dir, name) for name in GOLD_BUILDERS]
+    with ThreadPoolExecutor(len(GOLD_BUILDERS)) as pool:
         writes = [
             pool.submit(inheritable_thread_target(spark)(_stage), build, silver, path)
-            for build, path in zip(builders.values(), paths)
+            for build, path in zip(GOLD_BUILDERS.values(), paths)
         ]
         for write in writes:
             write.result()
@@ -232,19 +246,3 @@ def start_gold_refresh(
     else:
         writer = writer.trigger(processingTime=processing_time)
     return writer.start()
-
-
-def hourly_series_batch(silver: DataFrame) -> DataFrame:
-    """Hourly order-count + revenue series [G2/H6/H7]
-    (``streamlit_app.py:374-379``), recomputed over all of silver by each
-    gold refresh, so a late row lands in its hour at the next trigger."""
-    return (
-        silver.groupBy(
-            F.date_trunc("hour", F.col("processed_time")).alias("hour")
-        )
-        .agg(
-            F.count(F.lit(1)).alias("n_orders"),
-            F.round(F.sum("final_amount_usd"), 4).alias("revenue"),
-        )
-        .orderBy("hour")
-    )

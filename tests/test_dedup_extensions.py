@@ -21,7 +21,7 @@ def test_minhash_lsh_subset_and_recall(spark):
 
 def test_simhash_finds_near_dups(spark):
     docs = load_table(spark, "documents", SF_CORRECT)
-    pairs = dedup.simhash_pairs(docs, max_hamming=6).collect()
+    pairs = dedup.simhash_pairs(docs).collect()
     for r in pairs:
         assert r.doc_a < r.doc_b
         assert 0 <= r.hamming <= 6
@@ -75,7 +75,7 @@ def test_simhash_banding_is_lossless(spark):
     docs = load_table(spark, "documents", SF_CORRECT)
     got = sorted(
         (r.doc_a, r.doc_b, r.hamming)
-        for r in dedup.simhash_pairs(docs, max_hamming=6, nbits=60).collect()
+        for r in dedup.simhash_pairs(docs).collect()
     )
     expect = sorted(
         (r.doc_a, r.doc_b, r.hamming)
@@ -96,7 +96,7 @@ def test_rh_lsh_recall_on_planted_near_dups(spark):
         load_table(spark, "embeddings", SF_CORRECT)
     )
     approx = set(
-        (r.vec_a, r.vec_b) for r in sim.rh_near_dup_pairs(corpus, 0.95).collect()
+        (r.vec_a, r.vec_b) for r in sim.rh_near_dup_pairs(corpus).collect()
     )
     exact = set(
         (r.vec_a, r.vec_b)
@@ -132,7 +132,7 @@ def test_ngram_jaccard_prefix_filter_is_lossless(spark):
     # naive exact: distinct word-3-gram sets per doc, all-pairs Jaccard
     sets_ = {
         r.doc_id: set(r.shs)
-        for r in dedup.shingle_arrays(df, 3, "word").collect()
+        for r in dedup.shingle_arrays(df, unit="word").collect()
     }
     for threshold in (0.5, 0.57, 0.6, 0.84):
         expect = set()
@@ -210,7 +210,7 @@ def test_ivf_kmeans_recall_vs_brute_force(spark):
     }
     approx = {
         (r.query_id, r.neighbor_id)
-        for r in sim.ivf_topk_kmeans(emb, F.col("vec_id") < 10, k=5).collect()
+        for r in sim.ivf_topk_kmeans(emb, F.col("vec_id") < 10).collect()
     }
     assert len(approx) == len(exact) == 50
     assert len(approx & exact) / len(exact) >= 0.2
@@ -312,7 +312,7 @@ def test_containment_filters_are_lossless(spark):
 
     sets_ = {
         r.doc_id: set(r.shs)
-        for r in dedup.shingle_arrays(df, 3, "word").collect()
+        for r in dedup.shingle_arrays(df, unit="word").collect()
     }
     for threshold in (0.6, 0.75, 0.8):
         expect = set()
@@ -321,7 +321,7 @@ def test_containment_filters_are_lossless(spark):
                 expect.add((a, b))
         got = set(
             (r.doc_a, r.doc_b)
-            for r in dedup.containment_pairs(df, 3, threshold).collect()
+            for r in dedup.containment_pairs(df, threshold=threshold).collect()
         )
         assert got == expect, f"threshold={threshold}"
 
@@ -346,7 +346,7 @@ def test_containment_finds_planted_subsumed_doc(spark):
     )
     pairs = {
         (r.doc_a, r.doc_b): r.containment
-        for r in dedup.containment_pairs(corpus, 3, 0.8).collect()
+        for r in dedup.containment_pairs(corpus, threshold=0.8).collect()
     }
     assert (900001, 1) in pairs
     assert pairs[(900001, 1)] >= 0.99

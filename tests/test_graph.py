@@ -94,13 +94,19 @@ def test_copurchase_edges_symmetric_and_selfloop_free(spark):
     assert {(d, s, w) for s, d, w in a} == a
 
 
+def _edges_df(spark, pairs):
+    """The undirected edge set in the form the graph operators take:
+    distinct ``(src, dst)`` pairs with ``src < dst``."""
+    canon = sorted({(min(a, b), max(a, b)) for a, b in pairs if a != b})
+    return spark.createDataFrame(canon, "src long, dst long")
+
+
 def _tri_row(spark, pairs):
     from streamlit_projet_spark_streaming_spark.operators.graph import (
         triangle_stats,
     )
 
-    df = spark.createDataFrame(pairs, "src long, dst long")
-    return triangle_stats(df).collect()[0]
+    return triangle_stats(_edges_df(spark, pairs)).collect()[0]
 
 
 def test_triangle_stats_k4(spark):
@@ -128,22 +134,6 @@ def test_triangle_stats_hub_plus_triangle(spark):
     assert r.n_triangles == 1
     # wedges: deg(1)=5, deg(2)=deg(3)=2, deg(4..6)=1 → 10 + 1 + 1 = 12
     assert r.n_wedges == 12
-
-
-def test_triangle_stats_accepts_both_direction_input(spark):
-    # copurchase_edges-shaped input (both orientations) gives the same
-    # census as the src<dst half alone.
-    und = [(1, 2), (2, 3), (1, 3), (3, 4)]
-    both = und + [(b, a) for a, b in und]
-    r1 = _tri_row(spark, und)
-    r2 = _tri_row(spark, both)
-    assert r1 == r2
-
-
-def _edges_df(spark, pairs):
-    return spark.createDataFrame(
-        [(a, b) for a, b in pairs], "src long, dst long"
-    )
 
 
 def test_kcore_multi_round_peel(spark):
@@ -276,7 +266,7 @@ def test_ppr_matches_reference_on_tiny_graph(spark):
     seeds = [1, 99]  # 99 is not in the edge set
     df = spark.createDataFrame(edges, ["src", "dst", "w"])
     sdf = spark.createDataFrame([(s,) for s in seeds], ["part"])
-    rows = ppr_integer(df, sdf, iters=3).collect()
+    rows = ppr_integer(df, sdf).collect()
     got = {r["part"]: r["ppr_scaled"] for r in rows}
     flags = {r["part"]: r["is_seed"] for r in rows}
     assert got == _ppr_reference(edges, seeds, 3)
@@ -295,7 +285,7 @@ def test_ppr_zero_mass_without_seed_inflow(spark):
     edges = [(1, 2, 1), (2, 1, 1), (3, 4, 1), (4, 3, 1)]
     df = spark.createDataFrame(edges, ["src", "dst", "w"])
     sdf = spark.createDataFrame([(1,)], ["part"])
-    got = {r["part"]: r["ppr_scaled"] for r in ppr_integer(df, sdf, iters=3).collect()}
+    got = {r["part"]: r["ppr_scaled"] for r in ppr_integer(df, sdf).collect()}
     assert got == _ppr_reference(edges, [1], 3)
     assert got[3] == 0 and got[4] == 0
     assert got[1] > 0 and got[2] > 0

@@ -1,16 +1,9 @@
-"""Multimodal plumbing tests: stub decode path + frame sampling shapes."""
-
-import pytest
+"""Multimodal plumbing tests: metadata extraction + frame sampling shapes."""
 
 from streamlit_projet_spark_streaming_spark.operators import multimodal as mm
 from streamlit_projet_spark_streaming_spark.sources.catalog import load_table
 
 from .conftest import SF_CORRECT
-
-
-def test_decode_image_is_stubbed():
-    with pytest.raises(NotImplementedError):
-        mm.decode_image(b"\x89PNG fake")
 
 
 def test_metadata_extraction(spark):
@@ -28,7 +21,7 @@ def test_metadata_extraction(spark):
 def test_frame_sampling(spark):
     docs = load_table(spark, "documents", SF_CORRECT).limit(50)
     media = mm.attach_binary_payload(docs)
-    frames = mm.sample_frames(media, max_frames=3)
+    frames = mm.sample_frames(media)
     pdf = frames.toPandas()
     assert set(pdf["frame_idx"]) <= {0, 1, 2}
     # every doc produced at least one frame
@@ -64,7 +57,7 @@ def test_resize_meta_fit_in_box(spark):
     from .conftest import SF_CORRECT
 
     docs = load_table(spark, "documents", SF_CORRECT).limit(50)
-    out = resize_meta(attach_binary_payload(docs), max_w=224, max_h=224).collect()
+    out = resize_meta(attach_binary_payload(docs)).collect()
     assert len(out) == 50
     for r in out:
         assert r.out_width <= 224 and r.out_height <= 224
@@ -87,7 +80,7 @@ def test_extract_features_matches_python(spark):
     docs = load_table(spark, "documents", SF_CORRECT).limit(20)
     got = {
         r.doc_id: list(r.features)
-        for r in extract_features(attach_binary_payload(docs), n_bins=16).collect()
+        for r in extract_features(attach_binary_payload(docs)).collect()
     }
     for row in docs.collect():
         payload = row.text.encode("utf-8")

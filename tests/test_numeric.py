@@ -116,11 +116,10 @@ def test_cents_both_engines(spark):
 
 
 def test_ratio_threshold_forms_match_rounded_compare(spark):
-    """ratio_round_ge/le must equal comparing the rounded ratio —
+    """ratio_round_ge must equal comparing the rounded ratio —
     including AT the boundary where rounding decides the verdict."""
     from streamlit_projet_spark_streaming_spark.operators.numeric import (
         ratio_round_ge,
-        ratio_round_le,
     )
 
     rows = [(n, d) for d in (7, 16, 2000, 9999) for n in range(0, 3 * d, max(1, d // 50))]
@@ -130,11 +129,9 @@ def test_ratio_threshold_forms_match_rounded_compare(spark):
         "den",
         ratio_round(F.col("num"), F.col("den"), 4).alias("r"),
         ratio_round_ge(F.col("num"), F.col("den"), 0.45, 4).alias("ge"),
-        ratio_round_le(F.col("num"), F.col("den"), 0.2, 4).alias("le"),
     ).collect()
     for r in out:
         assert r.ge == (r.r >= 0.45), r
-        assert r.le == (r.r <= 0.2), r
 
 
 def test_quality_keep_equals_filtered_quality_scores(spark):

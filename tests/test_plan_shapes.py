@@ -21,8 +21,8 @@ def _executed_plan(df) -> str:
 @pytest.mark.parametrize(
     "build",
     [
-        lambda docs: _dedup.span_dup_profile(docs, 5),
-        lambda docs: _text.remove_dup_spans(docs, 5),
+        lambda docs: _dedup.span_dup_profile(docs),
+        lambda docs: _text.remove_dup_spans(docs),
     ],
     ids=["span_dup_profile", "remove_dup_spans"],
 )
@@ -359,7 +359,7 @@ def test_grid_kmeans_assignment_is_map_stage(spark):
     from streamlit_projet_spark_streaming_spark.operators import similarity as sim
 
     emb = load_table(spark, "embeddings", SF)
-    assigned, cent_rows = sim.grid_kmeans(emb, n_clusters=8, n_iter=2)
+    assigned, cent_rows = sim.grid_kmeans(emb)
     plan = _executed_plan(assigned)
     assert "MapInPandas" in plan
     assert "SortMergeJoin" not in plan, "corpus-sized join in assignment"
@@ -379,7 +379,7 @@ def test_maintenance_report_action_plan_is_cell_sized(spark):
     from streamlit_projet_spark_streaming_spark.operators import similarity as sim
 
     emb = load_table(spark, "embeddings", SF)
-    _, cent_rows = sim.grid_kmeans(emb, n_clusters=8, n_iter=2)
+    _, cent_rows = sim.grid_kmeans(emb)
     cent_rows = cent_rows.localCheckpoint(eager=False)
     cb_row = sim.kmeans_codebook_row(cent_rows).localCheckpoint(eager=False)
     stats = sim.ivf_cell_stats(emb, cb_row)
@@ -406,7 +406,7 @@ def test_bitext_margin_rank_pushdown(spark):
     from streamlit_projet_spark_streaming_spark.operators import similarity as sim
 
     emb = load_table(spark, "embeddings", SF)
-    out = sim.bitext_margin_pairs(emb, src_label=0, tgt_label=1, k=4)
+    out = sim.bitext_margin_pairs(emb, k=4)
     out.collect()
     plan = _executed_plan(out)
     assert plan.count("WindowGroupLimit") >= 4

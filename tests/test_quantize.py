@@ -89,7 +89,7 @@ def test_pq_topk_finds_planted_duplicates(spark, emb):
         .select((F.col("vec_id") + 1_000_000).alias("vec_id"), "embedding", "label")
     )
     corpus = base.unionByName(emb.filter(F.col("vec_id") < 5)).unionByName(dups)
-    out = quantize.pq_topk(corpus, F.col("vec_id") < 5, k=5).collect()
+    out = quantize.pq_topk(corpus, F.col("vec_id") < 5).collect()
     by_q = {}
     for r in out:
         by_q.setdefault(r["query_id"], []).append(r)
@@ -115,12 +115,12 @@ def test_ivfpq_with_full_probe_equals_pq_topk(spark, emb):
     n_cells = emb.filter((F.col("vec_id") % 25) == 0).count()
     flat = {
         (r["query_id"], r["neighbor_id"], r["dist"], r["rnk"])
-        for r in quantize.pq_topk(emb, F.col("vec_id") < 10, k=5).collect()
+        for r in quantize.pq_topk(emb, F.col("vec_id") < 10).collect()
     }
     full = {
         (r["query_id"], r["neighbor_id"], r["dist"], r["rnk"])
         for r in quantize.ivfpq_topk(
-            emb, F.col("vec_id") < 10, k=5, nprobe=n_cells
+            emb, F.col("vec_id") < 10, nprobe=n_cells
         ).collect()
     }
     assert full == flat
@@ -139,7 +139,7 @@ def test_ivfpq_candidates_come_from_probed_cells(spark, emb):
         r["vec_id"]: r["centroid_id"]
         for r in ivf_assign(emb, centroids).select("vec_id", "centroid_id").collect()
     }
-    out = quantize.ivfpq_topk(emb, F.col("vec_id") < 10, k=5, nprobe=2).collect()
+    out = quantize.ivfpq_topk(emb, F.col("vec_id") < 10, nprobe=2).collect()
     # Probes are the top-2 cells by the same assignment scoring; the
     # query's own cell is always rank 1, so at minimum every neighbor
     # shares a cell with SOME probed cell — verify via the operator's
@@ -167,7 +167,7 @@ def test_pq_topk_honors_n_sub(spark, emb):
         codes, key=lambda v: (hashlib.md5(str(v).encode()).hexdigest(), v)
     )[:16]
     cb = np.stack([codes[v] for v in anchors])
-    out = quantize.pq_topk(emb, F.col("vec_id") < 3, k=5, n_sub=4).collect()
+    out = quantize.pq_topk(emb, F.col("vec_id") < 3, n_sub=4).collect()
     pq = {
         r["vec_id"]: np.asarray(r["pq_codes"])
         for r in quantize.pq_codes(emb, n_sub=4).collect()
@@ -227,7 +227,7 @@ def test_ivfpq_residual_finds_planted_duplicates(spark, emb):
         (F.col("vec_id") + 1_000_000).alias("vec_id"), "embedding", "label"
     )
     corpus = base.unionByName(emb.filter(F.col("vec_id") < 5)).unionByName(dups)
-    out = quantize.ivfpq_topk_residual(corpus, F.col("vec_id") < 5, k=5).collect()
+    out = quantize.ivfpq_topk_residual(corpus, F.col("vec_id") < 5).collect()
     by_q = {}
     for r in out:
         by_q.setdefault(r["query_id"], []).append(r)
@@ -258,8 +258,7 @@ def test_ivfpq_residual_candidates_from_probed_cells(spark, emb):
         for r in ivf_assign(emb, centroids).select("vec_id", "centroid_id").collect()
     }
     out = quantize.ivfpq_topk_residual(
-        emb, F.col("vec_id") < 10, k=5, nprobe=2
-    ).collect()
+        emb, F.col("vec_id") < 10).collect()
     probed: dict[int, set] = {}
     for r in out:
         probed.setdefault(r["query_id"], set()).add(cells[r["neighbor_id"]])

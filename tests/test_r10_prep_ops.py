@@ -1,7 +1,7 @@
 """IVF index maintenance + packed-shard consolidation operators (built
 as r9's r10-prep pair, registered with full DuckDB oracles in r10):
-cell stats, the cell split/merge/re-train planner, the shard merge
-planner, and the staging-swap consolidation applier."""
+cell stats, the cell split/merge/re-train planner and the shard merge
+planner."""
 
 import pytest
 
@@ -19,7 +19,7 @@ SF = "/root/testdata/sf0.001"
 
 def _codebook(spark):
     emb = load_table(spark, "embeddings", SF)
-    _, centroid_rows = grid_kmeans(emb, n_clusters=8, n_iter=2)
+    _, centroid_rows = grid_kmeans(emb)
     return emb, kmeans_codebook_row(centroid_rows).localCheckpoint(eager=False)
 
 
@@ -36,7 +36,7 @@ def test_ivf_cell_stats_spine_counts_drift(spark):
         else:
             assert r["drift_d2"] >= 0
     # occupancy cross-check against the audited assignment pass
-    assigned, _ = grid_kmeans(emb, n_clusters=8, n_iter=2)
+    assigned, _ = grid_kmeans(emb)
     expect = {
         r["centroid_id"]: r["n"]
         for r in assigned.groupBy("centroid_id")
@@ -123,204 +123,9 @@ def test_shard_merge_plan_on_greedy_pack_after_dedup(spark):
     )
 
 
-def test_merge_packed_shards_applier(spark, tmp_path):
-    """Consolidation applier: shards written at budget 200 then merged
-    at budget 400 — under-filled packs coalesce to fresh per-bucket ids,
-    keeps stay byte-stable, untouched bucket dirs are not rewritten, and
-    no document is lost."""
-    import os as _os
-
-    from streamlit_projet_spark_streaming_spark.sinks.writer import (
-        merge_packed_shards,
-        write_packed_shards,
-    )
-
-    docs = load_table(spark, "documents", SF).select(
-        "doc_id", (F.length("text") / 4).cast("long").alias("n_tokens")
-    )
-    path = str(tmp_path / "shards")
-    write_packed_shards(docs, path, "n_tokens", budget=200, n_buckets=4)
-    before = spark.read.parquet(path).select("doc_id", "bucket", "pack_ix")
-    before_rows = {r["doc_id"]: (r["bucket"], r["pack_ix"]) for r in before.collect()}
-    mtime_before = {
-        d: _os.path.getmtime(_os.path.join(path, d))
-        for d in _os.listdir(path)
-        if d.startswith("bucket=")
-    }
-
-    plan = merge_packed_shards(spark, path, "n_tokens", budget=400)
-    plan_rows = plan.collect()
-    after = spark.read.parquet(path).select("doc_id", "bucket", "pack_ix")
-    after_rows = {r["doc_id"]: (r["bucket"], r["pack_ix"]) for r in after.collect()}
-
-    # no document lost or duplicated
-    assert set(after_rows) == set(before_rows)
-    merges = [r for r in plan_rows if r["action"] == "merge"]
-    assert merges, "budget doubling must under-fill some packs"
-    offsets = {}
-    for r in plan_rows:
-        b = r["bucket"]
-        offsets[b] = max(offsets.get(b, -1), r["pack_ix"])
-    merge_map = {
-        (r["bucket"], r["pack_ix"]): offsets[r["bucket"]] + 1 + r["merged_pack_ix"]
-        for r in merges
-    }
-    affected_buckets = {b for b, _ in merge_map}
-    for doc_id, (b, old_pack) in before_rows.items():
-        nb, new_pack = after_rows[doc_id]
-        assert nb == b  # bucket membership never changes
-        if (b, old_pack) in merge_map:
-            assert new_pack == merge_map[(b, old_pack)], (doc_id, b, old_pack)
-        else:
-            assert new_pack == old_pack, (doc_id, b, old_pack)
-    # bucket dirs with no merge rows were not touched
-    for d, t in mtime_before.items():
-        b = int(d.split("=")[1])
-        if b not in affected_buckets:
-            assert _os.path.getmtime(_os.path.join(path, d)) == t, d
-
-
-def test_merge_packed_shards_rejects_remote_path():
-    """The two-rename swap needs a local path; an object-store path is
-    refused before any Spark work (so no session is needed here)."""
-    from streamlit_projet_spark_streaming_spark.sinks.writer import merge_packed_shards
-
-    with pytest.raises(ValueError, match="posix-renameable"):
-        merge_packed_shards(None, "s3a://bucket/shards", "n_tokens", budget=400)
-
-
-def _pack_docs(spark):
-    return load_table(spark, "documents", SF).select(
-        "doc_id", (F.length("text") / 4).cast("long").alias("n_tokens")
-    )
-
-
-def test_merge_packed_shards_converges_then_noop(spark, tmp_path):
-    """Repeated plan→apply passes strictly shrink each bucket's
-    under-filled pack count (the two largest under-filled packs always
-    share group 0) and reach a fixed point — ≤ 1 under-filled pack per
-    bucket — in a few passes. At the fixed point the plan is all-keeps
-    and the applier is a no-op: nothing rewritten (directory mtimes
-    stable), layout identical — the ADVICE r9 churn fix."""
-    import os as _os
-
-    from streamlit_projet_spark_streaming_spark.sinks.writer import (
-        merge_packed_shards,
-        write_packed_shards,
-    )
-
-    path = str(tmp_path / "shards")
-    write_packed_shards(_pack_docs(spark), path, "n_tokens", budget=200, n_buckets=4)
-    budget = 400
-    for _pass in range(8):  # O(log packs) bound; 8 ≫ log2(packs/bucket)
-        plan = merge_packed_shards(spark, path, "n_tokens", budget=budget)
-        if not [r for r in plan.collect() if r["action"] == "merge"]:
-            break
-    else:
-        raise AssertionError("consolidation did not converge in 8 passes")
-    # fixed point: <= 1 under-filled pack per bucket
-    pdf = plan.toPandas()
-    under = pdf[pdf.pack_tokens < budget]
-    assert (under.groupby("bucket").size() <= 1).all()
-
-    layout1 = {
-        r["doc_id"]: (r["bucket"], r["pack_ix"])
-        for r in spark.read.parquet(path).select("doc_id", "bucket", "pack_ix").collect()
-    }
-    mtimes = {
-        d: _os.path.getmtime(_os.path.join(path, d))
-        for d in _os.listdir(path)
-        if d.startswith("bucket=")
-    }
-    plan2 = merge_packed_shards(spark, path, "n_tokens", budget=budget)
-    assert [r for r in plan2.collect() if r["action"] == "merge"] == []
-    layout2 = {
-        r["doc_id"]: (r["bucket"], r["pack_ix"])
-        for r in spark.read.parquet(path).select("doc_id", "bucket", "pack_ix").collect()
-    }
-    assert layout2 == layout1
-    for d, t in mtimes.items():
-        assert _os.path.getmtime(_os.path.join(path, d)) == t, d
-
-
-def test_merge_packed_shards_crash_windows(spark, tmp_path, monkeypatch):
-    """Staging durability: (a) a kill after some bucket swaps leaves
-    every bucket either fully old or fully new — the corpus stays
-    readable and complete; (b) a kill BETWEEN the two renames of one
-    bucket is restored by _recover_backups on the next run; the rerun
-    then converges with no document lost."""
-    import os as _os
-
-    from streamlit_projet_spark_streaming_spark.sinks import writer
-    from streamlit_projet_spark_streaming_spark.sinks.writer import (
-        merge_packed_shards,
-        write_packed_shards,
-    )
-
-    path = str(tmp_path / "shards")
-    write_packed_shards(_pack_docs(spark), path, "n_tokens", budget=200, n_buckets=4)
-    before = {
-        r["doc_id"]: (r["bucket"], r["pack_ix"])
-        for r in spark.read.parquet(path).select("doc_id", "bucket", "pack_ix").collect()
-    }
-
-    # (a) crash after the first bucket swap
-    real_swap = writer._swap_bucket_dir
-    swapped = []
-
-    def dying_swap(p, staging, bucket):
-        if len(swapped) == 1:
-            raise RuntimeError("injected crash between bucket swaps")
-        real_swap(p, staging, bucket)
-        swapped.append(bucket)
-
-    monkeypatch.setattr(writer, "_swap_bucket_dir", dying_swap)
-    with pytest.raises(RuntimeError, match="injected crash"):
-        merge_packed_shards(spark, path, "n_tokens", budget=400)
-    monkeypatch.setattr(writer, "_swap_bucket_dir", real_swap)
-
-    mid = {
-        r["doc_id"]: (r["bucket"], r["pack_ix"])
-        for r in spark.read.parquet(path).select("doc_id", "bucket", "pack_ix").collect()
-    }
-    # complete and consistent: every doc present exactly once; the
-    # swapped bucket is fully new (ids above the old max), the others
-    # fully old
-    assert set(mid) == set(before)
-    (new_b,) = swapped
-    for doc_id, (b, p) in mid.items():
-        if b != new_b:
-            assert (b, p) == before[doc_id]
-
-    # (b) simulate a kill between the two renames of one untouched
-    # bucket: old dir moved to backup, staged rename never happened
-    other = next(b for (_, (b, _p)) in mid.items() if b != new_b)
-    final = _os.path.join(path, f"bucket={other}")
-    backup = _os.path.join(path, f"{writer._BACKUP_PREFIX}{other}")
-    _os.rename(final, backup)
-    assert not _os.path.exists(final)
-
-    # next run recovers the backup; iterate to the fixed point
-    for _pass in range(8):
-        plan = merge_packed_shards(spark, path, "n_tokens", budget=400)
-        if not [r for r in plan.collect() if r["action"] == "merge"]:
-            break
-    else:
-        raise AssertionError("post-recovery consolidation did not converge")
-    after = {
-        r["doc_id"]: (r["bucket"], r["pack_ix"])
-        for r in spark.read.parquet(path).select("doc_id", "bucket", "pack_ix").collect()
-    }
-    assert set(after) == set(before)
-    assert not any(
-        d.startswith(writer._BACKUP_PREFIX) or d == writer._STAGING_DIR
-        for d in _os.listdir(path)
-    )
-
-
 def _split_plan_inputs(spark):
     emb = load_table(spark, "embeddings", SF)
-    _, centroid_rows = grid_kmeans(emb, n_clusters=8, n_iter=2)
+    _, centroid_rows = grid_kmeans(emb)
     centroid_rows = centroid_rows.localCheckpoint(eager=False)
     cb_row = kmeans_codebook_row(centroid_rows).localCheckpoint(eager=False)
     return emb, centroid_rows, cb_row
@@ -622,7 +427,7 @@ def test_bitext_margin_python_recompute(spark):
     k = 4
     got = {
         r["src_id"]: r
-        for r in bitext_margin_pairs(emb, src_label=0, tgt_label=1, k=k).collect()
+        for r in bitext_margin_pairs(emb, k=k).collect()
     }
 
     rows = emb.select("vec_id", "embedding", "label").collect()

@@ -164,11 +164,11 @@ def test_boilerplate_phrases_planted(spark):
         + [(9, "no shared content in this one at all")],
         ["doc_id", "text"],
     )
-    out = text.boilerplate_phrases(docs, n=3, min_docs=4, k=10).collect()
+    out = text.boilerplate_phrases(docs, min_docs=4, k=10).collect()
     phrases = {r["phrase"]: r["n_docs"] for r in out}
     assert phrases[boiler] == 4
     assert all(n >= 4 for n in phrases.values())
-    capped = text.boilerplate_phrases(docs, n=3, min_docs=1, k=2).collect()
+    capped = text.boilerplate_phrases(docs, min_docs=1, k=2).collect()
     assert len(capped) == 2
     # with every n_docs tied at the cap boundary, phrase text breaks ties
     assert capped == sorted(capped, key=lambda r: (-r["n_docs"], r["phrase"]))
@@ -187,7 +187,7 @@ def test_span_dup_profile_planted(spark):
         ],
         ["doc_id", "text"],
     )
-    out = {r["doc_id"]: r for r in dedup.span_dup_profile(docs, 5).collect()}
+    out = {r["doc_id"]: r for r in dedup.span_dup_profile(docs).collect()}
     assert set(out) == {1, 2, 3, 4}
     assert out[1]["n_spans"] == 3  # 7 words -> 3 distinct 5-grams
     assert out[1]["shared_span_frac"] == 1.0 == out[2]["shared_span_frac"]
@@ -304,8 +304,8 @@ def test_semantic_dedup_planted_recall(spark):
 
     from tests.conftest import SF_CORRECT
     emb = load_table(spark, "embeddings", SF_CORRECT)
-    corpus = sim.planted_near_dup_corpus(emb, n_planted=50)
-    out = sim.semantic_dedup(corpus, threshold=0.95, n_clusters=8).collect()
+    corpus = sim.planted_near_dup_corpus(emb)
+    out = sim.semantic_dedup(corpus).collect()
     assert len(out) == corpus.count()
     by_id = {r["vec_id"]: r for r in out}
     planted = [by_id[1_000_000 + i] for i in range(50)]
@@ -326,7 +326,7 @@ def test_chunk_documents_coverage_and_overlap(spark):
     text = " ".join(f"w{i}" for i in range(40))
     df = spark.createDataFrame([(1, text)], "doc_id long, text string")
     out = sorted(
-        chunk_documents(df, chunk_tokens=16, stride=12).collect(),
+        chunk_documents(df).collect(),
         key=lambda r: r["chunk_idx"],
     )
     assert [r["chunk_idx"] for r in out] == [0, 1, 2, 3]

@@ -496,7 +496,7 @@ def test_knn_graph_matches_brute_force_within_cells(spark):
     from streamlit_projet_spark_streaming_spark.registry import REGISTRY as R
 
     emb = load_table(spark, "embeddings", SF_CORRECT)
-    assigned, _ = sim.grid_kmeans(emb, n_clusters=8, n_iter=2)
+    assigned, _ = sim.grid_kmeans(emb)
     rows = assigned.select("vec_id", "embedding", "centroid_id").collect()
     cells = defaultdict(list)
     for r in rows:

@@ -95,8 +95,7 @@ def test_dsir_scores_unseen_buckets_with_smoothed_default(spark):
 def test_mixing_epochs_budget_and_cap(spark):
     docs = load_table(spark, "documents", SF_CORRECT)
     out = sampling.mixing_epochs(
-        docs, "source", budget_mult=3, max_epochs_units=30_000
-    ).toPandas()
+        docs).toPandas()
     total = out.tokens.sum()
     # Budget conservation: per-stratum targets are exact roundings of
     # shares of B = 3 * total_tokens, so their sum is within |strata|/2
@@ -125,8 +124,7 @@ def test_epoch_plan_matches_mixing_policy(spark):
     mix = {
         r["source"]: r
         for r in sampling.mixing_epochs(
-            docs, "source", budget_mult=3, max_epochs_units=30_000
-        ).collect()
+            docs).collect()
     }
     plan = sampling.epoch_plan(docs).toPandas()
     # Per-doc repeat indices are dense 0..n_rep-1.

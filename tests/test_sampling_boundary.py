@@ -53,7 +53,7 @@ def test_rank_boundary_gap(sf_dir):
 
 def test_selection_matches_oracle_and_surface_is_exact(spark):
     df = sampling.weighted_sample_topk(
-        load_table(spark, "documents", SF_CORRECT), "doc_id", "n_chars", k=50
+        load_table(spark, "documents", SF_CORRECT), "doc_id", "n_chars"
     )
     # Exact-integer surface only: no floating-point column may leak.
     for f in df.schema.fields:

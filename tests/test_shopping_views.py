@@ -42,7 +42,7 @@ def shopping_con(spark, enriched):
 @pytest.mark.parametrize("name", sorted(VIEW_BUILDERS))
 def test_shopping_view_matches_oracle(spark, enriched, shopping_con, name):
     df = VIEW_BUILDERS[name](enriched)
-    oracle = SV.oracle_sql_shopping("shopping_orders")[name]
+    oracle = SV.oracle_sql_shopping()[name]
     # strict=False: the shopping twins are pytest-only reference-parity
     # surfaces (never driver-hashed), and their top-N list columns are
     # part of the reference's own shape.

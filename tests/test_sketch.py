@@ -1,11 +1,10 @@
-"""Misra-Gries heavy-hitter guarantee vs exact counts (the sketch's
-contract — its output set legitimately depends on partition boundaries,
-so the driver check is rows-only and THIS is the correctness bound)."""
+"""Misra-Gries heavy-hitter guarantee vs exact counts: the two-pass
+``provable_heavy_hitters`` keeps exactly the keys the MG bound proves
+heavy, at their exact counts, whatever the partitioning."""
 
 from pyspark.sql import functions as F
 
 from streamlit_projet_spark_streaming_spark.operators.sketch import (
-    heavy_hitters,
     provable_heavy_hitters,
 )
 from streamlit_projet_spark_streaming_spark.sources.catalog import load_table
@@ -16,27 +15,28 @@ K = 50
 
 
 def test_mg_guarantee_against_exact_counts(spark):
-    events = load_table(spark, "events", SF_CORRECT)
+    """With K counters every key whose true count exceeds N/(K+1)
+    survives the MG candidate pass (the sketch's lower bound), so the
+    output is exactly those keys at their exact counts. No fixture user
+    is that heavy, so one planted user is, spread round-robin over the
+    partitions among the fixture's rows."""
+    fixture = load_table(spark, "events", SF_CORRECT).select("user_id")
+    planted = spark.range(400).select(
+        F.lit(-1).cast(fixture.schema["user_id"].dataType).alias("user_id")
+    )
+    events = fixture.unionByName(planted).repartition(3)
     exact = {
         r["user_id"]: r["c"]
         for r in events.groupBy("user_id").agg(F.count(F.lit(1)).alias("c")).collect()
     }
     n = sum(exact.values())
-    thresh = n / (K + 1)
-    # top large enough to keep every surviving counter
     out = {
-        r["key"]: r["est"]
-        for r in heavy_hitters(events, F.col("user_id"), k=K, top=10**6).collect()
+        int(r["key"]): r["true_count"]
+        for r in provable_heavy_hitters(events, F.col("user_id"), k=K).collect()
     }
-    # upper bound: estimates never exceed the true count
-    for key, est in out.items():
-        assert est <= exact[key], (key, est, exact[key])
-    # lower bound + survival: every true heavy hitter is present with
-    # est >= true - N/(k+1)
-    for key, true in exact.items():
-        if true > thresh:
-            assert key in out, f"heavy hitter {key} (count {true}) dropped"
-            assert out[key] >= true - thresh - 1e-9, (key, out[key], true, thresh)
+    heavy = {key: c for key, c in exact.items() if c * (K + 1) > n}
+    assert heavy == {-1: 400}
+    assert out == heavy
 
 
 def test_provable_heavy_hitters_partition_independent(spark):
@@ -63,16 +63,6 @@ def test_provable_heavy_hitters_partition_independent(spark):
     )
     assert [tuple(r) for r in base] == expected
     assert expected, "fixture should yield a non-empty provably-heavy set"
-
-
-def test_mg_topk_is_deterministic_given_plan(spark):
-    """Two runs of the same plan on the same input produce the same
-    top-20 (partitioning is stable within a session/input)."""
-    events = load_table(spark, "events", SF_CORRECT)
-    a = heavy_hitters(events, F.col("user_id")).collect()
-    b = heavy_hitters(events, F.col("user_id")).collect()
-    assert [tuple(r) for r in a] == [tuple(r) for r in b]
-    assert len(a) == 20
 
 
 def test_hll_estimate_accuracy_vs_exact(spark):

@@ -101,9 +101,9 @@ def test_failed_refresh_changes_no_gold_table(spark, drained, tmp_path, monkeypa
         return {n: sorted(os.listdir(os.path.join(gold_dir, n))) for n in C.GOLD_VIEWS}
 
     before = files()
-    monkeypatch.setattr(
-        C,
-        "hourly_series_batch",
+    monkeypatch.setitem(
+        C.GOLD_BUILDERS,
+        "hourly_series",
         lambda silver: silver.select(F.raise_error(F.lit("boom")).cast("string").alias("x")),
     )
     with pytest.raises(Exception, match="boom"):
