@@ -41,6 +41,5 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 
 def oracle_sql() -> dict[str, str]:
-    """DuckDB-runnable oracle SQL for each queries() key (ANSI-ish;
-    omitted for non-SQL-expressible ops → rows-only check)."""
+    """DuckDB-runnable oracle SQL for every queries() key, same order."""
     return _registry.oracle_sql()

@@ -1,18 +1,14 @@
-"""Benchmark runner (driver contract): headline queries at $SPARK_GRAFT_SF_DIR.
+"""Benchmark runner (driver contract): every registry query at $SPARK_GRAFT_SF_DIR.
 
 Prints ONE JSON line:
-  {"metric": "...", "value": <total sec>, "unit": "sec",
+  {"metric": "all_queries_total", "value": <total sec>, "unit": "sec",
    "queries": {"<name>": sec, ...}, "sf": <scale factor>}
 
-Each query is forced with ``.collect()`` (results are all small aggregates /
-LIMITed scans — nothing collects a fact table). One untimed warmup of the
-flagship view amortizes JVM/codegen startup so the numbers reflect query
-execution, not session bring-up.
-
-``--all``: one timed pass (no medians) over EVERY registry entry instead of
-the headline set — the coverage sweep that catches a skew/regression in the
-~half of the registry the headline bench never times. Metric name becomes
-``all_queries_total``.
+One timed pass over every ``queries()`` entry, each forced with
+``.collect()`` (results are all small aggregates / LIMITed scans — nothing
+collects a fact table). One untimed warmup of the flagship view amortizes
+JVM/codegen startup so the numbers reflect query execution, not session
+bring-up.
 """
 
 from __future__ import annotations
@@ -25,359 +21,69 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from streamlit_projet_spark_streaming_spark.registry import REGISTRY
+from streamlit_projet_spark_streaming_spark.registry import queries
 from streamlit_projet_spark_streaming_spark.session import get_spark
 
-#: Headline set: the four reference views, the heaviest dashboard shapes,
-#: and the extension operators (dedup / similarity / text / multimodal).
-BENCH_QUERIES = [
-    "v_price_bucket_preferences",
-    "v_status_preferences",
-    "v_segment_preferences",
-    "v_bucket_status_priority",
-    "pricing_summary",
-    "top_categories_by_revenue",
-    "hourly_series",
-    "session_windows_events",
-    "asof_click_purchase",
-    "latest_events",
-    "histogram_event_value",
-    "dedup_exact",
-    "dedup_ngram_jaccard",
-    "dedup_minhash_lsh",
-    "similarity_topk_bruteforce",
-    "similarity_topk_ivf",
-    "text_quality_scores",
-    "multimodal_metadata",
-    # round-2 additions
-    "dedup_simhash",
-    "dedup_connected_components",
-    "text_repetition_signals",
-    "corpus_curation_pipeline",
-    "regional_revenue",
-    "purchases_within_hour",
-    "user_event_sequences",
-    # round-3 additions
-    "pii_scan",
-    "benchmark_contamination",
-    "dataset_greedy_pack",
-    "rolling_time_features",
-    "corpus_decontamination_pipeline",
-    "text_span_dup_profile",
-    "text_boilerplate_phrases",
-    "quality_rank_deciles",
-    "text_unigram_logprob",
-    "events_funnel",
-    "embedding_semantic_dedup",
-    "dataset_source_cap",
-    # round-5 additions
-    "dataset_dsir_weights",
-    "text_quality_classifier",
-    "text_bm25_topk",
-    "dedup_group_representatives",
-    "dedup_incremental_batch",
-    "text_remove_dup_spans",
-    "embedding_label_centroids",
-    # round-6 additions
-    "text_structure_signals",
-    "source_quality_profile",
-    "similarity_hard_negatives",
-    "events_value_winsorize",
-    "dataset_mixing_epochs",
-    "embedding_quantize_int8",
-    "embedding_pq_codes",
-    "similarity_topk_pq",
-    "similarity_topk_ivfpq",
-    "user_retention_cohorts",
-    "corpus_vocab_stats",
-    "basket_brand_affinity",
-    "dedup_cross_source_matrix",
-    "customer_rfm_segments",
-    "event_transition_matrix",
-    "hourly_anomaly_flags",
-    "funnel_latency_profile",
-    "text_chunking",
-    "active_user_counts",
-    "dataset_epoch_plan",
-    "shipping_priority_topk",
-    "returned_item_revenue",
-    "local_supplier_volume",
-    "late_shipment_orders",
-    "user_burst_flags",
-    "lang_confusion_matrix",
-    "events_weekday_hour_heatmap",
-    "orders_open_backlog",
-    "dedup_lsh_quality",
-    "corpus_dataset_card",
-    # round-6 second TPC-H batch
-    "forecast_revenue_change",
-    "nation_year_revenue",
-    "promo_revenue_share",
-    "small_qty_revenue",
-    "large_order_customers",
-    "disjunctive_brand_revenue",
-    "supplier_part_variety",
-    "dormant_rich_customers",
-    "embedding_pq_codes_trained",
-    "similarity_topk_ivfpq_residual",
-    "text_bpe_merge_stats",
-    "text_word_pmi",
-    "text_char_entropy",
-    "text_ngram_novelty",
-    "similarity_topk_matryoshka",
-    "events_heavy_hitters",
-    "nation_pair_volume",
-    "nation_market_share",
-    "events_count_min",
-    "dedup_minhash_clusters",
-    "text_tfidf_knn",
-    "events_bloom_prefilter",
-    "priority_segment_chi2",
-    "events_hourly_autocorr",
-    "vocab_oov_rate",
-    "daily_activity_recon",
-    "user_churn_sets",
-    "grouping_sets_revenue",
-    # round-7 additions
-    "text_bpe_apply",
-    "events_dp_noisy_counts",
-    "dedup_method_agreement",
-    "embedding_cluster_cards",
-    "events_rolling_value_quantiles",
-    "embedding_semantic_clusters",
-    "graph_link_prediction_cn",
-    "text_hashed_features",
-    "dedup_simhash_clusters",
-    "text_perceptron_trainer",
-    "classifier_perceptron_eval",
-    "dataset_dedup_safe_split",
-    "embedding_knn_graph",
-    "events_fano_burstiness",
-    "source_lang_entropy",
-    "dedup_longest_common_run",
-    "graph_lpa_communities",
-    "text_bpe_trainer",
-    "retrieval_recall_sweep",
-    "embedding_near_dup",
-    "events_heavy_hitters",
-    "price_percentiles_approx",
-    "hourly_series_gapfill",
-    "daily_click_purchase_corr",
-    "customer_trailing_7d_spend",
-    "customer_order_distribution",
-    "top_revenue_supplier",
-    "sole_blame_late_suppliers",
-    "best_balance_supplier_per_part",
-    # round-6 third continuation batch
-    "important_part_values",
-    "excess_parts_suppliers",
-    "events_ewma_hourly",
-    "part_copurchase_pagerank",
-    "embedding_dim_covariance",
-    "tokenizer_fertility",
-    "text_compression_signals",
-    "events_cusum_drift",
-    "monthly_seasonal_index",
-    "parts_abc_classes",
-    "dataset_weighted_sample",
-    "supplier_leadtime_profile",
-    "embedding_binary_codes",
-    "similarity_topk_hamming",
-    "data_quality_audit",
-    "orders_exact_median_scalable",
-    "customer_spend_gini",
-    "dedup_containment",
-    "users_hll_estimate",
-    "hourly_anomaly_mad",
-    "monthly_revenue_trend",
-    "dataset_curriculum_head",
-    "retrieval_recall_hamming",
-    "corpus_zipf_fit",
-    "graph_triangle_census",
-    "users_hll_overlap",
-    "events_key_skew_profile",
-    "docs_adaptive_quality_filter",
-    "embedding_knn_label_eval",
-    "customer_cohort_ltv",
-    "events_user_entropy",
-    "embedding_pca_spectrum",
-    "part_copurchase_topk",
-    "supplier_part_hhi",
-    "user_scd2_intervals",
-    "dedup_impact_report",
-    "events_holt_trend",
-    "orders_near_duplicate_invoices",
-    "text_bigram_logprob",
-    "markov_prediction_accuracy",
-    "embedding_label_outliers",
-    "shipping_lag_survival",
-    "orders_pareto_front",
-    "events_ab_test_report",
-    "dataset_sharding_plan",
-    "customer_kanonymity_audit",
-    "customer_merge_upsert_report",
-    "orders_benford_screen",
-    "part_copurchase_hops",
-    "orders_rolling_ols_slope",
-    "docs_cas_chunk_dedup",
-    "user_out_of_order_profile",
-    "nation_revenue_yoy",
-    "gdpr_delete_impact",
-    "neyman_allocation_plan",
-    "users_sliding_hll_24h",
-    "invoice_duplicate_clusters",
-    "events_window_funnel",
-    "purchase_linear_attribution",
-    "orders_snapshot_diff",
-    "docs_keyphrases",
-    "hourly_error_streaks",
-    "orders_trimmed_mean_scalable",
-    "dataset_grouped_kfold",
-    "events_top_paths",
-    "part_croston_forecast",
-    "retrieval_ndcg",
-    "events_zorder_layout",
-    "classifier_calibration_bins",
-    "dataset_temporal_split",
-    "retrieval_rrf_fusion",
-    "retrieval_mrr",
-    "table_stats_profile",
-    "events_idempotent_dedup",
-    "orders_unpivot_measures",
-    "orders_table_checksum",
-    "price_histogram_equidepth",
-    "customer_balance_rank_profile",
-    "events_hourly_gapfill_locf",
-    "doc_prefix_edit_pairs",
-    "join_cardinality_profile",
-    "events_partition_checksums",
-    "text_inverted_index",
-    "dataset_datacard",
-    "similarity_triplets",
-    "text_winnowing_fingerprints",
-    "dedup_aware_sample_weights",
-    "referential_integrity_audit",
-    "embedding_psi_drift",
-    "orders_theilsen_trend",
-    "orders_winsorized_stats",
-    "dedup_threshold_sweep",
-    "retrieval_mmr_rerank",
-    "langid_kappa",
-    "events_seasonal_decompose",
-    "winnowing_recall_audit",
-    "events_value_auc",
-    "segment_priority_target_encoding",
-    "text_readability_scores",
-    "acctbal_woe_iv",
-    "graph_local_clustering",
-    "events_value_ks_test",
-    "orders_mann_kendall",
-    "graph_degree_assortativity",
-    "graph_kcore",
-    "graph_hits",
-    "events_ks_fdr",
-    "events_value_wasserstein",
-    "orders_bootstrap_ci",
-    "events_cuped",
-    "orders_forecast_backtest",
-    "customer_repeat_survival",
-    "events_did",
-    "customer_tcloseness_audit",
-    "graph_negative_samples",
-    "retrieval_rocchio_prf",
-    "events_conformal_interval",
-    "classifier_ece",
-    "parts_price_elasticity",
-    "events_top_values_salted",
-    "retrieval_rbo_exact_vs_ivf",
-    "parts_xyz_classes",
-    "events_markov_stationary",
-    "ivf_cell_stats",
-    "dataset_shard_merge_plan",
-    "ivf_cell_split_plan",
-    "ivf_apply_cell_plan",
-    "ivf_post_apply_codebook",
-    "ivf_maintenance_report",
-    "embedding_bitext_margin",
-    "part_copurchase_ppr_expansion",
-    "customer_ldiversity_audit",
-]
+
+#: Wall-clock cap per query; a query past it is cancelled and reported.
+PER_QUERY_CAP_S = 180.0
 
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1)) if m else -1.0
-    run_all = "--all" in sys.argv[1:]
 
     spark = get_spark(app_name="streamlit-projet-spark-streaming-spark-bench")
     spark.sparkContext.setLogLevel("ERROR")
 
-    if run_all:
-        names = list(REGISTRY)
-    else:
-        names = [n for n in BENCH_QUERIES if n in REGISTRY]
+    builders = queries()
     # warmup: run the flagship once, untimed (fail-soft like everything else)
     try:
-        REGISTRY[names[0]].builder(spark, sf_dir).collect()
+        builders["v_price_bucket_preferences"](spark, sf_dir).collect()
     except Exception:
         pass
 
-    # Median-of-3 per query: the first run pays cold planning/codegen,
-    # later runs reuse compiled classes; the MEDIAN (not min) is the
-    # round-over-round comparison statistic — this box shows ±40%
-    # wall-clock variance under load, and min-of-2 produced phantom
-    # cross-round drift (r1→r2 read as 1.2× on unchanged plans).
-    #
     # Fail-soft per query: one throwing query must cost ONE number, not the
     # whole run (round 4's bench DNF'd because session_windows_events threw
     # and took every other timing with it). A HUNG query is the remaining
     # DNF mode: each collect runs on a worker thread with a wall-clock cap;
     # on timeout the Spark jobs are cancelled (which unblocks the worker)
     # and the query is reported in `errors` instead of stalling the run.
-    runs = 1 if run_all else int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3"))
-    per_query_cap = float(os.environ.get("SPARK_GRAFT_BENCH_TIMEOUT", "180"))
     from concurrent.futures import ThreadPoolExecutor
     from concurrent.futures import TimeoutError as FutureTimeout
 
     executor = ThreadPoolExecutor(max_workers=1)
     timings: dict[str, float] = {}
     errors: dict[str, str] = {}
-    for name in names:
-        samples = []
+    for name, builder in builders.items():
         try:
-            for _ in range(runs):
-                t0 = time.perf_counter()
-                fut = executor.submit(
-                    lambda n=name: REGISTRY[n].builder(spark, sf_dir).collect()
-                )
+            t0 = time.perf_counter()
+            fut = executor.submit(lambda b=builder: b(spark, sf_dir).collect())
+            try:
+                fut.result(timeout=PER_QUERY_CAP_S)
+            except FutureTimeout:
+                spark.sparkContext.cancelAllJobs()
+                # the cancel surfaces in the worker's collect(); give it
+                # a moment to unblock so the single worker is reusable,
+                # else abandon the executor and start a fresh one.
                 try:
-                    fut.result(timeout=per_query_cap)
-                except FutureTimeout:
-                    spark.sparkContext.cancelAllJobs()
-                    # the cancel surfaces in the worker's collect(); give it
-                    # a moment to unblock so the single worker is reusable,
-                    # else abandon the executor and start a fresh one.
-                    try:
-                        fut.result(timeout=30)
-                    except Exception:  # noqa: BLE001
-                        pass
-                    if not fut.done():
-                        executor.shutdown(wait=False, cancel_futures=True)
-                        executor = ThreadPoolExecutor(max_workers=1)
-                    raise TimeoutError(f"exceeded {per_query_cap:.0f}s cap")
-                samples.append(time.perf_counter() - t0)
+                    fut.result(timeout=30)
+                except Exception:  # noqa: BLE001
+                    pass
+                if not fut.done():
+                    executor.shutdown(wait=False, cancel_futures=True)
+                    executor = ThreadPoolExecutor(max_workers=1)
+                raise TimeoutError(f"exceeded {PER_QUERY_CAP_S:.0f}s cap")
+            timings[name] = round(time.perf_counter() - t0, 4)
         except Exception as exc:  # noqa: BLE001 — bench must survive any query
             errors[name] = f"{type(exc).__name__}: {exc}"[:500]
             print(f"BENCH ERROR {name}: {errors[name]}", file=sys.stderr)
-            continue
-        timings[name] = round(sorted(samples)[len(samples) // 2], 4)
     executor.shutdown(wait=False, cancel_futures=True)
 
-    total = round(sum(timings.values()), 4)
     out = {
-        "metric": "all_queries_total" if run_all else "headline_queries_total",
-        "value": total,
+        "metric": "all_queries_total",
+        "value": round(sum(timings.values()), 4),
         "unit": "sec",
         "queries": timings,
         "sf": sf,

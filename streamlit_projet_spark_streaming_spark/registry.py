@@ -51,7 +51,7 @@ from .sources.catalog import load_table
 class QuerySpec:
     name: str
     builder: Callable[[SparkSession, str], DataFrame]
-    oracle: str | None  # DuckDB SQL; None → driver does rows-only check
+    oracle: str  # DuckDB SQL the driver compares the builder against
     doc: str = ""
     tags: tuple[str, ...] = field(default=())
 
@@ -206,26 +206,25 @@ _BOUNDARY_REWRITERS: dict[str, Callable[[str], str]] = {
 }
 
 
-def _register(name: str, oracle: str | None, doc: str = "", tags: tuple[str, ...] = ()):
-    if oracle is not None:
-        for table, rewriter in _BOUNDARY_REWRITERS.items():
-            # a base table in a NON-first comma-join position would
-            # bypass both the trigger below and the rewriter's leftover
-            # check — reject it loudly instead (write `FROM t, x` /
-            # an explicit JOIN, never `FROM x, t`); zero such forms
-            # exist today (grepped r8). The `(?!\s*\.)` lookahead keeps
-            # qualified column refs after a comma (`SELECT a, part.p_type`)
-            # from tripping the guard (ADVICE r8); ValueError not assert
-            # so `python -O` can't strip the invariant.
-            comma = _re.search(rf",\s*{table}\b(?!\s*\.)", oracle)
-            if comma is not None:
-                raise ValueError(
-                    f"{name}: base table {table!r} in a comma-join position "
-                    f"the boundary rewriter cannot see: ..."
-                    f"{oracle[max(0, comma.start() - 40): comma.end() + 40]}..."
-                )
-            if _re.search(rf"\b(FROM|JOIN)\s+{table}\b", oracle):
-                oracle = rewriter(oracle)
+def _register(name: str, oracle: str, doc: str = "", tags: tuple[str, ...] = ()):
+    for table, rewriter in _BOUNDARY_REWRITERS.items():
+        # a base table in a NON-first comma-join position would
+        # bypass both the trigger below and the rewriter's leftover
+        # check — reject it loudly instead (write `FROM t, x` /
+        # an explicit JOIN, never `FROM x, t`); zero such forms
+        # exist today (grepped r8). The `(?!\s*\.)` lookahead keeps
+        # qualified column refs after a comma (`SELECT a, part.p_type`)
+        # from tripping the guard (ADVICE r8); ValueError not assert
+        # so `python -O` can't strip the invariant.
+        comma = _re.search(rf",\s*{table}\b(?!\s*\.)", oracle)
+        if comma is not None:
+            raise ValueError(
+                f"{name}: base table {table!r} in a comma-join position "
+                f"the boundary rewriter cannot see: ..."
+                f"{oracle[max(0, comma.start() - 40): comma.end() + 40]}..."
+            )
+        if _re.search(rf"\b(FROM|JOIN)\s+{table}\b", oracle):
+            oracle = rewriter(oracle)
 
     def deco(fn: Callable[[SparkSession, str], DataFrame]):
         REGISTRY[name] = QuerySpec(name, fn, oracle, doc, tags)
@@ -873,151 +872,6 @@ def _top3_priorities_per_segment(spark: SparkSession, sf: str) -> DataFrame:
         order_by=[F.desc("cnt"), F.asc("o_orderpriority")],
         k=3,
     ).select("c_mktsegment", "o_orderpriority", "cnt", "rnk")
-
-
-# --------------------------------------------------------------------------
-# Public API consumed by __spark_entry__.py
-# --------------------------------------------------------------------------
-
-
-def _correctness_files(repo_dir: str | None = None):
-    """(round, records) pairs from the repo's ``CORRECTNESS_r*.json``
-    files, ascending round — THE one loader behind every window-ordering
-    derivation (a second or third copy of this loop is exactly how the
-    derivations would silently skew apart; review catch)."""
-    import glob as _glob
-    import json as _json
-    import os
-    import re as _re
-
-    repo = repo_dir or os.path.dirname(
-        os.path.dirname(os.path.abspath(__file__))
-    )
-    out = []
-    for path in sorted(_glob.glob(os.path.join(repo, "CORRECTNESS_r*.json"))):
-        m = _re.search(r"CORRECTNESS_r(\d+)\.json$", path)
-        if not m:
-            continue
-        try:
-            with open(path) as fh:
-                data = _json.load(fh)
-        except (OSError, ValueError):
-            continue
-        if isinstance(data, dict):
-            out.append((int(m.group(1)), data))
-    out.sort(key=lambda t: t[0])
-    return out
-
-
-def _is_green(rec) -> bool:
-    """THE green-row rule (single copy): oracle row — all three matches;
-    rows-only row — the Spark side ran; anything else (exception, hash
-    fail) — red."""
-    if not isinstance(rec, dict):
-        return False
-    err = rec.get("err")
-    if err is None:
-        return bool(
-            rec.get("rows_match")
-            and rec.get("schema_match")
-            and rec.get("hash_match")
-        )
-    if err == "no_oracle":
-        return rec.get("spark_rows") is not None
-    return False
-
-
-def _last_driver_rows(repo_dir: str | None = None) -> dict[str, int]:
-    """Last round in which the driver recorded a GREEN row for each query
-    (latest file wins; red/errored -> round 0, the FRONT of the next
-    driver window). The driver checks only the FIRST 50 entries of
-    ``queries()``, so ``queries()`` sorts stalest-first — never-checked,
-    red, and newly registered entries land inside the window, and
-    previously green entries rotate back in on later rounds. Derived at
-    import from the CORRECTNESS files; this replaces a hand-maintained
-    map (VERDICT r5 'What's wrong #3')."""
-    rows: dict[str, int] = {}
-    for rnd, data in _correctness_files(repo_dir):
-        for name, rec in data.items():
-            rows[name] = rnd if _is_green(rec) else 0
-    return rows
-
-
-_LAST_DRIVER_ROW: dict[str, int] = _last_driver_rows()
-
-
-def _latest_red_names(repo_dir: str | None = None) -> set[str]:
-    """Entries whose row in the HIGHEST-numbered CORRECTNESS file is
-    non-green (hash fail / exception). These are KNOWN driver failures a
-    fix is waiting to prove out, so they outrank merely never-sampled
-    entries inside the round-0 window segment — otherwise a fixed red
-    row can sit outside the 50-slot window behind never-checked entries
-    and stay unproven for rounds (the r6 red quantize/PQ fixes would
-    have competed with ~140 never-sampled slots)."""
-    files = _correctness_files(repo_dir)
-    if not files:
-        return set()
-    _, data = files[-1]
-    return {
-        name
-        for name, rec in data.items()
-        if isinstance(rec, dict) and not _is_green(rec)
-    }
-
-
-_LATEST_RED: set[str] = _latest_red_names()
-
-
-def _no_oracle_green_names(repo_dir: str | None = None) -> set[str]:
-    """Entries whose CURRENT green standing came from a rows-only
-    (``err == "no_oracle"``) driver row. If such an entry has since
-    GAINED an oracle (a rows-only -> oracle upgrade), that oracle has
-    never been driver-checked — `_effective_round` drops it back to the
-    window front so the upgrade proves out next round instead of hiding
-    behind a stale rows-only green for several rotations (the r7
-    residual-IVFPQ / heavy-hitters upgrades)."""
-    mode: dict[str, bool] = {}
-    for _, data in _correctness_files(repo_dir):
-        for name, rec in data.items():
-            if isinstance(rec, dict):
-                mode[name] = (
-                    rec.get("err") == "no_oracle"
-                    and rec.get("spark_rows") is not None
-                )
-    return {n for n, rows_only_green in mode.items() if rows_only_green}
-
-
-_NO_ORACLE_GREEN: set[str] = _no_oracle_green_names()
-
-
-def _effective_round(name: str) -> tuple[int, int]:
-    """(sort round, priority) for the driver window: known-red rows and
-    never-driver-checked oracles lead; plain never-sampled entries come
-    next; green entries rotate stalest-first."""
-    rnd = _LAST_DRIVER_ROW.get(name, 0)
-    red = name in _LATEST_RED
-    if name in _NO_ORACLE_GREEN and REGISTRY[name].oracle is not None:
-        rnd, red = 0, True
-    return rnd, (0 if red else 1)
-
-
-def _driver_order(name: str) -> tuple[int, int, int]:
-    rnd, prio = _effective_round(name)
-    return (rnd, prio, list(REGISTRY).index(name))
-
-
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    names = sorted(REGISTRY, key=_driver_order)
-    return {name: REGISTRY[name].builder for name in names}
-
-
-def oracle_sql() -> dict[str, str]:
-    names = sorted(REGISTRY, key=_driver_order)
-    return {
-        name: REGISTRY[name].oracle
-        for name in names
-        if REGISTRY[name].oracle is not None
-    }
 
 
 # --------------------------------------------------------------------------
@@ -18045,7 +17899,7 @@ def _events_ks_fdr(spark: SparkSession, sf: str) -> DataFrame:
 _register(
     "events_ks_fdr",
     f"""
-    WITH ks AS ({{ks_oracle}}),
+    WITH ks AS ({REGISTRY["events_value_ks_test"].oracle}),
     r AS (
       SELECT event_type, ks_pvalue,
              CAST(ROUND(ks_pvalue * 1e6) AS BIGINT) AS pu,
@@ -18073,17 +17927,6 @@ _register(
     "defaults differ).",
     tags=("ext", "eval"),
 )(_events_ks_fdr)
-
-# Inline the KS oracle as a CTE (single audited copy of that SQL).
-REGISTRY["events_ks_fdr"] = QuerySpec(
-    "events_ks_fdr",
-    REGISTRY["events_ks_fdr"].builder,
-    REGISTRY["events_ks_fdr"].oracle.format(
-        ks_oracle=REGISTRY["events_value_ks_test"].oracle
-    ),
-    REGISTRY["events_ks_fdr"].doc,
-    REGISTRY["events_ks_fdr"].tags,
-)
 
 
 def _events_value_wasserstein(spark: SparkSession, sf: str) -> DataFrame:
@@ -19556,7 +19399,7 @@ def _classifier_ece(spark: SparkSession, sf: str) -> DataFrame:
 _register(
     "classifier_ece",
     f"""
-    WITH bins AS ({{bins_oracle}}),
+    WITH bins AS ({REGISTRY["classifier_calibration_bins"].oracle}),
     u AS (
       SELECT bin, n_docs,
              abs(CAST(ROUND(pos_rate * 10000) AS BIGINT)
@@ -19579,16 +19422,6 @@ _register(
     "copy).",
     tags=("ext", "eval", "quotient"),
 )(_classifier_ece)
-
-REGISTRY["classifier_ece"] = QuerySpec(
-    "classifier_ece",
-    REGISTRY["classifier_ece"].builder,
-    REGISTRY["classifier_ece"].oracle.format(
-        bins_oracle=REGISTRY["classifier_calibration_bins"].oracle
-    ),
-    REGISTRY["classifier_ece"].doc,
-    REGISTRY["classifier_ece"].tags,
-)
 
 
 def _parts_price_elasticity(spark: SparkSession, sf: str) -> DataFrame:
@@ -19807,8 +19640,8 @@ def _retrieval_rbo_exact_vs_ivf(spark: SparkSession, sf: str) -> DataFrame:
 _register(
     "retrieval_rbo_exact_vs_ivf",
     f"""
-    WITH a AS ({{bf}}),
-    b AS ({{ivf}}),
+    WITH a AS ({REGISTRY["similarity_topk_bruteforce"].oracle}),
+    b AS ({REGISTRY["similarity_topk_ivf"].oracle}),
     j AS (
       SELECT a.query_id,
              GREATEST(a.rnk, b.rnk) AS m
@@ -19838,17 +19671,6 @@ _register(
     "ratio via precomputed suffix weights; disjoint rankings emit 0.",
     tags=("ext", "similarity", "eval", "quotient"),
 )(_retrieval_rbo_exact_vs_ivf)
-
-REGISTRY["retrieval_rbo_exact_vs_ivf"] = QuerySpec(
-    "retrieval_rbo_exact_vs_ivf",
-    REGISTRY["retrieval_rbo_exact_vs_ivf"].builder,
-    REGISTRY["retrieval_rbo_exact_vs_ivf"].oracle.format(
-        bf=REGISTRY["similarity_topk_bruteforce"].oracle,
-        ivf=REGISTRY["similarity_topk_ivf"].oracle,
-    ),
-    REGISTRY["retrieval_rbo_exact_vs_ivf"].doc,
-    REGISTRY["retrieval_rbo_exact_vs_ivf"].tags,
-)
 
 
 def _parts_xyz_classes(spark: SparkSession, sf: str) -> DataFrame:
@@ -21805,3 +21627,346 @@ _register(
     "pair and scored tables checkpointed once each (3 and 2 consumers).",
     tags=("ext", "similarity", "mining", "quotient"),
 )(_embedding_bitext_margin_q)
+
+
+# --------------------------------------------------------------------------
+# Public API consumed by __spark_entry__.py
+# --------------------------------------------------------------------------
+
+#: The driver contract's entry order. This is the round driver's window
+#: rotation (stalest CORRECTNESS row first) as it stood after r11, frozen:
+#: the driver no longer rotates, so the order is a written fact, pinned by
+#: tests/test_registry_guard.py. A new entry is added here by hand.
+QUERY_ORDER: tuple[str, ...] = (
+    "v_status_preferences_aggonly",
+    "rolling_time_features",
+    "dataset_dsir_weights",
+    "text_bm25_topk",
+    "dedup_group_representatives",
+    "dedup_incremental_batch",
+    "text_remove_dup_spans",
+    "corpus_refresh_pipeline",
+    "embedding_label_centroids",
+    "similarity_hard_negatives",
+    "text_structure_signals",
+    "source_quality_profile",
+    "events_value_winsorize",
+    "text_quality_classifier",
+    "dataset_mixing_epochs",
+    "similarity_topk_pq",
+    "similarity_topk_ivfpq",
+    "user_retention_cohorts",
+    "corpus_vocab_stats",
+    "basket_brand_affinity",
+    "dedup_cross_source_matrix",
+    "customer_rfm_segments",
+    "event_transition_matrix",
+    "hourly_anomaly_flags",
+    "funnel_latency_profile",
+    "text_chunking",
+    "active_user_counts",
+    "dataset_epoch_plan",
+    "shipping_priority_topk",
+    "returned_item_revenue",
+    "local_supplier_volume",
+    "late_shipment_orders",
+    "user_burst_flags",
+    "lang_confusion_matrix",
+    "events_weekday_hour_heatmap",
+    "orders_open_backlog",
+    "dedup_lsh_quality",
+    "corpus_dataset_card",
+    "forecast_revenue_change",
+    "nation_year_revenue",
+    "promo_revenue_share",
+    "small_qty_revenue",
+    "large_order_customers",
+    "disjunctive_brand_revenue",
+    "supplier_part_variety",
+    "dormant_rich_customers",
+    "important_part_values",
+    "excess_parts_suppliers",
+    "text_bpe_merge_stats",
+    "text_word_pmi",
+    "text_char_entropy",
+    "text_ngram_novelty",
+    "similarity_topk_matryoshka",
+    "nation_pair_volume",
+    "dedup_method_agreement",
+    "price_percentiles_approx",
+    "events_rolling_value_quantiles",
+    "approx_distinct_users_per_type",
+    "embedding_near_dup",
+    "similarity_topk_ivf_kmeans",
+    "embedding_cluster_cards",
+    "embedding_knn_graph",
+    "embedding_semantic_dedup",
+    "embedding_semantic_clusters",
+    "embedding_quantize_int8",
+    "embedding_pq_codes",
+    "embedding_pq_codes_trained",
+    "similarity_topk_ivfpq_residual",
+    "events_heavy_hitters",
+    "nation_market_share",
+    "events_count_min",
+    "dedup_minhash_clusters",
+    "dedup_simhash_clusters",
+    "dataset_dedup_safe_split",
+    "text_tfidf_knn",
+    "events_bloom_prefilter",
+    "priority_segment_chi2",
+    "events_fano_burstiness",
+    "source_lang_entropy",
+    "events_hourly_autocorr",
+    "vocab_oov_rate",
+    "daily_activity_recon",
+    "user_churn_sets",
+    "grouping_sets_revenue",
+    "hourly_series_gapfill",
+    "daily_click_purchase_corr",
+    "customer_trailing_7d_spend",
+    "customer_order_distribution",
+    "top_revenue_supplier",
+    "sole_blame_late_suppliers",
+    "best_balance_supplier_per_part",
+    "events_ewma_hourly",
+    "part_copurchase_pagerank",
+    "embedding_dim_covariance",
+    "tokenizer_fertility",
+    "text_compression_signals",
+    "events_cusum_drift",
+    "monthly_seasonal_index",
+    "parts_abc_classes",
+    "supplier_leadtime_profile",
+    "embedding_binary_codes",
+    "similarity_topk_hamming",
+    "data_quality_audit",
+    "dataset_weighted_sample",
+    "orders_exact_median_scalable",
+    "customer_spend_gini",
+    "dedup_containment",
+    "users_hll_estimate",
+    "hourly_anomaly_mad",
+    "monthly_revenue_trend",
+    "dataset_curriculum_head",
+    "retrieval_recall_hamming",
+    "corpus_zipf_fit",
+    "graph_triangle_census",
+    "users_hll_overlap",
+    "events_key_skew_profile",
+    "docs_adaptive_quality_filter",
+    "embedding_knn_label_eval",
+    "customer_cohort_ltv",
+    "events_user_entropy",
+    "embedding_pca_spectrum",
+    "part_copurchase_topk",
+    "supplier_part_hhi",
+    "user_scd2_intervals",
+    "dedup_impact_report",
+    "events_holt_trend",
+    "orders_near_duplicate_invoices",
+    "text_bigram_logprob",
+    "markov_prediction_accuracy",
+    "embedding_label_outliers",
+    "shipping_lag_survival",
+    "orders_pareto_front",
+    "events_ab_test_report",
+    "dataset_sharding_plan",
+    "customer_kanonymity_audit",
+    "customer_merge_upsert_report",
+    "orders_benford_screen",
+    "part_copurchase_hops",
+    "orders_rolling_ols_slope",
+    "docs_cas_chunk_dedup",
+    "user_out_of_order_profile",
+    "nation_revenue_yoy",
+    "gdpr_delete_impact",
+    "neyman_allocation_plan",
+    "users_sliding_hll_24h",
+    "invoice_duplicate_clusters",
+    "events_window_funnel",
+    "purchase_linear_attribution",
+    "orders_snapshot_diff",
+    "docs_keyphrases",
+    "hourly_error_streaks",
+    "orders_trimmed_mean_scalable",
+    "dataset_grouped_kfold",
+    "events_top_paths",
+    "part_croston_forecast",
+    "retrieval_ndcg",
+    "events_zorder_layout",
+    "classifier_calibration_bins",
+    "dataset_temporal_split",
+    "retrieval_rrf_fusion",
+    "retrieval_mrr",
+    "table_stats_profile",
+    "events_idempotent_dedup",
+    "orders_unpivot_measures",
+    "orders_table_checksum",
+    "price_histogram_equidepth",
+    "customer_balance_rank_profile",
+    "events_hourly_gapfill_locf",
+    "doc_prefix_edit_pairs",
+    "join_cardinality_profile",
+    "events_partition_checksums",
+    "text_inverted_index",
+    "dataset_datacard",
+    "similarity_triplets",
+    "text_winnowing_fingerprints",
+    "dedup_aware_sample_weights",
+    "referential_integrity_audit",
+    "embedding_psi_drift",
+    "orders_theilsen_trend",
+    "orders_winsorized_stats",
+    "dedup_threshold_sweep",
+    "retrieval_mmr_rerank",
+    "langid_kappa",
+    "events_seasonal_decompose",
+    "winnowing_recall_audit",
+    "events_value_auc",
+    "segment_priority_target_encoding",
+    "text_readability_scores",
+    "acctbal_woe_iv",
+    "graph_local_clustering",
+    "events_value_ks_test",
+    "orders_mann_kendall",
+    "graph_degree_assortativity",
+    "graph_kcore",
+    "graph_hits",
+    "events_ks_fdr",
+    "events_value_wasserstein",
+    "orders_bootstrap_ci",
+    "events_cuped",
+    "orders_forecast_backtest",
+    "customer_repeat_survival",
+    "events_did",
+    "customer_tcloseness_audit",
+    "qty_pivot_returnflag",
+    "vip_premium_subset",
+    "anomaly_by_type",
+    "anomaly_rate",
+    "acctbal_buckets",
+    "in_list_filter",
+    "distinct_event_types",
+    "segment_revenue",
+    "top3_priorities_per_segment",
+    "price_percentiles",
+    "rollup_status_priority",
+    "text_tfidf_top_terms",
+    "json_props_stats",
+    "similarity_topk_ivf_nprobe2",
+    "distinct_users_per_type",
+    "multimodal_frames",
+    "cube_status_priority",
+    "price_dispersion_stats",
+    "char_shingle_profile",
+    "multimodal_resize_plan",
+    "multimodal_features",
+    "pii_scan",
+    "part_copurchase_ppr_expansion",
+    "customer_ldiversity_audit",
+    "events_dp_noisy_counts",
+    "graph_negative_samples",
+    "retrieval_rocchio_prf",
+    "events_conformal_interval",
+    "classifier_ece",
+    "parts_price_elasticity",
+    "events_top_values_salted",
+    "retrieval_rbo_exact_vs_ivf",
+    "parts_xyz_classes",
+    "events_markov_stationary",
+    "dedup_longest_common_run",
+    "graph_lpa_communities",
+    "graph_link_prediction_cn",
+    "text_bpe_trainer",
+    "text_bpe_apply",
+    "text_hashed_features",
+    "text_perceptron_trainer",
+    "classifier_perceptron_eval",
+    "retrieval_recall_sweep",
+    "ivf_cell_stats",
+    "dataset_shard_merge_plan",
+    "ivf_cell_split_plan",
+    "ivf_apply_cell_plan",
+    "ivf_post_apply_codebook",
+    "ivf_maintenance_report",
+    "embedding_bitext_margin",
+    "v_price_bucket_preferences",
+    "v_status_preferences",
+    "v_segment_preferences",
+    "v_bucket_status_priority",
+    "pricing_summary",
+    "global_stats",
+    "value_counts_event_type",
+    "hourly_series",
+    "top_categories_by_revenue",
+    "latest_events",
+    "histogram_event_value",
+    "pivot_segment_status",
+    "dedup_exact",
+    "dedup_prefix_fingerprint",
+    "dedup_ngram_jaccard",
+    "dedup_connected_components",
+    "dedup_minhash_lsh",
+    "dedup_simhash",
+    "similarity_topk_bruteforce",
+    "similarity_topk_ivf",
+    "embedding_near_dup_exact_baseline",
+    "text_lang_id",
+    "text_token_counts",
+    "text_quality_scores",
+    "text_fingerprints",
+    "text_repetition_signals",
+    "dataset_hash_split",
+    "regional_revenue",
+    "customers_without_big_orders",
+    "corpus_curation_pipeline",
+    "salted_segment_revenue",
+    "user_event_sequences",
+    "purchases_within_hour",
+    "dataset_stratified_sample",
+    "multimodal_metadata",
+    "latest_orders_scan",
+    "priority_status_matrix",
+    "sql_view_interface",
+    "session_windows_events",
+    "asof_click_purchase",
+    "benchmark_contamination",
+    "dataset_greedy_pack",
+    "corpus_decontamination_pipeline",
+    "text_boilerplate_phrases",
+    "text_span_dup_profile",
+    "dataset_source_cap",
+    "lang_temperature_weights",
+    "quality_rank_deciles",
+    "text_unigram_logprob",
+    "events_funnel",
+)
+
+
+def _put_in_order(registry: dict[str, QuerySpec], names: tuple[str, ...]) -> None:
+    """Re-key ``registry`` in place into the order of ``names``; ValueError
+    (before any change) unless ``names`` lists every registered entry
+    exactly once."""
+    twice = sorted({n for n in names if names.count(n) > 1})
+    missing = sorted(set(registry) - set(names))
+    extra = sorted(set(names) - set(registry))
+    if twice or missing or extra:
+        raise ValueError(
+            f"QUERY_ORDER lists twice {twice}, misses {missing}, "
+            f"names unregistered {extra}"
+        )
+    ordered = {n: registry[n] for n in names}
+    registry.clear()
+    registry.update(ordered)
+
+
+_put_in_order(REGISTRY, QUERY_ORDER)
+
+
+def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
+    return {name: spec.builder for name, spec in REGISTRY.items()}
+
+
+def oracle_sql() -> dict[str, str]:
+    return {name: spec.oracle for name, spec in REGISTRY.items()}

@@ -8,8 +8,7 @@ from streamlit_projet_spark_streaming_spark.registry import REGISTRY
 from .conftest import SF_CORRECT
 from .oracle_harness import compare, duckdb_conn
 
-_ORACLED = sorted(n for n, s in REGISTRY.items() if s.oracle is not None)
-_ROWS_ONLY = sorted(n for n, s in REGISTRY.items() if s.oracle is None)
+_NAMES = sorted(REGISTRY)
 
 
 SF_SMALL = SF_CORRECT.replace("sf0.01", "sf0.001")
@@ -29,7 +28,7 @@ def con_small():
     c.close()
 
 
-@pytest.mark.parametrize("name", _ORACLED)
+@pytest.mark.parametrize("name", _NAMES)
 def test_query_matches_oracle(spark, con, name):
     spec = REGISTRY[name]
     df = spec.builder(spark, SF_CORRECT)
@@ -37,7 +36,7 @@ def test_query_matches_oracle(spark, con, name):
     assert not problems, "\n".join(problems)
 
 
-@pytest.mark.parametrize("name", _ORACLED)
+@pytest.mark.parametrize("name", _NAMES)
 def test_query_matches_oracle_small_sf(spark, con_small, name):
     """Cross-SF guard: the same oracle comparison at sf0.001 — catches
     float-rounding boundary luck that a single scale factor can hide
@@ -46,19 +45,6 @@ def test_query_matches_oracle_small_sf(spark, con_small, name):
     df = spec.builder(spark, SF_SMALL)
     problems = compare(df, con_small, spec.oracle, name)
     assert not problems, "\n".join(problems)
-
-
-# As of r7 every registry entry carries a full oracle (_ROWS_ONLY is
-# empty); the parametrize survives so a future rows-only entry is still
-# smoke-run without edits here.
-@pytest.mark.parametrize("name", _ROWS_ONLY or [None])
-def test_rows_only_query_runs(spark, name):
-    if name is None:
-        pytest.skip("no rows-only entries — all queries oracle-checked")
-    spec = REGISTRY[name]
-    df = spec.builder(spark, SF_CORRECT)
-    assert df.count() >= 0
-    assert len(df.schema.fields) > 0
 
 
 def test_entry_smoke(spark):

@@ -10,9 +10,21 @@ a visible diff. Doc text (``QuerySpec.doc``) is outside the guard.
 import ast
 import hashlib
 import json
+import os
+import shutil
+import subprocess
+import sys
 from pathlib import Path
 
-from streamlit_projet_spark_streaming_spark.registry import oracle_sql, queries
+import pytest
+
+from streamlit_projet_spark_streaming_spark import registry
+from streamlit_projet_spark_streaming_spark.registry import (
+    QUERY_ORDER,
+    REGISTRY,
+    oracle_sql,
+    queries,
+)
 
 N_ENTRIES = 303
 NAMES_SHA256 = "5d68a76f9ed63e4ef7cf617dc4dc6225006b8d41d8f22f197b08f0bd3bc837dc"
@@ -34,6 +46,46 @@ def test_oracle_text_is_pinned():
     oracles = oracle_sql()
     assert sorted(oracles) == sorted(names)
     assert _sha256([[n, oracles.get(n)] for n in names]) == ORACLES_SHA256
+
+
+def test_every_registry_entry_is_listed_once():
+    names = list(queries())
+    assert sorted(names) == sorted(REGISTRY)
+    assert len(names) == len(set(names))
+    assert list(REGISTRY) == names
+
+
+def test_order_does_not_depend_on_where_the_package_sits(tmp_path):
+    """An installed copy (no repo files beside it) serves the same order."""
+    pkg = Path(registry.__file__).resolve().parent
+    shutil.copytree(
+        pkg, tmp_path / pkg.name, ignore=shutil.ignore_patterns("__pycache__")
+    )
+    out = subprocess.run(
+        [
+            sys.executable,
+            "-c",
+            "import json; from streamlit_projet_spark_streaming_spark.registry"
+            " import queries; print(json.dumps(list(queries())))",
+        ],
+        cwd=tmp_path,
+        env={**os.environ, "PYTHONPATH": str(tmp_path)},
+        capture_output=True,
+        text=True,
+        check=True,
+        timeout=300,
+    )
+    assert json.loads(out.stdout) == list(queries())
+
+
+def test_order_must_list_every_entry_exactly_once():
+    names = QUERY_ORDER[1:] + QUERY_ORDER[-1:]
+    copy = dict(REGISTRY)
+    with pytest.raises(ValueError) as err:
+        registry._put_in_order(copy, names)
+    assert QUERY_ORDER[0] in str(err.value)
+    assert QUERY_ORDER[-1] in str(err.value)
+    assert list(copy) == list(REGISTRY)
 
 
 #: Where production starts: the registry builders, the serving and

@@ -1,6 +1,6 @@
 """Same-host, same-fixture bench A/B across round code states (VERDICT r8
 item 3): check out each requested git rev into a detached worktree, run
-`python bench.py --all` there against the CURRENT fixtures, and emit a
+`python bench.py` there against the CURRENT fixtures, and emit a
 per-query diff table.
 
 The r8 driver read a median 1.60× r7→r8 slowdown over the 61 shared
@@ -48,7 +48,7 @@ def run_rev(label: str, rev: str, sf_dir: str) -> dict:
     env["SPARK_GRAFT_SF_DIR"] = sf_dir
     env.pop("PYTHONPATH", None)
     out = subprocess.run(
-        [sys.executable, "bench.py", "--all"],
+        [sys.executable, "bench.py"],
         cwd=workdir,
         env=env,
         capture_output=True,
