@@ -571,13 +571,14 @@ def grid_kmeans(
 ) -> tuple[DataFrame, DataFrame]:
     """Deterministic grid Lloyd k-means over the embedding corpus.
 
-    Returns ``(assigned, centroid_rows)``: ``assigned`` is
+    Returns ``(assigned, cb_row)``: ``assigned`` is
     (vec_id, embedding, centroid_id) — NOT checkpointed (it is
     corpus-sized; a multi-consumer caller must checkpoint its own
     pruned projection before fanning out, as semantic_dedup /
     cell_pair_scores do, else each consumer re-runs the corpus Arrow
-    pass) — and ``centroid_rows`` is the final (centroid_id, dim, c)
-    integer-unit codebook (k·D rows, broadcastable).
+    pass) — and ``cb_row`` is the one-row codebook of k integer-unit
+    vectors as the last Lloyd update checkpointed it (consumers take
+    it as it is; ``quantize._cb_rows`` gives its (j, dim, val) rows).
 
     Scale shape per iteration: ONE corpus-sized Arrow map stage emitting
     ≤ k partial rows per batch (the update's map-side combine — never a
@@ -595,7 +596,7 @@ def grid_kmeans(
         StructType,
     )
 
-    from .quantize import _cb_row_from_rows, _cb_rows, _lloyd_update
+    from .quantize import _cb_row_from_rows, _lloyd_update
 
     n_clusters = 8
     n_iter = 2
@@ -655,26 +656,7 @@ def grid_kmeans(
     assigned = base.crossJoin(F.broadcast(cb_row)).mapInPandas(
         _gk_assign_mapper(with_d2), assign_schema
     )
-    centroid_rows = _cb_rows(cb_row).select(
-        F.col("j").alias("centroid_id"), "dim", F.col("val").cast("long").alias("c")
-    )
-    return assigned, centroid_rows
-
-
-def kmeans_codebook_row(centroid_rows: DataFrame) -> DataFrame:
-    """(centroid_id, dim, c) rows → the one-row ``cb`` form the Arrow
-    assignment mappers consume — the frozen-parameters handoff from a
-    trained quantizer to ``ivf_cell_stats`` and the IVF maintenance
-    entries built on it."""
-    from .quantize import _cb_row_from_rows
-
-    return _cb_row_from_rows(
-        centroid_rows.select(
-            F.col("centroid_id").alias("j"),
-            "dim",
-            F.col("c").cast("double").alias("val"),
-        )
-    )
+    return assigned, cb_row
 
 
 def ivf_cell_stats(
@@ -766,63 +748,68 @@ def ivf_cell_stats(
     )
 
 
-def ivf_cell_split_plan(
-    cell_stats: DataFrame,
-    centroid_rows: DataFrame,
-    hot_num: int = 2,
-    hot_den: int = 1,
-    cold_num: int = 1,
-    cold_den: int = 2,
-    drift_threshold: int = 1_500_000_000,
-) -> DataFrame:
-    """Index re-training plan from an :func:`ivf_cell_stats` report —
-    the decision step the maintenance pair feeds (r9 verdict item 7:
-    "use ivf_cell_stats drift + occupancy to emit a re-training plan
-    the way shard_merge_plan consumes pack totals").
+#: ivf_cell_split_plan thresholds, shared with its oracle. The tight
+#: occupancy band makes the near-uniform fixture corpus exercise every
+#: action class.
+SPLIT_HOT_NUM, SPLIT_HOT_DEN = 17, 16
+SPLIT_COLD_NUM, SPLIT_COLD_DEN = 15, 16
+SPLIT_DRIFT_D2 = 1_500_000_000
+
+
+def ivf_cell_split_plan(cell_stats: DataFrame, cb_row: DataFrame) -> DataFrame:
+    """Index re-training plan from an :func:`ivf_cell_stats` report over
+    the codebook ``cb_row`` (as :func:`grid_kmeans` returns it) — the
+    decision step the maintenance pair feeds (r9 verdict item 7: "use
+    ivf_cell_stats drift + occupancy to emit a re-training plan the way
+    shard_merge_plan consumes pack totals").
 
     Per cell, one action by precedence:
 
-    - ``split``  — hot cell: occupancy above ``hot_num/hot_den`` × the
-      mean. Compared EXACTLY by cross-multiplication
+    - ``split``  — hot cell: occupancy above ``SPLIT_HOT_NUM /
+      SPLIT_HOT_DEN`` × the mean. Compared EXACTLY by cross-multiplication
       (``n·k·hot_den > hot_num·total``) — no quotient, no rounding,
       no half-grid exposure. ``n_subcells`` = ceil(n / mean) as exact
       integral ``(n·k + total − 1) div total``.
-    - ``merge``  — cold cell: occupancy below ``cold_num/cold_den`` ×
-      the mean (same cross-multiplied form). ``merge_into`` = the
-      nearest NON-cold centroid by exact integer squared grid distance
-      (tie: smaller id); NULL when no non-cold cell exists.
-    - ``retrain`` — drifted cell: ``drift_d2 > drift_threshold`` (grid
+    - ``merge``  — cold cell: occupancy below ``SPLIT_COLD_NUM /
+      SPLIT_COLD_DEN`` × the mean (same cross-multiplied form).
+      ``merge_into`` = the nearest NON-cold centroid by exact integer
+      squared grid distance (tie: smaller id); NULL when no non-cold
+      cell exists.
+    - ``retrain`` — drifted cell: ``drift_d2 > SPLIT_DRIFT_D2`` (grid
       units², exact integers from the stats report).
     - ``keep`` otherwise.
 
     Output: ``centroid_id``, ``n_assigned``, ``drift_d2``, ``action``,
     ``n_subcells`` (NULL unless split), ``merge_into`` (NULL unless
     merge). Every column integer/text — the whole surface is
-    oracle-able bit-exactly.
+    oracle-able bit-exactly. The k-row plan is returned lazily
+    checkpointed: its consumers fan it out, so it is checkpointed once,
+    here, at its producer.
 
-    Scale shape: both inputs are CELL-sized (k rows / k·D rows), never
-    corpus-sized — the expensive corpus pass already happened inside
-    ``ivf_cell_stats``. Both are lazily checkpointed here because the
-    plan fans each out to multiple consumers (totals + classification;
-    two pair-join sides). The merge-target search is k²·D work; at
+    Scale shape: both inputs are CELL-sized (k rows / one codebook
+    row), never corpus-sized — the expensive corpus pass already
+    happened inside ``ivf_cell_stats``. The stats report is lazily
+    checkpointed here because the plan fans it out (totals +
+    classification). The merge-target search is k²·D work; at
     k ≳ 10⁵ cells a production index would coarse-quantize the
     centroids themselves first (the same IVF trick one level up), but
     that k is far beyond any single maintenance round's re-train list.
     """
+    from .quantize import _cb_rows
+
     stats = cell_stats.localCheckpoint(eager=False)
-    cents = centroid_rows.localCheckpoint(eager=False)
     tot = stats.agg(
         F.sum("n_assigned").cast("long").alias("_total"),
         F.count(F.lit(1)).cast("long").alias("_k"),
     )
-    hot = (F.col("n_assigned") * F.col("_k") * F.lit(int(hot_den))) > (
-        F.lit(int(hot_num)) * F.col("_total")
+    hot = (F.col("n_assigned") * F.col("_k") * F.lit(SPLIT_HOT_DEN)) > (
+        F.lit(SPLIT_HOT_NUM) * F.col("_total")
     )
-    cold = (F.col("n_assigned") * F.col("_k") * F.lit(int(cold_den))) < (
-        F.lit(int(cold_num)) * F.col("_total")
+    cold = (F.col("n_assigned") * F.col("_k") * F.lit(SPLIT_COLD_DEN)) < (
+        F.lit(SPLIT_COLD_NUM) * F.col("_total")
     )
     drifted = F.col("drift_d2").isNotNull() & (
-        F.col("drift_d2") > F.lit(int(drift_threshold))
+        F.col("drift_d2") > F.lit(SPLIT_DRIFT_D2)
     )
     action = (
         F.when(hot, F.lit("split"))
@@ -849,8 +836,9 @@ def ivf_cell_split_plan(
         # sides); k rows
         .localCheckpoint(eager=False)
     )
-    ca = cents.select(F.col("centroid_id").alias("_a"), "dim", F.col("c").alias("_ca"))
-    cb = cents.select(F.col("centroid_id").alias("_b"), "dim", F.col("c").alias("_cb"))
+    c = F.col("val").cast("long")
+    ca = _cb_rows(cb_row).select(F.col("j").alias("_a"), "dim", c.alias("_ca"))
+    cb = _cb_rows(cb_row).select(F.col("j").alias("_b"), "dim", c.alias("_cb"))
     pair_d2 = (
         ca.alias("x")
         .join(
@@ -878,13 +866,17 @@ def ivf_cell_split_plan(
         .filter(F.col("_rn") == 1)
         .select(F.col("_a").alias("centroid_id"), F.col("_b").alias("merge_into"))
     )
-    return classified.join(targets, "centroid_id", "left").select(
-        "centroid_id",
-        "n_assigned",
-        "drift_d2",
-        "action",
-        "n_subcells",
-        "merge_into",
+    return (
+        classified.join(targets, "centroid_id", "left")
+        .select(
+            "centroid_id",
+            "n_assigned",
+            "drift_d2",
+            "action",
+            "n_subcells",
+            "merge_into",
+        )
+        .localCheckpoint(eager=False)
     )
 
 
@@ -950,13 +942,12 @@ def apply_cell_plan(
             StructField("centroid_id", IntegerType()),
         ]
     )
-    plan_c = plan.localCheckpoint(eager=False)  # k rows, many consumers
-    kk = plan_c.agg(F.count(F.lit(1)).cast("long").alias("_k"))
+    kk = plan.agg(F.count(F.lit(1)).cast("long").alias("_k"))
     # split cells with their new-id base offset (exclusive running sum
     # over k rows — the single-partition window is k-sized, never data)
     sw = Window.orderBy("centroid_id").rowsBetween(Window.unboundedPreceding, -1)
     sbase = (
-        plan_c.filter(F.col("action") == "split")
+        plan.filter(F.col("action") == "split")
         .select("centroid_id", "n_subcells")
         .withColumn("_prior", F.coalesce(F.sum("n_subcells").over(sw), F.lit(0)))
     )
@@ -972,7 +963,7 @@ def apply_cell_plan(
     nonsplit = (
         _assigned()
         .join(
-            F.broadcast(plan_c.select("centroid_id", "action", "merge_into")),
+            F.broadcast(plan.select("centroid_id", "action", "merge_into")),
             "centroid_id",
         )
         .filter(F.col("action") != "split")
@@ -1142,14 +1133,12 @@ def maintenance_report(
     cell-sized
     partials before any shuffle; the sufficient-statistics table is
     lazily checkpointed (three consumers: before expansion, re-trained
-    codebook, after expansion); the k-row plan is checkpointed at the
-    top (three consumers: spine, n_vectors, applier).
+    codebook, after expansion); the plan and the codebook arrive
+    checkpointed by their producers.
     """
     from .quantize import _cb_rows
 
-    plan_c = plan.localCheckpoint(eager=False)  # k rows, three consumers
-
-    labeled = apply_cell_plan(embeddings, codebook_row, plan_c, with_embedding=True)
+    labeled = apply_cell_plan(embeddings, codebook_row, plan, with_embedding=True)
     unit = F.floor(
         F.col("_x").cast("double") * F.lit(float(GRID_KMEANS_UNIT))
     ).cast("long")
@@ -1184,8 +1173,8 @@ def maintenance_report(
         F.col("val").cast("long").alias("_c"),
     )
     before = (
-        # _cb_rows dims are 0-based like posexplode's — the established
-        # kmeans handoff contract (kmeans_codebook_row round-trips it)
+        # _cb_rows dims are 0-based like posexplode's, so the codebook
+        # rows join the exploded sufficient statistics directly
         cell_stats.join(F.broadcast(cb0), ["old_centroid_id", "dim"])
         .select("action", "dim", "_n", sse_expand)
         .groupBy("action")
@@ -1214,7 +1203,7 @@ def maintenance_report(
         .agg(F.sum("_sse").cast("long").alias("sse_after"))
     )
 
-    spine = plan_c.groupBy("action").agg(
+    spine = plan.groupBy("action").agg(
         F.count(F.lit(1)).cast("long").alias("n_cells")
     )
     sse_b = F.coalesce(F.col("sse_before"), F.lit(0))
@@ -1472,9 +1461,14 @@ def ivf_topk_kmeans(embeddings: DataFrame, query_pred: Column) -> DataFrame:
     verbatim, and the cosine scoring reuses the bit-identical cosine
     form; the pytest recall bound vs brute force still applies.
     """
+    from .quantize import _cb_rows
+
     k = 5
     nprobe = 3
-    assigned, cent_rows = grid_kmeans(embeddings)
+    assigned, cb_row = grid_kmeans(embeddings)
+    cent_rows = _cb_rows(cb_row).select(
+        F.col("j").alias("centroid_id"), "dim", F.col("val").cast("long").alias("c")
+    )
 
     # Probe: nprobe nearest centers per query by exact integer squared
     # distance in grid units (matches the quantizer's assignment

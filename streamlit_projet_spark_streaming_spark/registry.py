@@ -964,7 +964,7 @@ _register(
     "with its component's min doc_id. Spark side is iterative min-label "
     "propagation (O(diameter) rounds of small self-joins, scalar-only "
     "convergence probe); the oracle replays it with a recursive CTE "
-    "(transitive closure + MIN). Pairs alone over-delete: {{A,B}},{{B,C}} "
+    "(transitive closure + MIN). Pairs alone over-delete: {A,B},{B,C} "
     "must collapse to one cluster, which is exactly what this computes.",
     tags=("ext", "dedup", "iterative"),
 )(
@@ -11749,7 +11749,7 @@ def _part_copurchase_hops(spark: SparkSession, sf: str) -> DataFrame:
     und = copurchase_pairs(li).localCheckpoint(eager=False)
     edges = und.union(
         und.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).localCheckpoint(eager=False)
+    )
     seeds = (
         edges.select(F.col("src").alias("part"))
         .distinct()
@@ -15618,13 +15618,12 @@ def _dedup_aware_sample_weights(spark: SparkSession, sf: str) -> DataFrame:
     doc_id, weight 1).
 
     Scale shape: the cluster table is near-dup-mass-sized and feeds
-    two consumers (sizes + the doc join) -> lazy localCheckpoint; the
-    join back to documents is a broadcast at fixture scale and a
-    key-shuffle at 100 TB — either way work ∝ corpus + dup mass."""
+    two consumers (sizes + the doc join); it arrives checkpointed from
+    duplicate_clusters (its last label round), so both read those
+    blocks. The join back to documents is a broadcast at fixture scale
+    and a key-shuffle at 100 TB — either way work ∝ corpus + dup mass."""
     pairs = _dedup_ops.minhash_lsh_pairs(_t(spark, sf, "documents"))
-    clusters = _dedup_ops.duplicate_clusters(pairs).localCheckpoint(
-        eager=False
-    )
+    clusters = _dedup_ops.duplicate_clusters(pairs)
     sizes = clusters.groupBy("cluster_id").agg(
         F.count(F.lit(1)).alias("csize")
     )
@@ -21124,11 +21123,7 @@ _register(
 
 def _ivf_cell_stats_q(spark: SparkSession, sf: str) -> DataFrame:
     emb = _t(spark, sf, "embeddings")
-    _, centroid_rows = _sim.grid_kmeans(emb)
-    # lazy checkpoint at the producer: the 1-row codebook feeds three
-    # consumers inside ivf_cell_stats (partials map, drift join, spine)
-    # and each would otherwise replay the full Lloyd training
-    cb_row = _sim.kmeans_codebook_row(centroid_rows).localCheckpoint(eager=False)
+    _, cb_row = _sim.grid_kmeans(emb)
     return _sim.ivf_cell_stats(emb, cb_row)
 
 
@@ -21246,30 +21241,17 @@ _register(
 )(_shard_merge_plan_q)
 
 
-_SP_HOT_NUM, _SP_HOT_DEN = 17, 16      # split above 17/16 of mean occupancy
-_SP_COLD_NUM, _SP_COLD_DEN = 15, 16    # merge below 15/16 of mean occupancy
-_SP_DRIFT = 1_500_000_000              # retrain above this drift_d2 (grid units²)
+def _ivf_plan(spark: SparkSession, sf: str) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """``(emb, cb_row, plan)``: grid_kmeans -> ivf_cell_stats ->
+    ivf_cell_split_plan over the one trained codebook."""
+    emb = _t(spark, sf, "embeddings")
+    _, cb_row = _sim.grid_kmeans(emb)
+    plan = _sim.ivf_cell_split_plan(_sim.ivf_cell_stats(emb, cb_row), cb_row)
+    return emb, cb_row, plan
 
 
 def _ivf_cell_split_plan_q(spark: SparkSession, sf: str) -> DataFrame:
-    emb = _t(spark, sf, "embeddings")
-    _, centroid_rows = _sim.grid_kmeans(emb)
-    # checkpoint at the producer: centroid_rows feeds both the codebook
-    # handoff and the plan's pair-distance search; cb_row fans out three
-    # ways inside ivf_cell_stats — each re-consumption would otherwise
-    # replay the full Lloyd training
-    centroid_rows = centroid_rows.localCheckpoint(eager=False)
-    cb_row = _sim.kmeans_codebook_row(centroid_rows).localCheckpoint(eager=False)
-    stats = _sim.ivf_cell_stats(emb, cb_row)
-    return _sim.ivf_cell_split_plan(
-        stats,
-        centroid_rows,
-        hot_num=_SP_HOT_NUM,
-        hot_den=_SP_HOT_DEN,
-        cold_num=_SP_COLD_NUM,
-        cold_den=_SP_COLD_DEN,
-        drift_threshold=_SP_DRIFT,
-    )
+    return _ivf_plan(spark, sf)[2]
 
 
 # Shared plan-replay CTEs (assume the kmeans + cell-stats CTEs precede
@@ -21280,12 +21262,12 @@ _IVF_PLAN_CTES = f"""ctot AS (SELECT CAST(SUM(n_assigned) AS BIGINT) AS total,
              FROM cstats),
     cls AS MATERIALIZED (
       SELECT s.centroid_id, s.n_assigned, s.drift_d2, t.total, t.k,
-             CASE WHEN s.n_assigned * t.k * {_SP_HOT_DEN}
-                       > {_SP_HOT_NUM} * t.total THEN 'split'
-                  WHEN s.n_assigned * t.k * {_SP_COLD_DEN}
-                       < {_SP_COLD_NUM} * t.total THEN 'merge'
+             CASE WHEN s.n_assigned * t.k * {_sim.SPLIT_HOT_DEN}
+                       > {_sim.SPLIT_HOT_NUM} * t.total THEN 'split'
+                  WHEN s.n_assigned * t.k * {_sim.SPLIT_COLD_DEN}
+                       < {_sim.SPLIT_COLD_NUM} * t.total THEN 'merge'
                   WHEN s.drift_d2 IS NOT NULL
-                       AND s.drift_d2 > {_SP_DRIFT} THEN 'retrain'
+                       AND s.drift_d2 > {_sim.SPLIT_DRIFT_D2} THEN 'retrain'
                   ELSE 'keep' END AS action
       FROM cstats s, ctot t),
     cpair_d2 AS (
@@ -21323,12 +21305,12 @@ _register(
     doc="IVF cell split/merge/re-train plan [ext/similarity/ivf]: "
     "consumes the ivf_cell_stats report (the way shard_merge_plan "
     "consumes pack totals). Actions by precedence, all EXACT-integer: "
-    f"split above {_SP_HOT_NUM}/{_SP_HOT_DEN} of mean occupancy (cross-"
+    f"split above {_sim.SPLIT_HOT_NUM}/{_sim.SPLIT_HOT_DEN} of mean occupancy (cross-"
     "multiplied - no quotient touches a rounding grid; n_subcells = "
     "exact integral ceil(n/mean)), merge below "
-    f"{_SP_COLD_NUM}/{_SP_COLD_DEN} of mean into the nearest non-cold "
+    f"{_sim.SPLIT_COLD_NUM}/{_sim.SPLIT_COLD_DEN} of mean into the nearest non-cold "
     "centroid by exact integer grid distance (tie: smaller id), retrain "
-    f"above drift_d2 {_SP_DRIFT} (grid units^2), else keep. The tight "
+    f"above drift_d2 {_sim.SPLIT_DRIFT_D2} (grid units^2), else keep. The tight "
     "occupancy band is chosen so the near-uniform fixture corpus "
     "exercises every action class. Scale: all inputs cell-sized (k / "
     "k*D rows), merge-target search k^2*D - the corpus pass lives in "
@@ -21338,20 +21320,7 @@ _register(
 
 
 def _ivf_apply_cell_plan_q(spark: SparkSession, sf: str) -> DataFrame:
-    emb = _t(spark, sf, "embeddings")
-    _, centroid_rows = _sim.grid_kmeans(emb)
-    centroid_rows = centroid_rows.localCheckpoint(eager=False)
-    cb_row = _sim.kmeans_codebook_row(centroid_rows).localCheckpoint(eager=False)
-    stats = _sim.ivf_cell_stats(emb, cb_row)
-    plan = _sim.ivf_cell_split_plan(
-        stats,
-        centroid_rows,
-        hot_num=_SP_HOT_NUM,
-        hot_den=_SP_HOT_DEN,
-        cold_num=_SP_COLD_NUM,
-        cold_den=_SP_COLD_DEN,
-        drift_threshold=_SP_DRIFT,
-    )
+    emb, cb_row, plan = _ivf_plan(spark, sf)
     return _sim.apply_cell_plan(emb, cb_row, plan)
 
 
@@ -21427,20 +21396,7 @@ _register(
 
 
 def _ivf_post_apply_codebook_q(spark: SparkSession, sf: str) -> DataFrame:
-    emb = _t(spark, sf, "embeddings")
-    _, centroid_rows = _sim.grid_kmeans(emb)
-    centroid_rows = centroid_rows.localCheckpoint(eager=False)
-    cb_row = _sim.kmeans_codebook_row(centroid_rows).localCheckpoint(eager=False)
-    stats = _sim.ivf_cell_stats(emb, cb_row)
-    plan = _sim.ivf_cell_split_plan(
-        stats,
-        centroid_rows,
-        hot_num=_SP_HOT_NUM,
-        hot_den=_SP_HOT_DEN,
-        cold_num=_SP_COLD_NUM,
-        cold_den=_SP_COLD_DEN,
-        drift_threshold=_SP_DRIFT,
-    )
+    emb, cb_row, plan = _ivf_plan(spark, sf)
     return _sim.post_apply_codebook(emb, cb_row, plan)
 
 
@@ -21476,20 +21432,7 @@ _register(
 
 
 def _ivf_maintenance_report_q(spark: SparkSession, sf: str) -> DataFrame:
-    emb = _t(spark, sf, "embeddings")
-    _, centroid_rows = _sim.grid_kmeans(emb)
-    centroid_rows = centroid_rows.localCheckpoint(eager=False)
-    cb_row = _sim.kmeans_codebook_row(centroid_rows).localCheckpoint(eager=False)
-    stats = _sim.ivf_cell_stats(emb, cb_row)
-    plan = _sim.ivf_cell_split_plan(
-        stats,
-        centroid_rows,
-        hot_num=_SP_HOT_NUM,
-        hot_den=_SP_HOT_DEN,
-        cold_num=_SP_COLD_NUM,
-        cold_den=_SP_COLD_DEN,
-        drift_threshold=_SP_DRIFT,
-    )
+    emb, cb_row, plan = _ivf_plan(spark, sf)
     return _sim.maintenance_report(emb, cb_row, plan)
 
 

@@ -359,13 +359,16 @@ def test_grid_kmeans_assignment_is_map_stage(spark):
     from streamlit_projet_spark_streaming_spark.operators import similarity as sim
 
     emb = load_table(spark, "embeddings", SF)
-    assigned, cent_rows = sim.grid_kmeans(emb)
+    assigned, cb_row = sim.grid_kmeans(emb)
     plan = _executed_plan(assigned)
     assert "MapInPandas" in plan
     assert "SortMergeJoin" not in plan, "corpus-sized join in assignment"
     assert "Window" not in plan
-    # centroid table is k·D rows whatever the corpus
-    assert cent_rows.count() == 8 * 64
+    # the codebook is one row of k vectors of D units whatever the corpus
+    cb = cb_row.collect()
+    assert len(cb) == 1
+    assert len(cb[0]["cb"]) == 8
+    assert {len(v) for v in cb[0]["cb"]} == {64}
 
 
 def test_maintenance_report_action_plan_is_cell_sized(spark):
@@ -379,14 +382,8 @@ def test_maintenance_report_action_plan_is_cell_sized(spark):
     from streamlit_projet_spark_streaming_spark.operators import similarity as sim
 
     emb = load_table(spark, "embeddings", SF)
-    _, cent_rows = sim.grid_kmeans(emb)
-    cent_rows = cent_rows.localCheckpoint(eager=False)
-    cb_row = sim.kmeans_codebook_row(cent_rows).localCheckpoint(eager=False)
-    stats = sim.ivf_cell_stats(emb, cb_row)
-    plan_df = sim.ivf_cell_split_plan(
-        stats, cent_rows, hot_num=17, hot_den=16, cold_num=15, cold_den=16,
-        drift_threshold=1_500_000_000,
-    )
+    _, cb_row = sim.grid_kmeans(emb)
+    plan_df = sim.ivf_cell_split_plan(sim.ivf_cell_stats(emb, cb_row), cb_row)
     report = sim.maintenance_report(emb, cb_row, plan_df)
     report.collect()
     plan = _executed_plan(report)
@@ -394,6 +391,70 @@ def test_maintenance_report_action_plan_is_cell_sized(spark):
     assert "MapInPandas" not in plan, "corpus Arrow pass re-run per consumer"
     assert "Window" not in plan
     assert "CartesianProduct" not in plan
+
+
+# Logical nodes that need an exchange or a Python worker: a plan with
+# none of them is narrow, so checkpointing it over an existing
+# checkpoint only copies blocks that are already materialized.
+_WIDE_NODES = {
+    "Aggregate", "Join", "Window", "WindowGroupLimit", "Sort", "Repartition",
+    "RepartitionByExpression", "RebalancePartitions", "Distinct",
+    "Deduplicate", "GlobalLimit", "LocalLimit", "Offset", "Tail",
+}
+
+
+def _plan_nodes(node):
+    yield node.nodeName()
+    children = node.children()
+    for i in range(children.size()):
+        yield from _plan_nodes(children.apply(i))
+
+
+def _copies_a_checkpoint(df) -> bool:
+    names = list(_plan_nodes(df._jdf.queryExecution().optimizedPlan()))
+    wide = [
+        n for n in names
+        if n in _WIDE_NODES or any(p in n for p in ("Python", "Pandas", "Arrow"))
+    ]
+    return not wide and "LogicalRDD" in names
+
+
+def test_no_checkpoint_copies_a_checkpoint(spark, monkeypatch):
+    """A checkpoint a producer returns is the producer's: no consumer
+    re-checkpoints it or a narrow projection of it. Builds
+    (without collecting) the entries whose consumers used to copy a
+    checkpoint (the IVF maintenance chain, the co-purchase BFS edges,
+    the duplicate-aware weights' clusters) and fails on any
+    ``localCheckpoint`` of a narrow plan over a ``LogicalRDD`` leaf.
+    The patch is on the classic class: ``pyspark.sql.DataFrame`` is an
+    abstract base in PySpark 4.1, so patching it would see nothing."""
+    import traceback
+
+    from pyspark.sql.classic.dataframe import DataFrame as ClassicDataFrame
+
+    from streamlit_projet_spark_streaming_spark.registry import REGISTRY
+
+    original = ClassicDataFrame.localCheckpoint
+    copies = []
+
+    def checked(self, *args, **kwargs):
+        if _copies_a_checkpoint(self):
+            caller = traceback.extract_stack(limit=2)[0]
+            copies.append(f"{caller.filename}:{caller.lineno}")
+        return original(self, *args, **kwargs)
+
+    monkeypatch.setattr(ClassicDataFrame, "localCheckpoint", checked)
+    for name in (
+        "ivf_cell_stats",
+        "ivf_cell_split_plan",
+        "ivf_apply_cell_plan",
+        "ivf_post_apply_codebook",
+        "ivf_maintenance_report",
+        "part_copurchase_hops",
+        "dedup_aware_sample_weights",
+    ):
+        REGISTRY[name].builder(spark, SF)
+    assert not copies, f"checkpoints of narrow plans over checkpoints: {copies}"
 
 
 def test_bitext_margin_rank_pushdown(spark):

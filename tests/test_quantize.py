@@ -310,19 +310,15 @@ def test_lloyd_partials_rejects_ragged_batch():
 
 
 def test_codebook_row_rejects_sparse_centroid_rows(spark):
-    """``kmeans_codebook_row`` over a (centroid_id, dim) spine with one
-    missing row fails loudly instead of reshaping the short flat array
-    into a codebook that loses its last centroid and shifts the rest;
-    the dense spine still reshapes to one vector per centroid."""
-    from streamlit_projet_spark_streaming_spark.operators.similarity import (
-        kmeans_codebook_row,
-    )
-
-    schema = "centroid_id int, dim int, c long"
-    dense = [(j, d, 10 * j + d) for j in range(3) for d in range(4)]
-    cb = kmeans_codebook_row(spark.createDataFrame(dense, schema)).collect()
+    """``_cb_row_from_rows`` over a (j, dim) spine with one missing row
+    fails loudly instead of reshaping the short flat array into a
+    codebook that loses its last centroid and shifts the rest; the
+    dense spine still reshapes to one vector per centroid."""
+    schema = "j int, dim int, val double"
+    dense = [(j, d, 10.0 * j + d) for j in range(3) for d in range(4)]
+    cb = quantize._cb_row_from_rows(spark.createDataFrame(dense, schema)).collect()
     assert cb[0]["cb"] == [[10.0 * j + d for d in range(4)] for j in range(3)]
 
     sparse = [r for r in dense if (r[0], r[1]) != (1, 2)]
     with pytest.raises(Exception, match="not a dense"):
-        kmeans_codebook_row(spark.createDataFrame(sparse, schema)).collect()
+        quantize._cb_row_from_rows(spark.createDataFrame(sparse, schema)).collect()

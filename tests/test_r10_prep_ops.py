@@ -10,7 +10,6 @@ from pyspark.sql import functions as F
 from streamlit_projet_spark_streaming_spark.operators.similarity import (
     grid_kmeans,
     ivf_cell_stats,
-    kmeans_codebook_row,
 )
 from streamlit_projet_spark_streaming_spark.sources.catalog import load_table
 
@@ -19,8 +18,16 @@ SF = "/root/testdata/sf0.001"
 
 def _codebook(spark):
     emb = load_table(spark, "embeddings", SF)
-    _, centroid_rows = grid_kmeans(emb)
-    return emb, kmeans_codebook_row(centroid_rows).localCheckpoint(eager=False)
+    _, cb_row = grid_kmeans(emb)
+    return emb, cb_row
+
+
+def _centroids(cb_row) -> dict[int, dict[int, int]]:
+    """The trained codebook as {centroid_id: {dim: grid units}}."""
+    return {
+        j: {d: int(c) for d, c in enumerate(v)}
+        for j, v in enumerate(cb_row.first()["cb"])
+    }
 
 
 def test_ivf_cell_stats_spine_counts_drift(spark):
@@ -123,14 +130,6 @@ def test_shard_merge_plan_on_greedy_pack_after_dedup(spark):
     )
 
 
-def _split_plan_inputs(spark):
-    emb = load_table(spark, "embeddings", SF)
-    _, centroid_rows = grid_kmeans(emb)
-    centroid_rows = centroid_rows.localCheckpoint(eager=False)
-    cb_row = kmeans_codebook_row(centroid_rows).localCheckpoint(eager=False)
-    return emb, centroid_rows, cb_row
-
-
 def test_ivf_cell_split_plan_invariants(spark):
     """Python recompute of every plan decision from the stats report:
     action precedence, exact ceil for n_subcells, nearest non-cold
@@ -139,16 +138,12 @@ def test_ivf_cell_split_plan_invariants(spark):
         ivf_cell_split_plan,
     )
 
-    emb, centroid_rows, cb_row = _split_plan_inputs(spark)
-    stats = ivf_cell_stats(emb, cb_row).localCheckpoint(eager=False)
-    kw = dict(hot_num=17, hot_den=16, cold_num=15, cold_den=16,
-              drift_threshold=1_500_000_000)
+    emb, cb_row = _codebook(spark)
+    stats = ivf_cell_stats(emb, cb_row)
     plan = {r["centroid_id"]: r for r in
-            ivf_cell_split_plan(stats, centroid_rows, **kw).collect()}
+            ivf_cell_split_plan(stats, cb_row).collect()}
     srows = {r["centroid_id"]: r for r in stats.collect()}
-    cents: dict[int, dict[int, int]] = {}
-    for r in centroid_rows.collect():
-        cents.setdefault(r["centroid_id"], {})[r["dim"]] = r["c"]
+    cents = _centroids(cb_row)
     total = sum(r["n_assigned"] for r in srows.values())
     k = len(srows)
     assert set(plan) == set(srows)
@@ -201,13 +196,8 @@ def test_apply_cell_plan_invariants(spark):
         ivf_cell_split_plan,
     )
 
-    emb, centroid_rows, cb_row = _split_plan_inputs(spark)
-    stats = ivf_cell_stats(emb, cb_row).localCheckpoint(eager=False)
-    kw = dict(hot_num=17, hot_den=16, cold_num=15, cold_den=16,
-              drift_threshold=1_500_000_000)
-    plan_df = ivf_cell_split_plan(stats, centroid_rows, **kw).localCheckpoint(
-        eager=False
-    )
+    emb, cb_row = _codebook(spark)
+    plan_df = ivf_cell_split_plan(ivf_cell_stats(emb, cb_row), cb_row)
     plan = {r["centroid_id"]: r for r in plan_df.collect()}
     k = len(plan)
     out = {r["vec_id"]: r for r in apply_cell_plan(emb, cb_row, plan_df).collect()}
@@ -219,9 +209,7 @@ def test_apply_cell_plan_invariants(spark):
         ]
         for r in emb.select("vec_id", "embedding").collect()
     }
-    cents: dict[int, dict[int, int]] = {}
-    for r in centroid_rows.collect():
-        cents.setdefault(r["centroid_id"], {})[r["dim"]] = r["c"]
+    cents = _centroids(cb_row)
 
     def assign(u):
         best = min(
@@ -292,12 +280,8 @@ def test_post_apply_codebook_is_exact_member_mean(spark):
     )
     from streamlit_projet_spark_streaming_spark.operators.numeric import ratio_round_int
 
-    emb, centroid_rows, cb_row = _split_plan_inputs(spark)
-    stats = ivf_cell_stats(emb, cb_row).localCheckpoint(eager=False)
-    plan_df = ivf_cell_split_plan(
-        stats, centroid_rows, hot_num=17, hot_den=16, cold_num=15,
-        cold_den=16, drift_threshold=1_500_000_000,
-    ).localCheckpoint(eager=False)
+    emb, cb_row = _codebook(spark)
+    plan_df = ivf_cell_split_plan(ivf_cell_stats(emb, cb_row), cb_row)
     labels = {
         r["vec_id"]: r["new_centroid_id"]
         for r in apply_cell_plan(emb, cb_row, plan_df).collect()
@@ -342,12 +326,8 @@ def test_maintenance_report_python_recompute(spark):
         maintenance_report,
     )
 
-    emb, centroid_rows, cb_row = _split_plan_inputs(spark)
-    stats = ivf_cell_stats(emb, cb_row).localCheckpoint(eager=False)
-    plan_df = ivf_cell_split_plan(
-        stats, centroid_rows, hot_num=17, hot_den=16, cold_num=15,
-        cold_den=16, drift_threshold=1_500_000_000,
-    ).localCheckpoint(eager=False)
+    emb, cb_row = _codebook(spark)
+    plan_df = ivf_cell_split_plan(ivf_cell_stats(emb, cb_row), cb_row)
     got = {r["action"]: r for r in maintenance_report(emb, cb_row, plan_df).collect()}
 
     plan = {r["centroid_id"]: r for r in plan_df.collect()}
@@ -357,9 +337,7 @@ def test_maintenance_report_python_recompute(spark):
         ]
         for r in emb.select("vec_id", "embedding").collect()
     }
-    cents: dict[int, dict[int, int]] = {}
-    for r in centroid_rows.collect():
-        cents.setdefault(r["centroid_id"], {})[r["dim"]] = r["c"]
+    cents = _centroids(cb_row)
     applied = {
         r["vec_id"]: r
         for r in apply_cell_plan(emb, cb_row, plan_df).collect()
