@@ -90,71 +90,32 @@ def copurchase_edges(lineitem: DataFrame) -> DataFrame:
 
 
 def pagerank_integer(edges: DataFrame, iters: int = 3) -> DataFrame:
-    """Weighted PageRank (damping 0.85) in exact integer arithmetic.
+    """Weighted PageRank (damping 0.85) in exact integer arithmetic:
+    :func:`ppr_integer` with every node of ``src`` ∪ ``dst`` as a seed.
+    With n seeds = n nodes, pr₀ = SCALE div n on every node and the
+    teleport is (15·SCALE) div (100·n) on every node, so per iteration
+    pr'(v) = (15·SCALE) div (100·N) + (85·in(v)) div 100 — the classic
+    recurrence. Floor drops ≤ 1 unit of mass per edge per round
+    (≤ |E|·iters·1e-12 of total), the price of exactness.
 
-    Per iteration: contribution(u→v) = (pr(u)·w(u,v)) div out_w(u)
-    (floor), in(v) = Σ contributions, pr'(v) = (15·SCALE) div (100·N)
-    + (85·in(v)) div 100. All floor divisions of non-negative integers
-    — deterministic, order-independent, engine-portable. Floor drops
-    ≤ 1 unit of mass per edge per round (≤ |E|·iters·1e-12 of total),
-    the price of exactness.
+    Sink nodes (dst never appearing as src — impossible for
+    :func:`copurchase_edges`' symmetric output, possible for arbitrary
+    directed inputs) are ranked and receive teleport + in-mass; like
+    classic PageRank without dangling-mass redistribution, the mass
+    they hold simply stops propagating.
 
-    Nodes are src ∪ dst, so sink nodes (dst never appearing as src —
-    impossible for :func:`copurchase_edges`' symmetric output, possible
-    for arbitrary directed inputs) are ranked and receive teleport +
-    in-mass; like classic PageRank without dangling-mass redistribution,
-    the mass they hold simply stops propagating.
+    The seeds come from the edges as checkpointed here, so the node
+    union never replays the edge producer.
 
     Returns ``(part, pr_scaled)`` — scores in SCALE units.
     """
     edges = edges.localCheckpoint(eager=False)
-    outw = edges.groupBy("src").agg(F.sum("w").alias("outw"))
-    ew = edges.join(outw, "src").localCheckpoint(eager=False)
-    nodes = (
-        edges.select(F.col("src").alias("part"))
-        .union(edges.select(F.col("dst").alias("part")))
-        .distinct()
-        .localCheckpoint(eager=False)
+    nodes = edges.select(F.col("src").alias("part")).union(
+        edges.select(F.col("dst").alias("part"))
     )
-    # Stats row: one consumer per iteration plus pr0 — checkpoint or
-    # each materialization re-runs the node count (CLAUDE.md rule).
-    ncount = nodes.agg(F.count(F.lit(1)).alias("n")).localCheckpoint(
-        eager=False
+    return _ppr(edges, nodes, iters).select(
+        "part", F.col("ppr_scaled").alias("pr_scaled")
     )
-
-    pr = nodes.crossJoin(F.broadcast(ncount)).select(
-        "part", _idiv(F.lit(SCALE), F.col("n")).alias("pr")
-    ).localCheckpoint(eager=False)
-
-    for _ in range(iters):
-        contrib = (
-            ew.join(pr, ew["src"] == pr["part"])
-            # Hot path (|edges| rows/round): plain BIGINT `div`, not the
-            # DECIMAL _idiv — the oracle's `//` is BIGINT too, so DECIMAL
-            # here was slower WITHOUT widening the real overflow bound
-            # (SCALE·max_w < 2^63, module docstring).
-            .select(
-                F.col("dst"),
-                F.expr("(pr * w) div outw").alias("c"),
-            )
-            .groupBy("dst")
-            .agg(F.sum("c").alias("insum"))
-        )
-        pr = (
-            nodes.join(contrib, nodes["part"] == contrib["dst"], "left")
-            .crossJoin(F.broadcast(ncount))
-            .select(
-                "part",
-                (
-                    _idiv(F.lit(15 * SCALE), F.col("n") * 100)
-                    + _idiv(
-                        F.coalesce(F.col("insum"), F.lit(0)) * 85, F.lit(100)
-                    )
-                ).alias("pr"),
-            )
-            .localCheckpoint(eager=False)
-        )
-    return pr.select("part", F.col("pr").alias("pr_scaled"))
 
 
 def ppr_integer(edges: DataFrame, seeds: DataFrame) -> DataFrame:
@@ -164,25 +125,29 @@ def ppr_integer(edges: DataFrame, seeds: DataFrame) -> DataFrame:
     teleport mass goes ONLY to the seed set, split equally, so scores
     measure proximity to the seeds instead of global centrality.
 
-    Same exactness discipline as :func:`pagerank_integer` (floor
-    divisions of non-negative integers, 1e-12-unit scores — fully
-    oracle-able as unrolled CTEs): pr₀ puts SCALE div n_seeds on each
-    seed and 0 elsewhere; per iteration pr'(v) = [v ∈ seeds:
-    (15·SCALE) div (100·n_seeds)] + (85·in(v)) div 100. Nodes are
-    src ∪ dst ∪ seeds — a seed outside the edge set still holds its
-    teleport mass, it simply doesn't propagate.
+    Per iteration: contribution(u→v) = (pr(u)·w(u,v)) div out_w(u)
+    (floor), in(v) = Σ contributions. pr₀ puts SCALE div n_seeds on
+    each seed and 0 elsewhere; per iteration pr'(v) = [v ∈ seeds:
+    (15·SCALE) div (100·n_seeds)] + (85·in(v)) div 100. All floor
+    divisions of non-negative integers — deterministic,
+    order-independent, engine-portable, fully oracle-able as unrolled
+    CTEs. Nodes are src ∪ dst ∪ seeds — a seed outside the edge set
+    still holds its teleport mass, it simply doesn't propagate.
 
-    Scale shape is pagerank_integer's: per-round one |edges|-row hash
-    join + map-side-combined contribution aggregate; the node-sized
-    score table is checkpointed per round (truncates the iteration
-    lineage); seed table and the 1-row seed count are checkpointed at
-    the producer (each feeds multiple consumers).
+    Scale shape: per round one |edges|-row hash join +
+    map-side-combined contribution aggregate; the node-sized score
+    table is checkpointed per round (truncates the iteration lineage);
+    seed table and the 1-row seed count are checkpointed at the
+    producer (each feeds multiple consumers).
 
     ``seeds``: one column ``part``. Returns
     ``(part, ppr_scaled, is_seed)``.
     """
-    iters = 3
-    edges = edges.localCheckpoint(eager=False)
+    return _ppr(edges.localCheckpoint(eager=False), seeds, 3)
+
+
+def _ppr(edges: DataFrame, seeds: DataFrame, iters: int) -> DataFrame:
+    """The :func:`ppr_integer` loop over already checkpointed ``edges``."""
     outw = edges.groupBy("src").agg(F.sum("w").alias("outw"))
     ew = edges.join(outw, "src").localCheckpoint(eager=False)
     # three consumers: node union, seed flag, seed count
@@ -209,22 +174,21 @@ def ppr_integer(edges: DataFrame, seeds: DataFrame) -> DataFrame:
     teleport = F.when(
         F.col("is_seed") == 1, _idiv(F.lit(15 * SCALE), F.col("ns") * 100)
     ).otherwise(F.lit(0))
-    pr = (
-        flagged.crossJoin(F.broadcast(nseeds))
-        .select(
-            "part",
-            "is_seed",
-            F.when(
-                F.col("is_seed") == 1, _idiv(F.lit(SCALE), F.col("ns"))
-            )
-            .otherwise(F.lit(0))
-            .alias("pr"),
-        )
-        .localCheckpoint(eager=False)
+    # pr0 has one reader, the first round: not checkpointed
+    pr = flagged.crossJoin(F.broadcast(nseeds)).select(
+        "part",
+        "is_seed",
+        F.when(F.col("is_seed") == 1, _idiv(F.lit(SCALE), F.col("ns")))
+        .otherwise(F.lit(0))
+        .alias("pr"),
     )
     for _ in range(iters):
         contrib = (
             ew.join(pr, ew["src"] == pr["part"])
+            # Hot path (|edges| rows/round): plain BIGINT `div`, not the
+            # DECIMAL _idiv — the oracle's `//` is BIGINT too, so DECIMAL
+            # here was slower WITHOUT widening the real overflow bound
+            # (SCALE·max_w < 2^63, module docstring).
             .select(
                 F.col("dst"),
                 F.expr("(pr * w) div outw").alias("c"),

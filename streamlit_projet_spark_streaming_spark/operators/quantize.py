@@ -15,10 +15,12 @@ Cross-engine exactness (both operators carry full DuckDB oracles):
   double operation in the same order on both engines, so the UNROUNDED
   result is bit-identical; ``floor`` of identical bits is identical (no
   half-grid rounding anywhere).
-- PQ assignment runs entirely in exact integer space: distances are sums
-  of squared INT code differences (order-independent, no floats), ties
-  break to the smallest centroid index on both engines (``np.argmin``
-  takes the first minimum; the oracle sorts ``ORDER BY d2, j``).
+- PQ assignment runs on exact integers: distances are sums of squared
+  INT code differences, every partial sum an integer far below 2^53, so
+  the float64 chain of ``_sub_dists`` is exact (no rounding anywhere);
+  ties break to the smallest centroid index on both engines
+  (``np.argmin`` takes the first minimum; the oracle sorts
+  ``ORDER BY d2, j``).
 
 Scale shape:
 
@@ -49,7 +51,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from .relational import ordered_array_agg
+from .relational import ordered_array_agg, spread_if_few_splits
 
 #: Output schema of scalar quantization.
 #: Scalar quantization levels: int8 codes in [0, 255].
@@ -126,15 +128,6 @@ def _quantize_mapper():
     return _quant
 
 
-def _spread(df: DataFrame) -> DataFrame:
-    """Conditional input spread (see ``relational.spread_if_few_splits``),
-    applied to the bare input BEFORE the stats/codebook broadcast join so
-    the broadcast payload never rides through the exchange."""
-    from .relational import spread_if_few_splits
-
-    return spread_if_few_splits(df)
-
-
 def _quantize_with_stats(with_stats: DataFrame) -> DataFrame:
     return with_stats.mapInPandas(_quantize_mapper(), QUANT_SCHEMA)
 
@@ -147,52 +140,10 @@ def quantize_embeddings(embeddings: DataFrame) -> DataFrame:
     quantizes to 0. See the module docstring for the exactness and scale
     arguments.
     """
-    base = _spread(embeddings.select("vec_id", "embedding"))
+    # Spread the bare input BEFORE the stats broadcast join, so the
+    # broadcast payload never rides through the exchange.
+    base = spread_if_few_splits(embeddings.select("vec_id", "embedding"))
     return _quantize_with_stats(base.crossJoin(F.broadcast(_stats_row(embeddings))))
-
-
-#: Output schema of PQ assignment.
-PQ_SCHEMA = StructType(
-    [
-        StructField("vec_id", LongType()),
-        StructField("pq_codes", ArrayType(IntegerType())),
-        StructField("distortion", LongType()),
-    ]
-)
-
-
-def _pq_mapper(n_sub: int):
-    import numpy as np
-    import pandas as pd
-
-    def _assign(batches: Iterator) -> Iterator:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            cb = np.stack(
-                [
-                    np.asarray(c, dtype=np.int64)
-                    for c in pdf["codebook"].iloc[0]
-                ]
-            )  # (J, D)
-            x = np.stack(
-                [np.asarray(c, dtype=np.int64) for c in pdf["codes"]]
-            )  # (n, D)
-            n, d = x.shape
-            j, sub = cb.shape[0], d // n_sub
-            diff = x[:, None, :] - cb[None, :, :]  # (n, J, D)
-            d2 = (diff * diff).reshape(n, j, n_sub, sub).sum(axis=3)  # (n,J,M)
-            best = np.argmin(d2, axis=1)  # first minimum = smallest j
-            dist = d2.min(axis=1).sum(axis=1)
-            yield pd.DataFrame(
-                {
-                    "vec_id": pdf["vec_id"].to_numpy(),
-                    "pq_codes": list(best.astype(np.int32)),
-                    "distortion": dist,
-                }
-            )
-
-    return _assign
 
 
 def pq_codes(embeddings: DataFrame, n_sub: int = 8) -> DataFrame:
@@ -216,8 +167,10 @@ def pq_codes(embeddings: DataFrame, n_sub: int = 8) -> DataFrame:
     probe; zero data-sized shuffles.
     """
     codes, _, codebook, _ = _codes_and_codebook(embeddings)
-    return codes.crossJoin(F.broadcast(codebook)).mapInPandas(
-        _pq_mapper(n_sub), PQ_SCHEMA
+    # Every distance is an exact integer, so the double distortion is
+    # exactly the integer one.
+    return _pq_assign(codes, codebook, n_sub).withColumn(
+        "distortion", F.col("distortion").cast("long")
     )
 
 
@@ -238,7 +191,9 @@ def _codes_and_codebook(
     """
     stats = _stats_row(embeddings)
     base = embeddings.select("vec_id", "embedding")
-    codes = _quantize_with_stats(_spread(base).crossJoin(F.broadcast(stats)))
+    codes = _quantize_with_stats(
+        spread_if_few_splits(base).crossJoin(F.broadcast(stats))
+    )
 
     h = F.md5(F.col("vec_id").cast("string")).alias("h")
     anchors = (
@@ -257,9 +212,7 @@ def _codes_and_codebook(
         .localCheckpoint(eager=False)
     )
     codebook = anchor_codes.agg(
-        ordered_array_agg(F.col("j"), F.col("codes"), ascending=True).alias(
-            "codebook"
-        )
+        ordered_array_agg(F.col("j"), F.col("codes"), ascending=True).alias("cb")
     )
     return codes, anchor_codes, codebook, stats
 
@@ -267,7 +220,7 @@ def _codes_and_codebook(
 def _sub_index(dim: Column, n_sub: int, d: Column) -> Column:
     """Subspace index of ``dim`` (0-based) for ``n_sub`` contiguous blocks
     over ``d`` dimensions — ``floor(dim * n_sub / d)``, matching
-    ``_pq_mapper``'s reshape for any (D, n_sub) with ``n_sub | D``. The
+    ``_sub_dists``' reshape for any (D, n_sub) with ``n_sub | D``. The
     products are exact in double far below 2^53, so the truncating cast
     is an exact floor."""
     return ((dim * F.lit(n_sub)) / d).cast("int")
@@ -354,9 +307,7 @@ def pq_topk(embeddings: DataFrame, query_pred: Column, n_sub: int = 8) -> DataFr
     """
     k = 5
     codes, anchor_codes, codebook, stats = _codes_and_codebook(embeddings)
-    pq = codes.crossJoin(F.broadcast(codebook)).mapInPandas(
-        _pq_mapper(n_sub), PQ_SCHEMA
-    )
+    pq = _pq_assign(codes, codebook, n_sub)
     adc = _adc_table(embeddings, query_pred, anchor_codes, stats, n_sub)
 
     doc_m = pq.select("vec_id", F.posexplode("pq_codes").alias("m", "j"))
@@ -396,9 +347,7 @@ def ivfpq_topk(embeddings: DataFrame, query_pred: Column, nprobe: int = 2) -> Da
     centroid_modulus = 25
     n_sub = 8
     codes, anchor_codes, codebook, stats = _codes_and_codebook(embeddings)
-    pq = codes.crossJoin(F.broadcast(codebook)).mapInPandas(
-        _pq_mapper(n_sub), PQ_SCHEMA
-    )
+    pq = _pq_assign(codes, codebook, n_sub)
     centroids = embeddings.filter(
         (F.col("vec_id") % centroid_modulus) == 0
     ).select(F.col("vec_id").alias("centroid_id"), F.col("embedding").alias("c_emb"))
@@ -494,11 +443,23 @@ def _sub_dists(x, cb, n_sub):
     return acc
 
 
-def _lloyd_partials_mapper(n_sub: int):
-    """Assign each vector's sub-blocks to the nearest float sub-centroid
-    and emit PER-BATCH partial (count, per-dim integer sums) rows — the
+def _code_units(col) -> "object":
+    """(n, D) int64 matrix of a pandas column of int8 code arrays."""
+    import numpy as np
+
+    return np.stack([np.asarray(c, dtype=np.int64) for c in col])
+
+
+def _lloyd_partials_mapper(n_sub: int, col: str, units: Callable):
+    """Assign each vector's sub-blocks to the nearest sub-centroid and
+    emit PER-BATCH partial (count, per-dim integer sums) rows — the
     map-side combine of the Lloyd update step. Output is <= n_sub*J rows
-    per Arrow batch regardless of batch size."""
+    per Arrow batch regardless of batch size.
+
+    ``units`` maps the batch column ``col`` to an (n, D) matrix of
+    integer values: the int8 ``codes`` of trained PQ
+    (:func:`_code_units`), or the grid units of ``similarity.grid_kmeans``
+    (``n_sub`` = 1)."""
     import numpy as np
     import pandas as pd
 
@@ -509,9 +470,7 @@ def _lloyd_partials_mapper(n_sub: int):
             cb = np.stack(
                 [np.asarray(c, dtype=np.float64) for c in pdf["cb"].iloc[0]]
             )  # (J, D)
-            x = np.stack(
-                [np.asarray(c, dtype=np.int64) for c in pdf["codes"]]
-            )  # (n, D)
+            x = units(pdf[col])  # (n, D)
             n, d = x.shape
             # Ragged batches must fail loudly: the fused SUM(cnt)-per-dim
             # count downstream silently skews if dims ever vary; np.stack
@@ -519,10 +478,10 @@ def _lloyd_partials_mapper(n_sub: int):
             # batch-vs-codebook agreement (a real check, not an assert
             # that ``python -O`` strips).
             if d != cb.shape[1]:
-                raise ValueError(f"code dim {d} != codebook dim {cb.shape[1]}")
+                raise ValueError(f"{col} dim {d} != codebook dim {cb.shape[1]}")
             jn, sub = cb.shape[0], d // n_sub
             best = np.argmin(_sub_dists(x, cb, n_sub), axis=1)  # (n, n_sub)
-            xs = x.reshape(n, n_sub, sub)
+            xs = x.astype(np.int64).reshape(n, n_sub, sub)
             out = {"m": [], "j": [], "sub": [], "cnt": [], "sums": []}
             for m in range(n_sub):
                 for j in range(jn):
@@ -541,10 +500,10 @@ def _lloyd_partials_mapper(n_sub: int):
 
 
 def _assign_float_mapper(n_sub: int):
-    """Final PQ assignment against a float codebook: per-vector codes +
-    float distortion (sum over blocks of the min squared distance).
+    """Final PQ assignment against a codebook: per-vector codes + float
+    distortion (sum over blocks of the min squared distance).
     np.argmin takes the FIRST minimum, so ties break to the smallest
-    centroid index (same rule as the int path)."""
+    centroid index."""
     import numpy as np
     import pandas as pd
 
@@ -555,10 +514,7 @@ def _assign_float_mapper(n_sub: int):
             cb = np.stack(
                 [np.asarray(c, dtype=np.float64) for c in pdf["cb"].iloc[0]]
             )
-            x = np.stack(
-                [np.asarray(c, dtype=np.int64) for c in pdf["codes"]]
-            )
-            d2 = _sub_dists(x, cb, n_sub)  # (n, J, n_sub)
+            d2 = _sub_dists(_code_units(pdf["codes"]), cb, n_sub)  # (n, J, n_sub)
             best = np.argmin(d2, axis=1)
             # Explicit left-to-right chain over blocks (NOT np.sum, whose
             # pairwise reduction order is an implementation detail) — the
@@ -577,6 +533,14 @@ def _assign_float_mapper(n_sub: int):
             )
 
     return _assign
+
+
+def _pq_assign(codes: DataFrame, cb_row: DataFrame, n_sub: int) -> DataFrame:
+    """(vec_id, pq_codes, distortion) of the int8 ``codes`` against the
+    one-row codebook ``cb_row`` (the anchor codebook or a trained one)."""
+    return codes.crossJoin(F.broadcast(cb_row)).mapInPandas(
+        _assign_float_mapper(n_sub), _PQF_SCHEMA
+    )
 
 
 def _cb_row_from_rows(rows: DataFrame) -> DataFrame:
@@ -685,6 +649,45 @@ def _lloyd_update(
     return _cb_row_from_rows(merged)
 
 
+def _lloyd(
+    base: DataFrame,
+    cb_row: DataFrame,
+    n_iter: int,
+    n_sub: int,
+    col: str,
+    units: Callable,
+    mean: Callable[[Column, Column], Column],
+) -> DataFrame:
+    """``n_iter`` Lloyd rounds from the one-row codebook ``cb_row`` over
+    ``base``'s column ``col`` (see :func:`_lloyd_partials_mapper`);
+    returns the last codebook as :func:`_lloyd_update` checkpointed it.
+    Shared by :func:`pq_codes_trained` and ``similarity.grid_kmeans``.
+
+    Scale shape per iteration: ONE corpus-sized Arrow map stage that
+    emits <= n_sub*J partial (count, per-dim sum) rows PER BATCH (the
+    map-side combine of the centroid update — never a data-sized
+    shuffle), then a tiny J·D-row aggregation rebuilds the codebook. The
+    codebook rides between stages as ONE lazily checkpointed row, so
+    iteration i+1 never replays iteration i's plan."""
+    for _ in range(n_iter):
+        partials = base.crossJoin(F.broadcast(cb_row)).mapInPandas(
+            _lloyd_partials_mapper(n_sub, col, units), _TRAIN_PARTIAL_SCHEMA
+        )
+        # Each (batch, m, j) partial carries the per-(m, j) count; dim =
+        # m·sub + dl determines m, so grouping by (j, dim) keys the same
+        # clusters as (m, j, dim).
+        exploded = partials.select(
+            "j", "cnt", "sub", "m", F.posexplode("sums").alias("dl", "s")
+        ).select(
+            "j",
+            (F.col("m") * F.col("sub") + F.col("dl")).alias("dim"),
+            "s",
+            "cnt",
+        )
+        cb_row = _lloyd_update(exploded, cb_row, mean)
+    return cb_row
+
+
 def pq_codes_trained(embeddings: DataFrame, n_iter: int = 2) -> DataFrame:
     """PQ codes from a TRAINED per-subspace codebook — ``n_iter`` Lloyd
     (k-means) iterations over the int8 code space, initialized from the
@@ -704,15 +707,10 @@ def pq_codes_trained(embeddings: DataFrame, n_iter: int = 2) -> DataFrame:
     to a full oracle, so a DuckDB replay with the literal chained sums
     reproduces every double bit-for-bit.
 
-    Scale shape per iteration: ONE corpus-sized Arrow map stage that
-    emits <= n_sub*J partial (count, per-dim sum) rows PER BATCH (the
-    map-side combine of the centroid update — never a data-sized
-    shuffle), then a tiny n_sub*J*sub-row aggregation rebuilds the
-    codebook; empty clusters keep their previous centroid (the union-seed
-    merge of :func:`_lloyd_update`). The codebook rides between
-    stages as ONE lazily checkpointed row, and the corpus code stream is
-    checkpointed once, so iteration i+1 and the final assignment never
-    replay iteration i's plan.
+    Scale shape: the :func:`_lloyd` rounds (empty clusters keep their
+    previous centroid, the union-seed merge of :func:`_lloyd_update`)
+    over the corpus code stream, checkpointed once, so the rounds and
+    the final assignment never replay the quantize pass.
     """
     n_sub = 8
     codes, _, codebook_int, _ = _codes_and_codebook(embeddings)
@@ -720,33 +718,20 @@ def pq_codes_trained(embeddings: DataFrame, n_iter: int = 2) -> DataFrame:
     # Float init = the int anchor codebook. (transform here is one-row
     # plan sugar over J*D values, not a hot-path HOF.)
     cb_row = codebook_int.select(
-        F.transform(
-            "codebook", lambda v: F.transform(v, lambda x: x.cast("double"))
-        ).alias("cb")
+        F.transform("cb", lambda v: F.transform(v, lambda x: x.cast("double"))).alias(
+            "cb"
+        )
     ).localCheckpoint(eager=False)
-
-    for _ in range(n_iter):
-        partials = codes.crossJoin(F.broadcast(cb_row)).mapInPandas(
-            _lloyd_partials_mapper(n_sub), _TRAIN_PARTIAL_SCHEMA
-        )
-        # Each (batch, m, j) partial carries the per-(m, j) count; dim =
-        # m·sub + dl determines m, so grouping by (j, dim) keys the same
-        # clusters as (m, j, dim).
-        exploded = partials.select(
-            "j", "cnt", "sub", "m", F.posexplode("sums").alias("dl", "s")
-        ).select(
-            "j",
-            (F.col("m") * F.col("sub") + F.col("dl")).alias("dim"),
-            "s",
-            "cnt",
-        )
-        cb_row = _lloyd_update(
-            exploded, cb_row, lambda s, n: s.cast("double") / n.cast("double")
-        )
-
-    return codes.crossJoin(F.broadcast(cb_row)).mapInPandas(
-        _assign_float_mapper(n_sub), _PQF_SCHEMA
+    cb_row = _lloyd(
+        codes,
+        cb_row,
+        n_iter=n_iter,
+        n_sub=n_sub,
+        col="codes",
+        units=_code_units,
+        mean=lambda s, n: s.cast("double") / n.cast("double"),
     )
+    return _pq_assign(codes, cb_row, n_sub)
 
 
 # --------------------------------------------------------------------------
@@ -817,27 +802,23 @@ def _adc_res_mapper(n_sub: int):
                 [np.asarray(c, dtype=np.float64) for c in pdf["cb"].iloc[0]]
             )
             jn = cb.shape[0]
-            frames = []
-            for _, row in pdf.iterrows():
-                qres = np.asarray(row["q_emb"], dtype=np.float64) - np.asarray(
-                    row["c_emb"], dtype=np.float64
-                )
-                d2 = _sub_dists(qres[None, :], cb, n_sub)[0]  # (J, n_sub)
-                m_idx, j_idx = np.meshgrid(
-                    np.arange(n_sub), np.arange(jn), indexing="ij"
-                )
-                frames.append(
-                    pd.DataFrame(
-                        {
-                            "query_id": row["query_id"],
-                            "q_centroid": row["q_centroid"],
-                            "m": m_idx.ravel().astype(np.int32),
-                            "j": j_idx.ravel().astype(np.int32),
-                            "t": d2.T.ravel(),
-                        }
-                    )
-                )
-            yield pd.concat(frames, ignore_index=True)
+            qres = np.stack(
+                [np.asarray(a, dtype=np.float64) for a in pdf["q_emb"]]
+            ) - np.stack([np.asarray(a, dtype=np.float64) for a in pdf["c_emb"]])
+            d2 = _sub_dists(qres, cb, n_sub)  # (n, J, n_sub)
+            per_row = n_sub * jn
+            yield pd.DataFrame(
+                {
+                    "query_id": np.repeat(pdf["query_id"].to_numpy(), per_row),
+                    "q_centroid": np.repeat(pdf["q_centroid"].to_numpy(), per_row),
+                    # m-major, j-minor within each input row
+                    "m": np.tile(np.repeat(np.arange(n_sub), jn), len(pdf)).astype(
+                        np.int32
+                    ),
+                    "j": np.tile(np.arange(jn), n_sub * len(pdf)).astype(np.int32),
+                    "t": d2.transpose(0, 2, 1).ravel(),
+                }
+            )
 
     return _tables
 

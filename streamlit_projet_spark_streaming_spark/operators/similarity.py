@@ -17,6 +17,14 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    ArrayType,
+    FloatType,
+    IntegerType,
+    LongType,
+    StructField,
+    StructType,
+)
 
 from .numeric import ratio_round
 from .relational import spread_if_few_splits
@@ -36,25 +44,22 @@ def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (l2_norm(a) * l2_norm(b))
 
 
-def brute_force_topk(
-    embeddings: DataFrame,
-    query_pred: Column,
-    k: int = 5,
-) -> DataFrame:
-    """Exact cosine top-k: every query row × every corpus row, ranked.
+def cosine_pairs(embeddings: DataFrame, query_pred: Column) -> DataFrame:
+    """Every (query, corpus vector) pair but the self pair, scored:
+    ``(query_id, query_label, neighbor_id, neighbor_label, cos)``, the
+    unrounded cosine. Callers add their pair predicate and rank.
 
     The query side is filtered first and broadcast — so the "crossJoin" is
     a broadcast nested loop over the corpus scan: one pass over the big
     side, no shuffle of it. Norms are hoisted to one column per ROW (not
     per pair) — cuts per-pair arithmetic from 3 dots to 1, with the exact
     same IEEE ops on each value, so results are bit-identical to the naive
-    form (and to the oracle). Ranking happens on the UNROUNDED cosine with
-    vec_id as tie-breaker (determinism rule 1); rounding only at output.
-
-    This is the correctness baseline; ``ivf_topk`` is the scale path.
+    form (and to the oracle). Label columns a caller never reads are
+    pruned from both scans.
     """
     q = embeddings.filter(query_pred).select(
         F.col("vec_id").alias("query_id"),
+        F.col("label").alias("query_label"),
         F.col("embedding").alias("q_emb"),
         l2_norm(F.col("embedding")).alias("q_norm"),
     )
@@ -64,28 +69,56 @@ def brute_force_topk(
     # splits and the spread skips its shuffle entirely.)
     c = spread_if_few_splits(embeddings).select(
         F.col("vec_id").alias("neighbor_id"),
+        F.col("label").alias("neighbor_label"),
         F.col("embedding").alias("c_emb"),
         l2_norm(F.col("embedding")).alias("c_norm"),
     )
-    scored = (
+    return (
         c.crossJoin(F.broadcast(q))
         .filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn(
-            "cos",
-            dot(F.col("q_emb"), F.col("c_emb")) / (F.col("q_norm") * F.col("c_norm")),
+        .select(
+            "query_id",
+            "query_label",
+            "neighbor_id",
+            "neighbor_label",
+            (
+                dot(F.col("q_emb"), F.col("c_emb"))
+                / (F.col("q_norm") * F.col("c_norm"))
+            ).alias("cos"),
         )
     )
+
+
+def _top_k(
+    scored: DataFrame, k: int, keep: tuple[str, ...] = ("query_id", "neighbor_id")
+) -> DataFrame:
+    """Per-query top-``k`` of :func:`cosine_pairs` rows, ranked on the
+    UNROUNDED cosine with neighbor_id as tie-breaker (determinism rule
+    1); rounding only at output. ``keep`` names the columns carried
+    before ``cosine`` and ``rnk``."""
     w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
     return (
         scored.withColumn("rnk", F.row_number().over(w))
         .filter(F.col("rnk") <= k)
         .select(
-            "query_id",
-            "neighbor_id",
+            *keep,
             F.round("cos", 4).alias("cosine"),
             F.col("rnk").alias("rnk"),
         )
     )
+
+
+def brute_force_topk(
+    embeddings: DataFrame,
+    query_pred: Column,
+    k: int = 5,
+) -> DataFrame:
+    """Exact cosine top-k: every query row × every corpus row
+    (:func:`cosine_pairs`), ranked.
+
+    This is the correctness baseline; ``ivf_topk`` is the scale path.
+    """
+    return _top_k(cosine_pairs(embeddings, query_pred), k)
 
 
 def hard_negatives(embeddings: DataFrame, query_pred: Column) -> DataFrame:
@@ -95,46 +128,17 @@ def hard_negatives(embeddings: DataFrame, query_pred: Column) -> DataFrame:
     (DPR/Contriever lineage: negatives that are semantically close but
     wrongly labeled teach the model the decision boundary).
 
-    Same plan shape as ``brute_force_topk`` (broadcast filtered query
-    side × one corpus pass, hoisted norms, unrounded-cosine ranking with
-    a vec_id tie-breaker); the label inequality rides the pair filter
-    inside the same codegen stage. The scale path swaps the corpus scan
-    for the IVF-bucketed candidate set exactly as ``ivf_topk`` does —
-    the label filter composes unchanged.
+    :func:`cosine_pairs` with the label inequality as the pair filter
+    (it rides the same codegen stage; the self-pair filter is a no-op
+    here: a self pair shares its label, and NULL labels fail both). The
+    scale path swaps the corpus scan for the IVF-bucketed candidate set
+    exactly as ``ivf_topk`` does — the label filter composes unchanged.
     """
-    k = 5
-    q = embeddings.filter(query_pred).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("label").alias("query_label"),
-        F.col("embedding").alias("q_emb"),
-        l2_norm(F.col("embedding")).alias("q_norm"),
+    scored = cosine_pairs(embeddings, query_pred).filter(
+        F.col("neighbor_label") != F.col("query_label")
     )
-    c = spread_if_few_splits(embeddings).select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("label").alias("neighbor_label"),
-        F.col("embedding").alias("c_emb"),
-        l2_norm(F.col("embedding")).alias("c_norm"),
-    )
-    scored = (
-        c.crossJoin(F.broadcast(q))
-        .filter(F.col("neighbor_label") != F.col("query_label"))
-        .withColumn(
-            "cos",
-            dot(F.col("q_emb"), F.col("c_emb")) / (F.col("q_norm") * F.col("c_norm")),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select(
-            "query_id",
-            "query_label",
-            "neighbor_id",
-            "neighbor_label",
-            F.round("cos", 4).alias("cosine"),
-            F.col("rnk").alias("rnk"),
-        )
+    return _top_k(
+        scored, 5, ("query_id", "query_label", "neighbor_id", "neighbor_label")
     )
 
 
@@ -485,63 +489,18 @@ def _gk_units(col) -> "object":
     return np.floor(x * float(GRID_KMEANS_UNIT))
 
 
-def _gk_d2(u, cb):
-    """(n, k) matrix of exact integer squared distances between unit
-    matrix ``u`` and unit codebook ``cb`` — every value integer-valued
-    < 2^53, so float64 arithmetic is exact and np.argmin's first-minimum
-    tie matches the oracle's ORDER BY d2, j."""
-    diff = u[:, None, :] - cb[None, :, :]
-    return (diff * diff).sum(axis=2)
-
-
-def _gk_partials_mapper():
-    """Per-batch Lloyd-update partials: assign each vector to its nearest
-    grid centroid and emit (j, cnt, per-dim unit sums) — ≤ k rows per
-    Arrow batch, the map-side combine of the centroid update."""
-    import numpy as np
-    import pandas as pd
-
-    def _partials(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            cb = np.stack(
-                [np.asarray(c, dtype=np.float64) for c in pdf["cb"].iloc[0]]
-            )
-            u = _gk_units(pdf["embedding"])
-            # Ragged batches must fail loudly: the fused SUM(cnt)-per-dim
-            # count downstream silently skews if dims ever vary; np.stack
-            # already rejects in-batch raggedness, this pins
-            # batch-vs-codebook agreement (a real check, not an assert
-            # that ``python -O`` strips).
-            if u.shape[1] != cb.shape[1]:
-                raise ValueError(
-                    f"embedding dim {u.shape[1]} != codebook dim {cb.shape[1]}"
-                )
-            best = np.argmin(_gk_d2(u, cb), axis=1)
-            ui = u.astype(np.int64)
-            out = {"j": [], "cnt": [], "sums": []}
-            for j in range(cb.shape[0]):
-                mask = best == j
-                c = int(mask.sum())
-                if c == 0:
-                    continue
-                out["j"].append(j)
-                out["cnt"].append(c)
-                out["sums"].append(ui[mask].sum(axis=0).tolist())
-            yield pd.DataFrame(out)
-
-    return _partials
-
-
 def _gk_assign_mapper(with_d2: bool = False):
     """Final assignment pass: (vec_id, embedding, centroid_id[, d2]) —
     the embedding passes through so consumers can score without
     re-joining the corpus; ``with_d2`` adds the exact integer squared
     distance to the winning centroid (min is order-independent; every
-    value integer-valued < 2^53, so the int64 cast is exact)."""
+    value integer-valued < 2^53, so the float64 distances are exact, the
+    int64 cast is exact, and np.argmin's first-minimum tie matches the
+    oracle's ORDER BY d2, j)."""
     import numpy as np
     import pandas as pd
+
+    from .quantize import _sub_dists
 
     def _assign(batches):
         for pdf in batches:
@@ -550,8 +509,7 @@ def _gk_assign_mapper(with_d2: bool = False):
             cb = np.stack(
                 [np.asarray(c, dtype=np.float64) for c in pdf["cb"].iloc[0]]
             )
-            u = _gk_units(pdf["embedding"])
-            d2 = _gk_d2(u, cb)
+            d2 = _sub_dists(_gk_units(pdf["embedding"]), cb, 1)[:, :, 0]
             best = np.argmin(d2, axis=1)
             out = {
                 "vec_id": pdf["vec_id"].to_numpy(),
@@ -563,6 +521,16 @@ def _gk_assign_mapper(with_d2: bool = False):
             yield pd.DataFrame(out)
 
     return _assign
+
+
+#: Output of :func:`_gk_assign_mapper` without ``d2``.
+_GK_ASSIGN_SCHEMA = StructType(
+    [
+        StructField("vec_id", LongType()),
+        StructField("embedding", ArrayType(FloatType())),
+        StructField("centroid_id", IntegerType()),
+    ]
+)
 
 
 def grid_kmeans(
@@ -580,42 +548,13 @@ def grid_kmeans(
     vectors as the last Lloyd update checkpointed it (consumers take
     it as it is; ``quantize._cb_rows`` gives its (j, dim, val) rows).
 
-    Scale shape per iteration: ONE corpus-sized Arrow map stage emitting
-    ≤ k partial rows per batch (the update's map-side combine — never a
-    data-sized shuffle), then a k·D-row aggregate rebuilds the codebook;
-    the codebook rides between stages as one lazily checkpointed row.
-    Identical to the trained-PQ Lloyd plan (quantize.pq_codes_trained),
-    with integer-grid centroids instead of fractional floats.
+    Training is ``quantize._lloyd`` — the trained-PQ Lloyd loop with one
+    sub-block over the grid units, and integer-grid centroids (the
+    half-away integer-unit mean) instead of fractional floats.
     """
-    from pyspark.sql.types import (
-        ArrayType,
-        FloatType,
-        IntegerType,
-        LongType,
-        StructField,
-        StructType,
-    )
-
-    from .quantize import _cb_row_from_rows, _lloyd_update
+    from .quantize import _cb_row_from_rows, _lloyd
 
     n_clusters = 8
-    n_iter = 2
-    partial_schema = StructType(
-        [
-            StructField("j", IntegerType()),
-            StructField("cnt", LongType()),
-            StructField("sums", ArrayType(LongType())),
-        ]
-    )
-    assign_fields = [
-        StructField("vec_id", LongType()),
-        StructField("embedding", ArrayType(FloatType())),
-        StructField("centroid_id", IntegerType()),
-    ]
-    if with_d2:
-        assign_fields.append(StructField("d2", LongType()))
-    assign_schema = StructType(assign_fields)
-
     base = spread_if_few_splits(embeddings.select("vec_id", "embedding"))
 
     h = F.md5(F.col("vec_id").cast("string")).alias("h")
@@ -637,24 +576,25 @@ def grid_kmeans(
             .alias("val"),
         )
     )
-
-    for _ in range(n_iter):
-        partials = base.crossJoin(F.broadcast(cb_row)).mapInPandas(
-            _gk_partials_mapper(), partial_schema
-        )
-        # The mean is the exact half-away integer-unit quotient.
-        exploded = partials.select(
-            "j", F.posexplode("sums").alias("dim", "s"), "cnt"
-        )
-        cb_row = _lloyd_update(
-            exploded, cb_row, lambda s, n: ratio_round(s, n, 0)
-        )
+    # The mean is the exact half-away integer-unit quotient.
+    cb_row = _lloyd(
+        base,
+        cb_row,
+        n_iter=2,
+        n_sub=1,
+        col="embedding",
+        units=_gk_units,
+        mean=lambda s, n: ratio_round(s, n, 0),
+    )
 
     # NOT checkpointed here: the assignment is corpus-sized and both
     # callers consume it exactly once (semantic_dedup checkpoints its
     # own repartitioned projection before fanning out join sides).
+    schema = _GK_ASSIGN_SCHEMA
+    if with_d2:
+        schema = StructType([*schema.fields, StructField("d2", LongType())])
     assigned = base.crossJoin(F.broadcast(cb_row)).mapInPandas(
-        _gk_assign_mapper(with_d2), assign_schema
+        _gk_assign_mapper(with_d2), schema
     )
     return assigned, cb_row
 
@@ -685,27 +625,12 @@ def ivf_cell_stats(
     rows per batch (map-side combine — never a data-sized shuffle), a
     k·D-row aggregate, and a k-row join against the codebook spine.
     """
-    from pyspark.sql.types import (
-        ArrayType,
-        IntegerType,
-        LongType,
-        StructField,
-        StructType,
-    )
+    from .quantize import _TRAIN_PARTIAL_SCHEMA, _cb_rows, _lloyd_partials_mapper
 
-    from .numeric import ratio_round
-    from .quantize import _cb_rows
-
-    partial_schema = StructType(
-        [
-            StructField("j", IntegerType()),
-            StructField("cnt", LongType()),
-            StructField("sums", ArrayType(LongType())),
-        ]
-    )
     base = spread_if_few_splits(embeddings.select("vec_id", "embedding"))
+    # one sub-block (n_sub = 1): m = 0, so the sums' position is the dim
     partials = base.crossJoin(F.broadcast(codebook_row)).mapInPandas(
-        _gk_partials_mapper(), partial_schema
+        _lloyd_partials_mapper(1, "embedding", _gk_units), _TRAIN_PARTIAL_SCHEMA
     )
     # FUSED stats (r10 opt, the grid_kmeans Lloyd-update fusion): ONE
     # groupBy(j, dim) aggregate carries sums AND counts (cnt repeats
@@ -926,22 +851,6 @@ def apply_cell_plan(
     shuffle, never corpus) so a downstream centroid update
     (:func:`post_apply_codebook`) needs no corpus-sized re-join.
     """
-    from pyspark.sql.types import (
-        ArrayType,
-        FloatType,
-        IntegerType,
-        LongType,
-        StructField,
-        StructType,
-    )
-
-    assign_schema = StructType(
-        [
-            StructField("vec_id", LongType()),
-            StructField("embedding", ArrayType(FloatType())),
-            StructField("centroid_id", IntegerType()),
-        ]
-    )
     kk = plan.agg(F.count(F.lit(1)).cast("long").alias("_k"))
     # split cells with their new-id base offset (exclusive running sum
     # over k rows — the single-partition window is k-sized, never data)
@@ -955,7 +864,7 @@ def apply_cell_plan(
     def _assigned() -> DataFrame:
         base = spread_if_few_splits(embeddings.select("vec_id", "embedding"))
         return base.crossJoin(F.broadcast(codebook_row)).mapInPandas(
-            _gk_assign_mapper(), assign_schema
+            _gk_assign_mapper(), _GK_ASSIGN_SCHEMA
         )
 
     # pass 1: everything except split cells — relabel in the scan
@@ -1691,13 +1600,6 @@ def gram_partial_totals(
     docstring.
     """
     from collections.abc import Iterator
-
-    from pyspark.sql.types import (
-        IntegerType,
-        LongType,
-        StructField,
-        StructType,
-    )
 
     schema = StructType(
         [

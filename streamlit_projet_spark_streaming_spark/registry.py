@@ -237,25 +237,60 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return load_table(spark, name, sf_dir)
 
 
-def _doc_tokens_spread(spark: SparkSession, docs: DataFrame) -> DataFrame:
-    """(doc_id, pos0, w) position-tagged tokens with the doc-keyed
-    spread applied BEFORE the posexplode: the downstream per-doc window
-    exchange is byte-small, so AQE would coalesce it to 1 task and the
-    gram hashing + sliding window — the CPU of these queries — would
-    run serially (the CLAUDE.md byte-small/CPU-bound trap; the r7
-    winnowing bench regression: 2.0 -> 0.7 s warm at sf0.1 once
+#: The undirected co-purchase edge set of an ``lp(l_orderkey,
+#: l_partkey)`` CTE, as the graph oracles write it.
+_UND_SQL = """und AS MATERIALIZED (
+      SELECT DISTINCT a.l_partkey AS src, b.l_partkey AS dst
+      FROM lp a JOIN lp b
+        ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey)"""
+
+
+def _lineitem_1998(spark: SparkSession, sf: str) -> DataFrame:
+    """Line items shipped in 1998 or later: the co-purchase graph
+    builders' input."""
+    return _t(spark, sf, "lineitem").filter(
+        F.col("l_shipdate") >= F.lit("1998-01-01 00:00:00").cast("timestamp")
+    )
+
+
+def _doc_kgrams(spark: SparkSession, docs: DataFrame, k: int) -> DataFrame:
+    """(doc_id, pos, sh): every window of ``k`` consecutive normalized
+    tokens of each document, ``pos`` 1-based, ``sh`` the tokens joined
+    by ' ' (documents shorter than ``k`` have none). Shared by the
+    winnowing / recall-audit / longest-common-run builders.
+
+    The doc-keyed spread is applied BEFORE the posexplode: the
+    downstream per-doc window exchange is byte-small, so AQE would
+    coalesce it to 1 task and the gram hashing + sliding window — the
+    CPU of these queries — would run serially (the byte-small /
+    CPU-bound trap; winnowing went 2.0 -> 0.7 s warm at sf0.1 once
     pinned). Repartitioning the DOCS side (not the exploded tokens)
     shuffles one row per document instead of one per token AND
     parallelizes the explode itself; Generate preserves the child's
-    hash partitioning on doc_id, so the window adds no extra exchange
-    (r8 review catch). Shared by the winnowing/recall-audit/
-    longest-common-run builders."""
+    hash partitioning on doc_id, so the window adds no extra
+    exchange."""
+    from pyspark.sql import Window
+
     from .operators.dedup import _norm
 
     par = spark.sparkContext.defaultParallelism
-    return docs.repartition(par, "doc_id").select(
+    toks = docs.repartition(par, "doc_id").select(
         "doc_id",
         F.posexplode(F.split(_norm(F.col("text")), " ")).alias("pos0", "w"),
+    )
+    wl = Window.partitionBy("doc_id").orderBy("pos0")
+    gram = F.concat_ws(
+        " ", F.col("w"), *[F.lead("w", j).over(wl) for j in range(1, k)]
+    )
+    return (
+        toks.select(
+            "doc_id",
+            (F.col("pos0") + 1).alias("pos"),
+            gram.alias("sh"),
+            F.lead("w", k - 1).over(wl).alias("w_last"),
+        )
+        .filter(F.col("w_last").isNotNull())
+        .drop("w_last")
     )
 
 
@@ -1193,9 +1228,7 @@ def _dedup_method_agreement(spark: SparkSession, sf: str) -> DataFrame:
         ("minhash_lsh", mh),
         ("simhash", _dedup.simhash_pairs(docs).select("doc_a", "doc_b")),
     ]
-    n_exact_row = exact.agg(
-        F.count(F.lit(1)).alias("n_exact")
-    ).localCheckpoint(eager=False)
+    n_exact_row = exact.agg(F.count(F.lit(1)).alias("n_exact"))
     # Per-method join+agg chains, NOT a union of tagged pair tables
     # into one join: measured 1.5–10 s SLOWER as a single fused DAG
     # (r9 A/B — separate jobs schedule the three audited pipelines
@@ -1291,6 +1324,23 @@ _COS_SQL = (
     "list_dot_product({a}, {b}) / "
     "(sqrt(list_dot_product({a}, {a})) * sqrt(list_dot_product({b}, {b})))"
 )
+#: Top-5 tail of the cosine top-k oracles over a
+#: ``scored(query_id, neighbor_id, cos)`` CTE.
+_TOP5_COS_SQL = """SELECT query_id, neighbor_id, ROUND(cos, 4) AS cosine,
+           CAST(rnk AS INTEGER) AS rnk
+    FROM (SELECT *, ROW_NUMBER() OVER (
+            PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rnk
+          FROM scored)
+    WHERE rnk <= 5"""
+#: Body of the ``assigned`` CTE: each ``e`` vector's nearest ``cent``
+#: centroid by cosine, centroid_id tie-break (``similarity.ivf_assign``).
+_IVF_ASSIGN_SQL = f"""SELECT vec_id, emb, centroid_id
+      FROM (SELECT e.vec_id, e.emb, c.centroid_id,
+                   ROW_NUMBER() OVER (PARTITION BY e.vec_id
+                     ORDER BY {_COS_SQL.format(a="e.emb", b="c.c_emb")} DESC,
+                              c.centroid_id) AS rn
+            FROM e, cent c)
+      WHERE rn = 1"""
 
 _register(
     "similarity_topk_bruteforce",
@@ -1302,12 +1352,7 @@ _register(
              {_COS_SQL.format(a="q.q_emb", b="e.emb")} AS cos
       FROM e, q WHERE e.vec_id <> q.query_id
     )
-    SELECT query_id, neighbor_id, ROUND(cos, 4) AS cosine,
-           CAST(rnk AS INTEGER) AS rnk
-    FROM (SELECT *, ROW_NUMBER() OVER (
-            PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rnk
-          FROM scored)
-    WHERE rnk <= 5
+    {_TOP5_COS_SQL}
     """,
     doc="Brute-force cosine top-5 for 10 query vectors: broadcast query "
     "side × one corpus pass; the exact ANN baseline",
@@ -1359,13 +1404,7 @@ _register(
     cent AS (SELECT vec_id AS centroid_id, emb AS c_emb FROM e
              WHERE vec_id % 25 = 0),
     assigned AS (
-      SELECT vec_id, emb, centroid_id
-      FROM (SELECT e.vec_id, e.emb, c.centroid_id,
-                   ROW_NUMBER() OVER (PARTITION BY e.vec_id
-                     ORDER BY {_COS_SQL.format(a="e.emb", b="c.c_emb")} DESC,
-                              c.centroid_id) AS rn
-            FROM e, cent c)
-      WHERE rn = 1
+      {_IVF_ASSIGN_SQL}
     ),
     q AS (SELECT vec_id AS query_id, emb AS q_emb, centroid_id AS q_centroid
           FROM assigned WHERE vec_id < 10),
@@ -1375,12 +1414,7 @@ _register(
       FROM assigned a JOIN q ON a.centroid_id = q.q_centroid
       WHERE a.vec_id <> q.query_id
     )
-    SELECT query_id, neighbor_id, ROUND(cos, 4) AS cosine,
-           CAST(rnk AS INTEGER) AS rnk
-    FROM (SELECT *, ROW_NUMBER() OVER (
-            PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rnk
-          FROM scored)
-    WHERE rnk <= 5
+    {_TOP5_COS_SQL}
     """,
     doc="IVF approximate top-5 (nprobe=1, deterministic centroids): "
     "per-query work scales with cluster size, not corpus size — the "
@@ -2640,13 +2674,7 @@ _register(
     cent AS (SELECT vec_id AS centroid_id, emb AS c_emb FROM e
              WHERE vec_id % 25 = 0),
     assigned AS (
-      SELECT vec_id, emb, centroid_id
-      FROM (SELECT e.vec_id, e.emb, c.centroid_id,
-                   ROW_NUMBER() OVER (PARTITION BY e.vec_id
-                     ORDER BY {_COS_SQL.format(a="e.emb", b="c.c_emb")} DESC,
-                              c.centroid_id) AS rn
-            FROM e, cent c)
-      WHERE rn = 1
+      {_IVF_ASSIGN_SQL}
     ),
     q AS (SELECT vec_id AS query_id, emb AS q_emb FROM e WHERE vec_id < 10),
     probe AS (
@@ -2664,12 +2692,7 @@ _register(
       FROM assigned a JOIN probe p ON a.centroid_id = p.centroid_id
       WHERE a.vec_id <> p.query_id
     )
-    SELECT query_id, neighbor_id, ROUND(cos, 4) AS cosine,
-           CAST(rnk AS INTEGER) AS rnk
-    FROM (SELECT *, ROW_NUMBER() OVER (
-            PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rnk
-          FROM scored)
-    WHERE rnk <= 5
+    {_TOP5_COS_SQL}
     """,
     doc="IVF top-5 with nprobe=2: each query searches its two nearest "
     "clusters - recall rises monotonically with nprobe while per-query "
@@ -3071,12 +3094,7 @@ _register(
       JOIN e n ON n.vec_id = a.vec_id
       WHERE a.vec_id <> p.query_id
     )
-    SELECT query_id, neighbor_id, ROUND(cos, 4) AS cosine,
-           CAST(rnk AS INTEGER) AS rnk
-    FROM (SELECT *, ROW_NUMBER() OVER (
-            PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rnk
-          FROM scored)
-    WHERE rnk <= 5
+    {_TOP5_COS_SQL}
     """,
     doc="IVF top-5 with a TRAINED k-means coarse quantizer "
     "(similarity.grid_kmeans, 2 grid-Lloyd rounds) - the production ANN "
@@ -3906,6 +3924,22 @@ _register(
 )
 
 
+def _cluster_rollup(labels: DataFrame, n_col: str, members_col: str) -> DataFrame:
+    """Per ``cluster_id`` of (doc_id, cluster_id) labels: the member
+    count as ``n_col`` and the ascending member ids joined by ' ' as
+    ``members_col`` — a string, because the result canonicalizer
+    cannot hash list cells (the multimodal_features pattern)."""
+    return labels.groupBy("cluster_id").agg(
+        F.count(F.lit(1)).alias(n_col),
+        F.array_join(
+            _rel.ordered_array_agg(
+                F.col("doc_id"), F.col("doc_id"), ascending=True
+            ).cast("array<string>"),
+            " ",
+        ).alias(members_col),
+    )
+
+
 def _embedding_semantic_clusters(spark: SparkSession, sf: str) -> DataFrame:
     """Semantic duplicate CLUSTERS: connected components over the
     SemDeDup within-cluster pair graph, rolled up per component — the
@@ -3921,19 +3955,7 @@ def _embedding_semantic_clusters(spark: SparkSession, sf: str) -> DataFrame:
             F.col("vec_a").alias("doc_a"), F.col("vec_b").alias("doc_b")
         )
     )
-    return (
-        labels.groupBy("cluster_id")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_members"),
-            F.array_join(
-                _rel.ordered_array_agg(
-                    F.col("doc_id"), F.col("doc_id"), ascending=True
-                ).cast("array<string>"),
-                " ",
-            ).alias("members"),
-        )
-        .orderBy("cluster_id")
-    )
+    return _cluster_rollup(labels, "n_members", "members").orderBy("cluster_id")
 
 
 _register(
@@ -6710,19 +6732,7 @@ def _dedup_minhash_clusters(spark: SparkSession, sf: str) -> DataFrame:
     oracle nests both exact twins (MH pipeline CTEs + recursive-CTE
     components)."""
     pairs = _dedup_ops.minhash_lsh_pairs(_t(spark, sf, "documents"))
-    clusters = _dedup_ops.duplicate_clusters(pairs)
-    return clusters.groupBy("cluster_id").agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        # Member list joined to a ' '-separated string: the driver's
-        # canonicalizer cannot hash list cells (r6 latent red row —
-        # the multimodal_features pattern).
-        F.array_join(
-            _rel.ordered_array_agg(
-                F.col("doc_id"), F.col("doc_id"), ascending=True
-            ).cast("array<string>"),
-            " ",
-        ).alias("docs"),
-    )
+    return _cluster_rollup(_dedup_ops.duplicate_clusters(pairs), "n_docs", "docs")
 
 
 _register(
@@ -6754,16 +6764,7 @@ def _dedup_simhash_clusters(spark: SparkSession, sf: str) -> DataFrame:
     pairs = _dedup_ops.simhash_pairs(_t(spark, sf, "documents")).select(
         "doc_a", "doc_b"
     )
-    clusters = _dedup_ops.duplicate_clusters(pairs)
-    return clusters.groupBy("cluster_id").agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.array_join(
-            _rel.ordered_array_agg(
-                F.col("doc_id"), F.col("doc_id"), ascending=True
-            ).cast("array<string>"),
-            " ",
-        ).alias("docs"),
-    )
+    return _cluster_rollup(_dedup_ops.duplicate_clusters(pairs), "n_docs", "docs")
 
 
 _register(
@@ -8043,10 +8044,7 @@ def _part_copurchase_pagerank(spark: SparkSession, sf: str) -> DataFrame:
     score table checkpointed per round."""
     from .operators.graph import copurchase_edges, pagerank_integer
 
-    li = _t(spark, sf, "lineitem").filter(
-        F.col("l_shipdate") >= F.lit("1998-01-01 00:00:00").cast("timestamp")
-    )
-    pr = pagerank_integer(copurchase_edges(li), iters=3)
+    pr = pagerank_integer(copurchase_edges(_lineitem_1998(spark, sf)), iters=3)
     return (
         pr.select(F.col("part").alias("l_partkey"), "pr_scaled")
         .orderBy(F.desc("pr_scaled"), F.asc("l_partkey"))
@@ -8130,9 +8128,7 @@ def _part_copurchase_ppr_expansion(spark: SparkSession, sf: str) -> DataFrame:
     # any scale, while a shared checkpoint would spill a corpus
     # FRACTION to executor storage (the apply_cell_plan trade, same
     # verdict)
-    li = _t(spark, sf, "lineitem").filter(
-        F.col("l_shipdate") >= F.lit("1998-01-01 00:00:00").cast("timestamp")
-    )
+    li = _lineitem_1998(spark, sf)
     seeds = (
         li.groupBy("l_partkey")
         .agg(F.sum("l_quantity").alias("_q"))
@@ -9646,10 +9642,7 @@ def _graph_triangle_census(spark: SparkSession, sf: str) -> DataFrame:
     clustering coefficient is 6T / Σ deg(deg−1) via ratio_round."""
     from .operators.graph import copurchase_pairs, triangle_stats
 
-    li = _t(spark, sf, "lineitem").filter(
-        F.col("l_shipdate") >= F.lit("1998-01-01 00:00:00").cast("timestamp")
-    )
-    return triangle_stats(copurchase_pairs(li))
+    return triangle_stats(copurchase_pairs(_lineitem_1998(spark, sf)))
 
 
 _register(
@@ -10270,9 +10263,7 @@ def _part_copurchase_topk(spark: SparkSession, sf: str) -> DataFrame:
     it."""
     from pyspark.sql import Window as _W
 
-    li = _t(spark, sf, "lineitem").filter(
-        F.col("l_shipdate") >= F.lit("1998-01-01 00:00:00").cast("timestamp")
-    )
+    li = _lineitem_1998(spark, sf)
     lp = (
         li.select("l_orderkey", "l_partkey")
         .distinct()
@@ -11743,10 +11734,7 @@ def _part_copurchase_hops(spark: SparkSession, sf: str) -> DataFrame:
     absent (unreachable-in-k semantics, documented)."""
     from .operators.graph import copurchase_pairs
 
-    li = _t(spark, sf, "lineitem").filter(
-        F.col("l_shipdate") >= F.lit("1998-01-01 00:00:00").cast("timestamp")
-    )
-    und = copurchase_pairs(li).localCheckpoint(eager=False)
+    und = copurchase_pairs(_lineitem_1998(spark, sf)).localCheckpoint(eager=False)
     edges = und.union(
         und.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     )
@@ -12156,63 +12144,36 @@ def _gdpr_delete_impact(spark: SparkSession, sf: str) -> DataFrame:
     pushed-down semi-predicate; no joins between fact tables. At scale
     the id predicate becomes a broadcast semi-join against the erasure
     list; the aggregate shape is unchanged."""
-    del_pred = lambda c: F.col(c) % 97 == 0  # noqa: E731
-    ev = (
-        _t(spark, sf, "events")
-        .filter(del_pred("user_id"))
-        .agg(
-            F.count(F.lit(1)).alias("n_rows"),
-            F.countDistinct("user_id").alias("n_subjects"),
-            F.sum(F.round(F.col("value") * 100).cast("long")).alias(
-                "value_cents"
-            ),
+    def purge(table: str, key: str, value_cents: Column) -> DataFrame:
+        return (
+            _t(spark, sf, table)
+            .filter(F.col(key) % 97 == 0)
+            .agg(
+                F.count(F.lit(1)).alias("n_rows"),
+                F.countDistinct(key).alias("n_subjects"),
+                value_cents.alias("value_cents"),
+            )
+            .select(
+                F.lit(table).alias("table_name"),
+                F.col("n_rows").cast("long").alias("n_rows"),
+                F.col("n_subjects").cast("long").alias("n_subjects"),
+                F.coalesce(F.col("value_cents"), F.lit(0))
+                .cast("long")
+                .alias("value_cents"),
+            )
         )
-        .select(
-            F.lit("events").alias("table_name"),
-            F.col("n_rows").cast("long").alias("n_rows"),
-            F.col("n_subjects").cast("long").alias("n_subjects"),
-            F.coalesce(F.col("value_cents"), F.lit(0))
-            .cast("long")
-            .alias("value_cents"),
-        )
-    )
-    orders = (
-        _t(spark, sf, "orders")
-        .filter(del_pred("o_custkey"))
-        .agg(
-            F.count(F.lit(1)).alias("n_rows"),
-            F.countDistinct("o_custkey").alias("n_subjects"),
-            cents(F.sum("o_totalprice")).alias("value_cents"),
-        )
-        .select(
-            F.lit("orders").alias("table_name"),
-            F.col("n_rows").cast("long").alias("n_rows"),
-            F.col("n_subjects").cast("long").alias("n_subjects"),
-            F.coalesce(F.col("value_cents"), F.lit(0))
-            .cast("long")
-            .alias("value_cents"),
+
+    return (
+        purge("events", "user_id", F.sum(F.round(F.col("value") * 100).cast("long")))
+        .unionByName(purge("orders", "o_custkey", cents(F.sum("o_totalprice"))))
+        .unionByName(
+            purge(
+                "customer",
+                "c_custkey",
+                F.sum(F.round(F.col("c_acctbal") * 100).cast("long")),
+            )
         )
     )
-    cust = (
-        _t(spark, sf, "customer")
-        .filter(del_pred("c_custkey"))
-        .agg(
-            F.count(F.lit(1)).alias("n_rows"),
-            F.countDistinct("c_custkey").alias("n_subjects"),
-            F.sum(F.round(F.col("c_acctbal") * 100).cast("long")).alias(
-                "value_cents"
-            ),
-        )
-        .select(
-            F.lit("customer").alias("table_name"),
-            F.col("n_rows").cast("long").alias("n_rows"),
-            F.col("n_subjects").cast("long").alias("n_subjects"),
-            F.coalesce(F.col("value_cents"), F.lit(0))
-            .cast("long")
-            .alias("value_cents"),
-        )
-    )
-    return ev.unionByName(orders).unionByName(cust)
 
 
 _register(
@@ -15351,9 +15312,9 @@ def _similarity_triplets(spark: SparkSession, sf: str) -> DataFrame:
     """Triplet mining for contrastive training — one row per anchor
     with its positive (most-similar SAME-label vector) and its hard
     negative (most-similar DIFFERENT-label vector): the (a, p, n)
-    sampling step of triplet/InfoNCE losses, composing the proven
-    ``brute_force_topk`` ranking with the ``hard_negatives`` label
-    split in ONE corpus pass.
+    sampling step of triplet/InfoNCE losses, ranking the pairs of
+    ``similarity.cosine_pairs`` (the scorer of ``brute_force_topk`` and
+    ``hard_negatives``) split by label in ONE corpus pass.
 
     Exactness: ranking runs on the unrounded cosine with a vec_id
     tie-breaker (determinism rule 1); cosines round only at output
@@ -15368,38 +15329,10 @@ def _similarity_triplets(spark: SparkSession, sf: str) -> DataFrame:
     does — the label split composes unchanged."""
     from pyspark.sql import Window
 
-    from .operators.relational import spread_if_few_splits
-    from .operators.similarity import dot, l2_norm
-
-    emb = _t(spark, sf, "embeddings")
-    q = emb.filter(F.col("vec_id") < 30).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("label").alias("query_label"),
-        F.col("embedding").alias("q_emb"),
-        l2_norm(F.col("embedding")).alias("q_norm"),
-    )
-    c = spread_if_few_splits(emb).select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("label").alias("n_label"),
-        F.col("embedding").alias("c_emb"),
-        l2_norm(F.col("embedding")).alias("c_norm"),
-    )
-    scored = (
-        c.crossJoin(F.broadcast(q))
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "query_label",
-            "neighbor_id",
-            "n_label",
-            (
-                dot(F.col("q_emb"), F.col("c_emb"))
-                / (F.col("q_norm") * F.col("c_norm"))
-            ).alias("cos"),
-            (F.col("n_label") == F.col("query_label"))
-            .cast("int")
-            .alias("same"),
-        )
+    scored = _sim.cosine_pairs(
+        _t(spark, sf, "embeddings"), F.col("vec_id") < 30
+    ).withColumn(
+        "same", (F.col("neighbor_label") == F.col("query_label")).cast("int")
     )
     w = Window.partitionBy("query_id", "same").orderBy(
         F.desc("cos"), F.asc("neighbor_id")
@@ -15416,7 +15349,7 @@ def _similarity_triplets(spark: SparkSession, sf: str) -> DataFrame:
             F.round(F.max(F.when(F.col("same") == 1, F.col("cos"))), 4)
             .alias("pos_cos"),
             F.max(neg).alias("neg_id"),
-            F.max(F.when(F.col("same") == 0, F.col("n_label")))
+            F.max(F.when(F.col("same") == 0, F.col("neighbor_label")))
             .cast("long")
             .alias("neg_label"),
             F.round(F.max(F.when(F.col("same") == 0, F.col("cos"))), 4)
@@ -15483,6 +15416,26 @@ _WIN_W = 5
 _WIN_POS_PACK = 1_000_000
 
 
+def _winnowed(grams: DataFrame) -> DataFrame:
+    """Distinct (doc_id, key) winnowing selections of ``_doc_kgrams``
+    rows: the minimum of key = md5-piece(gram)·_WIN_POS_PACK + pos over
+    each window of _WIN_W consecutive grams."""
+    from pyspark.sql import Window
+
+    from .operators.dedup import md5_hash_pieces
+
+    x1, _ = md5_hash_pieces(F.concat(F.lit("win:"), F.col("sh")))
+    keyed = grams.select(
+        "doc_id",
+        "pos",
+        (x1 * F.lit(_WIN_POS_PACK) + F.col("pos")).alias("key"),
+    )
+    w5 = Window.partitionBy("doc_id").orderBy("pos").rowsBetween(
+        -(_WIN_W - 1), Window.currentRow
+    )
+    return keyed.select("doc_id", F.min("key").over(w5).alias("key")).distinct()
+
+
 def _text_winnowing_fingerprints(spark: SparkSession, sf: str) -> DataFrame:
     """Winnowing fingerprint selection (the MOSS algorithm) — the
     position-aware dedup fingerprinting scheme between "hash
@@ -15500,42 +15453,10 @@ def _text_winnowing_fingerprints(spark: SparkSession, sf: str) -> DataFrame:
     idempotent-dedup idiom); gram hashes derive from one md5 per gram
     via the shared piece machinery; the distinct + count collapse to
     one row per doc before the join back to documents."""
-    from pyspark.sql import Window
-
-    from .operators.dedup import _norm, md5_hash_pieces
-
     docs = _t(spark, sf, "documents")
-    toks = _doc_tokens_spread(spark, docs)
-    wl = Window.partitionBy("doc_id").orderBy("pos0")
-    gram = F.concat_ws(
-        " ",
-        F.col("w"),
-        F.lead("w", 1).over(wl),
-        F.lead("w", 2).over(wl),
-        F.lead("w", 3).over(wl),
-    )
-    grams = (
-        toks.select(
-            "doc_id",
-            (F.col("pos0") + 1).alias("pos"),
-            gram.alias("sh"),
-            F.lead("w", _WIN_K - 1).over(wl).alias("w_last"),
-        )
-        .filter(F.col("w_last").isNotNull())
-        .drop("w_last")
-    )
-    x1, _ = md5_hash_pieces(F.concat(F.lit("win:"), F.col("sh")))
-    keyed = grams.select(
-        "doc_id",
-        "pos",
-        (x1 * F.lit(_WIN_POS_PACK) + F.col("pos")).alias("key"),
-    )
-    w5 = Window.partitionBy("doc_id").orderBy("pos").rowsBetween(
-        -(_WIN_W - 1), Window.currentRow
-    )
+    grams = _doc_kgrams(spark, docs, _WIN_K)
     sel = (
-        keyed.select("doc_id", F.min("key").over(w5).alias("key"))
-        .distinct()
+        _winnowed(grams)
         .groupBy("doc_id")
         .agg(F.count(F.lit(1)).alias("n_fp"))
     )
@@ -15899,6 +15820,31 @@ _register(
 _THEILSEN_DAYS = 90
 
 
+def _trailing_days(spark: SparkSession, sf: str) -> tuple[DataFrame, DataFrame]:
+    """``(all_days, days)``: (d, y) daily order revenue in cents over
+    epoch days, and its trailing ``_THEILSEN_DAYS``-day window. The
+    fact table collapses map-side to the day grid, which is
+    checkpointed (the window filter, its max-day probe and any caller
+    reading ``all_days`` consume it)."""
+    all_days = (
+        _t(spark, sf, "orders")
+        .groupBy(
+            F.floor(F.unix_millis("o_orderdate") / F.lit(86400000))
+            .cast("long")
+            .alias("d")
+        )
+        .agg(cents(F.sum("o_totalprice")).alias("y"))
+        .localCheckpoint(eager=False)
+    )
+    maxd = all_days.agg(F.max("d").alias("dm"))
+    days = (
+        all_days.crossJoin(F.broadcast(maxd))
+        .filter(F.col("d") > F.col("dm") - _THEILSEN_DAYS)
+        .select("d", "y")
+    )
+    return all_days, days
+
+
 def _orders_theilsen_trend(spark: SparkSession, sf: str) -> DataFrame:
     """Theil–Sen robust trend of daily revenue over the trailing 90
     days — the median of all pairwise slopes: the breakdown-resistant
@@ -15920,20 +15866,7 @@ def _orders_theilsen_trend(spark: SparkSession, sf: str) -> DataFrame:
     the median selection constant-cost at 100 TB."""
     from pyspark.sql import Window
 
-    all_days = (
-        _t(spark, sf, "orders")
-        .groupBy(
-            F.floor(F.unix_millis("o_orderdate") / F.lit(86400000))
-            .cast("long")
-            .alias("d")
-        )
-        .agg(cents(F.sum("o_totalprice")).alias("y"))
-        .localCheckpoint(eager=False)
-    )
-    maxd = all_days.agg(F.max("d").alias("dm"))
-    days = all_days.crossJoin(F.broadcast(maxd)).filter(
-        F.col("d") > F.col("dm") - _THEILSEN_DAYS
-    ).select("d", "y")
+    _, days = _trailing_days(spark, sf)
     a = days.select(F.col("d").alias("da"), F.col("y").alias("ya"))
     b = days.select(F.col("d").alias("db"), F.col("y").alias("yb"))
     pairs = (
@@ -16044,10 +15977,8 @@ def _orders_winsorized_stats(spark: SparkSession, sf: str) -> DataFrame:
         .select(cents_col.alias("c"))
         .filter(F.col("c").isNotNull())
     )
-    hist = (
-        orders.groupBy((F.col("c") - F.col("c") % _OS_BUCKET).alias("b"))
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .localCheckpoint(eager=False)
+    hist = orders.groupBy((F.col("c") - F.col("c") % _OS_BUCKET).alias("b")).agg(
+        F.count(F.lit(1)).alias("cnt")
     )
     w = _W.orderBy("b").rowsBetween(_W.unboundedPreceding, _W.currentRow)
     wall = _W.rowsBetween(_W.unboundedPreceding, _W.unboundedFollowing)
@@ -16056,7 +15987,7 @@ def _orders_winsorized_stats(spark: SparkSession, sf: str) -> DataFrame:
         "cnt",
         F.sum("cnt").over(w).alias("cum"),
         F.sum("cnt").over(wall).alias("n"),
-    ).localCheckpoint(eager=False)
+    )
     ranks = spark.range(1).select(
         F.explode(
             F.array(F.lit(_WINSOR_LO), F.lit(_WINSOR_HI))
@@ -16081,7 +16012,6 @@ def _orders_winsorized_stats(spark: SparkSession, sf: str) -> DataFrame:
             (F.col("t.k") - (F.col("t.cum") - F.col("t.cnt"))).alias("r"),
             F.col("t.n").alias("n"),
         )
-        .localCheckpoint(eager=False)
     )
     in_bucket = orders.join(
         F.broadcast(target), orders["c"] - orders["c"] % _OS_BUCKET == F.col("b")
@@ -16585,8 +16515,9 @@ def _events_seasonal_decompose(spark: SparkSession, sf: str) -> DataFrame:
 
     Scale shape: the fact table collapses map-side to the ≤720-row
     hour grid; the centered-MA window, the hour-of-day means and the
-    final join all run over that grid (the hourly table is
-    checkpointed — MA rows and the seasonal table both consume it)."""
+    final join all run over that grid (the MA table is checkpointed —
+    the seasonal table and the final join both consume it; the hourly
+    table has one reader, the MA window)."""
     from pyspark.sql import Window
 
     hr = (
@@ -16597,7 +16528,6 @@ def _events_seasonal_decompose(spark: SparkSession, sf: str) -> DataFrame:
             .alias("h")
         )
         .agg(F.count(F.lit(1)).alias("cnt"))
-        .localCheckpoint(eager=False)
     )
     win = 2 * _SD_HALF + 1
     wma = Window.orderBy("h").rowsBetween(-_SD_HALF, _SD_HALF)
@@ -16698,42 +16628,9 @@ def _winnowing_recall_audit(spark: SparkSession, sf: str) -> DataFrame:
     Scale shape: fingerprint sets are ~2/(W+1)-dense per doc and join
     on (hash) only for the near-dup-mass-sized pair list via two
     semi-structured joins — never all-pairs over fingerprints."""
-    from pyspark.sql import Window
-
-    from .operators.dedup import _norm, md5_hash_pieces
-
     docs = _t(spark, sf, "documents")
-    toks = _doc_tokens_spread(spark, docs)
-    wl = Window.partitionBy("doc_id").orderBy("pos0")
-    gram = F.concat_ws(
-        " ",
-        F.col("w"),
-        F.lead("w", 1).over(wl),
-        F.lead("w", 2).over(wl),
-        F.lead("w", 3).over(wl),
-    )
-    grams = (
-        toks.select(
-            "doc_id",
-            (F.col("pos0") + 1).alias("pos"),
-            gram.alias("sh"),
-            F.lead("w", _WIN_K - 1).over(wl).alias("w_last"),
-        )
-        .filter(F.col("w_last").isNotNull())
-        .drop("w_last")
-    )
-    x1, _ = md5_hash_pieces(F.concat(F.lit("win:"), F.col("sh")))
-    keyed = grams.select(
-        "doc_id",
-        "pos",
-        (x1 * F.lit(_WIN_POS_PACK) + F.col("pos")).alias("key"),
-    )
-    w5 = Window.partitionBy("doc_id").orderBy("pos").rowsBetween(
-        -(_WIN_W - 1), Window.currentRow
-    )
     fps = (
-        keyed.select("doc_id", F.min("key").over(w5).alias("key"))
-        .distinct()
+        _winnowed(_doc_kgrams(spark, docs, _WIN_K))
         .select(
             "doc_id",
             (F.col("key") - F.col("key") % _WIN_POS_PACK)
@@ -17239,10 +17136,7 @@ def _graph_local_clustering(spark: SparkSession, sf: str) -> DataFrame:
     ratio_round for every node with degree ≥ 2."""
     from .operators.graph import copurchase_pairs, local_clustering
 
-    li = _t(spark, sf, "lineitem").filter(
-        F.col("l_shipdate") >= F.lit("1998-01-01 00:00:00").cast("timestamp")
-    )
-    return local_clustering(copurchase_pairs(li))
+    return local_clustering(copurchase_pairs(_lineitem_1998(spark, sf)))
 
 
 _register(
@@ -17250,10 +17144,7 @@ _register(
     f"""
     WITH lp AS MATERIALIZED (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem
                 WHERE l_shipdate >= TIMESTAMP '1998-01-01'),
-    und AS MATERIALIZED (
-      SELECT DISTINCT a.l_partkey AS src, b.l_partkey AS dst
-      FROM lp a JOIN lp b
-        ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey),
+    {_UND_SQL},
     deg AS MATERIALIZED (
       SELECT node, COUNT(*) AS d
       FROM (SELECT src AS node FROM und UNION ALL SELECT dst FROM und)
@@ -17524,23 +17415,8 @@ def _orders_mann_kendall(spark: SparkSession, sf: str) -> DataFrame:
     map-side to the day grid, the trailing filter caps it at 90 rows
     (checkpointed: both pair sides + the tie-group aggregate consume
     it), and the ≈4k-pair table is fixed-size whatever the corpus."""
-    all_days = (
-        _t(spark, sf, "orders")
-        .groupBy(
-            F.floor(F.unix_millis("o_orderdate") / F.lit(86400000))
-            .cast("long")
-            .alias("d")
-        )
-        .agg(cents(F.sum("o_totalprice")).alias("y"))
-        .localCheckpoint(eager=False)
-    )
-    maxd = all_days.agg(F.max("d").alias("dm"))
-    days = (
-        all_days.crossJoin(F.broadcast(maxd))
-        .filter(F.col("d") > F.col("dm") - _THEILSEN_DAYS)
-        .select("d", "y")
-        .localCheckpoint(eager=False)  # pair sides + tie groups
-    )
+    _, days = _trailing_days(spark, sf)
+    days = days.localCheckpoint(eager=False)  # pair sides + tie groups
     a = days.select(F.col("d").alias("da"), F.col("y").alias("ya"))
     b = days.select(F.col("d").alias("db"), F.col("y").alias("yb"))
     ps = (
@@ -17626,10 +17502,7 @@ def _graph_degree_assortativity(spark: SparkSession, sf: str) -> DataFrame:
     exact integer ratio (M·Σxy − (Σx)²) / (M·Σx² − (Σx)²)."""
     from .operators.graph import copurchase_pairs, degree_assortativity
 
-    li = _t(spark, sf, "lineitem").filter(
-        F.col("l_shipdate") >= F.lit("1998-01-01 00:00:00").cast("timestamp")
-    )
-    return degree_assortativity(copurchase_pairs(li))
+    return degree_assortativity(copurchase_pairs(_lineitem_1998(spark, sf)))
 
 
 _register(
@@ -17637,10 +17510,7 @@ _register(
     f"""
     WITH lp AS MATERIALIZED (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem
                 WHERE l_shipdate >= TIMESTAMP '1998-01-01'),
-    und AS MATERIALIZED (
-      SELECT DISTINCT a.l_partkey AS src, b.l_partkey AS dst
-      FROM lp a JOIN lp b
-        ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey),
+    {_UND_SQL},
     deg AS MATERIALIZED (
       SELECT node, COUNT(*) AS d
       FROM (SELECT src AS node FROM und UNION ALL SELECT dst FROM und)
@@ -17731,10 +17601,7 @@ def _graph_kcore(spark: SparkSession, sf: str) -> DataFrame:
     round budget instead of emitting a partial core."""
     from .operators.graph import copurchase_pairs, kcore
 
-    li = _t(spark, sf, "lineitem").filter(
-        F.col("l_shipdate") >= F.lit("1998-01-01 00:00:00").cast("timestamp")
-    )
-    return kcore(copurchase_pairs(li), _KCORE_K)
+    return kcore(copurchase_pairs(_lineitem_1998(spark, sf)), _KCORE_K)
 
 
 from .operators.graph import KCORE_MAX_ROUNDS as _KCORE_ROUNDS  # noqa: E402
@@ -17814,9 +17681,7 @@ def _graph_hits(spark: SparkSession, sf: str) -> DataFrame:
     scores rank parts bought by such customers."""
     from .operators.graph import hits_bipartite
 
-    li = _t(spark, sf, "lineitem").filter(
-        F.col("l_shipdate") >= F.lit("1998-01-01 00:00:00").cast("timestamp")
-    )
+    li = _lineitem_1998(spark, sf)
     edges = (
         li.join(
             _t(spark, sf, "orders"),
@@ -18366,22 +18231,7 @@ def _orders_forecast_backtest(spark: SparkSession, sf: str) -> DataFrame:
     side, and the max-day probe consume it), the trailing filter caps
     the window, and the d = d−7 self-join and metric rollup are
     window-sized."""
-    all_days = (
-        _t(spark, sf, "orders")
-        .groupBy(
-            F.floor(F.unix_millis("o_orderdate") / F.lit(86400000))
-            .cast("long")
-            .alias("d")
-        )
-        .agg(cents(F.sum("o_totalprice")).alias("y"))
-        .localCheckpoint(eager=False)
-    )
-    maxd = all_days.agg(F.max("d").alias("dm"))
-    cur = (
-        all_days.crossJoin(F.broadcast(maxd))
-        .filter(F.col("d") > F.col("dm") - _THEILSEN_DAYS)
-        .select("d", "y")
-    )
+    all_days, cur = _trailing_days(spark, sf)
     lagged = all_days.select(
         (F.col("d") + 7).alias("d"), F.col("y").alias("f")
     )
@@ -18993,12 +18843,9 @@ def _graph_negative_samples(spark: SparkSession, sf: str) -> DataFrame:
     from .operators.graph import _und_deg
     from .operators.sampling import hash_bucket
 
-    li = _t(spark, sf, "lineitem").filter(
-        F.col("l_shipdate") >= F.lit("1998-01-01 00:00:00").cast("timestamp")
-    )
     from .operators.graph import copurchase_pairs
 
-    und, deg = _und_deg(copurchase_pairs(li))
+    und, deg = _und_deg(copurchase_pairs(_lineitem_1998(spark, sf)))
     nodes = deg.select("node")
     ncount = nodes.agg(F.count(F.lit(1)).alias("nv"))
     idx = (
@@ -19060,10 +18907,7 @@ _register(
     f"""
     WITH lp AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem
                 WHERE l_shipdate >= TIMESTAMP '1998-01-01'),
-    und AS MATERIALIZED (
-      SELECT DISTINCT a.l_partkey AS src, b.l_partkey AS dst
-      FROM lp a JOIN lp b
-        ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey),
+    {_UND_SQL},
     idx AS MATERIALIZED (
       SELECT node, ROW_NUMBER() OVER (ORDER BY node) - 1 AS idx
       FROM (SELECT node FROM (SELECT src AS node FROM und
@@ -19994,24 +19838,8 @@ def _dedup_longest_common_run(spark: SparkSession, sf: str) -> DataFrame:
     |matches|-row aggregation with map-side combine."""
     from pyspark.sql import Window
 
-    from .operators.dedup import _norm
-
     docs = _t(spark, sf, "documents")
-    toks = _doc_tokens_spread(spark, docs)
-    wl = Window.partitionBy("doc_id").orderBy("pos0")
-    gram = F.concat_ws(
-        " ", F.col("w"), *[F.lead("w", j).over(wl) for j in range(1, _LCR_K)]
-    )
-    grams = (
-        toks.select(
-            "doc_id",
-            (F.col("pos0") + 1).alias("pos"),
-            gram.alias("sh"),
-            F.lead("w", _LCR_K - 1).over(wl).alias("w_last"),
-        )
-        .filter(F.col("w_last").isNotNull())
-        .drop("w_last")
-    )
+    grams = _doc_kgrams(spark, docs, _LCR_K)
     gh = F.conv(
         F.substring(F.md5(F.concat(F.lit("lcr:"), F.col("sh"))), 1, 15),
         16,
@@ -20140,10 +19968,7 @@ def _graph_lpa_communities(spark: SparkSession, sf: str) -> DataFrame:
     MATERIALIZED CTEs."""
     from .operators.graph import _und_deg, copurchase_pairs
 
-    li = _t(spark, sf, "lineitem").filter(
-        F.col("l_shipdate") >= F.lit("1998-01-01 00:00:00").cast("timestamp")
-    )
-    und, deg = _und_deg(copurchase_pairs(li))
+    und, deg = _und_deg(copurchase_pairs(_lineitem_1998(spark, sf)))
     # PINNED repartition by the per-round join key BEFORE the
     # checkpoint (r9): bi is LOOP-INVARIANT, so partitioning it by
     # "nbr" once lets every round's join consume the checkpoint's
@@ -20213,13 +20038,10 @@ def _graph_lpa_communities(spark: SparkSession, sf: str) -> DataFrame:
 
 def _lpa_oracle_sql(rounds: int) -> str:
     ctes = [
-        """
+        f"""
     lp AS MATERIALIZED (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem
            WHERE l_shipdate >= TIMESTAMP '1998-01-01'),
-    und AS MATERIALIZED (
-      SELECT DISTINCT a.l_partkey AS src, b.l_partkey AS dst
-      FROM lp a JOIN lp b
-        ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey),
+    {_UND_SQL},
     bi AS MATERIALIZED (
       SELECT src AS node, dst AS nbr FROM und
       UNION ALL SELECT dst AS node, src AS nbr FROM und),
@@ -20272,10 +20094,7 @@ _register(
 def _graph_link_prediction(spark: SparkSession, sf: str) -> DataFrame:
     from .operators.graph import copurchase_pairs, link_prediction_cn
 
-    li = _t(spark, sf, "lineitem").filter(
-        F.col("l_shipdate") >= F.lit("1998-01-01 00:00:00").cast("timestamp")
-    )
-    return link_prediction_cn(copurchase_pairs(li), k=20)
+    return link_prediction_cn(copurchase_pairs(_lineitem_1998(spark, sf)), k=20)
 
 
 _register(
@@ -20283,10 +20102,7 @@ _register(
     f"""
     WITH lp AS MATERIALIZED (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem
            WHERE l_shipdate >= TIMESTAMP '1998-01-01'),
-    und AS MATERIALIZED (
-      SELECT DISTINCT a.l_partkey AS src, b.l_partkey AS dst
-      FROM lp a JOIN lp b
-        ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey),
+    {_UND_SQL},
     bi AS MATERIALIZED (
       SELECT src AS node, dst AS nbr FROM und
       UNION ALL SELECT dst AS node, src AS nbr FROM und),
@@ -21071,13 +20887,7 @@ def _recall_sweep_oracle_sql() -> str:
     cent AS MATERIALIZED (SELECT vec_id AS centroid_id, emb AS c_emb FROM e
              WHERE vec_id % 25 = 0),
     assigned AS MATERIALIZED (
-      SELECT vec_id, emb, centroid_id
-      FROM (SELECT e.vec_id, e.emb, c.centroid_id,
-                   ROW_NUMBER() OVER (PARTITION BY e.vec_id
-                     ORDER BY {_COS_SQL.format(a="e.emb", b="c.c_emb")} DESC,
-                              c.centroid_id) AS rn
-            FROM e, cent c)
-      WHERE rn = 1),
+      {_IVF_ASSIGN_SQL}),
     q AS MATERIALIZED (SELECT vec_id AS query_id, emb AS q_emb FROM e
                        WHERE vec_id < 10),
     exact AS MATERIALIZED (

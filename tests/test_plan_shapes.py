@@ -457,6 +457,92 @@ def test_no_checkpoint_copies_a_checkpoint(spark, monkeypatch):
     assert not copies, f"checkpoints of narrow plans over checkpoints: {copies}"
 
 
+def _checkpoint_reads(df) -> list[int]:
+    """RDD ids of the checkpoint (``LogicalRDD``) leaves of ``df``'s
+    plan, one per leaf: a self-join reads its checkpoint twice."""
+    ids = []
+
+    def walk(node):
+        children = node.children()
+        if children.size() == 0 and node.nodeName() == "LogicalRDD":
+            ids.append(node.rdd().id())
+        for i in range(children.size()):
+            walk(children.apply(i))
+
+    walk(df._jdf.queryExecution().logical())
+    return ids
+
+
+def test_every_checkpoint_is_read_twice_or_cuts_a_loop(spark, monkeypatch):
+    """A checkpoint earns its place by being read at least twice (by
+    later checkpoint inputs, build-time actions or ``.rdd`` probes, and
+    the returned plan) or by cutting an iterative lineage (its call site
+    fires more than once per build). Builds (without collecting) the
+    entries whose single-reader checkpoints were deleted and fails on
+    any call site that fires once and is read fewer than twice. The
+    patches are on the classic class: ``pyspark.sql.DataFrame`` is an
+    abstract base in PySpark 4.1, so patching it would see nothing."""
+    import traceback
+    from collections import Counter
+
+    from pyspark.sql.classic.dataframe import DataFrame as ClassicDataFrame
+
+    from streamlit_projet_spark_streaming_spark.registry import REGISTRY
+
+    reads = Counter()
+    calls = []  # (call site, rdd id) per checkpoint call
+    depth = [0]  # only the outermost action reads (head -> take -> collect)
+
+    def wrap_action(original):
+        def action(self, *args, **kwargs):
+            if depth[0] == 0:
+                reads.update(_checkpoint_reads(self))
+            depth[0] += 1
+            try:
+                return original(self, *args, **kwargs)
+            finally:
+                depth[0] -= 1
+
+        return action
+
+    for name in ("collect", "count", "first", "take", "head", "toPandas"):
+        monkeypatch.setattr(
+            ClassicDataFrame, name, wrap_action(getattr(ClassicDataFrame, name))
+        )
+    rdd = ClassicDataFrame.__dict__["rdd"].func
+    monkeypatch.setattr(
+        ClassicDataFrame, "rdd", property(wrap_action(lambda self: rdd(self)))
+    )
+    checkpoint = ClassicDataFrame.localCheckpoint
+
+    def counted(self, *args, **kwargs):
+        reads.update(_checkpoint_reads(self))
+        caller = traceback.extract_stack(limit=2)[0]
+        out = checkpoint(self, *args, **kwargs)
+        calls.append((f"{caller.filename}:{caller.lineno}", _checkpoint_reads(out)[0]))
+        return out
+
+    monkeypatch.setattr(ClassicDataFrame, "localCheckpoint", counted)
+    unread = []
+    for name in (
+        "part_copurchase_pagerank",
+        "part_copurchase_ppr_expansion",
+        "dedup_method_agreement",
+        "orders_winsorized_stats",
+        "events_seasonal_decompose",
+    ):
+        reads.clear()
+        calls.clear()
+        reads.update(_checkpoint_reads(REGISTRY[name].builder(spark, SF)))
+        fired = Counter(site for site, _ in calls)
+        unread += [
+            f"{name}: {site} read {reads[rid]}x"
+            for site, rid in calls
+            if fired[site] == 1 and reads[rid] < 2
+        ]
+    assert not unread, f"checkpoints read fewer than twice: {unread}"
+
+
 def test_bitext_margin_rank_pushdown(spark):
     """All four margin-mining rank filters (two normalizer top-k, the
     forward and backward top-1) must plan as WindowGroupLimit (rank

@@ -299,14 +299,25 @@ def test_hamming_topk_finds_exact_duplicate_first(spark):
 
 
 def test_lloyd_partials_rejects_ragged_batch():
-    """Codes whose dimension differs from the codebook's raise ValueError,
-    which survives ``python -O`` (a bare assert would not)."""
+    """A batch whose dimension differs from the codebook's raises
+    ValueError, which survives ``python -O`` (a bare assert would not),
+    for both Lloyd inputs: trained PQ's int8 codes and grid k-means'
+    embeddings (one sub-block over grid units)."""
     import pandas as pd
+
+    from streamlit_projet_spark_streaming_spark.operators.similarity import _gk_units
 
     cb = [[0.0, 0.0, 0.0, 0.0], [1.0, 1.0, 1.0, 1.0]]
     pdf = pd.DataFrame({"cb": [cb, cb], "codes": [[1, 2], [3, 4]]})
-    with pytest.raises(ValueError, match="code dim 2 != codebook dim 4"):
-        next(quantize._lloyd_partials_mapper(n_sub=2)(iter([pdf])))
+    mapper = quantize._lloyd_partials_mapper(2, "codes", quantize._code_units)
+    with pytest.raises(ValueError, match="codes dim 2 != codebook dim 4"):
+        next(mapper(iter([pdf])))
+
+    cb = [[0.0, 0.0], [1.0, 1.0]]
+    pdf = pd.DataFrame({"cb": [cb, cb], "embedding": [[0.1, 0.2, 0.3], [0.4, 0.5, 0.6]]})
+    mapper = quantize._lloyd_partials_mapper(1, "embedding", _gk_units)
+    with pytest.raises(ValueError, match="embedding dim 3 != codebook dim 2"):
+        next(mapper(iter([pdf])))
 
 
 def test_codebook_row_rejects_sparse_centroid_rows(spark):

@@ -504,21 +504,6 @@ def test_ldiversity_python_recompute(spark):
         ), key
 
 
-def test_grid_kmeans_partials_rejects_ragged_batch():
-    """Embeddings whose dimension differs from the codebook's raise
-    ValueError, which survives ``python -O`` (a bare assert would not)."""
-    import pandas as pd
-
-    from streamlit_projet_spark_streaming_spark.operators.similarity import (
-        _gk_partials_mapper,
-    )
-
-    cb = [[0.0, 0.0], [1.0, 1.0]]
-    pdf = pd.DataFrame({"cb": [cb, cb], "embedding": [[0.1, 0.2, 0.3], [0.4, 0.5, 0.6]]})
-    with pytest.raises(ValueError, match="embedding dim 3 != codebook dim 2"):
-        next(_gk_partials_mapper()(iter([pdf])))
-
-
 def test_grid_kmeans_assign_routes_zero_vector():
     """A raw zero vector (the catalog boundary filters these, a caller
     routing uncatalogued rows does not) is assigned like any other
