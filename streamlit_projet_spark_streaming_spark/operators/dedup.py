@@ -226,34 +226,35 @@ def span_dup_profile(documents: DataFrame) -> DataFrame:
     )
 
 
-def shingle_arrays(documents: DataFrame, unit: str = "word") -> DataFrame:
-    """Distinct shingle set per doc as an ARRAY column:
+def shingle_arrays(documents: DataFrame) -> DataFrame:
+    """Distinct character-3-gram set per doc as an ARRAY column:
     (doc_id, shs array<string>, n_sh). One shuffle: collect_set dedups
     inside the aggregation, so no separate distinct pass."""
-    n = 3
     return (
-        _grams(documents, n, unit)
+        _grams(documents, 3, "char")
         .groupBy("doc_id")
         .agg(F.collect_set("sh").alias("shs"))
         .withColumn("n_sh", F.size("shs"))
     )
 
 
-def benchmark_contamination(
-    documents: DataFrame,
-    n: int = 5,
-    bench_buckets: int = 500,
-    ratio_threshold: float = 0.2,
-    broadcast_bench: bool = True,
-) -> DataFrame:
+#: Word n-gram size, benchmark share (buckets of ``sampling.N_BUCKETS``)
+#: and flag threshold of :func:`benchmark_contamination`; its oracle
+#: prints the same three.
+CONTAM_NGRAM = 5
+CONTAM_BENCH_BUCKETS = 500
+CONTAM_THRESHOLD = 0.2
+
+
+def benchmark_contamination(documents: DataFrame) -> DataFrame:
     """Train/eval decontamination: per corpus document, how much of its
     word n-gram shingle set also appears in a held-out benchmark set —
     the overlap check every serious pretraining pipeline runs so that
     evaluation data does not leak into training data.
 
     The benchmark membership is the deterministic hash split
-    (``sampling.hash_bucket``, bucket < ``bench_buckets`` of 10,000 —
-    default 5%), standing in for a real eval suite; swap in any
+    (``sampling.hash_bucket``, bucket < ``CONTAM_BENCH_BUCKETS`` of
+    10,000 — 5%), standing in for a real eval suite; swap in any
     (doc_id-keyed) benchmark table without changing the plan shape.
 
     Scale shape (the part that matters at 100 TB): the benchmark side is
@@ -263,16 +264,13 @@ def benchmark_contamination(
     content-keyed and uniform) → broadcast LEFT join → one
     groupBy(doc_id). The JOIN itself never shuffles the corpus — no
     shingle-keyed corpus shuffle feeds a join, which is what kills naive
-    overlap checks. For a benchmark too big to broadcast, pass
-    ``broadcast_bench=False`` to drop the hint and take a shuffle
-    equi-join on the shingle string instead (still content-keyed and
-    uniform — n-grams at n=5 are rare by construction); the hint is NOT
-    auto-gated because only the caller knows executor memory headroom.
+    overlap checks.
 
-    Output: one row per corpus doc with ≥ n words — docs too short to
-    shingle have nothing to leak. ``contamination_ratio`` is an exact
-    int/int division (both engines bit-identical), ``flagged`` compares
-    the UNrounded ratio against ``ratio_threshold``.
+    Output: one row per corpus doc with ≥ ``CONTAM_NGRAM`` words — docs
+    too short to shingle have nothing to leak. ``contamination_ratio``
+    is an exact int/int division (both engines bit-identical),
+    ``flagged`` compares the UNrounded ratio against
+    ``CONTAM_THRESHOLD``.
     """
     from .sampling import hash_bucket
 
@@ -280,17 +278,16 @@ def benchmark_contamination(
     bucketed = documents.withColumn(
         "__bucket", hash_bucket(F.col("doc_id"), salt)
     )
-    is_bench = F.col("__bucket") < bench_buckets
+    is_bench = F.col("__bucket") < CONTAM_BENCH_BUCKETS
     bench_sh = (
-        shingles(bucketed.filter(is_bench), n)
+        shingles(bucketed.filter(is_bench), CONTAM_NGRAM)
         .select("sh")
         .distinct()
         .withColumn("__hit", F.lit(1))
     )
-    corpus_sh = shingles(bucketed.filter(~is_bench), n)
-    bench_side = F.broadcast(bench_sh) if broadcast_bench else bench_sh
+    corpus_sh = shingles(bucketed.filter(~is_bench), CONTAM_NGRAM)
     agg = (
-        corpus_sh.join(bench_side, "sh", "left")
+        corpus_sh.join(F.broadcast(bench_sh), "sh", "left")
         .groupBy("doc_id")
         .agg(
             F.count(F.lit(1)).alias("n_shingles"),
@@ -311,7 +308,7 @@ def benchmark_contamination(
         ratio_round(F.col("n_contaminated"), F.col("n_shingles"), 4).alias(
             "contamination_ratio"
         ),
-        (ratio >= ratio_threshold).alias("flagged"),
+        (ratio >= CONTAM_THRESHOLD).alias("flagged"),
     )
 
 
@@ -557,7 +554,6 @@ def event_checksum_pieces(df: DataFrame, ts_ms: Column) -> DataFrame:
 
 def minhash_signatures(
     documents: DataFrame,
-    n: int = MINHASH_NGRAM,
     grams: DataFrame | None = None,
 ) -> DataFrame:
     """MinHash signature per document: sig[i] = min over shingles of
@@ -580,7 +576,7 @@ def minhash_signatures(
     """
     unit = "word"
     if grams is None:
-        grams = _grams(documents, n, unit)
+        grams = _grams(documents, MINHASH_NGRAM, unit)
     x1, x2 = md5_hash_pieces(F.col("sh"))
     hashed = grams.select("doc_id", x1.alias("x1"), x2.alias("x2"))
     aggs = [
@@ -653,7 +649,7 @@ def minhash_candidates(
     the quality audit (`lsh_quality_report`) can count candidates without
     replaying the pipeline. Callers should lazily checkpoint the result
     if consuming it more than once."""
-    sig = minhash_signatures(documents, MINHASH_NGRAM, grams=grams)
+    sig = minhash_signatures(documents, grams=grams)
     buckets = _band_buckets(sig, MINHASH_NUM_HASHES, MINHASH_BANDS)
 
     a, b = buckets.alias("a"), buckets.alias("b")
@@ -726,11 +722,7 @@ def _jaccard_for_pairs_sets(
     )
 
 
-def incremental_dedup(
-    corpus: DataFrame,
-    batch: DataFrame,
-    n: int = MINHASH_NGRAM,
-) -> DataFrame:
+def incremental_dedup(corpus: DataFrame, batch: DataFrame) -> DataFrame:
     """Dedup a NEW batch against an EXISTING corpus — the continual-
     pretraining update path (each crawl snapshot is screened against
     everything already ingested, not re-deduped monolithically).
@@ -776,8 +768,8 @@ def incremental_dedup(
         "text",
     )
     c_tag, b_tag = tag(corpus, "c"), tag(batch, "b")
-    sig_c = minhash_signatures(c_tag, n)
-    sig_b = minhash_signatures(b_tag, n)
+    sig_c = minhash_signatures(c_tag)
+    sig_b = minhash_signatures(b_tag)
     bc = _band_buckets(sig_c, MINHASH_NUM_HASHES, MINHASH_BANDS).alias("a")
     bb = _band_buckets(sig_b, MINHASH_NUM_HASHES, MINHASH_BANDS).alias("b")
     candidates = (
@@ -799,7 +791,7 @@ def incremental_dedup(
     )
     both = c_tag.unionByName(b_tag)
     docsets = (
-        _grams(both, n, unit)
+        _grams(both, MINHASH_NGRAM, unit)
         .join(cand_ids, "doc_id", "leftsemi")
         .groupBy("doc_id")
         .agg(F.collect_set("sh").alias("shs"))
@@ -947,6 +939,9 @@ def hamming_band_chunks(sig_col: str, nbits: int, max_hamming: int):
 #: engines), one signature bit per hash bit.
 SIMHASH_BITS = 60
 
+#: Hamming radius of :func:`simhash_pairs`.
+SIMHASH_MAX_HAMMING = 6
+
 
 def simhash_signatures(documents: DataFrame) -> DataFrame:
     """(doc_id, simhash) signatures — the signature subplan of
@@ -991,7 +986,8 @@ def simhash_signatures(documents: DataFrame) -> DataFrame:
 
 
 def simhash_pairs(documents: DataFrame) -> DataFrame:
-    """SimHash near-dup pairs: ``SIMHASH_BITS``-bit signature, Hamming ≤ 6.
+    """SimHash near-dup pairs: ``SIMHASH_BITS``-bit signature, Hamming ≤
+    ``SIMHASH_MAX_HAMMING``.
 
     Signature: per word-hash, each bit contributes ±1; the sign of the
     per-bit sum is the signature bit. Computed as one bit-sum
@@ -1006,14 +1002,14 @@ def simhash_pairs(documents: DataFrame) -> DataFrame:
 
     Pairing is the LOSSLESS banded chunk join (Manku et al.'s
     multi-index scheme): the signature splits into
-    ``max_hamming + 1`` disjoint chunks covering every bit, so any pair
+    ``SIMHASH_MAX_HAMMING + 1`` disjoint chunks covering every bit, so any pair
     within Hamming ≤ k agrees exactly on ≥ 1 chunk (pigeonhole).
     Candidates come from equi-joins on (chunk_idx, chunk_value) — hash-
     partitionable, near-linear for signature-random corpora — and only
     candidates pay the ``bit_count(XOR)`` verification. Identical result
     set to the naive all-pairs crossJoin at any scale.
     """
-    max_hamming = 6
+    max_hamming = SIMHASH_MAX_HAMMING
     sigs = simhash_signatures(documents)
 
     chunk_cols = hamming_band_chunks("simhash", SIMHASH_BITS, max_hamming)
@@ -1130,10 +1126,14 @@ def lsh_quality_report(documents: DataFrame) -> DataFrame:
     )
 
 
-def containment_pairs(documents: DataFrame, threshold: float = 0.8) -> DataFrame:
+#: Containment threshold τ of :func:`containment_pairs`.
+CONTAINMENT_THRESHOLD = 0.8
+
+
+def containment_pairs(documents: DataFrame) -> DataFrame:
     """EXACT directed shingle-containment pairs: C(A→B) =
-    |S_A ∩ S_B| / |S_A| ≥ τ with A ≠ B — the ASYMMETRIC near-dup
-    relation Jaccard misses (a quote, a subsumed chunk, a doc embedded
+    |S_A ∩ S_B| / |S_A| ≥ τ = ``CONTAINMENT_THRESHOLD`` with A ≠ B — the
+    ASYMMETRIC near-dup relation Jaccard misses (a quote, a subsumed chunk, a doc embedded
     in a larger one scores high containment but low Jaccard; Broder's
     original resemblance/containment pair, "On the resemblance and
     containment of documents", SEQUENCES 1997).
@@ -1157,6 +1157,7 @@ def containment_pairs(documents: DataFrame, threshold: float = 0.8) -> DataFrame
     the containment ratio rounds in exact integer space. Both
     directions of an asymmetric pair can appear — by design.
     """
+    threshold = CONTAINMENT_THRESHOLD
     n = 3
     unit = "word"
     sh = shingles(documents, n, unit)

@@ -26,6 +26,10 @@ from pyspark.sql import functions as F
 #: Integer score scale: total teleport mass = SCALE units.
 SCALE = 10**12
 
+#: Damped iterations of :func:`pagerank_integer` and :func:`ppr_integer`;
+#: the registry's unrolled-CTE oracles unroll exactly this many.
+PAGERANK_ITERS = 3
+
 
 def _idiv(a: Column, b: Column | int) -> Column:
     """Exact floor division of non-negative integer columns.
@@ -40,6 +44,20 @@ def _idiv(a: Column, b: Column | int) -> Column:
     ad = a.cast("decimal(38,0)")
     bd = b.cast("decimal(38,0)")
     return ((ad - ad % bd) / bd).cast("long")
+
+
+def _order_parts(lineitem: DataFrame) -> tuple[int, DataFrame]:
+    """The distinct (order, part) pairs both co-purchase self-joins
+    read, behind ONE pinned keyed repartition by ``l_orderkey`` that
+    serves the dedup and the self-join alike. Returns the pinned
+    partition count with the pairs."""
+    par = lineitem.sparkSession.sparkContext.defaultParallelism
+    lp = (
+        lineitem.select("l_orderkey", "l_partkey")
+        .repartition(par, "l_orderkey")
+        .dropDuplicates(["l_orderkey", "l_partkey"])
+    )
+    return par, lp
 
 
 def copurchase_edges(lineitem: DataFrame) -> DataFrame:
@@ -65,12 +83,7 @@ def copurchase_edges(lineitem: DataFrame) -> DataFrame:
     4.08 → 3.37 s (0.83×), pagerank 6.66 → 6.24 s (0.94×), outputs
     identical.
     """
-    par = lineitem.sparkSession.sparkContext.defaultParallelism
-    lp = (
-        lineitem.select("l_orderkey", "l_partkey")
-        .repartition(par, "l_orderkey")
-        .dropDuplicates(["l_orderkey", "l_partkey"])
-    )
+    par, lp = _order_parts(lineitem)
     a = lp.alias("a")
     b = lp.alias("b")
     return (
@@ -89,14 +102,14 @@ def copurchase_edges(lineitem: DataFrame) -> DataFrame:
     )
 
 
-def pagerank_integer(edges: DataFrame, iters: int = 3) -> DataFrame:
+def pagerank_integer(edges: DataFrame) -> DataFrame:
     """Weighted PageRank (damping 0.85) in exact integer arithmetic:
     :func:`ppr_integer` with every node of ``src`` ∪ ``dst`` as a seed.
     With n seeds = n nodes, pr₀ = SCALE div n on every node and the
     teleport is (15·SCALE) div (100·n) on every node, so per iteration
     pr'(v) = (15·SCALE) div (100·N) + (85·in(v)) div 100 — the classic
     recurrence. Floor drops ≤ 1 unit of mass per edge per round
-    (≤ |E|·iters·1e-12 of total), the price of exactness.
+    (≤ |E|·PAGERANK_ITERS·1e-12 of total), the price of exactness.
 
     Sink nodes (dst never appearing as src — impossible for
     :func:`copurchase_edges`' symmetric output, possible for arbitrary
@@ -113,7 +126,7 @@ def pagerank_integer(edges: DataFrame, iters: int = 3) -> DataFrame:
     nodes = edges.select(F.col("src").alias("part")).union(
         edges.select(F.col("dst").alias("part"))
     )
-    return _ppr(edges, nodes, iters).select(
+    return _ppr(edges, nodes).select(
         "part", F.col("ppr_scaled").alias("pr_scaled")
     )
 
@@ -137,39 +150,33 @@ def ppr_integer(edges: DataFrame, seeds: DataFrame) -> DataFrame:
     Scale shape: per round one |edges|-row hash join +
     map-side-combined contribution aggregate; the node-sized score
     table is checkpointed per round (truncates the iteration lineage);
-    seed table and the 1-row seed count are checkpointed at the
-    producer (each feeds multiple consumers).
+    the seed-flagged node spine (one aggregate over src ∪ dst ∪ seeds)
+    and the 1-row seed count are checkpointed at the producer (each
+    feeds every round).
 
     ``seeds``: one column ``part``. Returns
     ``(part, ppr_scaled, is_seed)``.
     """
-    return _ppr(edges.localCheckpoint(eager=False), seeds, 3)
+    return _ppr(edges.localCheckpoint(eager=False), seeds)
 
 
-def _ppr(edges: DataFrame, seeds: DataFrame, iters: int) -> DataFrame:
+def _ppr(edges: DataFrame, seeds: DataFrame) -> DataFrame:
     """The :func:`ppr_integer` loop over already checkpointed ``edges``."""
     outw = edges.groupBy("src").agg(F.sum("w").alias("outw"))
     ew = edges.join(outw, "src").localCheckpoint(eager=False)
-    # three consumers: node union, seed flag, seed count
-    seeds_c = seeds.select("part").distinct().localCheckpoint(eager=False)
-    nodes = (
-        edges.select(F.col("src").alias("part"))
-        .union(edges.select(F.col("dst").alias("part")))
-        .union(seeds_c.select("part"))
-        .distinct()
-    )
-    nseeds = seeds_c.agg(F.count(F.lit(1)).alias("ns")).localCheckpoint(
-        eager=False
-    )
-    # node spine with the seed flag: one consumer per iteration + pr0
+    # node spine with the seed flag in ONE aggregate over
+    # (src, 0) ∪ (dst, 0) ∪ (seed, 1): the seed count, pr0 and every
+    # iteration read it
     flagged = (
-        nodes.join(
-            F.broadcast(seeds_c.select("part", F.lit(1).alias("is_seed"))),
-            "part",
-            "left",
-        )
-        .select("part", F.coalesce(F.col("is_seed"), F.lit(0)).alias("is_seed"))
+        edges.select(F.col("src").alias("part"), F.lit(0).alias("is_seed"))
+        .union(edges.select(F.col("dst").alias("part"), F.lit(0).alias("is_seed")))
+        .union(seeds.select("part", F.lit(1).alias("is_seed")))
+        .groupBy("part")
+        .agg(F.max("is_seed").alias("is_seed"))
         .localCheckpoint(eager=False)
+    )
+    nseeds = flagged.agg(F.sum("is_seed").alias("ns")).localCheckpoint(
+        eager=False
     )
     teleport = F.when(
         F.col("is_seed") == 1, _idiv(F.lit(15 * SCALE), F.col("ns") * 100)
@@ -182,7 +189,7 @@ def _ppr(edges: DataFrame, seeds: DataFrame, iters: int) -> DataFrame:
         .otherwise(F.lit(0))
         .alias("pr"),
     )
-    for _ in range(iters):
+    for _ in range(PAGERANK_ITERS):
         contrib = (
             ew.join(pr, ew["src"] == pr["part"])
             # Hot path (|edges| rows/round): plain BIGINT `div`, not the
@@ -231,12 +238,7 @@ def copurchase_pairs(lineitem: DataFrame) -> DataFrame:
     (lineitem at bench scale is a 3-split scan whose post-distinct
     output is ~5 MB — the CLAUDE.md byte-small trap; this stage was the
     serialized ~2.5 s floor of the r8 graph family)."""
-    par = lineitem.sparkSession.sparkContext.defaultParallelism
-    lp = (
-        lineitem.select("l_orderkey", "l_partkey")
-        .repartition(par, "l_orderkey")
-        .dropDuplicates(["l_orderkey", "l_partkey"])
-    )
+    _, lp = _order_parts(lineitem)
     a, b = lp.alias("a"), lp.alias("b")
     return (
         a.join(
@@ -325,7 +327,7 @@ def degree_assortativity(edges: DataFrame) -> DataFrame:
 KCORE_MAX_ROUNDS = 8
 
 
-def kcore(edges: DataFrame, k: int, max_rounds: int = KCORE_MAX_ROUNDS) -> DataFrame:
+def kcore(edges: DataFrame, k: int) -> DataFrame:
     """Nodes of the k-core (maximal induced subgraph with min degree
     ≥ k) with their in-core degrees, by iterative peeling: drop every
     node of degree < k, recompute degrees on the induced subgraph,
@@ -334,9 +336,9 @@ def kcore(edges: DataFrame, k: int, max_rounds: int = KCORE_MAX_ROUNDS) -> DataF
     Convergence is detected by the surviving-node COUNT: the keep set
     only shrinks (edges only disappear), so an unchanged count means an
     unchanged set, which means the induced subgraph is stable and every
-    remaining node has in-core degree ≥ k. Exceeding ``max_rounds``
+    remaining node has in-core degree ≥ k. Exceeding ``KCORE_MAX_ROUNDS``
     raises instead of emitting a partial core (the connected-components
-    precedent) — the SQL twin unrolls exactly ``max_rounds`` peels and
+    precedent) — the SQL twin unrolls exactly that many peels and
     relies on fixpoint idempotence for the slack rounds.
 
     Scale notes: each round is one degree aggregation (map-side
@@ -347,17 +349,10 @@ def kcore(edges: DataFrame, k: int, max_rounds: int = KCORE_MAX_ROUNDS) -> DataF
     bounded by the peeling depth of the degeneracy ordering, typically
     single digits on heavy-tailed graphs.
     """
-    und, _ = _und_deg(edges)
-    cur = und
+    # round 1 peels by the whole graph's degrees
+    cur, deg = _und_deg(edges)
     prev: int | None = None
-    for _ in range(max_rounds + 1):
-        deg = (
-            cur.select(F.col("src").alias("node"))
-            .union(cur.select(F.col("dst").alias("node")))
-            .groupBy("node")
-            .agg(F.count(F.lit(1)).alias("d"))
-            .localCheckpoint(eager=False)  # probe + keep joins + output
-        )
+    for _ in range(KCORE_MAX_ROUNDS + 1):
         keep = deg.filter(F.col("d") >= k)
         n = keep.count()
         if n == prev:
@@ -374,9 +369,16 @@ def kcore(edges: DataFrame, k: int, max_rounds: int = KCORE_MAX_ROUNDS) -> DataF
             )
             .localCheckpoint(eager=False)
         )
+        deg = (
+            cur.select(F.col("src").alias("node"))
+            .union(cur.select(F.col("dst").alias("node")))
+            .groupBy("node")
+            .agg(F.count(F.lit(1)).alias("d"))
+            .localCheckpoint(eager=False)  # probe + keep joins + output
+        )
     raise RuntimeError(
-        f"k-core peeling did not converge within {max_rounds} rounds; "
-        "raise max_rounds AND the oracle's unroll depth together"
+        f"k-core peeling did not converge within {KCORE_MAX_ROUNDS} rounds; "
+        "raise KCORE_MAX_ROUNDS (the oracle unrolls the same depth)"
     )
 
 
@@ -607,14 +609,18 @@ def hits_bipartite(edges: DataFrame) -> DataFrame:
     )
 
 
-def link_prediction_cn(
-    edges: DataFrame,
-    k: int = 20,
-    max_middle_degree: int = 1 << 20,
-) -> DataFrame:
+#: Candidates :func:`link_prediction_cn` returns.
+LP_TOP_K = 20
+
+#: Hub cap of :func:`link_prediction_cn`: middles of higher degree
+#: enumerate no wedges (a no-op on the fixtures).
+LP_MAX_MIDDLE_DEGREE = 1 << 20
+
+
+def link_prediction_cn(edges: DataFrame) -> DataFrame:
     """Common-neighbors link prediction over an undirected graph: the
-    top-``k`` NON-edges ranked by shared-neighbor count (Liben-Nowell &
-    Kleinberg 2003's strongest simple baseline), with the Jaccard
+    top-``LP_TOP_K`` NON-edges ranked by shared-neighbor count
+    (Liben-Nowell & Kleinberg 2003's strongest simple baseline), with the Jaccard
     variant (cn / (d_u + d_w − cn)) carried alongside — the candidate
     generator for GNN/link-prediction training pairs (the positive-pair
     complement of ``graph_negative_samples``' uniform negatives).
@@ -628,7 +634,7 @@ def link_prediction_cn(
     orientation, which only roots wedges at their min-order endpoint
     and under-counts common neighbors whose middle ranks higher; r7
     oracle catch). Σ C(deg, 2) is the inherent cost of exact common
-    neighbors; ``max_middle_degree`` is the production skew knob —
+    neighbors; ``LP_MAX_MIDDLE_DEGREE`` is the production skew knob —
     middles with degree above the cap are dropped from wedge
     enumeration BEFORE the self-join (broadcast anti-join against the
     tiny hub set, ~free at the no-op default of 2^20), bounding the
@@ -652,7 +658,7 @@ def link_prediction_cn(
     # Hub cap on the MIDDLE: the hub set is power-law-tiny, so the
     # anti-join broadcasts; n_capped is a 1-row audit aggregate riding
     # into the k-row result via a broadcast cross join.
-    hot = deg.filter(F.col("d") > F.lit(max_middle_degree)).select("node")
+    hot = deg.filter(F.col("d") > F.lit(LP_MAX_MIDDLE_DEGREE)).select("node")
     n_capped = hot.agg(
         F.count(F.lit(1)).cast("long").alias("capped_middles")
     )
@@ -738,7 +744,7 @@ def link_prediction_cn(
 
     return (
         cand.orderBy(F.desc("cn"), F.asc("u"), F.asc("w"))
-        .limit(k)
+        .limit(LP_TOP_K)
         .join(du, "u")
         .join(dw, "w")
         .crossJoin(F.broadcast(n_capped))

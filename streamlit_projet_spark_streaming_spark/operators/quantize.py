@@ -59,6 +59,13 @@ QUANT_LEVELS = 256
 #: PQ codebook size per subspace: the md5-lowest ``PQ_CENTROIDS``
 #: vectors anchor it (and seed the trained variant's Lloyd rounds).
 PQ_CENTROIDS = 16
+#: PQ subspaces: every PQ code is ``PQ_SUBSPACES`` sub-codes of
+#: D / ``PQ_SUBSPACES`` contiguous dimensions each.
+PQ_SUBSPACES = 8
+#: Coarse cells each IVFPQ query probes.
+IVFPQ_NPROBE = 2
+#: Lloyd rounds of :func:`_lloyd` (trained PQ and ``grid_kmeans``).
+LLOYD_ITERS = 2
 
 QUANT_SCHEMA = StructType(
     [
@@ -146,17 +153,17 @@ def quantize_embeddings(embeddings: DataFrame) -> DataFrame:
     return _quantize_with_stats(base.crossJoin(F.broadcast(_stats_row(embeddings))))
 
 
-def pq_codes(embeddings: DataFrame, n_sub: int = 8) -> DataFrame:
+def pq_codes(embeddings: DataFrame) -> DataFrame:
     """Product-quantization codes over the int8-quantized embeddings.
 
     Pipeline: scalar-quantize the corpus (exact int codes) → pick
     ``PQ_CENTROIDS`` anchor vectors deterministically (lowest
     ``md5(vec_id)``, rank = codebook index — SQL-replayable, so the
     oracle reconstructs the identical codebook) → for each vector and
-    each of ``n_sub`` contiguous subspaces, assign the anchor with the
-    smallest EXACT integer squared distance (ties → smallest index).
+    each of ``PQ_SUBSPACES`` contiguous subspaces, assign the anchor with
+    the smallest EXACT integer squared distance (ties → smallest index).
 
-    Output: (vec_id, pq_codes: array<int> of length ``n_sub``,
+    Output: (vec_id, pq_codes: array<int> of length ``PQ_SUBSPACES``,
     distortion: total squared code distance to the chosen centroids).
 
     A trained codebook (k-means per subspace) would slot into the same
@@ -169,7 +176,7 @@ def pq_codes(embeddings: DataFrame, n_sub: int = 8) -> DataFrame:
     codes, _, codebook, _ = _codes_and_codebook(embeddings)
     # Every distance is an exact integer, so the double distortion is
     # exactly the integer one.
-    return _pq_assign(codes, codebook, n_sub).withColumn(
+    return _pq_assign(codes, codebook, PQ_SUBSPACES).withColumn(
         "distortion", F.col("distortion").cast("long")
     )
 
@@ -281,7 +288,7 @@ def _rank_topk(scored: DataFrame, k: int) -> DataFrame:
     )
 
 
-def pq_topk(embeddings: DataFrame, query_pred: Column, n_sub: int = 8) -> DataFrame:
+def pq_topk(embeddings: DataFrame, query_pred: Column) -> DataFrame:
     """Approximate top-k neighbors by PQ asymmetric distance (ADC).
 
     The search half of the PQ ladder (Jégou et al. 2011): per query,
@@ -306,6 +313,7 @@ def pq_topk(embeddings: DataFrame, query_pred: Column, n_sub: int = 8) -> DataFr
     swap for per-partition top-k + merge if |q|·n outgrows a task).
     """
     k = 5
+    n_sub = PQ_SUBSPACES
     codes, anchor_codes, codebook, stats = _codes_and_codebook(embeddings)
     pq = _pq_assign(codes, codebook, n_sub)
     adc = _adc_table(embeddings, query_pred, anchor_codes, stats, n_sub)
@@ -320,10 +328,10 @@ def pq_topk(embeddings: DataFrame, query_pred: Column, n_sub: int = 8) -> DataFr
     return _rank_topk(scored, k)
 
 
-def ivfpq_topk(embeddings: DataFrame, query_pred: Column, nprobe: int = 2) -> DataFrame:
+def ivfpq_topk(embeddings: DataFrame, query_pred: Column) -> DataFrame:
     """IVF + PQ approximate top-k — the composed production index shape
     (IVFADC, Jégou et al. 2011 §V): a coarse inverted file restricts each
-    query to ``nprobe`` cells, and candidates inside a cell are scored by
+    query to ``IVFPQ_NPROBE`` cells, and candidates inside a cell are scored by
     PQ asymmetric distance from byte codes — per-query work scales with
     nprobe × cell size (not corpus size), per-candidate work is ``n_sub``
     integer table lookups (not a D-dim float dot).
@@ -345,7 +353,8 @@ def ivfpq_topk(embeddings: DataFrame, query_pred: Column, nprobe: int = 2) -> Da
 
     k = 5
     centroid_modulus = 25
-    n_sub = 8
+    nprobe = IVFPQ_NPROBE
+    n_sub = PQ_SUBSPACES
     codes, anchor_codes, codebook, stats = _codes_and_codebook(embeddings)
     pq = _pq_assign(codes, codebook, n_sub)
     centroids = embeddings.filter(
@@ -652,13 +661,12 @@ def _lloyd_update(
 def _lloyd(
     base: DataFrame,
     cb_row: DataFrame,
-    n_iter: int,
     n_sub: int,
     col: str,
     units: Callable,
     mean: Callable[[Column, Column], Column],
 ) -> DataFrame:
-    """``n_iter`` Lloyd rounds from the one-row codebook ``cb_row`` over
+    """``LLOYD_ITERS`` Lloyd rounds from the one-row codebook ``cb_row`` over
     ``base``'s column ``col`` (see :func:`_lloyd_partials_mapper`);
     returns the last codebook as :func:`_lloyd_update` checkpointed it.
     Shared by :func:`pq_codes_trained` and ``similarity.grid_kmeans``.
@@ -669,7 +677,7 @@ def _lloyd(
     shuffle), then a tiny J·D-row aggregation rebuilds the codebook. The
     codebook rides between stages as ONE lazily checkpointed row, so
     iteration i+1 never replays iteration i's plan."""
-    for _ in range(n_iter):
+    for _ in range(LLOYD_ITERS):
         partials = base.crossJoin(F.broadcast(cb_row)).mapInPandas(
             _lloyd_partials_mapper(n_sub, col, units), _TRAIN_PARTIAL_SCHEMA
         )
@@ -688,8 +696,8 @@ def _lloyd(
     return cb_row
 
 
-def pq_codes_trained(embeddings: DataFrame, n_iter: int = 2) -> DataFrame:
-    """PQ codes from a TRAINED per-subspace codebook — ``n_iter`` Lloyd
+def pq_codes_trained(embeddings: DataFrame) -> DataFrame:
+    """PQ codes from a TRAINED per-subspace codebook — ``LLOYD_ITERS`` Lloyd
     (k-means) iterations over the int8 code space, initialized from the
     md5-anchor codebook of :func:`pq_codes`.
 
@@ -712,7 +720,7 @@ def pq_codes_trained(embeddings: DataFrame, n_iter: int = 2) -> DataFrame:
     over the corpus code stream, checkpointed once, so the rounds and
     the final assignment never replay the quantize pass.
     """
-    n_sub = 8
+    n_sub = PQ_SUBSPACES
     codes, _, codebook_int, _ = _codes_and_codebook(embeddings)
     codes = codes.localCheckpoint(eager=False)
     # Float init = the int anchor codebook. (transform here is one-row
@@ -725,7 +733,6 @@ def pq_codes_trained(embeddings: DataFrame, n_iter: int = 2) -> DataFrame:
     cb_row = _lloyd(
         codes,
         cb_row,
-        n_iter=n_iter,
         n_sub=n_sub,
         col="codes",
         units=_code_units,
@@ -851,8 +858,8 @@ def ivfpq_topk_residual(embeddings: DataFrame, query_pred: Column) -> DataFrame:
 
     k = 5
     centroid_modulus = 25
-    nprobe = 2
-    n_sub = 8
+    nprobe = IVFPQ_NPROBE
+    n_sub = PQ_SUBSPACES
     centroids = embeddings.filter(
         (F.col("vec_id") % centroid_modulus) == 0
     ).select(

@@ -83,13 +83,17 @@ def bucketize(col: Column, edges: Sequence[float], labels: Sequence[str]) -> Col
     return expr.otherwise(labels[-1])
 
 
+#: Rows :func:`top_k_per_group` keeps per group.
+TOP_K_PER_GROUP = 3
+
+
 def top_k_per_group(
     df: DataFrame,
     group_cols: Sequence[str],
     order_by: Sequence[Column],
-    k: int = 1,
 ) -> DataFrame:
-    """[E1/E2/E3] QUALIFY ROW_NUMBER emulation: keep top-k rows per group.
+    """[E1/E2/E3] QUALIFY ROW_NUMBER emulation: keep the top
+    ``TOP_K_PER_GROUP`` rows per group.
 
     Reference: ``QUALIFY ROW_NUMBER() OVER (PARTITION BY … ORDER BY COUNT(*)
     DESC) = 1`` (``/root/reference/bigquery_views.sql:34,63,91``). Spark has
@@ -106,7 +110,7 @@ def top_k_per_group(
     """
     w = Window.partitionBy(*group_cols).orderBy(*order_by)
     out = df.withColumn("rnk", F.row_number().over(w))
-    return out.filter(F.col("rnk") <= k) if k > 1 else out.filter(F.col("rnk") == 1)
+    return out.filter(F.col("rnk") <= TOP_K_PER_GROUP)
 
 
 def ordered_array_agg(sort_key: Column, value: Column, ascending: bool = False) -> Column:
@@ -257,7 +261,7 @@ def asof_join(
     left_ts: str,
     right_ts: str,
     right_vals: Sequence[str],
-    tiebreak: str | None = None,
+    tiebreak: str,
 ) -> DataFrame:
     """As-of join (LEFT): attach to each left row the right row with the
     greatest ``right_ts`` ≤ ``left_ts`` for the same key — the temporal
@@ -313,7 +317,7 @@ def asof_join(
         *[F.col(c) for c in lcols],
         null_payload.alias("__rv"),
     )
-    rtb = F.col(tiebreak).cast("long") if tiebreak else F.lit(0).cast("long")
+    rtb = F.col(tiebreak).cast("long")
     r = right.filter(F.col(on).isNotNull() & F.col(right_ts).isNotNull()).select(
         F.col(on).alias("__k"),
         F.col(right_ts).cast("timestamp").alias("__t"),
@@ -372,12 +376,11 @@ def sequence_features(
     )
 
 
-def grouped_rank_tiles(
-    df: DataFrame,
-    score_col: str,
-    id_col: str,
-    n_tiles: int = 10,
-) -> DataFrame:
+#: Tiles :func:`grouped_rank_tiles` cuts the ranked corpus into.
+RANK_TILES = 10
+
+
+def grouped_rank_tiles(df: DataFrame, score_col: str, id_col: str) -> DataFrame:
     """Exact global descending rank + n-tile assignment WITHOUT a
     single-partition window — the curriculum/quality-binning step
     (order the corpus by a score, cut into deciles) done scale-safe.
@@ -396,7 +399,7 @@ def grouped_rank_tiles(
        id)`` — a content-keyed shuffle whose partitions are score
        classes.
 
-    Tile = ``floor((rank-1)·n_tiles/total)`` — the even-remainder cut
+    Tile = ``floor((rank-1)·RANK_TILES/total)`` — the even-remainder cut
     (documented formula, replayed verbatim by the oracle; NOT SQL NTILE,
     which front-loads remainders).
 
@@ -439,26 +442,28 @@ def grouped_rank_tiles(
             id_col,
             score_col,
             rank.cast("long").alias("rnk"),
-            F.floor((rank - 1) * n_tiles / F.col("n_total"))
+            F.floor((rank - 1) * RANK_TILES / F.col("n_total"))
             .cast("int")
             .alias("tile"),
         )
     )
 
 
-def ordered_dense_index(
-    df: DataFrame, col: str, bucket_width: int = 1024
-) -> DataFrame:
+#: Id-range width of one :func:`ordered_dense_index` bucket.
+DENSE_INDEX_BUCKET = 1024
+
+
+def ordered_dense_index(df: DataFrame, col: str) -> DataFrame:
     """Dense 0-based index of ``df`` ordered by integer column ``col`` —
     identical to ``ROW_NUMBER() OVER (ORDER BY col) - 1`` but WITHOUT the
     single-partition sort (the `grouped_rank_tiles` bucket-offset idiom
     specialized to order-aligned integer buckets).
 
-    ``bkt = col div bucket_width`` preserves order across buckets, so
+    ``bkt = col div DENSE_INDEX_BUCKET`` preserves order across buckets, so
     ``broadcast cumulative bucket offsets + per-bucket ROW_NUMBER``
     reproduces the exact global row number. The one data-sized window
     partitions per bucket; the only single-partition window runs over
-    the |rows|/bucket_width bucket-count table. The bucketed input is
+    the |rows|/DENSE_INDEX_BUCKET bucket-count table. The bucketed input is
     lazily checkpointed: its two consumers (per-bucket counts, the
     rank join) carry DIFFERENT pruned projections, which ReuseExchange
     can never dedupe (the r6 bug class — verified empirically: without
@@ -470,7 +475,7 @@ def ordered_dense_index(
     bucketed = (
         df.select(
             col,
-            F.floor(F.col(col) / F.lit(bucket_width))
+            F.floor(F.col(col) / F.lit(DENSE_INDEX_BUCKET))
             .cast("long")
             .alias("bkt"),
         )
@@ -587,17 +592,20 @@ def winsorize(df: DataFrame, value_col: str, id_col: str) -> DataFrame:
     )
 
 
+#: Trailing window of :func:`rolling_time_features`, in seconds.
+ROLLING_WINDOW_S = 3600
+
+
 def rolling_time_features(
     events: DataFrame,
     key: str,
     ts_col: str,
     value_col: str,
     id_col: str,
-    window_seconds: int = 3600,
 ) -> DataFrame:
     """Trailing time-window features per key: for every event, the count
     and value-sum of the same key's events in the half-open interval
-    ``(ts - window, ts]`` — a RANGE frame over the epoch-microsecond
+    ``(ts - ROLLING_WINDOW_S, ts]`` — a RANGE frame over the epoch-microsecond
     axis (value-based, vs the ROWS frames in ``sequence_features``).
 
     RANGE semantics make ties self-consistent: events sharing a
@@ -615,7 +623,7 @@ def rolling_time_features(
     w = (
         Window.partitionBy(key)
         .orderBy(us)
-        .rangeBetween(-(window_seconds * 1_000_000 - 1), Window.currentRow)
+        .rangeBetween(-(ROLLING_WINDOW_S * 1_000_000 - 1), Window.currentRow)
     )
     summand = F.round(F.col(value_col), 2)
     return events.select(
@@ -685,14 +693,8 @@ def bucketed_interval_join(
     )
 
 
-def salted_join(
-    big: DataFrame,
-    small: DataFrame,
-    on: str,
-    salt_from: str,
-    how: str = "inner",
-) -> DataFrame:
-    """Skew-safe shuffle equi-join: salt the big side into ``n_salts``
+def salted_join(big: DataFrame, small: DataFrame, on: str, salt_from: str) -> DataFrame:
+    """Skew-safe shuffle inner equi-join: salt the big side into ``n_salts``
     sub-keys and replicate the small side once per salt, so ONE hot join
     key spreads across ``n_salts`` tasks instead of landing on one.
 
@@ -712,22 +714,15 @@ def salted_join(
     |big|); big side pays no extra rows, just a wider key. The join is
     hinted shuffle-hash — with a broadcastable small side you would not
     salt at all (broadcast has no shuffle to skew).
-
-    ``how="left_semi"`` filters the big side to rows with a match
-    (skew-safe EXISTS): every (key, salt) replica of a small row is an
-    equally valid witness, so semi semantics survive salting unchanged
-    and the result carries the big side's columns only.
     """
     n_salts = 8
-    if how not in ("inner", "left", "left_semi"):
-        raise ValueError(f"salted_join supports inner/left/left_semi, got {how!r}")
     big_s = big.withColumn(
         "__salt", F.pmod(F.xxhash64(F.col(salt_from)), F.lit(n_salts))
     )
     small_s = small.withColumn(
         "__salt", F.explode(F.array(*[F.lit(i) for i in range(n_salts)]))
     )
-    return big_s.join(small_s.hint("SHUFFLE_HASH"), [on, "__salt"], how).drop(
+    return big_s.join(small_s.hint("SHUFFLE_HASH"), [on, "__salt"], "inner").drop(
         "__salt"
     )
 
@@ -780,11 +775,11 @@ def retention_cohorts(events: DataFrame) -> DataFrame:
     )
 
 
-def basket_affinity(
-    lineitem: DataFrame,
-    part: DataFrame,
-    min_support: int = 10,
-) -> DataFrame:
+#: Fewest co-occurring orders a :func:`basket_affinity` pair needs.
+BASKET_MIN_SUPPORT = 10
+
+
+def basket_affinity(lineitem: DataFrame, part: DataFrame) -> DataFrame:
     """Market-basket affinity between item attributes (brands) that
     co-occur in an order: support counts and lift — the classic
     association-rule dashboard block.
@@ -824,7 +819,7 @@ def basket_affinity(
         .filter(F.col("item_a") < F.col("item_b"))
         .groupBy("item_a", "item_b")
         .agg(F.count(F.lit(1)).alias("n_ab"))
-        .filter(F.col("n_ab") >= min_support)
+        .filter(F.col("n_ab") >= BASKET_MIN_SUPPORT)
     )
     ca = item_counts.select(
         F.col("item").alias("item_a"), F.col("n_item").alias("n_a")
@@ -1084,7 +1079,11 @@ def active_user_counts(events: DataFrame) -> DataFrame:
     )
 
 
-def burst_user_flags(events: DataFrame, burst_threshold: int = 2) -> DataFrame:
+#: Peak-minute event count at which :func:`burst_user_flags` flags a user.
+BURST_THRESHOLD = 2
+
+
+def burst_user_flags(events: DataFrame) -> DataFrame:
     """Bot/burst detection over the event stream: per user, the busiest
     single minute and total volume; users whose peak minute exceeds the
     threshold are flagged — the engagement-data analog of the web-corpus
@@ -1113,7 +1112,7 @@ def burst_user_flags(events: DataFrame, burst_threshold: int = 2) -> DataFrame:
             "peak_minute_events",
             "total_events",
             "active_minutes",
-            (F.col("peak_minute_events") >= burst_threshold).alias("burst_flag"),
+            (F.col("peak_minute_events") >= BURST_THRESHOLD).alias("burst_flag"),
         )
     )
 
@@ -1147,13 +1146,16 @@ def session_window_stats(events: DataFrame, gap: str) -> DataFrame:
     )
 
 
+#: Rows :func:`top_k_per_group_salted` keeps per group, and its salts.
+SALTED_TOP_K = 5
+SALTED_TOP_K_SALTS = 16
+
+
 def top_k_per_group_salted(
     df: DataFrame,
     group_cols: Sequence[str],
     order_by: Sequence[Column],
     salt_src: Column,
-    k: int = 1,
-    salts: int = 16,
 ) -> DataFrame:
     """Hub-safe top-k per group: the two-level (per-salt top-k → merge)
     pattern that :func:`top_k_per_group`'s docstrings promise as the
@@ -1175,7 +1177,10 @@ def top_k_per_group_salted(
     between runs.
     """
     rank_col = "rnk"
-    salted = df.withColumn("_salt", F.pmod(F.xxhash64(salt_src), F.lit(salts)))
+    k = SALTED_TOP_K
+    salted = df.withColumn(
+        "_salt", F.pmod(F.xxhash64(salt_src), F.lit(SALTED_TOP_K_SALTS))
+    )
     w1 = Window.partitionBy(*group_cols, "_salt").orderBy(*order_by)
     survivors = (
         salted.withColumn("_rn1", F.row_number().over(w1))

@@ -47,95 +47,82 @@ def hash_bucket(
     return F.conv(F.substring(h, 1, 7), 16, 10).cast("long") % n_buckets
 
 
-def hash_split(
-    df: DataFrame,
-    id_col: str,
-    splits: dict[str, float] | None = None,
-) -> DataFrame:
-    """Assign every row to a named split by hashed id: train/val/test =
-    90/5/5 by default. Adds ``bucket`` and ``split`` columns.
+#: Named splits of :func:`hash_split` and their weights (sum 1.0).
+SPLITS = {"train": 0.9, "val": 0.05, "test": 0.05}
 
-    Thresholds are cumulative over insertion order of ``splits``; weights
-    must sum to 1.0 (±1 bucket of rounding goes to the last split).
+#: Token budget per pack and hash buckets of :func:`greedy_pack`; the
+#: budget is also :func:`shard_merge_plan`'s target pack size.
+PACK_BUDGET = 256
+PACK_BUCKETS = 32
+
+#: Kept fraction of strata :func:`stratified_sample` is given no
+#: fraction for.
+STRATIFIED_DEFAULT_FRACTION = 0.05
+
+
+def hash_split(df: DataFrame, id_col: str) -> DataFrame:
+    """Assign every row to a named split by hashed id: train/val/test =
+    90/5/5 (``SPLITS``). Adds ``bucket`` and ``split`` columns.
+
+    Thresholds are cumulative over the insertion order of ``SPLITS``
+    (±1 bucket of rounding goes to the last split).
     """
     salt = "split"
-    splits = splits or {"train": 0.9, "val": 0.05, "test": 0.05}
-    if abs(sum(splits.values()) - 1.0) > 1e-9:
-        raise ValueError(f"split weights must sum to 1.0, got {splits}")
     bucket = hash_bucket(F.col(id_col), salt)
     out = df.withColumn("bucket", bucket)
     expr, acc = None, 0.0
-    names = list(splits)
+    names = list(SPLITS)
     for name in names[:-1]:
-        acc += splits[name]
+        acc += SPLITS[name]
         cond = F.col("bucket") < int(round(acc * N_BUCKETS))
         expr = F.when(cond, name) if expr is None else expr.when(cond, name)
-    expr = F.lit(names[0]) if expr is None else expr.otherwise(names[-1])
-    return out.withColumn("split", expr)
+    return out.withColumn("split", expr.otherwise(names[-1]))
 
 
-def greedy_pack(
-    df: DataFrame,
-    id_col: str,
-    token_col: str,
-    budget: int = 256,
-    n_buckets: int = 32,
-    order_col: str | None = None,
-) -> DataFrame:
+def greedy_pack(df: DataFrame, id_col: str, token_col: str) -> DataFrame:
     """Context-window packing for pretraining: assign each document to a
-    (bucket, pack) slot so that consecutive documents fill ~``budget``
-    tokens per pack — the batch-assembly step between curation and
+    (bucket, pack) slot so that consecutive documents fill
+    ~``PACK_BUDGET`` tokens per pack — the batch-assembly step between curation and
     tokenized training shards.
 
     Chunked-fill semantics (deterministic, engine-portable): documents
-    shard into ``n_buckets`` by hashed id, are laid out in id order
+    shard into ``PACK_BUCKETS`` by hashed id, are laid out in id order
     within their bucket, and a document belongs to the pack its FIRST
-    token lands in (``floor(running_prefix / budget)``). A document may
+    token lands in (``floor(running_prefix / PACK_BUDGET)``). A document may
     straddle a boundary — it is counted where it starts, the exact
     semantics of fixed-stride sequence packing where the tokenizer
     splits at the context edge.
 
-    Scale shape: one shuffle on ``bucket`` (``n_buckets`` is a
+    Scale shape: one shuffle on ``bucket`` (``PACK_BUCKETS`` is a
     parallelism knob, not a semantic one), then a single running-sum
     window per bucket. No global ordering, no driver-side state; packs
     stream out in bucket-local order, which is what a shard writer
     wants. Hash sharding also keeps pack contents stable under corpus
     growth *within* a bucket prefix — unlike a global row_number, which
     reshuffles every pack when one document is inserted.
-
-    ``order_col``: lay documents out within their bucket by this column
-    instead of raw id order (e.g. a curated ordering from an upstream
-    ranking stage — the order a shard writer actually consumes).
-    ``id_col`` stays as the tie-breaker so the layout is deterministic.
     """
     salt = "pack"
-    bucket = (hash_bucket(F.col(id_col), salt) % n_buckets).alias("bucket")
-    order = [F.asc(order_col), F.asc(id_col)] if order_col else [F.asc(id_col)]
+    bucket = (hash_bucket(F.col(id_col), salt) % PACK_BUCKETS).alias("bucket")
     w = (
         Window.partitionBy("bucket")
-        .orderBy(*order)
+        .orderBy(F.asc(id_col))
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     running = F.sum(F.col(token_col)).over(w)
     prefix = running - F.col(token_col)
-    cols = [id_col, token_col] + ([order_col] if order_col else [])
     return (
-        df.select(*cols, bucket)
+        df.select(id_col, token_col, bucket)
         # `div` is exact bigint integral division (prefix >= 0, so it IS
         # floor). `F.floor(prefix / budget)` would route through double —
         # exact only below 2^53 token-prefix, a silent boundary misassign
         # above it (ADVICE r9).
         .withColumn("_prefix", prefix)
-        .withColumn("pack_ix", F.expr(f"_prefix div {int(budget)}"))
+        .withColumn("pack_ix", F.expr(f"_prefix div {PACK_BUDGET}"))
         .drop("_prefix")
     )
 
 
-def shard_merge_plan(
-    packs: DataFrame,
-    token_col: str,
-    budget: int = 256,
-) -> DataFrame:
+def shard_merge_plan(packs: DataFrame, token_col: str) -> DataFrame:
     """Merge planner for packed training shards (the layout of
     :func:`greedy_pack`): after curation/dedup removes documents,
     previously full packs shrink — this plans which UNDER-filled packs
@@ -182,7 +169,10 @@ def shard_merge_plan(
     doc rows, then a running-sum window PER BUCKET over pack-level rows
     (bounded: packs-per-bucket, never corpus rows), then a merge-group
     rollup join. No global ordering, no driver state.
+
+    The target pack size is ``PACK_BUDGET``.
     """
+    budget = PACK_BUDGET
     totals = (
         packs.groupBy("bucket", "pack_ix")
         .agg(F.sum(F.col(token_col)).cast("long").alias("pack_tokens"))
@@ -326,7 +316,6 @@ def stratified_sample(
     stratum_col: str,
     fractions: dict[str, float],
     id_col: str,
-    default_fraction: float = 0.0,
 ) -> DataFrame:
     """Deterministic per-stratum downsampling: keep a row iff its hash
     bucket falls below its stratum's threshold — e.g. keep 100% of rare
@@ -344,7 +333,7 @@ def stratified_sample(
         cond = F.col(stratum_col) == value
         t = F.lit(int(round(frac * N_BUCKETS)))
         thresh = F.when(cond, t) if thresh is None else thresh.when(cond, t)
-    thresh = thresh.otherwise(int(round(default_fraction * N_BUCKETS)))
+    thresh = thresh.otherwise(int(round(STRATIFIED_DEFAULT_FRACTION * N_BUCKETS)))
     return df.filter(bucket < thresh)
 
 

@@ -253,8 +253,14 @@ def ivf_topk(embeddings: DataFrame, query_pred: Column, nprobe: int = 1) -> Data
     )
 
 
-def cosine_near_dup_pairs(embeddings: DataFrame, threshold: float = 0.95) -> DataFrame:
-    """Embedding-cosine near-duplicate pairs (vec_a < vec_b, cosine ≥ t).
+#: Cosine at or above which :func:`cosine_near_dup_pairs` pairs two
+#: vectors (calibrated to the fixture's cosine distribution).
+COSINE_NEAR_DUP_THRESHOLD = 0.4
+
+
+def cosine_near_dup_pairs(embeddings: DataFrame) -> DataFrame:
+    """Embedding-cosine near-duplicate pairs (vec_a < vec_b, cosine ≥
+    ``COSINE_NEAR_DUP_THRESHOLD``).
 
     Brute-force pairing as the exact baseline. Scale path: bucket by IVF
     centroid (or random-hyperplane signs) first, pair only within buckets —
@@ -274,7 +280,7 @@ def cosine_near_dup_pairs(embeddings: DataFrame, threshold: float = 0.95) -> Dat
         a.crossJoin(b)
         .filter(F.col("vec_a") < F.col("vec_b"))
         .withColumn("cos", dot(F.col("ea"), F.col("eb")) / (F.col("na") * F.col("nb")))
-        .filter(F.col("cos") >= threshold)
+        .filter(F.col("cos") >= COSINE_NEAR_DUP_THRESHOLD)
         .select("vec_a", "vec_b", F.round("cos", 4).alias("cosine"))
     )
 
@@ -580,7 +586,6 @@ def grid_kmeans(
     cb_row = _lloyd(
         base,
         cb_row,
-        n_iter=2,
         n_sub=1,
         col="embedding",
         units=_gk_units,
@@ -1136,7 +1141,11 @@ def maintenance_report(
     )
 
 
-def bitext_margin_pairs(embeddings: DataFrame, k: int = 4) -> DataFrame:
+#: Neighbours in each side's margin denominator of :func:`bitext_margin_pairs`.
+BITEXT_MARGIN_K = 4
+
+
+def bitext_margin_pairs(embeddings: DataFrame) -> DataFrame:
     """Margin-based bitext mining between two label populations — the
     Artetxe & Schwenk (2019) ratio-margin criterion used to mine
     parallel sentence pairs from comparable corpora (LASER/CCMatrix):
@@ -1172,6 +1181,7 @@ def bitext_margin_pairs(embeddings: DataFrame, k: int = 4) -> DataFrame:
     normalizer aggregations + the scored join), and the scored table
     once (forward + backward rankings).
     """
+    k = BITEXT_MARGIN_K
     src_label = 0
     tgt_label = 1
     s = embeddings.filter(F.col("label") == int(src_label)).select(

@@ -60,7 +60,12 @@ def _mg_partial_mapper(k: int):
     return _summarize
 
 
-def provable_heavy_hitters(df: DataFrame, key: Column, k: int = 8) -> DataFrame:
+#: Misra-Gries summary size of :func:`provable_heavy_hitters`: keys with
+#: more than N/(HEAVY_HITTERS_K + 1) occurrences are reported.
+HEAVY_HITTERS_K = 8
+
+
+def provable_heavy_hitters(df: DataFrame, key: Column) -> DataFrame:
     """DETERMINISTIC heavy hitters: the classic MG two-pass — pass 1 is
     the mergeable Misra-Gries candidate sketch (one Arrow map stage
     emits ≤ ``k`` (key, est) rows per batch via
@@ -87,6 +92,7 @@ def provable_heavy_hitters(df: DataFrame, key: Column, k: int = 8) -> DataFrame:
     """
     from .relational import spread_if_few_splits
 
+    k = HEAVY_HITTERS_K
     # NULL keys are dropped EXPLICITLY on both engine and oracle sides:
     # pandas value_counts skips NaN in the MG pass and the candidate
     # equi-join drops NULLs anyway, while a plain SQL GROUP BY would

@@ -131,6 +131,18 @@ def tokenizer_fertility(documents: DataFrame) -> DataFrame:
     )
 
 
+def _quality_score_num(words: Column, letters: Column, stops: Column) -> Column:
+    """The quality score's numerator over its common denominator
+    1000·words (see :func:`quality_scores`): the letters-per-word
+    bracket is the exact integer test letters ∈ [3w, 9w]."""
+    ind = (letters >= 3 * words) & (letters <= 9 * words)
+    return (
+        5 * words * F.least(words, F.lit(100))
+        + F.when(ind, F.lit(300)).otherwise(F.lit(0)) * words
+        + 200 * F.least(10 * stops, words)
+    )
+
+
 def quality_scores(
     documents: DataFrame, extra_cols: tuple[str, ...] = ()
 ) -> DataFrame:
@@ -169,12 +181,7 @@ def quality_scores(
     )
     words = F.col("n_words").cast("long")
     letters, stops = F.col("lets"), F.col("stops")
-    ind = (letters >= 3 * words) & (letters <= 9 * words)
-    score_num = (
-        5 * words * F.least(words, F.lit(100))
-        + F.when(ind, F.lit(300)).otherwise(F.lit(0)) * words
-        + 200 * F.least(10 * stops, words)
-    )
+    score_num = _quality_score_num(words, letters, stops)
     return base.select(
         "doc_id",
         *extra_cols,
@@ -261,12 +268,7 @@ def source_quality_profile(documents: DataFrame) -> DataFrame:
         _lang_score(padded, "en").cast("long").alias("stops"),
     )
     words, letters, stops = F.col("w"), F.col("lets"), F.col("stops")
-    ind = (letters >= 3 * words) & (letters <= 9 * words)
-    score_num = (
-        5 * words * F.least(words, F.lit(100))
-        + F.when(ind, F.lit(300)).otherwise(F.lit(0)) * words
-        + 200 * F.least(10 * stops, words)
-    )
+    score_num = _quality_score_num(words, letters, stops)
     # quality_score = score_num/(1000·w) rounded to 1e-4 — recover the
     # exact integer units so the per-source mean stays on the grid
     q_units = F.round(ratio_round(score_num, 1000 * words, 4) * 10_000).cast("long")
@@ -320,12 +322,7 @@ def quality_keep(documents: DataFrame, tau: float = 0.45) -> DataFrame:
     words = F.size(F.split(t, " ")).cast("long")
     letters = F.length(F.replace(t, F.lit(" "), F.lit(""))).cast("long")
     stops = _lang_score(padded, "en").cast("long")
-    ind = (letters >= 3 * words) & (letters <= 9 * words)
-    score_num = (
-        5 * words * F.least(words, F.lit(100))
-        + F.when(ind, F.lit(300)).otherwise(F.lit(0)) * words
-        + 200 * F.least(10 * stops, words)
-    )
+    score_num = _quality_score_num(words, letters, stops)
     return documents.filter(ratio_round_ge(score_num, 1000 * words, tau, 4)).select(
         "doc_id"
     )
@@ -447,11 +444,16 @@ def pii_scan(documents: DataFrame) -> DataFrame:
     )
 
 
-def boilerplate_phrases(
-    documents: DataFrame, min_docs: int = 5, k: int = 100
-) -> DataFrame:
-    """Corpus-level boilerplate phrase mining: the top-``k`` word
-    ``n``-grams that appear in at least ``min_docs`` DISTINCT documents —
+#: Phrases :func:`boilerplate_phrases` returns, and the fewest distinct
+#: documents a phrase must appear in.
+BOILERPLATE_K = 100
+BOILERPLATE_MIN_DOCS = 5
+
+
+def boilerplate_phrases(documents: DataFrame) -> DataFrame:
+    """Corpus-level boilerplate phrase mining: the top-``BOILERPLATE_K``
+    word ``n``-grams that appear in at least ``BOILERPLATE_MIN_DOCS``
+    DISTINCT documents —
     the phrase table a web-corpus cleaner subtracts before training
     (header/footer/disclaimer boilerplate; the phrase-level form of C4's
     repeated-line removal, which needs line structure this corpus lacks).
@@ -471,9 +473,9 @@ def boilerplate_phrases(
         shingles(documents, n, "word")
         .groupBy("sh")
         .agg(F.count(F.lit(1)).alias("n_docs"))
-        .filter(F.col("n_docs") >= min_docs)
+        .filter(F.col("n_docs") >= BOILERPLATE_MIN_DOCS)
         .orderBy(F.desc("n_docs"), F.asc("sh"))
-        .limit(k)
+        .limit(BOILERPLATE_K)
         .select(F.col("sh").alias("phrase"), "n_docs")
     )
 
@@ -666,8 +668,12 @@ BM25_K1 = 1.2
 BM25_B = 0.75
 
 
-def bm25_topk(documents: DataFrame, k: int = 20) -> DataFrame:
-    """Top-k documents by BM25 against a fixed query-term set — the
+#: Documents :func:`bm25_topk` returns.
+BM25_K = 20
+
+
+def bm25_topk(documents: DataFrame) -> DataFrame:
+    """Top-``BM25_K`` documents by BM25 against a fixed query-term set — the
     classic sparse-retrieval scorer (used in pipelines both for corpus
     search and for benchmark-decontamination retrieval).
 
@@ -721,7 +727,7 @@ def bm25_topk(documents: DataFrame, k: int = 20) -> DataFrame:
         # tie-breaking is engine-divergent (see dsir_importance_weights).
         .select("doc_id", F.round(F.col("s"), 4).cast("double").alias("bm25"))
     )
-    return scores.orderBy(F.desc("bm25"), F.asc("doc_id")).limit(k)
+    return scores.orderBy(F.desc("bm25"), F.asc("doc_id")).limit(BM25_K)
 
 
 # --------------------------------------------------------------------------

@@ -18,11 +18,13 @@ from __future__ import annotations
 
 import re as _re
 from collections.abc import Callable
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .operators import quantize as _quant
+from .operators.graph import LP_MAX_MIDDLE_DEGREE, LP_TOP_K, PAGERANK_ITERS
 from .operators.relational import (
     bucketize,
     histogram,
@@ -30,6 +32,7 @@ from .operators.relational import (
     pivot_counts,
     stable_avg,
     top_k_per_group,
+    TOP_K_PER_GROUP,
     value_counts,
 )
 from .operators.numeric import (
@@ -53,7 +56,6 @@ class QuerySpec:
     builder: Callable[[SparkSession, str], DataFrame]
     oracle: str  # DuckDB SQL the driver compares the builder against
     doc: str = ""
-    tags: tuple[str, ...] = field(default=())
 
 
 REGISTRY: dict[str, QuerySpec] = {}
@@ -206,7 +208,7 @@ _BOUNDARY_REWRITERS: dict[str, Callable[[str], str]] = {
 }
 
 
-def _register(name: str, oracle: str, doc: str = "", tags: tuple[str, ...] = ()):
+def _register(name: str, oracle: str, doc: str = ""):
     for table, rewriter in _BOUNDARY_REWRITERS.items():
         # a base table in a NON-first comma-join position would
         # bypass both the trigger below and the rewriter's leftover
@@ -227,7 +229,7 @@ def _register(name: str, oracle: str, doc: str = "", tags: tuple[str, ...] = ())
             oracle = rewriter(oracle)
 
     def deco(fn: Callable[[SparkSession, str], DataFrame]):
-        REGISTRY[name] = QuerySpec(name, fn, oracle, doc, tags)
+        REGISTRY[name] = QuerySpec(name, fn, oracle, doc)
         return fn
 
     return deco
@@ -366,7 +368,6 @@ _register(
     FROM stats s LEFT JOIN top t ON s.price_bucket = t.price_bucket
     """,
     doc="View 1 / flagship: v_age_preferences analog (bigquery_views.sql:2-43)",
-    tags=("view", "B3", "D1", "D2", "D3", "D4", "E1", "E3", "C1"),
 )(
     lambda spark, sf: stats_plus_top1(
         _t(spark, sf, "orders").select(
@@ -402,7 +403,6 @@ _register(
     FROM stats s LEFT JOIN top t ON s.o_orderstatus = t.o_orderstatus
     """,
     doc="View 2: v_gender_preferences analog (bigquery_views.sql:46-72)",
-    tags=("view", "C2", "E1"),
 )(
     lambda spark, sf: stats_plus_top1(
         _t(spark, sf, "orders"), "o_orderstatus", "o_orderpriority", "top_priority", _PRICE_AVG
@@ -445,7 +445,6 @@ _register(
     "canonicalizer cannot factorize list cells; the array-valued form is "
     "shopping_views.stats_plus_top3's own output. The customer dimension is "
     "broadcast, so attaching segments never shuffles the fact table.",
-    tags=("view", "C3", "D6", "D7", "E2"),
 )(
     lambda spark, sf: stats_plus_top3(
         _t(spark, sf, "orders").join(
@@ -474,7 +473,6 @@ _register(
     """,
     doc="View 4: v_age_gender_category analog — 3-key GROUP BY "
     "(bigquery_views.sql:103-126)",
-    tags=("view", "D5"),
 )(
     lambda spark, sf: _t(spark, sf, "orders")
     .groupBy(price_bucket_col().alias("price_bucket"), "o_orderstatus", "o_orderpriority")
@@ -507,7 +505,6 @@ _register(
     """,
     doc="TPC-H Q1-shaped pricing summary: the canonical partial+final hash "
     "aggregation the reference delegates to BigQuery (SURVEY.md §4)",
-    tags=("D1", "D2", "D4", "agg"),
 )
 def _pricing_summary(spark: SparkSession, sf: str) -> DataFrame:
     li = _t(spark, sf, "lineitem")
@@ -535,7 +532,6 @@ def _pricing_summary(spark: SparkSession, sf: str) -> DataFrame:
     """,
     doc="Global scalar aggregates [D8]: len/sum/mean row of the dashboard "
     "(streamlit_app.py:333-336)",
-    tags=("D8",),
 )
 def _global_stats(spark: SparkSession, sf: str) -> DataFrame:
     return _t(spark, sf, "lineitem").agg(
@@ -555,7 +551,6 @@ def _global_stats(spark: SparkSession, sf: str) -> DataFrame:
     FROM events GROUP BY event_type
     """,
     doc="value_counts frequency table [D16] (streamlit_app.py:426,727,907)",
-    tags=("D16",),
 )
 def _value_counts_event_type(spark: SparkSession, sf: str) -> DataFrame:
     return value_counts(_t(spark, sf, "events"), "event_type")
@@ -572,7 +567,6 @@ def _value_counts_event_type(spark: SparkSession, sf: str) -> DataFrame:
     doc="Hourly tumbling series [G1/G2/D11]: dt.floor('H') count+sum "
     "(streamlit_app.py:374-379); the Consumer's gold hourly_series is the "
     "same date_trunc aggregate over silver (SURVEY §2.H6)",
-    tags=("G1", "G2", "D11"),
 )
 def _hourly_series(spark: SparkSession, sf: str) -> DataFrame:
     ev = _t(spark, sf, "events")
@@ -600,7 +594,6 @@ def _hourly_series(spark: SparkSession, sf: str) -> DataFrame:
     """,
     doc="Group-sum, global sort, head [D17/F5/F6] (streamlit_app.py:440) with "
     "a broadcast dim join — part is a dimension, the fact never shuffles",
-    tags=("D17", "F5", "F6", "C1"),
 )
 def _top_categories_by_revenue(spark: SparkSession, sf: str) -> DataFrame:
     li = _t(spark, sf, "lineitem")
@@ -629,7 +622,6 @@ def _top_categories_by_revenue(spark: SparkSession, sf: str) -> DataFrame:
     """,
     doc="Latest-N scan [F1]: ORDER BY ts DESC LIMIT n "
     "(streamlit_app.py:188-189) → TakeOrderedAndProject, no full sort",
-    tags=("F1",),
 )
 def _latest_events(spark: SparkSession, sf: str) -> DataFrame:
     ev = _t(spark, sf, "events")
@@ -654,7 +646,6 @@ def _latest_events(spark: SparkSession, sf: str) -> DataFrame:
     """,
     doc="Equal-width histogram [G3]: px.histogram(nbins) as a distributed "
     "two-agg plan (streamlit_app.py:455-461)",
-    tags=("G3",),
 )
 def _histogram_event_value(spark: SparkSession, sf: str) -> DataFrame:
     return histogram(_t(spark, sf, "events"), "value", nbins=20)
@@ -672,7 +663,6 @@ def _histogram_event_value(spark: SparkSession, sf: str) -> DataFrame:
     """,
     doc="pivot_table reshape [E4/C4] (streamlit_app.py:645-651): explicit "
     "pivot values skip the distinct-scan job and fix column order",
-    tags=("E4", "C4"),
 )
 def _pivot_segment_status(spark: SparkSession, sf: str) -> DataFrame:
     orders = _t(spark, sf, "orders")
@@ -694,7 +684,6 @@ def _pivot_segment_status(spark: SparkSession, sf: str) -> DataFrame:
     """,
     doc="Second pivot shape [E4]: category×satisfaction sum-pivot with fixed "
     "column order + fill 0 (streamlit_app.py:882-894)",
-    tags=("E4",),
 )
 def _qty_pivot_returnflag(spark: SparkSession, sf: str) -> DataFrame:
     li = _t(spark, sf, "lineitem")
@@ -726,7 +715,6 @@ def _qty_pivot_returnflag(spark: SparkSession, sf: str) -> DataFrame:
     doc="Conjunctive compound filter + per-group aggs [B5/B6/D10/D12]: the "
     "VIP & Premium subset analysis (streamlit_app.py:685-707). Predicate "
     "pushes to the parquet scan.",
-    tags=("B5", "B6", "D10", "D12"),
 )
 def _vip_premium_subset(spark: SparkSession, sf: str) -> DataFrame:
     return (
@@ -751,7 +739,6 @@ def _vip_premium_subset(spark: SparkSession, sf: str) -> DataFrame:
     """,
     doc="Anomaly subset per-group count+sum [B7/D13] "
     "(streamlit_app.py:751,769-771): high-value outlier slice",
-    tags=("B7", "D13"),
 )
 def _anomaly_by_type(spark: SparkSession, sf: str) -> DataFrame:
     return (
@@ -779,7 +766,6 @@ def _anomaly_by_type(spark: SparkSession, sf: str) -> DataFrame:
     "(streamlit_app.py:347,352,759): anomaly count and percentage. "
     "100·a/n is a grid quotient — rounded in exact integer space "
     "(numeric.ratio_round) on both engines.",
-    tags=("D9", "B9"),
 )
 def _anomaly_rate(spark: SparkSession, sf: str) -> DataFrame:
     anomaly = (F.col("value") > 450).cast("long")
@@ -803,7 +789,6 @@ def _anomaly_rate(spark: SparkSession, sf: str) -> DataFrame:
     """,
     doc="Range bucketing on a second column family [B3/B4] "
     "(bigquery_views.sql:5-12 pattern on c_acctbal, incl. BETWEEN range)",
-    tags=("B3", "B4"),
 )
 def _acctbal_buckets(spark: SparkSession, sf: str) -> DataFrame:
     bucket = bucketize(F.col("c_acctbal"), [0.0, 5000.0], ["negative", "low", "high"])
@@ -827,7 +812,6 @@ def _acctbal_buckets(spark: SparkSession, sf: str) -> DataFrame:
     """,
     doc="IN-list membership filter [B8]: the UI multiselect "
     "(streamlit_app.py:997-1001)",
-    tags=("B8",),
 )
 def _in_list_filter(spark: SparkSession, sf: str) -> DataFrame:
     return (
@@ -842,7 +826,6 @@ def _in_list_filter(spark: SparkSession, sf: str) -> DataFrame:
     "distinct_event_types",
     "SELECT DISTINCT event_type FROM events",
     doc="Distinct values for filter options [D18] (streamlit_app.py:984,990)",
-    tags=("D18",),
 )
 def _distinct_event_types(spark: SparkSession, sf: str) -> DataFrame:
     return _t(spark, sf, "events").select("event_type").distinct()
@@ -859,7 +842,6 @@ def _distinct_event_types(spark: SparkSession, sf: str) -> DataFrame:
     GROUP BY c.c_mktsegment
     """,
     doc="Revenue by customer segment [D14] (streamlit_app.py:831-836)",
-    tags=("D14", "C1"),
 )
 def _segment_revenue(spark: SparkSession, sf: str) -> DataFrame:
     orders = _t(spark, sf, "orders")
@@ -877,7 +859,7 @@ def _segment_revenue(spark: SparkSession, sf: str) -> DataFrame:
 
 @_register(
     "top3_priorities_per_segment",
-    """
+    f"""
     SELECT c_mktsegment, o_orderpriority, cnt, rnk
     FROM (
       SELECT c.c_mktsegment, o.o_orderpriority, COUNT(*) AS cnt,
@@ -887,11 +869,10 @@ def _segment_revenue(spark: SparkSession, sf: str) -> DataFrame:
       FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
       GROUP BY c.c_mktsegment, o.o_orderpriority
     )
-    WHERE rnk <= 3
+    WHERE rnk <= {TOP_K_PER_GROUP}
     """,
     doc="Standalone top-k per group [E2/E3]: QUALIFY ROW_NUMBER <= 3 "
     "emulation with rank exposed (bigquery_views.sql:84-92)",
-    tags=("E2", "E3"),
 )
 def _top3_priorities_per_segment(spark: SparkSession, sf: str) -> DataFrame:
     orders = _t(spark, sf, "orders")
@@ -905,7 +886,6 @@ def _top3_priorities_per_segment(spark: SparkSession, sf: str) -> DataFrame:
         counts,
         group_cols=["c_mktsegment"],
         order_by=[F.desc("cnt"), F.asc("o_orderpriority")],
-        k=3,
     ).select("c_mktsegment", "o_orderpriority", "cnt", "rnk")
 
 
@@ -932,7 +912,6 @@ _register(
     GROUP BY t
     """,
     doc="Exact dedup: hash-groupBy on normalized text, keep min doc_id",
-    tags=("ext", "dedup"),
 )(lambda spark, sf: _dedup.exact_dedup(_t(spark, sf, "documents")))
 
 
@@ -946,7 +925,6 @@ _register(
     HAVING COUNT(*) > 1
     """,
     doc="Fingerprint dedup: md5(normalized 40-char prefix) duplicate groups",
-    tags=("ext", "dedup"),
 )(lambda spark, sf: _dedup.prefix_fingerprint_dups(_t(spark, sf, "documents")))
 
 
@@ -981,7 +959,6 @@ _register(
     _NGRAM_PAIRS_SQL,
     doc="Exact word-3-gram Jaccard near-dup pairs (threshold 0.6) via "
     "prefix-filtered shingle join; the oracle-checked baseline for LSH",
-    tags=("ext", "dedup"),
 )(lambda spark, sf: _dedup.ngram_jaccard_pairs(_t(spark, sf, "documents"), 3, 0.6))
 
 
@@ -1001,7 +978,6 @@ _register(
     "convergence probe); the oracle replays it with a recursive CTE "
     "(transitive closure + MIN). Pairs alone over-delete: {A,B},{B,C} "
     "must collapse to one cluster, which is exactly what this computes.",
-    tags=("ext", "dedup", "iterative"),
 )(
     lambda spark, sf: _dedup.duplicate_clusters(
         _dedup.ngram_jaccard_pairs(_t(spark, sf, "documents"), 3, 0.6)
@@ -1111,13 +1087,13 @@ _register(
     "near-linear 100 TB dedup path. Portable md5-seeded hash family, so "
     "the oracle replays candidate generation exactly (was rows-only when "
     "signatures used xxhash64)",
-    tags=("ext", "dedup"),
 )(lambda spark, sf: _dedup.minhash_lsh_pairs(_t(spark, sf, "documents")))
 
 
-def _simhash_sql(nbits: int = 60, max_hamming: int = 6) -> str:
-    """DuckDB twin of ``dedup.simhash_pairs(portable=True)`` — generated
-    with the same chunk layout as ``dedup.hamming_band_chunks``."""
+def _simhash_sql() -> str:
+    """DuckDB twin of ``dedup.simhash_pairs`` — generated with the same
+    chunk layout as ``dedup.hamming_band_chunks``."""
+    nbits, max_hamming = _dedup.SIMHASH_BITS, _dedup.SIMHASH_MAX_HAMMING
     bit_sums = ",\n             ".join(
         f"SUM(CASE WHEN (h >> {i}) & 1 = 1 THEN 1 ELSE -1 END) AS b{i}"
         for i in range(nbits)
@@ -1171,7 +1147,6 @@ _register(
     "portable 60-bit md5-derived word hash, so signatures + lossless "
     "Manku banding + Hamming verification are all oracle-replayed "
     "(was rows-only when the word hash was xxhash64)",
-    tags=("ext", "dedup"),
 )(
     lambda spark, sf: _dedup.simhash_pairs(_t(spark, sf, "documents")).withColumn(
         "hamming", F.col("hamming").cast("long")
@@ -1316,7 +1291,6 @@ _register(
     "three audited pipeline replays verbatim (the ECE/FDR composition "
     "pattern); ratios are exact integer quotients with zero-denominator "
     "guards on both engines.",
-    tags=("ext", "dedup", "eval"),
 )(_dedup_method_agreement)
 
 
@@ -1356,7 +1330,6 @@ _register(
     """,
     doc="Brute-force cosine top-5 for 10 query vectors: broadcast query "
     "side × one corpus pass; the exact ANN baseline",
-    tags=("ext", "similarity"),
 )(
     lambda spark, sf: _sim.brute_force_topk(
         _t(spark, sf, "embeddings"), F.col("vec_id") < 10, k=5
@@ -1389,7 +1362,6 @@ _register(
     "the negative-selection step for contrastive training data. "
     "Broadcast query side x one corpus pass; the label inequality rides "
     "the pair filter in the same codegen stage.",
-    tags=("ext", "similarity", "r6"),
 )(
     lambda spark, sf: _sim.hard_negatives(
         _t(spark, sf, "embeddings"), F.col("vec_id") < 10
@@ -1419,7 +1391,6 @@ _register(
     doc="IVF approximate top-5 (nprobe=1, deterministic centroids): "
     "per-query work scales with cluster size, not corpus size — the "
     "oracle checks the approximation itself",
-    tags=("ext", "similarity"),
 )(
     lambda spark, sf: _sim.ivf_topk(_t(spark, sf, "embeddings"), F.col("vec_id") < 10)
 )
@@ -1432,7 +1403,7 @@ _register(
     SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
            ROUND({_COS_SQL.format(a="a.emb", b="b.emb")}, 4) AS cosine
     FROM e a JOIN e b ON a.vec_id < b.vec_id
-    WHERE {_COS_SQL.format(a="a.emb", b="b.emb")} >= 0.4
+    WHERE {_COS_SQL.format(a="a.emb", b="b.emb")} >= {_sim.COSINE_NEAR_DUP_THRESHOLD}
     """,
     doc="Embedding-cosine near-dup pairs, EXACT QUADRATIC BASELINE "
     "(threshold 0.4, calibrated to the fixture's cosine distribution — "
@@ -1440,11 +1411,8 @@ _register(
     "oracle-check cosine arithmetic and to bound the LSH path's recall; "
     "the production near-dup operator is `embedding_near_dup` (SRP-LSH "
     "banded candidates, near-linear). Do not run this form at scale.",
-    tags=("ext", "dedup", "similarity", "exact-baseline"),
 )(
-    lambda spark, sf: _sim.cosine_near_dup_pairs(
-        _t(spark, sf, "embeddings"), threshold=0.4
-    )
+    lambda spark, sf: _sim.cosine_near_dup_pairs(_t(spark, sf, "embeddings"))
 )
 
 
@@ -1511,7 +1479,6 @@ _register(
     """,
     doc="Heuristic language ID: marker-stopword argmax with fixed-priority "
     "tie-break — even the heuristic is oracle-checked",
-    tags=("ext", "text"),
 )(lambda spark, sf: _text.lang_id(_t(spark, sf, "documents")))
 
 
@@ -1525,7 +1492,6 @@ _register(
     FROM (SELECT doc_id, {_NORM_SQL} AS t FROM documents)
     """,
     doc="Token counting: whitespace + BPE-ish regex pre-tokenizer counts",
-    tags=("ext", "text"),
 )(lambda spark, sf: _text.token_counts(_t(spark, sf, "documents")))
 
 
@@ -1552,7 +1518,6 @@ _register(
     doc="Quality scoring: length/word-stats/stopword-ratio formula. All "
     "outputs are exact integer ratios rounded in integer space "
     "(numeric.ratio_round; the bracket test is letters ∈ [3w, 9w]).",
-    tags=("ext", "text"),
 )(lambda spark, sf: _text.quality_scores(_t(spark, sf, "documents")))
 
 
@@ -1584,7 +1549,6 @@ _register(
     "(numeric.ratio_round). Explicit ASCII classes keep java.util.regex "
     "and RE2 identical; one projection, zero shuffles — scan-speed at "
     "100 TB.",
-    tags=("ext", "text", "r6"),
 )(lambda spark, sf: _text.structure_signals(_t(spark, sf, "documents")))
 
 
@@ -1621,7 +1585,6 @@ _register(
     "(distinct-fp = standard two-level distinct agg) emits a "
     "|sources|-sized dimension table at any corpus scale; every ratio "
     "exact-integer rounded.",
-    tags=("ext", "text", "dedup", "sampling", "r6"),
 )(lambda spark, sf: _text.source_quality_profile(_t(spark, sf, "documents")))
 
 
@@ -1632,7 +1595,6 @@ _register(
     FROM (SELECT doc_id, {_NORM_SQL} AS t FROM documents)
     """,
     doc="Document fingerprinting: md5 of normalized text (portable digest)",
-    tags=("ext", "text"),
 )(lambda spark, sf: _text.fingerprints(_t(spark, sf, "documents")))
 
 
@@ -1683,7 +1645,6 @@ _register(
     "2-gram/3-gram fractions per document — the repetition filters a "
     "training-data pipeline applies before dedup. Exact integer ratios, "
     "oracle-checked.",
-    tags=("ext", "text"),
 )(lambda spark, sf: _text.repetition_signals(_t(spark, sf, "documents")))
 
 
@@ -1707,7 +1668,6 @@ _register(
     "projection (no shuffle, no RNG state): re-running after corpus "
     "growth never moves an old row between splits — the stability "
     "property that prevents train/test leakage across dataset versions.",
-    tags=("ext", "sampling"),
 )(
     lambda spark, sf: _sampling.hash_split(
         _t(spark, sf, "documents").select("doc_id"), "doc_id"
@@ -1732,7 +1692,6 @@ _register(
     "the fact table never shuffles for the join — ONE shuffle total (the "
     "final group-by). The TPC-H Q5 shape. SUM is exact: prices sit on a "
     "2-decimal grid and the total fits a double's 53-bit mantissa.",
-    tags=("C-extra", "join"),
 )(
     lambda spark, sf: _t(spark, sf, "orders")
     .join(
@@ -1773,7 +1732,6 @@ _register(
     "orders side is filtered and reduced to its join key BEFORE the "
     "shuffle (pushed predicate + 8-byte rows). Oracle is NOT EXISTS — "
     "independent derivation. SUM exact on the 2-decimal grid.",
-    tags=("C-extra", "join", "anti"),
 )(
     lambda spark, sf: _t(spark, sf, "customer")
     .join(
@@ -1881,7 +1839,6 @@ _register(
     "are the content-keyed aggregations. Every stage reuses an "
     "already-oracle-checked operator; the composition is oracle-checked "
     "here.",
-    tags=("ext", "pipeline", "sampling", "dedup", "text"),
 )(_corpus_curation)
 
 
@@ -1918,7 +1875,6 @@ _register(
     "shuffle-hash builds, streaming joins (no AQE), skewed downstream "
     "groupBys. The oracle is the PLAIN join — salting must not change a "
     "single row.",
-    tags=("C-extra", "join", "skew"),
 )(_salted_segment_revenue)
 
 
@@ -1941,7 +1897,6 @@ _register(
     "previous event (exact integer microseconds), neighbor event types, "
     "rolling 3-row mean. One shuffle serves all five window expressions "
     "(shared partitioning+ordering -> single WindowExec).",
-    tags=("E-extra", "window", "ext"),
 )(
     lambda spark, sf: _rel.sequence_features(
         _t(spark, sf, "events"),
@@ -2000,7 +1955,6 @@ _register(
     "theta join plans as. Oracle is the naive range join — independent "
     "derivation, same semantics. MAX not SUM for the value (float SUM "
     "order differs across engines).",
-    tags=("ext", "temporal", "range-join"),
 )(_purchases_within_hour)
 
 
@@ -2015,20 +1969,18 @@ _register(
     WHERE bucket < CASE event_type
                      WHEN 'purchase' THEN 10000
                      WHEN 'click' THEN 1000
-                     ELSE 500 END
+                     ELSE {round(_sampling.STRATIFIED_DEFAULT_FRACTION * _sampling.N_BUCKETS)} END
     """,
     doc="Deterministic stratified sampling [ext/sampling]: keep 100% of "
     "purchases, 10% of clicks, 5% of the rest, by hashed event_id — the "
     "class-rebalancing step before training, reproducible row-for-row "
     "across engines (unlike RNG sampleBy) and oracle-checked.",
-    tags=("ext", "sampling"),
 )(
     lambda spark, sf: _sampling.stratified_sample(
         _t(spark, sf, "events").select("event_id", "event_type"),
         "event_type",
         {"purchase": 1.0, "click": 0.1},
         id_col="event_id",
-        default_fraction=0.05,
     )
 )
 
@@ -2052,7 +2004,6 @@ _register(
     doc="Multimodal metadata extraction: binary payload column → Arrow-"
     "batched mapInPandas (sha256 + stub decode dims) — the Pandas-UDF "
     "plumbing itself is oracle-checked",
-    tags=("ext", "multimodal", "pandas-udf"),
 )(
     lambda spark, sf: _mm.extract_media_metadata(
         _mm.attach_binary_payload(_t(spark, sf, "documents"))
@@ -2072,7 +2023,6 @@ _register(
     doc="The dashboard's hot path [A1/F1]: latest-10k-style scan with "
     "explicit projection (streamlit_app.py:164-190) — plans as "
     "TakeOrderedAndProject, zero shuffle",
-    tags=("A1", "F1"),
 )(
     lambda spark, sf: latest_n(
         _t(spark, sf, "orders"), "o_orderdate", 1000, tiebreak="o_orderkey"
@@ -2098,7 +2048,6 @@ _register(
     """,
     doc="Two-key group count+sum [D15]: the category×satisfaction matrix "
     "shape (streamlit_app.py:873-876)",
-    tags=("D15",),
 )(
     lambda spark, sf: _t(spark, sf, "orders")
     .groupBy("o_orderpriority", "o_orderstatus")
@@ -2147,7 +2096,6 @@ _register(
     REGISTRY["v_price_bucket_preferences"].oracle,
     doc="View DDL + scan through spark.sql [A2/A3]: proves the SQL surface "
     "produces the identical result to the DataFrame builder",
-    tags=("A2", "A3", "sql"),
 )(_sql_interface_view)
 
 
@@ -2188,7 +2136,6 @@ _register(
     "F.session_window]: sessions merge while consecutive events are < 10 "
     "min apart; end = last event + gap. Oracle is the classic "
     "gaps-and-islands formulation - same semantics, independent derivation",
-    tags=("ext", "H8", "streaming", "session-window"),
 )(_session_windows_events)
 
 
@@ -2241,7 +2188,6 @@ _register(
     "ONE union+shuffle+sort with a carry-forward window - |L|+|R| cost, "
     "never |L|x|matching R|. Oracle is the range-join + ROW_NUMBER "
     "formulation - independent derivation, same semantics",
-    tags=("ext", "asof-join", "temporal"),
 )(_asof_click_purchase)
 
 
@@ -2276,7 +2222,6 @@ _register(
     "ties resolve priority DESC; the window form uses ASC — the oracle "
     "mirrors DESC). The plan is scan → partial agg → exchange → final "
     "agg, twice — nothing else.",
-    tags=("view", "E1-aggonly", "D-extra"),
 )(
     lambda spark, sf: _t(spark, sf, "orders")
     .groupBy("o_orderstatus", "o_orderpriority")
@@ -2372,7 +2317,6 @@ _register(
     "guarantee booleans at 10x slack) so the sketch entry carries a "
     "full oracle; value error vs exact percentiles stays pytest-"
     "bounded.",
-    tags=("D-extra", "percentile", "sketch-audit"),
 )(_price_percentiles_approx)
 
 
@@ -2390,7 +2334,6 @@ _register(
     "builtins]. percentile() is a single-pass sort-based aggregate; the "
     "scale path for wide cardinalities is approx_percentile (t-digest), "
     "same call shape",
-    tags=("D-extra", "percentile"),
 )(
     lambda spark, sf: _t(spark, sf, "orders")
     .groupBy("o_orderstatus")
@@ -2419,7 +2362,6 @@ _register(
     "fact table is scanned once and never shuffled. Cents-grid inputs "
     "keep both bounds on the 1e-4 grid (no rounding ties; NOTES.md r6 "
     "percentile argument).",
-    tags=("D-extra", "sampling", "r6"),
 )(
     lambda spark, sf: _rel.winsorize(
         _t(spark, sf, "events"), "value", "event_id"
@@ -2538,7 +2480,6 @@ _register(
     "range join), cumulative window over the bounded value grid, "
     "order statistics as exact integer inequalities, output in integer "
     "cents (zero rounding sites).",
-    tags=("ext", "timeseries", "percentile"),
 )(_events_rolling_value_quantiles)
 
 
@@ -2555,7 +2496,6 @@ _register(
     "per-status subtotals, and the grand total in ONE pass - Catalyst "
     "expands to grouping sets inside a single aggregation, no UNION of "
     "scans",
-    tags=("D-extra", "rollup"),
 )(
     lambda spark, sf: _t(spark, sf, "orders")
     .rollup("o_orderstatus", "o_orderpriority")
@@ -2593,7 +2533,6 @@ _register(
     doc="Top-3 TF-IDF terms per document [ext/text]: explode -> tf -> df "
     "-> score -> ranked window, corpus size joined as a broadcast 1-row "
     "aggregate (no driver collect)",
-    tags=("ext", "text", "tfidf"),
 )(lambda spark, sf: _text.tfidf_top_terms(_t(spark, sf, "documents")))
 
 
@@ -2663,7 +2602,6 @@ _register(
     "prefer from_json with an explicit schema once per row over repeated "
     "per-field parses. Malformed-JSON-tolerant on both engines (NULL, "
     "not error) with an integral-string gate for numeric value parity.",
-    tags=("G-extra", "json"),
 )(_json_props_stats)
 
 
@@ -2698,7 +2636,6 @@ _register(
     "clusters - recall rises monotonically with nprobe while per-query "
     "work stays nprobe x cluster-size; the oracle reproduces the exact "
     "probe set deterministically",
-    tags=("ext", "similarity", "ivf", "nprobe"),
 )(
     lambda spark, sf: _sim.ivf_topk(
         _t(spark, sf, "embeddings"),
@@ -2721,7 +2658,6 @@ _register(
     "count - Catalyst plans a two-level expand+aggregate; the 100 TB "
     "scale path is approx_count_distinct (HLL++, mergeable sketches), "
     "same call shape",
-    tags=("D-extra", "count-distinct"),
 )(
     lambda spark, sf: _t(spark, sf, "events")
     .groupBy("event_type")
@@ -2752,7 +2688,6 @@ _register(
     "— the boolean is partition- and run-independent; Spark-vs-DuckDB "
     "estimate deltas (different sketches) never reach the hash. The "
     "TIGHT 3*rsd error bound stays pytest-pinned.",
-    tags=("D-extra", "count-distinct", "sketch-audit"),
 )(
     lambda spark, sf: _t(spark, sf, "events")
     .groupBy("event_type")
@@ -2786,7 +2721,6 @@ _register(
     "each binary payload yields k deterministic frames through the same "
     "Arrow-batched mapInPandas shape a real codec would use - the explode "
     "pattern, schema, and batching are oracle-checked end to end",
-    tags=("ext", "multimodal", "pandas-udf"),
 )(
     lambda spark, sf: _mm.sample_frames(
         _mm.attach_binary_payload(_t(spark, sf, "documents"))
@@ -2895,7 +2829,6 @@ _register(
     "given the signatures, so LSH 'probabilistic recall' never meant "
     "nondeterministic output, only recall < 1 vs the exact baseline "
     "(still pytest-bounded).",
-    tags=("ext", "similarity", "dedup"),
 )(_rh_near_dup_builder)
 
 
@@ -2910,7 +2843,6 @@ _register(
     doc="CUBE over (status, priority) [SURVEY D-note: grouping sets "
     "absent from the reference]: all four grouping combinations in one "
     "expand+aggregate pass",
-    tags=("D-extra", "cube"),
 )(
     lambda spark, sf: _t(spark, sf, "orders")
     .cube("o_orderstatus", "o_orderpriority")
@@ -2950,7 +2882,6 @@ _register(
     "n·Σx²·10⁴ − cents² over 10⁴·n(n−1) is a grid quotient — rounded in "
     "exact integer space (numeric.ratio_round); stddev is sqrt of the "
     "ROUNDED variance so both engines feed libm the identical double.",
-    tags=("D-extra", "stddev"),
 )(
     lambda spark, sf: _dispersion_stats(spark, sf)
 )
@@ -2995,16 +2926,18 @@ def _dispersion_stats(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-def _grid_kmeans_ctes(src: str, k: int, n_iter: int = 2) -> str:
+def _grid_kmeans_ctes(src: str, k: int) -> str:
     """DuckDB replay of ``similarity.grid_kmeans`` over source CTE/table
     ``src`` (vec_id, embedding): grid the components to 1e-6 integer
     units (FLOOR of an exact double product), init from the ``k``
-    lowest-md5 vectors, unroll ``n_iter`` Lloyd rounds — every distance
+    lowest-md5 vectors, unroll ``quantize.LLOYD_ITERS`` Lloyd rounds —
+    every distance
     an exact integer SUM (order-free), every centroid update a
     half-away integer mean (numeric.ratio_round_sql, scale 0), empty
     clusters keeping the previous centroid — then the final assignment
     ``gassign`` (vec_id, centroid_id). Pure integer SQL: no engineered
     float-op ordering needed anywhere."""
+    n_iter = _quant.LLOYD_ITERS
     mean_int = "CAST(" + ratio_round_sql("u.s", "u.n", 0) + " AS BIGINT)"
     ctes = [
         f"""gcomps AS MATERIALIZED (
@@ -3104,7 +3037,6 @@ _register(
     "integer SQL DuckDB unrolls verbatim; cosine scoring reuses the "
     "bit-identical fold. pytest still bounds recall against brute "
     "force.",
-    tags=("ext", "similarity", "ivf", "kmeans"),
 )(
     lambda spark, sf: _sim.ivf_topk_kmeans(
         _t(spark, sf, "embeddings"), F.col("vec_id") < 10
@@ -3217,7 +3149,6 @@ _register(
     "aggregate with an agg-only min_by majority; DECIMAL d2 sums "
     "(n x 3.7e14 passes 2^63 near 25k vectors/cluster); k rows out at "
     "any corpus size.",
-    tags=("ext", "similarity", "eval", "kmeans"),
 )(_embedding_cluster_cards)
 
 
@@ -3282,7 +3213,6 @@ _register(
     "pipelines. Cell-bounded self-join (Sigma |c|^2), agg-only min_by "
     "argmax (no rank window), bit-identical cosine fold; singleton-cell "
     "vectors have no neighbor (absent on both engines).",
-    tags=("ext", "similarity", "kmeans"),
 )(_embedding_knn_graph)
 
 
@@ -3302,10 +3232,9 @@ _register(
     "shingle count per doc - oracle-checks the char unit of the shingle "
     "pipeline (the pair join itself stays word-gram: char-grams over a "
     "small alphabet make every shingle hot, see shingles() docstring)",
-    tags=("ext", "dedup", "char"),
 )(
     lambda spark, sf: _dedup_ops.shingle_arrays(
-        _t(spark, sf, "documents"), unit="char"
+        _t(spark, sf, "documents")
     ).select("doc_id", F.col("n_sh").alias("n_shingles"))
 )
 
@@ -3330,7 +3259,6 @@ _register(
     "aspect-preserving fit-in-box output dims through the Arrow-batched "
     "mapInPandas plumbing a real resampler would use - arithmetic "
     "oracle-checked end to end",
-    tags=("ext", "multimodal", "pandas-udf"),
 )(
     lambda spark, sf: _mm.resize_meta(
         _mm.attach_binary_payload(_t(spark, sf, "documents"))
@@ -3369,7 +3297,6 @@ _register(
     "','-separated string (the driver's canonicalizer cannot hash list "
     "cells); the oracle rebuilds the same histogram from hex(encode(text)) "
     "so the Pandas-UDF path is value-checked end to end.",
-    tags=("ext", "multimodal", "pandas-udf"),
 )(
     lambda spark, sf: _mm.extract_features(
         _mm.attach_binary_payload(_t(spark, sf, "documents"))
@@ -3422,13 +3349,10 @@ _register(
     "is oracle-checked, not just the counts. Pure regexp builtins, zero "
     "shuffles; patterns restricted to the RE2 ∩ java.util.regex-identical "
     "subset so both engines find the same matches.",
-    tags=("ext", "text", "pii"),
 )(lambda spark, sf: _text.pii_scan(_t(spark, sf, "documents")))
 
 
 # -- Benchmark contamination check -----------------------------------------
-_BC_N, _BC_BUCKETS, _BC_TAU = 5, 500, 0.2
-
 _register(
     "benchmark_contamination",
     f"""
@@ -3439,18 +3363,18 @@ _register(
                % {_sampling.N_BUCKETS} AS b
       FROM norm
     ),
-    bench AS (SELECT doc_id, t FROM bucketed WHERE b < {_BC_BUCKETS}),
-    corpus AS (SELECT doc_id, t FROM bucketed WHERE b >= {_BC_BUCKETS}),
-    bench_sh AS (SELECT DISTINCT sh FROM ({_gram_sql(_BC_N, "bench")})),
+    bench AS (SELECT doc_id, t FROM bucketed WHERE b < {_dedup.CONTAM_BENCH_BUCKETS}),
+    corpus AS (SELECT doc_id, t FROM bucketed WHERE b >= {_dedup.CONTAM_BENCH_BUCKETS}),
+    bench_sh AS (SELECT DISTINCT sh FROM ({_gram_sql(_dedup.CONTAM_NGRAM, "bench")})),
     corpus_sh AS (
-      SELECT DISTINCT doc_id, sh FROM ({_gram_sql(_BC_N, "corpus")})
+      SELECT DISTINCT doc_id, sh FROM ({_gram_sql(_dedup.CONTAM_NGRAM, "corpus")})
     )
     SELECT c.doc_id,
            COUNT(*) AS n_shingles,
            COUNT(b.sh) AS n_contaminated,
            {ratio_round_sql("COUNT(b.sh)", "COUNT(*)", 4)}
              AS contamination_ratio,
-           (COUNT(b.sh) / CAST(COUNT(*) AS DOUBLE)) >= {_BC_TAU} AS flagged
+           (COUNT(b.sh) / CAST(COUNT(*) AS DOUBLE)) >= {_dedup.CONTAM_THRESHOLD} AS flagged
     FROM corpus_sh c LEFT JOIN bench_sh b ON c.sh = b.sh
     GROUP BY 1
     """,
@@ -3459,19 +3383,12 @@ _register(
     "benchmark split (deterministic 5% hash split standing in for a real "
     "eval suite). Bench shingle set is built once and broadcast — the "
     "corpus side never shuffles shingles, only doc_ids.",
-    tags=("ext", "dedup", "contamination"),
 )(
-    lambda spark, sf: _dedup.benchmark_contamination(
-        _t(spark, sf, "documents"),
-        n=_BC_N,
-        bench_buckets=_BC_BUCKETS,
-        ratio_threshold=_BC_TAU,
-    )
+    lambda spark, sf: _dedup.benchmark_contamination(_t(spark, sf, "documents"))
 )
 
 
 # -- Context-window packing ------------------------------------------------
-_GP_BUDGET, _GP_NBUCKETS = 256, 32
 
 
 def _greedy_pack_q(spark: SparkSession, sf: str) -> DataFrame:
@@ -3480,9 +3397,7 @@ def _greedy_pack_q(spark: SparkSession, sf: str) -> DataFrame:
         "doc_id",
         F.size(F.split(_dedup._norm(F.col("text")), " ")).alias("n_tokens"),
     )
-    return _sampling.greedy_pack(
-        tok, "doc_id", "n_tokens", budget=_GP_BUDGET, n_buckets=_GP_NBUCKETS
-    )
+    return _sampling.greedy_pack(tok, "doc_id", "n_tokens")
 
 
 # Shared greedy-pack replay CTEs (dataset_greedy_pack + the shard merge
@@ -3493,11 +3408,11 @@ _GP_PACKS_CTES = f"""norm AS (SELECT doc_id, {_NORM_SQL} AS t FROM documents),
     tok AS (SELECT doc_id, len(string_split(t, ' ')) AS n_tokens FROM norm),
     b AS (SELECT doc_id, n_tokens,
                  (('0x' || substr(md5('pack:' || doc_id), 1, 7))::BIGINT
-                   % {_sampling.N_BUCKETS}) % {_GP_NBUCKETS} AS bucket
+                   % {_sampling.N_BUCKETS}) % {_sampling.PACK_BUCKETS} AS bucket
           FROM tok),
     packs AS (
       SELECT doc_id, n_tokens, bucket,
-             CAST((SUM(n_tokens) OVER w - n_tokens) // {_GP_BUDGET}
+             CAST((SUM(n_tokens) OVER w - n_tokens) // {_sampling.PACK_BUDGET}
                   AS BIGINT) AS pack_ix
       FROM b
       WINDOW w AS (PARTITION BY bucket ORDER BY doc_id
@@ -3510,17 +3425,14 @@ _register(
     SELECT doc_id, n_tokens, bucket, pack_ix FROM packs
     """,
     doc="Context-window packing [ext/sampling]: documents shard into "
-    f"{_GP_NBUCKETS} hash buckets, lay out in id order, and each doc "
+    f"{_sampling.PACK_BUCKETS} hash buckets, lay out in id order, and each doc "
     "belongs to the pack its FIRST token lands in (floor of the running "
     "prefix over the token budget) — fixed-stride sequence packing, one "
     "shuffle + one running-sum window, no global ordering.",
-    tags=("ext", "sampling", "packing"),
 )(_greedy_pack_q)
 
 
 # -- Rolling time-window features ------------------------------------------
-_RTF_WINDOW_S = 3600
-
 _register(
     "rolling_time_features",
     f"""
@@ -3529,7 +3441,7 @@ _register(
            ROUND(SUM(ROUND(value, 2)) OVER w, 2) AS sum_value_trailing
     FROM events
     WINDOW w AS (PARTITION BY user_id ORDER BY epoch_us(ts)
-                 RANGE BETWEEN {_RTF_WINDOW_S * 1_000_000 - 1} PRECEDING
+                 RANGE BETWEEN {_rel.ROLLING_WINDOW_S * 1_000_000 - 1} PRECEDING
                            AND CURRENT ROW)
     """,
     doc="Trailing time-window features [ext/relational]: per event, count "
@@ -3537,7 +3449,6 @@ _register(
     "hour before it — a RANGE frame over epoch microseconds (value-based; "
     "tie rows see identical frames, so no tie-breaker is needed). One "
     "WindowExec serves both expressions.",
-    tags=("ext", "relational", "window"),
 )(
     lambda spark, sf: _rel.rolling_time_features(
         _t(spark, sf, "events"),
@@ -3545,7 +3456,6 @@ _register(
         "ts",
         "value",
         "event_id",
-        window_seconds=_RTF_WINDOW_S,
     )
 )
 
@@ -3554,7 +3464,8 @@ _register(
 def _decontamination_pipeline(spark: SparkSession, sf: str) -> DataFrame:
     docs = _t(spark, sf, "documents")
     corpus = docs.filter(
-        _sampling.hash_bucket(F.col("doc_id"), "bench") >= _BC_BUCKETS
+        _sampling.hash_bucket(F.col("doc_id"), "bench")
+        >= _dedup.CONTAM_BENCH_BUCKETS
     )
     # integer-predicate form of quality_scores(...).filter(score >= 0.45)
     # (see _corpus_curation)
@@ -3565,9 +3476,7 @@ def _decontamination_pipeline(spark: SparkSession, sf: str) -> DataFrame:
         .select("doc_id")
     )
     flagged = (
-        _dedup.benchmark_contamination(
-            docs, n=_BC_N, bench_buckets=_BC_BUCKETS, ratio_threshold=_BC_TAU
-        )
+        _dedup.benchmark_contamination(docs)
         .filter(F.col("flagged"))
         .select("doc_id")
     )
@@ -3598,17 +3507,17 @@ _register(
                % {_sampling.N_BUCKETS} AS b
       FROM norm
     ),
-    bench AS (SELECT doc_id, t FROM bucketed WHERE b < {_BC_BUCKETS}),
-    corpus AS (SELECT doc_id, t FROM bucketed WHERE b >= {_BC_BUCKETS}),
-    bench_sh AS (SELECT DISTINCT sh FROM ({_gram_sql(_BC_N, "bench")})),
+    bench AS (SELECT doc_id, t FROM bucketed WHERE b < {_dedup.CONTAM_BENCH_BUCKETS}),
+    corpus AS (SELECT doc_id, t FROM bucketed WHERE b >= {_dedup.CONTAM_BENCH_BUCKETS}),
+    bench_sh AS (SELECT DISTINCT sh FROM ({_gram_sql(_dedup.CONTAM_NGRAM, "bench")})),
     corpus_sh AS (
-      SELECT DISTINCT doc_id, sh FROM ({_gram_sql(_BC_N, "corpus")})
+      SELECT DISTINCT doc_id, sh FROM ({_gram_sql(_dedup.CONTAM_NGRAM, "corpus")})
     ),
     cont_flagged AS (
       SELECT c.doc_id
       FROM corpus_sh c LEFT JOIN bench_sh bs ON c.sh = bs.sh
       GROUP BY 1
-      HAVING (COUNT(bs.sh) / CAST(COUNT(*) AS DOUBLE)) >= {_BC_TAU}
+      HAVING (COUNT(bs.sh) / CAST(COUNT(*) AS DOUBLE)) >= {_dedup.CONTAM_THRESHOLD}
     ),
     base AS (
       SELECT doc_id, t,
@@ -3665,7 +3574,6 @@ _register(
     "per-split counts. Extends corpus_curation_pipeline with the "
     "decontamination stage; one declarative DAG, every stage an "
     "already-oracle-checked operator, the composition oracle-checked here.",
-    tags=("ext", "pipeline", "contamination", "dedup", "sampling", "text"),
 )(_decontamination_pipeline)
 
 
@@ -3683,19 +3591,16 @@ _register(
     SELECT sh AS phrase, COUNT(*) AS n_docs
     FROM sh
     GROUP BY sh
-    HAVING COUNT(*) >= 5
+    HAVING COUNT(*) >= {_text.BOILERPLATE_MIN_DOCS}
     ORDER BY n_docs DESC, phrase
-    LIMIT 100
+    LIMIT {_text.BOILERPLATE_K}
     """,
     doc="Boilerplate phrase mining [ext/text]: top word-3-grams by "
     "document frequency (>= 5 docs), the phrase table a web-corpus "
     "cleaner subtracts; global top-k via TakeOrderedAndProject (per-task "
     "heaps, no global sort).",
-    tags=("ext", "text"),
 )(
-    lambda spark, sf: _text.boilerplate_phrases(
-        _t(spark, sf, "documents"), min_docs=5, k=100
-    )
+    lambda spark, sf: _text.boilerplate_phrases(_t(spark, sf, "documents"))
 )
 
 
@@ -3725,7 +3630,6 @@ _register(
     "also occur in another document; docfreq via map-side-combined "
     "groupBy(span) + join-back (Zipf-skew-safe — no hot-key count "
     "window), short docs kept with 0 spans via the id spine.",
-    tags=("ext", "dedup", "text"),
 )(lambda spark, sf: _dedup.span_dup_profile(_t(spark, sf, "documents")))
 
 
@@ -3742,7 +3646,6 @@ _register(
     doc="Per-source document cap [ext/sampling]: domain rebalancing — keep "
     "at most 15 docs per source in deterministic hash order (RefinedWeb/"
     "C4-style host downsampling); one stratum shuffle + WindowExec.",
-    tags=("ext", "sampling"),
 )(
     lambda spark, sf: _sampling.source_cap(
         _t(spark, sf, "documents"), "source", "doc_id", cap=15
@@ -3773,7 +3676,6 @@ _register(
     "1e-4-unit integers, and all three outputs round as exact integer "
     "ratios (numeric.ratio_round; boost is cross-multiplied into one "
     "ratio, no intermediate float division).",
-    tags=("ext", "sampling", "text"),
 )(
     lambda spark, sf: _sampling.temperature_weights(_t(spark, sf, "documents"), "lang")
 )
@@ -3783,7 +3685,7 @@ def _quality_rank_deciles(spark: SparkSession, sf: str) -> DataFrame:
     q = _text.quality_scores(_t(spark, sf, "documents")).select(
         "doc_id", "quality_score"
     )
-    return _rel.grouped_rank_tiles(q, "quality_score", "doc_id", n_tiles=10)
+    return _rel.grouped_rank_tiles(q, "quality_score", "doc_id")
 
 
 _register(
@@ -3808,7 +3710,7 @@ _register(
       FROM q
     )
     SELECT doc_id, quality_score, rnk,
-           CAST(FLOOR((rnk - 1) * 10 / n_total) AS INT) AS tile
+           CAST(FLOOR((rnk - 1) * {_rel.RANK_TILES} / n_total) AS INT) AS tile
     FROM r
     """,
     doc="Curriculum decile binning [ext/text]: exact global rank + decile "
@@ -3817,7 +3719,6 @@ _register(
     "higher-count broadcast back + within-score ROW_NUMBER. The oracle "
     "replays it as the equivalent plain ROW_NUMBER, proving the "
     "distributed rank IS the global rank.",
-    tags=("ext", "text", "window"),
 )(_quality_rank_deciles)
 
 
@@ -3849,7 +3750,6 @@ _register(
     "distribution. Contributions round to a 6-decimal grid and sum as "
     "DECIMAL (exact, order-independent); the grid-sum/count quotient "
     "rounds in exact integer space (numeric.ratio_round).",
-    tags=("ext", "text"),
 )(lambda spark, sf: _text.unigram_logprob(_t(spark, sf, "documents")))
 
 
@@ -3883,7 +3783,6 @@ _register(
     "view -> click-at-or-after -> purchase-at-or-after, with step and "
     "from-start rates. ONE Exchange(user), unordered-frame windows "
     "chained on the same partitioning, groupBy(user) reuses it.",
-    tags=("ext", "events", "window"),
 )(lambda spark, sf: _rel.funnel_steps(_t(spark, sf, "events")))
 
 
@@ -3916,7 +3815,6 @@ _register(
     "DuckDB unrolls verbatim — and the within-cluster verify reuses the "
     "bit-identical cosine fold over the replayed planted corpus; pytest "
     "still bounds recall against the exact quadratic baseline.",
-    tags=("ext", "similarity", "dedup"),
 )(
     lambda spark, sf: _sim.semantic_dedup(
         _sim.planted_near_dup_corpus(_t(spark, sf, "embeddings")),
@@ -3987,7 +3885,6 @@ _register(
     "dedup_minhash_clusters. Shares the pair subplan with "
     "embedding_semantic_dedup and the recursive-closure oracle block "
     "with every cluster roll-up.",
-    tags=("ext", "similarity", "dedup", "iterative"),
 )(_embedding_semantic_clusters)
 
 
@@ -4046,7 +3943,6 @@ _register(
     "models (target = lang='en' rows). Log-ratios on a 6-decimal grid, "
     "DECIMAL sums — cross-engine exact. One corpus pass, bucket model "
     "broadcasts back.",
-    tags=("ext", "sampling", "text"),
 )(
     lambda spark, sf: _sampling.dsir_importance_weights(
         _t(spark, sf, "documents"), target=F.col("lang") == "en"
@@ -4099,7 +3995,6 @@ _register(
     "sf0.1). Weights are a deterministic expression stub (trained "
     "model = broadcast weight table, same plan); margin summed as "
     "exact integer millis, keep decided on the integer sign.",
-    tags=("ext", "text"),
 )(lambda spark, sf: _text.quality_classifier(_t(spark, sf, "documents")))
 
 
@@ -4129,14 +4024,13 @@ _register(
     )
     SELECT doc_id, CAST(ROUND(SUM(c), 4) AS DOUBLE) AS bm25
     FROM contrib GROUP BY 1
-    ORDER BY bm25 DESC, doc_id LIMIT 20
+    ORDER BY bm25 DESC, doc_id LIMIT {_text.BM25_K}
     """,
     doc="BM25 top-k retrieval [ext/text]: Okapi BM25 (k1=1.2, b=0.75) "
     "against query {spark, join, vector}, top 20 by (score DESC, "
     "doc_id). tf filtered to query terms pre-shuffle; df + totals "
     "broadcast; TakeOrderedAndProject top-k. 6-decimal-grid DECIMAL "
     "contributions.",
-    tags=("ext", "text"),
 )(lambda spark, sf: _text.bm25_topk(_t(spark, sf, "documents")))
 
 
@@ -4169,7 +4063,6 @@ _register(
     "across the group), tie-break min doc_id. Agg-only argmax "
     "(max-of-struct), one shuffle, no window — the oracle replays it "
     "as ROW_NUMBER proving the argmax.",
-    tags=("ext", "dedup", "text"),
 )(lambda spark, sf: _text.best_copy_per_group(_t(spark, sf, "documents")))
 
 
@@ -4254,7 +4147,6 @@ _register(
     "corpus band table is the persisted index in production. Same "
     "portable md5 hash family as dedup_minhash_lsh, so the oracle "
     "replays candidate generation exactly.",
-    tags=("ext", "dedup"),
 )(_incremental_dedup_builder)
 
 
@@ -4311,7 +4203,6 @@ _register(
     "— docfreq via one COUNT window, covered positions explode only from "
     "duplicated span starts, assembly = anti-join + ordered concat. "
     "Pure string/int ops, no floats to grid.",
-    tags=("ext", "text", "dedup"),
 )(lambda spark, sf: _text.remove_dup_spans(_t(spark, sf, "documents")))
 
 
@@ -4357,7 +4248,6 @@ _register(
     "DSIR importance weights on the survivors. Composition of three "
     "round-5 operators in one DAG; the oracle nests their three exact "
     "SQL twins as CTEs, so the funnel is replayed end-to-end.",
-    tags=("ext", "pipeline", "dedup", "text", "sampling"),
 )(_corpus_refresh_pipeline)
 
 
@@ -4394,7 +4284,6 @@ _register(
     "(numeric.ratio_round — both are grid quotients). One posexplode + "
     "one map-side-combined groupBy, output |labels|*D rows at any corpus "
     "scale.",
-    tags=("ext", "similarity"),
 )(lambda spark, sf: _sim.label_centroids(_t(spark, sf, "embeddings")))
 
 
@@ -4446,13 +4335,11 @@ _register(
     "other outputs round as exact integer ratios (numeric.ratio_round, "
     "scale 0/4). One map-side-combined groupBy(source), |strata| output "
     "rows at any corpus scale.",
-    tags=("ext", "sampling", "text"),
 )(
     lambda spark, sf: _sampling.mixing_epochs(_t(spark, sf, "documents"))
 )
 
 
-from .operators import quantize as _quant  # noqa: E402
 
 #: DuckDB replay of the scalar int8 quantization — shared by the
 #: quantize oracle and (as CTEs) the PQ oracle. Every arithmetic step is
@@ -4493,7 +4380,6 @@ _register(
     "registered projection joins the code vector into a ' '-separated "
     "string (the driver's canonicalizer cannot hash list cells — the "
     "multimodal_features pattern; r6 red row).",
-    tags=("ext", "similarity", "multimodal"),
 )(
     lambda spark, sf: _quant.quantize_embeddings(
         _t(spark, sf, "embeddings")
@@ -4550,7 +4436,6 @@ _register(
     "+ a map-side top-k anchor probe; zero data-sized shuffles. Code "
     "vector joined to a ' '-separated string for the driver hash "
     "(multimodal_features pattern; r6 red row).",
-    tags=("ext", "similarity"),
 )(
     lambda spark, sf: _quant.pq_codes(_t(spark, sf, "embeddings")).withColumn(
         "pq_codes", F.array_join(F.col("pq_codes").cast("array<string>"), " ")
@@ -4592,7 +4477,6 @@ _register(
     "neighbor_id tie-break, fully oracle-replayed (codebook, "
     "assignment, ADC tables, ranking). Partial aggregation collapses "
     "doc sub-scores to |q| rows per doc before the one shuffle.",
-    tags=("ext", "similarity"),
 )(
     lambda spark, sf: _quant.pq_topk(_t(spark, sf, "embeddings"), F.col("vec_id") < 10)
 )
@@ -4655,10 +4539,9 @@ _register(
     "bit-identical cosine form; everything downstream is exact integer. "
     "The (cell, code) join is the index build — persisted in production, "
     "amortized across query batches.",
-    tags=("ext", "similarity"),
 )(
     lambda spark, sf: _quant.ivfpq_topk(
-        _t(spark, sf, "embeddings"), F.col("vec_id") < 10, nprobe=2,
+        _t(spark, sf, "embeddings"), F.col("vec_id") < 10
     )
 )
 
@@ -4689,7 +4572,6 @@ _register(
     "integer ratio. One user-dim agg + one events-dim equi-join + one "
     "two-key count-distinct; cohort sizes from the user-dim table (the "
     "events-sized subplan has one consumer). Output bounded by days^2.",
-    tags=("ext", "analytics"),
 )(lambda spark, sf: _rel.retention_cohorts(_t(spark, sf, "events")))
 
 
@@ -4720,7 +4602,6 @@ _register(
     "hapax = noise). Word counts shuffle vocabulary-bounded partials "
     "(map-side combine), second agg is dimension-sized; ratios are "
     "exact integer quotients.",
-    tags=("ext", "text"),
 )(lambda spark, sf: _text.vocab_stats(_t(spark, sf, "documents")))
 
 
@@ -4741,7 +4622,7 @@ _register(
       FROM items a JOIN items b ON a.l_orderkey = b.l_orderkey
                                 AND a.item < b.item
       GROUP BY 1, 2
-      HAVING COUNT(*) >= 10
+      HAVING COUNT(*) >= {_rel.BASKET_MIN_SUPPORT}
     )
     SELECT item_a, item_b, n_ab, ca.n_item AS n_a, cb.n_item AS n_b,
            {ratio_round_sql("n_ab", "n_orders", 4)} AS support,
@@ -4758,11 +4639,9 @@ _register(
     "(ReuseExchange ships one shuffle for both self-join sides), lift "
     "as ONE exact integer ratio N*n_ab/(n_a*n_b) — no float "
     "probabilities. Output <= |brands|^2 pairs.",
-    tags=("ext", "analytics"),
 )(
     lambda spark, sf: _rel.basket_affinity(
-        _t(spark, sf, "lineitem"), _t(spark, sf, "part"),
-        min_support=10,
+        _t(spark, sf, "lineitem"), _t(spark, sf, "part")
     )
 )
 
@@ -4786,7 +4665,6 @@ _register(
     "fingerprint join fan-out bounded by |sources|; one map-side-"
     "combined distinct + one pair aggregation; <= |sources|^2 output "
     "rows at any scale.",
-    tags=("ext", "dedup"),
 )(lambda spark, sf: _dedup.cross_source_dup_matrix(_t(spark, sf, "documents")))
 
 
@@ -4829,7 +4707,6 @@ _register(
     "comparison could flip borderline customers between engines); one "
     "map-side-combined groupBy(customer) + a scalar max-date broadcast; "
     "customer-dimension output.",
-    tags=("ext", "analytics"),
 )(lambda spark, sf: _rel.rfm_segments(_t(spark, sf, "orders")))
 
 
@@ -4858,7 +4735,6 @@ _register(
     "map-side-combined pair aggregation; row totals derive from the "
     "|types|^2 pair table (checkpointed, no second data pass). Output "
     "|event types|^2 at any scale.",
-    tags=("ext", "analytics"),
 )(lambda spark, sf: _rel.event_transitions(_t(spark, sf, "events")))
 
 
@@ -4894,7 +4770,6 @@ _register(
     "hours never flags. The corpus collapses to the |hours| dimension "
     "table before the one global RANGE window (dimension-sized input, "
     "never the data).",
-    tags=("ext", "analytics"),
 )(lambda spark, sf: _rel.hourly_anomaly_flags(_t(spark, sf, "events")))
 
 
@@ -4966,7 +4841,6 @@ _register(
     "price_percentiles safety argument). Banded interval join (never a "
     "range nested-loop) + per-click min (map-side combined) + a 24-row "
     "percentile aggregate.",
-    tags=("ext", "analytics", "temporal"),
 )(_funnel_latency_profile)
 
 
@@ -4993,7 +4867,6 @@ _register(
     "array expressions (split/sequence/posexplode/slice), explode "
     "proportional to the OUTPUT, zero shuffles — a per-row map at any "
     "corpus size.",
-    tags=("ext", "text", "sampling"),
 )(lambda spark, sf: _text.chunk_documents(_t(spark, sf, "documents")))
 
 
@@ -5018,7 +4891,6 @@ _register(
     "dimension broadcasts into a <=30-day-fan range join, one "
     "aggregation with three conditional count-distincts. Work is "
     "30*|user-days|, linear in the corpus — no per-day rescans.",
-    tags=("ext", "analytics"),
 )(lambda spark, sf: _rel.active_user_counts(_t(spark, sf, "events")))
 
 
@@ -5047,7 +4919,6 @@ _register(
     "order_key = md5 gives a reproducible global shuffle consumers "
     "range-sort on. |strata| epochs table broadcasts into the scan, "
     "explode is output-proportional, zero shuffles.",
-    tags=("ext", "sampling"),
 )(lambda spark, sf: _sampling.epoch_plan(_t(spark, sf, "documents")))
 
 
@@ -5121,7 +4992,6 @@ _register(
     "date filters, one fact-fact equi-join shuffle, DECIMAL-grid "
     "revenue sums (product lies on the 1e-4 grid -> tie-free round, "
     "order-independent sum), TakeOrderedAndProject top-k.",
-    tags=("ext", "analytics", "C", "D", "F"),
 )(_shipping_priority)
 
 
@@ -5174,7 +5044,6 @@ _register(
     "customers by revenue lost to returns in one quarter. Broadcast "
     "customer + nation dims, pushed quarter/returnflag filters, one "
     "fact-fact shuffle, DECIMAL-grid revenue, TakeOrderedAndProject.",
-    tags=("ext", "analytics", "C", "D", "F"),
 )(_returned_item_revenue)
 
 
@@ -5238,7 +5107,6 @@ _register(
     "locality predicate c_nationkey = s_nationkey rides the supplier "
     "join, one orders-lineitem shuffle, DECIMAL-grid revenue. First "
     "registry consumer of the supplier table.",
-    tags=("ext", "analytics", "C", "D"),
 )(_local_supplier_volume)
 
 
@@ -5285,13 +5153,12 @@ _register(
     "semi-join with a cross-table date inequality riding the orderkey "
     "equi-join — no fan-out, no distinct; one fact-fact shuffle + a "
     "priority-dimension count.",
-    tags=("ext", "analytics", "C"),
 )(_late_shipment_orders)
 
 
 _register(
     "user_burst_flags",
-    """
+    f"""
     WITH pm AS (
       SELECT user_id AS u,
              CAST(epoch(date_trunc('minute', ts)) AS BIGINT) AS m,
@@ -5302,14 +5169,13 @@ _register(
            MAX(cnt) AS peak_minute_events,
            CAST(SUM(cnt) AS BIGINT) AS total_events,
            CAST(COUNT(*) AS BIGINT) AS active_minutes,
-           MAX(cnt) >= 2 AS burst_flag
+           MAX(cnt) >= {_rel.BURST_THRESHOLD} AS burst_flag
     FROM pm GROUP BY 1
     """,
     doc="Bot/burst detection [analytics+curation]: per user, the busiest "
     "minute, total volume, active minutes, and an integer-threshold "
     "burst flag — the behavioral-data spam filter. Two map-side-"
     "combined aggregations, no windows, user-dimension output.",
-    tags=("ext", "analytics", "curation"),
 )(lambda spark, sf: _rel.burst_user_flags(_t(spark, sf, "events")))
 
 
@@ -5331,7 +5197,6 @@ _register(
     "the audit run before a language filter gates a corpus. Per-row "
     "prediction + one two-key map-side-combined count; shares are exact "
     "integer ratios over the checkpointed |langs|^2 table.",
-    tags=("ext", "text", "curation"),
 )(lambda spark, sf: _text.lang_confusion(_t(spark, sf, "documents")))
 
 
@@ -5348,7 +5213,6 @@ _register(
     "Spark's 1-based dayofweek shifts by one). One map-side-combined "
     "two-key aggregate, 168-row output at any scale; value sums follow "
     "the hourly_series ROUND(SUM,4) precedent.",
-    tags=("ext", "analytics", "G"),
 )(
     lambda spark, sf: _t(spark, sf, "events")
     .groupBy(
@@ -5441,7 +5305,6 @@ _register(
     "orders open at each day's close. Collapses the naive "
     "|days|x|orders| range join to one fact shuffle + a dimension-sized "
     "cumulative window.",
-    tags=("ext", "analytics", "temporal"),
 )(_orders_open_backlog)
 
 
@@ -5469,7 +5332,6 @@ _register(
     "small-sample validation of the band geometry before the sketch "
     "gates a 100 TB run. Reuses the shared portable-md5 pipeline CTEs, "
     "so even the audit replays bit-for-bit.",
-    tags=("ext", "dedup"),
 )(lambda spark, sf: _dedup.lsh_quality_report(_t(spark, sf, "documents")))
 
 
@@ -5511,7 +5373,6 @@ _register(
     "artifact. Three dimension-sized joins; the oracle nests the three "
     "exact component twins as CTEs, so the composition replays "
     "end-to-end.",
-    tags=("ext", "curation", "text", "sampling"),
 )(_corpus_dataset_card)
 
 
@@ -5566,7 +5427,6 @@ _register(
     "(date band, discount band, quantity cap) - the canonical "
     "scan-efficiency probe. The product lies on the 1e-4 grid, so the "
     "round is tie-free and the DECIMAL sum exact.",
-    tags=("ext", "analytics", "B", "D8"),
 )(_forecast_revenue_change)
 
 
@@ -5604,7 +5464,6 @@ _register(
     "supplier + nation dims broadcast into the lineitem scan, one "
     "map-side-combined aggregate to |nations|x|years| rows, "
     "DECIMAL-grid revenue.",
-    tags=("ext", "analytics", "C", "D4"),
 )(_nation_year_revenue)
 
 
@@ -5666,7 +5525,6 @@ _register(
     "share is a grid quotient rounded in exact integer space "
     "(ratio_round scale 6) - ROUND(double) would tie whenever the "
     "unit ratio's reduced denominator divides the grid.",
-    tags=("ext", "analytics", "C", "D", "quotient"),
 )(_promo_revenue_share)
 
 
@@ -5727,7 +5585,6 @@ _register(
     "(qty*5*n < sum) - no float average exists to mis-round; "
     "avg_yearly = cents/700 via ratio_round. Per-part stats co-partition "
     "with the join-back on partkey.",
-    tags=("ext", "analytics", "C", "D", "quotient"),
 )(_small_qty_revenue)
 
 
@@ -5779,7 +5636,6 @@ _register(
     "over the per-order quantity sum prunes the fact to a sliver "
     "BEFORE any join; survivors join orders and broadcast customer; "
     "top-20 is TakeOrderedAndProject with an orderkey tie-break.",
-    tags=("ext", "analytics", "C", "D", "F"),
 )(_large_order_customers)
 
 
@@ -5840,7 +5696,6 @@ _register(
     "OR-of-ANDs across both join sides; the brand IN-list (the union "
     "of the disjuncts' part predicates) prunes the broadcast dim "
     "before the join, the mixed predicate runs post-join.",
-    tags=("ext", "analytics", "B", "C", "D"),
 )(_disjunctive_brand_revenue)
 
 
@@ -5873,7 +5728,6 @@ _register(
     doc="TPC-H Q16 shape (supplier-part variety) [analytics]: distinct "
     "suppliers per (brand, size) over non-PROMO parts via the lineitem "
     "link; two-phase distinct aggregate, broadcast part dim.",
-    tags=("ext", "analytics", "C", "D18"),
 )(_supplier_part_variety)
 
 
@@ -5933,7 +5787,6 @@ _register(
     "sum_cents - no float average to tie), anti join against "
     "recent orders with the date filter pushed to the orders scan, "
     "cents-grid segment totals.",
-    tags=("ext", "analytics", "B", "C", "D", "quotient"),
 )(_dormant_rich_customers)
 
 
@@ -5995,7 +5848,6 @@ _register(
     "inequality on 1e-4 units (no float fraction of the total), single "
     "fact pass with the |parts|-row aggregate checkpointed for its two "
     "consumers (scalar total + filter).",
-    tags=("ext", "analytics", "C", "D", "quotient"),
 )(_important_part_values)
 
 
@@ -6066,7 +5918,6 @@ _register(
     "conditional aggregation (recent+total qty in a single fact pass) "
     "-> integer 2*recent > total threshold -> left-semi into supplier. "
     "No second fact scan, no float 50% threshold.",
-    tags=("ext", "analytics", "B", "C", "D"),
 )(_excess_parts_suppliers)
 
 
@@ -6176,7 +6027,6 @@ _register(
     "double crosses RAW (bit parity makes rounding unnecessary, and "
     "dyadic cluster sizes could land a rounded value on the "
     "half-grid).",
-    tags=("ext", "similarity"),
 )(
     lambda spark, sf: _quant.pq_codes_trained(_t(spark, sf, "embeddings"))
     .withColumn(
@@ -6185,12 +6035,14 @@ _register(
 )
 
 
-def _res_d2_sql(r: str, v: str, m: str, sub: int = 8) -> str:
-    """Left-associative chained squared-distance over block ``m`` of two
-    1-indexed DOUBLE lists — replays `quantize._sub_dists`' explicit
+def _res_d2_sql(r: str, v: str, m: str) -> str:
+    """Left-associative chained squared-distance over block ``m`` (of
+    ``sub`` = 64 / ``PQ_SUBSPACES`` dimensions) of two 1-indexed DOUBLE
+    lists — replays `quantize._sub_dists`' explicit
     left-to-right accumulation bit-for-bit (each term is one IEEE
     subtract + one multiply; the chain fixes the summation order the
     same way list_dot_product replays the cosine fold)."""
+    sub = 64 // _quant.PQ_SUBSPACES
     terms = [
         f"(({r}[{m}*{sub}+{t}] - {v}[{m}*{sub}+{t}])"
         f" * ({r}[{m}*{sub}+{t}] - {v}[{m}*{sub}+{t}]))"
@@ -6305,7 +6157,6 @@ _register(
     "array on both engines, cell/probe selection reuses the proven "
     "bit-identical cosine form, and every rank carries a tie-break. "
     "pytest additionally pins the planted-duplicate recall bound.",
-    tags=("ext", "similarity"),
 )(
     lambda spark, sf: _quant.ivfpq_topk_residual(
         _t(spark, sf, "embeddings"), F.col("vec_id") < 10
@@ -6345,7 +6196,6 @@ _register(
     "word-frequency vocabulary BEFORE pair explosion, so the explode "
     "runs over vocabulary types, not corpus tokens. Exact integer "
     "counts, pair-string tie-break.",
-    tags=("ext", "text", "tokenizer"),
 )(lambda spark, sf: _text.bpe_merge_stats(_t(spark, sf, "documents")))
 
 
@@ -6387,7 +6237,6 @@ _register(
     "crosses every hash/format pathway bit-exactly; r8 libm audit). "
     "Bigram/unigram counts each one map-side-combined shuffle; "
     "marginals join the vocab-sized table.",
-    tags=("ext", "text", "quotient"),
 )(lambda spark, sf: _text.word_pmi_pairs(_t(spark, sf, "documents")))
 
 
@@ -6417,7 +6266,6 @@ _register(
     "rounds to the 1e-6 grid and sums as DECIMAL (the unigram_logprob "
     "idiom - exact, order-independent); c=n gives an exact 0 on both "
     "engines. One (doc,char)-keyed map-side-combined shuffle.",
-    tags=("ext", "text"),
 )(lambda spark, sf: _text.char_entropy(_t(spark, sf, "documents")))
 
 
@@ -6442,7 +6290,6 @@ _register(
     "the saturation curve curators watch to decide when more scraping "
     "stops adding content. Exact integer ratio via ratio_round; "
     "distinct grams + type-table min + join back, all equi-ops.",
-    tags=("ext", "text", "curation", "quotient"),
 )(lambda spark, sf: _text.ngram_novelty(_t(spark, sf, "documents")))
 
 
@@ -6484,7 +6331,6 @@ _register(
     "stages are the proven bit-identical cosine form, fully "
     "oracle-replayed; full-dim work is candidate-sized via an equi-join "
     "gather.",
-    tags=("ext", "similarity"),
 )(
     lambda spark, sf: _sim.matryoshka_topk(
         _t(spark, sf, "embeddings"), F.col("vec_id") < 10
@@ -6496,12 +6342,12 @@ from .operators import sketch as _sketch  # noqa: E402
 
 _register(
     "events_heavy_hitters",
-    """
+    f"""
     SELECT event_type AS key, CAST(COUNT(*) AS BIGINT) AS true_count
     FROM events
     WHERE event_type IS NOT NULL
     GROUP BY 1
-    HAVING COUNT(*) * 9 > (SELECT COUNT(*) FROM events
+    HAVING COUNT(*) * {_sketch.HEAVY_HITTERS_K + 1} > (SELECT COUNT(*) FROM events
                            WHERE event_type IS NOT NULL)
     ORDER BY true_count DESC, key
     """,
@@ -6516,10 +6362,9 @@ _register(
     "exact-frequency SQL with the same integer HAVING) — upgraded from "
     "rows-only, VERDICT r6 item 4. The partition-dependent estimates "
     "(heavy_hitters, pytest-bounded) stay the pure-sketch surface.",
-    tags=("ext", "sketch"),
 )(
     lambda spark, sf: _sketch.provable_heavy_hitters(
-        _t(spark, sf, "events"), F.col("event_type"), k=8
+        _t(spark, sf, "events"), F.col("event_type")
     )
 )
 
@@ -6580,7 +6425,6 @@ _register(
     "bidirectional supplier-customer nation pair by ship year; all "
     "dims broadcast, one orders-lineitem shuffle, DECIMAL-grid "
     "revenue.",
-    tags=("ext", "analytics", "C", "D"),
 )(_nation_pair_volume)
 
 
@@ -6661,7 +6505,6 @@ _register(
     "Conditional DECIMAL-grid sums; the share rounds in exact integer "
     "space (ratio_round scale 6, the grid-quotient rule). All dims "
     "broadcast, one fact-fact shuffle.",
-    tags=("ext", "analytics", "C", "D", "quotient"),
 )(_nation_market_share)
 
 
@@ -6718,7 +6561,6 @@ _register(
     "partial-aggregates per partition before its one shuffle - "
     "nothing scales with distinct-key count (the complement to the "
     "rows-only Misra-Gries entry).",
-    tags=("ext", "sketch"),
 )(_events_count_min)
 
 
@@ -6751,7 +6593,6 @@ _register(
     "proven twins (md5 MH pipeline + recursive-CTE transitive "
     "closure). Near-linear candidate generation; component rounds = "
     "cluster diameter (shallow for near-dup graphs).",
-    tags=("ext", "dedup", "iterative"),
 )(_dedup_minhash_clusters)
 
 
@@ -6785,7 +6626,6 @@ _register(
     "completing the cluster family (MinHash / SimHash / semantic). "
     "Oracle nests the proven SimHash replay inside the shared "
     "recursive-closure block.",
-    tags=("ext", "dedup", "iterative"),
 )(_dedup_simhash_clusters)
 
 
@@ -6839,7 +6679,6 @@ _register(
     "hole a plain hashed-doc split leaves open. Composition of the "
     "audited MinHash-cluster and hash-split stages; version-stable "
     "like the plain split.",
-    tags=("ext", "sampling", "dedup"),
 )(_dataset_dedup_safe_split)
 
 
@@ -6899,7 +6738,6 @@ _register(
     "norms are bit-identical; unrounded cosine ranks with a "
     "neighbor_id tie-break. The checkpointed weight table IS the "
     "persisted index of a production deployment.",
-    tags=("ext", "text", "similarity"),
 )(
     lambda spark, sf: _text.tfidf_knn(_t(spark, sf, "documents"), F.col("doc_id") < 10)
 )
@@ -6959,7 +6797,6 @@ _register(
     "The mechanism behind runtime bloom pushdown made first-class: at "
     "100 TB the fact side tests n_bits broadcast bits BEFORE any "
     "shuffle toward a dim join.",
-    tags=("ext", "sketch"),
 )(
     lambda spark, sf: _sketch.bloom_prefilter_report(
         _t(spark, sf, "events"), F.col("user_id"), F.col("user_id") < 40
@@ -7036,7 +6873,6 @@ _register(
     "space (ratio_units) - no float term sum to reorder. Margins are "
     "dimension-sized; the cell table checkpoints once for its three "
     "consumers.",
-    tags=("ext", "analytics", "stats", "quotient"),
 )(_priority_segment_chi2)
 
 
@@ -7145,7 +6981,6 @@ _register(
     "(n-1)*S), DECIMAL/HUGEINT internals, NULL below 2 hours; one "
     "map-side-combined (type, hour) aggregate then a grid-sized "
     "second pass.",
-    tags=("ext", "timeseries", "anomaly"),
 )(_events_fano_burstiness)
 
 
@@ -7222,7 +7057,6 @@ _register(
     "and sums, one ratio_round at output (the unigram_logprob/WoE "
     "idiom). Map-side-combined (source, lang) aggregate; |sources| "
     "rows out.",
-    tags=("ext", "text", "datacard"),
 )(_source_lang_entropy)
 
 
@@ -7251,7 +7085,6 @@ _register(
     "sqrt-transcendental of bit-identical inputs. The lead window runs "
     "over the hourly series (dimension-sized after aggregation), never "
     "raw events.",
-    tags=("ext", "analytics", "stats"),
 )(_events_hourly_autocorr)
 
 
@@ -7319,7 +7152,6 @@ _register(
     "[ext/text/tokenizer]: the tokenizer-freeze acceptance metric. "
     "Exact token counts, grid-quotient rate via ratio_round; the vocab "
     "is a map-side top-k broadcast back onto the token stream.",
-    tags=("ext", "text", "tokenizer", "quotient"),
 )(_vocab_oov_rate)
 
 
@@ -7371,7 +7203,6 @@ _register(
     "[ext/analytics]: the two-system audit shape and the registry's "
     "full-outer join coverage. Both sides aggregate to day granularity "
     "before the join, so the full outer runs dimension-sized.",
-    tags=("ext", "analytics", "C"),
 )(_daily_activity_recon)
 
 
@@ -7450,7 +7281,6 @@ _register(
     "INTERSECT/EXCEPT semantics via semi/anti joins on distinct "
     "dimension-sized user sets; the midpoint derives from the data so "
     "the split is scale-free.",
-    tags=("ext", "analytics", "B", "C"),
 )(_user_churn_sets)
 
 
@@ -7508,7 +7338,6 @@ _register(
     "(segment, priority, both, grand total) in ONE Expand+aggregate "
     "pass - one fact shuffle serves every rollup level; grouping_id "
     "disambiguates null-as-all rows. Cents-grid revenue sums.",
-    tags=("ext", "analytics", "D"),
 )(_grouping_sets_revenue)
 
 
@@ -7610,7 +7439,6 @@ _register(
     "a <=168-int sequence - distributed filler generation, no "
     "timespan-sized spine array, outlier-proof (the year-9999 "
     "degenerate probe OOM-killed the unbounded [min,max] form).",
-    tags=("ext", "analytics", "G"),
 )(_hourly_series_gapfill)
 
 
@@ -7670,7 +7498,6 @@ _register(
     "exact integer sums over the daily grain; rounding via the shared "
     "perfect-square-guarded sqrt_ratio_round (small day counts make a "
     "rational denominator reachable).",
-    tags=("ext", "analytics", "stats", "quotient"),
 )(_daily_click_purchase_corr)
 
 
@@ -7718,7 +7545,6 @@ _register(
     "RANGE BETWEEN interval frame on epoch seconds (the frame type the "
     "ROWS-based rolling features don't cover), exact cents sums, "
     "per-customer partitions bounded at any scale.",
-    tags=("ext", "analytics", "E"),
 )(_customer_trailing_spend)
 
 
@@ -7756,7 +7582,6 @@ _register(
     "orders-per-customer histogram with zero-order customers kept via "
     "the LEFT join; two-level aggregation, second level "
     "|distinct counts|-sized.",
-    tags=("ext", "analytics", "C", "D"),
 )(_customer_order_distribution)
 
 
@@ -7807,7 +7632,6 @@ _register(
     "DECIMAL-grid revenue, so the tie comparison is exact equality - "
     "all tied suppliers surface. One fact aggregate, then "
     "dimension-sized work.",
-    tags=("ext", "analytics", "C", "D", "F"),
 )(_top_revenue_supplier)
 
 
@@ -7882,7 +7706,6 @@ _register(
     "exists/not-exists pair as two map-side-combined aggregates + a "
     "join-back - no correlated subqueries; blame = late AND >=2 "
     "suppliers AND exactly one late. Top-10 with suppkey tie-break.",
-    tags=("ext", "analytics", "C", "D", "F"),
 )(_sole_blame_late_suppliers)
 
 
@@ -7945,7 +7768,6 @@ _register(
     "via agg-only min_by on a (-cents, suppkey) struct (no window - "
     "partial aggregation combines map-side; the oracle replays with "
     "ROW_NUMBER, identical tie semantics on exact cents).",
-    tags=("ext", "analytics", "C", "D", "E"),
 )(_best_balance_supplier_per_part)
 
 
@@ -8030,7 +7852,6 @@ _register(
     "ratio (binary 2^k weights x cents sums -> ratio_round; float "
     "0.5^k accumulation would be order-sensitive with engine-divergent "
     "ties). Lag window over the hourly aggregate, dimension-sized.",
-    tags=("ext", "analytics", "timeseries", "G2", "quotient"),
 )(_events_ewma_hourly)
 
 
@@ -8044,7 +7865,7 @@ def _part_copurchase_pagerank(spark: SparkSession, sf: str) -> DataFrame:
     score table checkpointed per round."""
     from .operators.graph import copurchase_edges, pagerank_integer
 
-    pr = pagerank_integer(copurchase_edges(_lineitem_1998(spark, sf)), iters=3)
+    pr = pagerank_integer(copurchase_edges(_lineitem_1998(spark, sf)))
     return (
         pr.select(F.col("part").alias("l_partkey"), "pr_scaled")
         .orderBy(F.desc("pr_scaled"), F.asc("l_partkey"))
@@ -8052,7 +7873,7 @@ def _part_copurchase_pagerank(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-def _pagerank_oracle_sql(iters: int = 3) -> str:
+def _pagerank_oracle_sql() -> str:
     scale = 10**12
     prev = "pr0"
     ctes = [
@@ -8070,7 +7891,7 @@ def _pagerank_oracle_sql(iters: int = 3) -> str:
         f"pr0 AS (SELECT part, CAST({scale} AS BIGINT) // n AS pr "
         "FROM nodes CROSS JOIN nn)",
     ]
-    for i in range(1, iters + 1):
+    for i in range(1, PAGERANK_ITERS + 1):
         ctes.append(
             f"""it{i} AS (
       SELECT nodes.part,
@@ -8100,14 +7921,13 @@ def _pagerank_oracle_sql(iters: int = 3) -> str:
 
 _register(
     "part_copurchase_pagerank",
-    _pagerank_oracle_sql(3),
+    _pagerank_oracle_sql(),
     doc="Integer PageRank over the 1998+ part co-purchase graph [ext/"
     "analytics/graph]: 3 damped iterations in exact 1e-12-unit integer "
     "arithmetic (floor-division contributions and teleport), scores "
     "bit-identical cross-engine, oracle = fully unrolled CTEs. "
     "Per-iteration |edges| shuffle, checkpointed score/edge tables, "
     "edge fan bounded by per-order part counts.",
-    tags=("ext", "analytics", "graph", "iterative"),
 )(_part_copurchase_pagerank)
 
 
@@ -8144,7 +7964,7 @@ def _part_copurchase_ppr_expansion(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-def _ppr_oracle_sql(iters: int = 3) -> str:
+def _ppr_oracle_sql() -> str:
     scale = 10**12
     prev = "ppr0"
     ctes = [
@@ -8175,7 +7995,7 @@ def _ppr_oracle_sql(iters: int = 3) -> str:
                   ELSE 0 END AS pr
       FROM pflg CROSS JOIN pns)""",
     ]
-    for i in range(1, iters + 1):
+    for i in range(1, PAGERANK_ITERS + 1):
         ctes.append(
             f"""pit{i} AS (
       SELECT f.part, f.is_seed,
@@ -8207,7 +8027,7 @@ def _ppr_oracle_sql(iters: int = 3) -> str:
 
 _register(
     "part_copurchase_ppr_expansion",
-    _ppr_oracle_sql(3),
+    _ppr_oracle_sql(),
     doc="Personalized-PageRank seed expansion over the 1998+ part "
     "co-purchase graph [ext/analytics/graph]: teleport mass only to "
     "the 10 highest-volume seed parts (exact DECIMAL quantity rank, "
@@ -8217,7 +8037,6 @@ _register(
     "bit-identical cross-engine; oracle = fully unrolled CTEs. Scale: "
     "per-iteration |edges| shuffle, checkpointed score/edge/seed "
     "tables, node spine carries the seed flag once.",
-    tags=("ext", "analytics", "graph", "iterative"),
 )(_part_copurchase_ppr_expansion)
 
 
@@ -8287,7 +8106,6 @@ _register(
     "partial sums - the shuffle moves O(batches*D^2) rows, never the "
     "corpus). |num| ranking is an exact integer order; den is "
     "pair-constant n^2*1e12.",
-    tags=("ext", "similarity", "stats", "quotient"),
 )(_embedding_dim_covariance)
 
 
@@ -8326,7 +8144,6 @@ _register(
     "BPE-ish tokens per whitespace word as an exact integer ratio "
     "(ratio_round - integer-sum quotients can land on the half-grid). "
     "One corpus pass, partial aggregation into the small grid.",
-    tags=("ext", "text", "pipeline", "quotient"),
 )(_tokenizer_fertility)
 
 
@@ -8372,7 +8189,6 @@ _register(
     "expansion bound boolean, full oracle); pytest pins the "
     "repetitive<prose ordering, ratio bounds, and exact integer "
     "rounding semantics of the raw surface (text.compression_signals).",
-    tags=("ext", "text", "pipeline", "sketch-audit"),
 )(_text_compression_audit)
 
 
@@ -8437,7 +8253,6 @@ _register(
     "(the mean never materializes as a float grid quotient), "
     "checkpointed hourly table with two consumers, running-sum window "
     "over the dimension-sized hourly series.",
-    tags=("ext", "analytics", "timeseries", "quotient"),
 )(_events_cusum_drift)
 
 
@@ -8502,7 +8317,6 @@ _register(
     "timeseries]: month revenue over the all-months mean as ONE exact "
     "integer ratio (cents*n_months/total_cents via ratio_round), "
     "checkpointed monthly aggregate with two consumers.",
-    tags=("ext", "analytics", "timeseries", "quotient"),
 )(_monthly_seasonal_index)
 
 
@@ -8577,7 +8391,6 @@ _register(
     "flip boundary parts per engine), rank/cumsum windows over the "
     "dimension-sized per-part aggregate, checkpointed for its two "
     "consumers.",
-    tags=("ext", "analytics", "E", "quotient"),
 )(_parts_abc_classes)
 
 
@@ -8608,7 +8421,6 @@ _register(
     "hashed surface is exact integers, and the rank-50 key gap is "
     "~1e13 ulps (tests/test_sampling_boundary.py). "
     "See operators/sampling.py::weighted_sample_topk.",
-    tags=("ext", "sampling"),
 )(
     lambda spark, sf: _sampling.weighted_sample_topk(
         _t(spark, sf, "documents"), "doc_id", "n_chars"
@@ -8668,7 +8480,6 @@ _register(
     "ship-order day deltas (exact integers) through one fact-fact "
     "join with pruned scans + broadcast dims; interpolated p50/p90 on "
     "the 1/100-day grid (5th decimal 0, tie-free).",
-    tags=("ext", "analytics", "percentile", "C"),
 )(_supplier_leadtime_profile)
 
 
@@ -8742,7 +8553,6 @@ _register(
     "an Arrow map stage, zero shuffles; [x>0] is an exact float32 "
     "comparison, so the pack is unconditionally bit-identical "
     "cross-engine. operators/quantize.py::binary_codes.",
-    tags=("ext", "similarity", "quantize"),
 )(lambda spark, sf: _quant.binary_codes(_t(spark, sf, "embeddings")))
 
 
@@ -8771,7 +8581,6 @@ _register(
     "float anywhere (unconditional oracle match). Query side filtered "
     "pre-broadcast; corpus side is the 8-byte code table. "
     "operators/quantize.py::hamming_topk.",
-    tags=("ext", "similarity", "quantize"),
 )(
     lambda spark, sf: _quant.hamming_topk(
         _t(spark, sf, "embeddings"), F.col("vec_id") < 10, k=5
@@ -8957,7 +8766,6 @@ _register(
     "uniqueness/date-range checks as single-scan conditional counts, "
     "one row per check with ok = violations=0. Exact counts -> "
     "unconditional oracle match.",
-    tags=("ext", "pipeline", "audit"),
 )(_data_quality_audit)
 
 
@@ -9056,7 +8864,6 @@ _register(
     "global sort, second pass reads ~1/|buckets| of the data - the "
     "shape that keeps exact order statistics feasible at 100 TB. "
     "Oracle replays as ORDER BY LIMIT/OFFSET.",
-    tags=("ext", "analytics", "percentile"),
 )(_orders_exact_median_scalable)
 
 
@@ -9130,7 +8937,6 @@ _register(
     "rank-weighted exact integer sums over the dimension-sized "
     "per-customer aggregate (tie-blocks make the custkey tie-break "
     "value-invariant), G as ONE integer ratio via ratio_round.",
-    tags=("ext", "analytics", "stats", "quotient"),
 )(_customer_spend_gini)
 
 
@@ -9156,7 +8962,7 @@ _register(
     FROM inter
     JOIN sizes sa ON sa.doc_id = doc_a
     JOIN sizes sb ON sb.doc_id = doc_b
-    WHERE CAST(n_inter AS DOUBLE) / sa.n_sh >= 0.8
+    WHERE CAST(n_inter AS DOUBLE) / sa.n_sh >= {_dedup.CONTAINMENT_THRESHOLD}
     """,
     doc="Directed shingle-containment pairs C(A->B) >= 0.8 [ext/dedup]: "
     "the asymmetric near-dup relation (quotes, subsumed chunks) Jaccard "
@@ -9164,11 +8970,8 @@ _register(
     "filters bound candidates (the B side indexes all shingles; the "
     "join keys are A's RARE prefix shingles); exact array_intersect "
     "verification; the oracle replays via the naive all-pairs join.",
-    tags=("ext", "dedup"),
 )(
-    lambda spark, sf: _dedup.containment_pairs(
-        _t(spark, sf, "documents"), threshold=0.8
-    )
+    lambda spark, sf: _dedup.containment_pairs(_t(spark, sf, "documents"))
 )
 
 
@@ -9222,7 +9025,6 @@ _register(
     "fractions scaled to integers; the two float steps consume "
     "bit-identical ints. Shuffle carries <= m rows per group per "
     "partition. operators/sketch.py::hll_distinct_estimate.",
-    tags=("ext", "sketch"),
 )(
     lambda spark, sf: _sketch.hll_distinct_estimate(
         _t(spark, sf, "events"), F.col("user_id"), F.col("event_type")
@@ -9295,7 +9097,6 @@ _register(
     "exact integer counts (1/2-grid values, tie-free ROUND); the flag "
     "compares doubles built from identical ints. Hourly table "
     "checkpointed for its three consumers.",
-    tags=("ext", "analytics", "timeseries", "stats"),
 )(_hourly_anomaly_mad)
 
 
@@ -9396,7 +9197,6 @@ _register(
     "(A/B form - no float slope/intercept ever materializes; both are "
     "grid quotients), DECIMAL(38,0)/HUGEINT sums, dimension-sized "
     "monthly table, forecast rows exploded from the one stats row.",
-    tags=("ext", "analytics", "timeseries", "quotient"),
 )(_monthly_revenue_trend)
 
 
@@ -9452,7 +9252,6 @@ _register(
     "by STATIC token bands (no corpus-wide ntile window), md5 shuffle "
     "within a band, top-100 via TakeOrderedAndProject - deterministic, "
     "replayable, no global sort.",
-    tags=("ext", "sampling", "pipeline"),
 )(_dataset_curriculum_head)
 
 
@@ -9527,7 +9326,6 @@ _register(
     "similarity/eval]: the retrieval-quality metric op; both "
     "retrievers are independently oracle-checked, recall is one exact "
     "integer ratio per query.",
-    tags=("ext", "similarity", "eval", "quotient"),
 )(_retrieval_recall_hamming)
 
 
@@ -9623,7 +9421,6 @@ _register(
     "1e-6 grid (off-grid transcendentals), then PURE integer moment "
     "sums and ratio_round quotients. Top-200 via TakeOrdered; rank "
     "window over 200 rows.",
-    tags=("ext", "text", "stats", "quotient"),
 )(_corpus_zipf_fit)
 
 
@@ -9692,7 +9489,6 @@ _register(
     "celebrity node generates zero wedges from its own fan-out); exact "
     "integer counts, coefficient via ratio_round. Oriented edges "
     "checkpointed once for their three consumers.",
-    tags=("ext", "analytics", "graph"),
 )(_graph_triangle_census)
 
 
@@ -9759,7 +9555,6 @@ _register(
     "property), and the inclusion-exclusion overlap estimate. One scan, "
     "one <= 64-row shuffle, fully ORACLE-CHECKED (md5 registers). "
     "operators/sketch.py::hll_set_algebra.",
-    tags=("ext", "sketch"),
 )(
     lambda spark, sf: _sketch.hll_set_algebra(
         _t(spark, sf, "events"),
@@ -9852,7 +9647,6 @@ _register(
     "factor - the pre-flight report for hot-key salting decisions at "
     "scale. Map-side-combined per-key counts, TakeOrdered top-10, rank "
     "window over 10 rows; exact integer ratios throughout.",
-    tags=("ext", "analytics"),
 )(_events_key_skew_profile)
 
 
@@ -9936,7 +9730,6 @@ _register(
     "no per-document window, no global sort (the scalable-median "
     "idiom). Scores are exact 1e-4-grid ratios (shared _QS_SCORE "
     "formula), k = (9n) div 10 exact.",
-    tags=("ext", "text", "pipeline"),
 )(_docs_adaptive_quality_filter)
 
 
@@ -10039,7 +9832,6 @@ _register(
     "vectors, per-true-label accuracy as exact integer ratios. Exact "
     "scorer is the documented baseline path; vote + accuracy tail is "
     "retriever-agnostic.",
-    tags=("ext", "similarity", "eval"),
 )(_embedding_knn_label_eval)
 
 
@@ -10144,7 +9936,6 @@ _register(
     "cumulative per-cohort revenue. Integer month keys (y*12+m), "
     "cumulative window over the aggregated grid only, cohort sizes "
     "broadcast.",
-    tags=("ext", "analytics"),
 )(_customer_cohort_ltv)
 
 
@@ -10214,7 +10005,6 @@ _register(
     "H = sum -p ln p with 1e-6-grid rounded terms summed as DECIMAL "
     "(the char_entropy idiom; order-independent, engine-exact). "
     "Shuffles bounded by |users|*|types| then |users|.",
-    tags=("ext", "analytics"),
 )(_events_user_entropy)
 
 
@@ -10238,7 +10028,6 @@ _register(
     "Eigenvalue VALUES stay pinned by the numpy parity pytest "
     "(tests/test_round6_ops.py); the raw-spectrum surface remains "
     "similarity.pca_spectrum.",
-    tags=("ext", "similarity", "stats", "sketch-audit"),
 )(
     lambda spark, sf: _sim.pca_spectrum_audit(_t(spark, sf, "embeddings"))
 )
@@ -10354,7 +10143,6 @@ _register(
     "the bit-identical double quotient (dst tie-break), reported lift "
     "via ratio_round. Pair fan bounded by order width; part totals "
     "broadcast.",
-    tags=("ext", "analytics", "recsys"),
 )(_part_copurchase_topk)
 
 
@@ -10420,7 +10208,6 @@ _register(
     "(ratio_round), concentration flag via the cross-multiplied exact "
     "inequality 4*sum_q2 > total^2 (no float compare). Two "
     "map-side-combined aggregates.",
-    tags=("ext", "analytics"),
 )(_supplier_part_hhi)
 
 
@@ -10509,7 +10296,6 @@ _register(
     "[ext/analytics/warehouse]: lag change-detection, running-sum "
     "versioning, lead interval close over the run-level table. "
     "User-partitioned windows only; epoch-ms hash crossing.",
-    tags=("ext", "analytics", "warehouse"),
 )(_user_scd2_intervals)
 
 
@@ -10583,7 +10369,6 @@ _register(
     "tokens before/after exact dedup (global min-doc_id keeper) + "
     "exact-ratio token savings. Fingerprint agg map-side combines; one "
     "fp-keyed join-back.",
-    tags=("ext", "dedup", "pipeline"),
 )(_dedup_impact_report)
 
 
@@ -10703,7 +10488,6 @@ _register(
     "- the sequential recurrence runs as an Arrow grouped fold over the "
     "pre-aggregated hourly table (O(hours) per key), the oracle "
     "replays it as a RECURSIVE CTE. Bit-identical cross-engine.",
-    tags=("ext", "timeseries"),
 )(_events_holt_trend)
 
 
@@ -10779,7 +10563,6 @@ _register(
     "customer, totals within 1% (exact symmetric cents inequality), "
     "dates within 3 days. Customer-key blocking bounds pairs by "
     "per-customer order counts; all predicates integer-exact.",
-    tags=("ext", "analytics", "linkage"),
 )(_orders_near_duplicate_invoices)
 
 
@@ -10824,7 +10607,6 @@ _register(
     "upgrade of the unigram entry; KenLM-lineage perplexity filter). "
     "1e-6-grid rounded terms summed as DECIMAL, final average via "
     "ratio_round. operators/text.py::bigram_logprob.",
-    tags=("ext", "text", "quotient"),
 )(lambda spark, sf: _text.bigram_logprob(_t(spark, sf, "documents")))
 
 
@@ -10906,7 +10688,6 @@ _register(
     "over all observed transitions - the modal-row-share ceiling of a "
     "first-order recommender. Derives from the |types|^2 transition "
     "table; exact integer ratios.",
-    tags=("ext", "analytics", "eval"),
 )(_markov_prediction_accuracy)
 
 
@@ -11015,7 +10796,6 @@ _register(
     "(cosine is scale-invariant), exact DECIMAL dot/norms, ULP-only "
     "cosine, vec_id tie-break. One posexplode pass, two aggregates, "
     "centroids broadcast - no pair joins.",
-    tags=("ext", "similarity", "eval"),
 )(_embedding_label_outliers)
 
 
@@ -11088,7 +10868,6 @@ _register(
     "fraction unshipped after t days (1-CDF, no censoring), exact "
     "integer ratios. Fact join prunes to 2 columns, collapses to the "
     "lag-day dimension before any window.",
-    tags=("ext", "analytics"),
 )(_shipping_lag_survival)
 
 
@@ -11188,7 +10967,6 @@ _register(
     "skyline window - never raw fact rows - and members join back by "
     "equi-key; true tie semantics (equal co-optimal orders all kept). "
     "Exact cents grid, epoch-ms dates.",
-    tags=("ext", "analytics"),
 )(_orders_pareto_front)
 
 
@@ -11307,7 +11085,6 @@ _register(
     "z^2 statistic as ONE exact integer ratio - significance flagged "
     "by cross-multiplied compare against 3.84 (p<0.05), no float "
     "intermediates anywhere.",
-    tags=("ext", "analytics", "eval"),
 )(_events_ab_test_report)
 
 
@@ -11386,7 +11163,6 @@ _register(
     "from a byte budget, md5 doc->shard assignment (reproducible, "
     "writer-independent), per-shard fill report. One aggregate + one "
     "broadcast join + one aggregate.",
-    tags=("ext", "pipeline"),
 )(_dataset_sharding_plan)
 
 
@@ -11495,7 +11271,6 @@ _register(
     "quotient, ratio_round). Two-level aggregate: (QI, sensitive) "
     "counts map-side-combine before the QI rollup - no distinct-heavy "
     "shuffle at any scale.",
-    tags=("ext", "analytics", "privacy", "quotient"),
 )(_customer_ldiversity_audit)
 
 
@@ -11521,7 +11296,6 @@ _register(
     "quasi-identifiers [ext/analytics/privacy]: group sizes, "
     "re-identifiability flags, table shares. Exact integer bucket on "
     "the cents grid; one map-side-combined aggregate.",
-    tags=("ext", "analytics", "privacy"),
 )(_customer_kanonymity_audit)
 
 
@@ -11619,7 +11393,6 @@ _register(
     "outcome aggregated per nation on the exact cents grid. The "
     "Delta-MERGE shape without a table format; key join co-partitions "
     "at scale.",
-    tags=("ext", "analytics", "warehouse"),
 )(_customer_merge_upsert_report)
 
 
@@ -11715,8 +11488,11 @@ _register(
     "integer cents STRING (no float log10); Benford probabilities are "
     "embedded repr literals (the HLL alpha pattern) so the one float "
     "multiply is bit-identical; chi^2 terms are exact integer ratios.",
-    tags=("ext", "analytics", "forensics"),
 )(_orders_benford_screen)
+
+
+#: Relaxation rounds of ``part_copurchase_hops``: its Spark loop and its oracle.
+_HOPS_ROUNDS = 3
 
 
 def _part_copurchase_hops(spark: SparkSession, sf: str) -> DataFrame:
@@ -11746,7 +11522,7 @@ def _part_copurchase_hops(spark: SparkSession, sf: str) -> DataFrame:
         .select("part", F.lit(0).cast("long").alias("dist"))
     )
     dist = seeds.localCheckpoint(eager=False)
-    for _ in range(3):
+    for _ in range(_HOPS_ROUNDS):
         relax = (
             edges.join(dist, edges["src"] == dist["part"])
             .select(F.col("dst").alias("part"), (F.col("dist") + 1).alias("d"))
@@ -11767,7 +11543,7 @@ def _part_copurchase_hops(spark: SparkSession, sf: str) -> DataFrame:
     return dist.select(F.col("part").alias("l_partkey"), "dist")
 
 
-def _hops_oracle_sql(rounds: int = 3) -> str:
+def _hops_oracle_sql() -> str:
     ctes = [
         """lp AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem
             WHERE l_shipdate >= TIMESTAMP '1998-01-01')""",
@@ -11780,7 +11556,7 @@ def _hops_oracle_sql(rounds: int = 3) -> str:
             SELECT DISTINCT src AS part FROM edges ORDER BY part LIMIT 5))""",
     ]
     prev = "d0"
-    for i in range(1, rounds + 1):
+    for i in range(1, _HOPS_ROUNDS + 1):
         ctes.append(
             f"""d{i} AS MATERIALIZED (
           SELECT COALESCE(p.part, r.part) AS part,
@@ -11803,13 +11579,12 @@ def _hops_oracle_sql(rounds: int = 3) -> str:
 
 _register(
     "part_copurchase_hops",
-    _hops_oracle_sql(3),
+    _hops_oracle_sql(),
     doc="Multi-source BFS hop distances (3 rounds, 5 seed parts) over "
     "the co-purchase graph [ext/analytics/graph]: frontier relaxation "
     "with per-round min-fold (map-side combined) and checkpointed "
     "dist table - the connected-components iteration shape; oracle = "
     "unrolled CTEs. Unreachable-in-3 parts absent by definition.",
-    tags=("ext", "analytics", "graph", "iterative"),
 )(_part_copurchase_hops)
 
 
@@ -11897,7 +11672,6 @@ _register(
     "five moment sums accumulate as integers over a RANGE window on "
     "the hourly dimension table; slope is one exact integer ratio, "
     "NULL on degenerate windows (guarded both engines).",
-    tags=("ext", "timeseries", "quotient"),
 )(_orders_rolling_ols_slope)
 
 
@@ -11983,7 +11757,6 @@ _register(
     "sub-document dedup granularity (CAS/backup planning). Substring "
     "arithmetic off one sequence explode; two map-side-combined "
     "aggregates.",
-    tags=("ext", "dedup", "storage"),
 )(_docs_cas_chunk_dedup)
 
 
@@ -12070,7 +11843,6 @@ _register(
     ": late = ts below the running arrival-order max; late share + max "
     "backwards skew in ms - the measurement that sizes a watermark. "
     "Per-user windows, exact arithmetic.",
-    tags=("ext", "analytics", "streaming"),
 )(_user_out_of_order_profile)
 
 
@@ -12131,7 +11903,6 @@ _register(
     "over the (nation, year) aggregate, growth as an exact cents "
     "ratio, NULL first year. Fact collapses to the dimension grid "
     "before the window.",
-    tags=("ext", "analytics"),
 )(_nation_revenue_yoy)
 
 
@@ -12204,7 +11975,6 @@ _register(
     "cohort (id % 97). Pushed-down predicate + one aggregate per "
     "table; becomes a broadcast semi-join against the erasure list at "
     "scale.",
-    tags=("ext", "analytics", "privacy"),
 )(_gdpr_delete_impact)
 
 
@@ -12307,7 +12077,6 @@ _register(
     "n_h ~ N_h*sigma_h from exact integer cents moments; sqrt/share "
     "are transcendental-factor quotients of bit-identical inputs "
     "(off-grid, tie-free rounds). One aggregate + scalar broadcast.",
-    tags=("ext", "sampling"),
 )(_neyman_allocation_plan)
 
 
@@ -12428,7 +12197,6 @@ _register(
     "max - the mergeability solution to sliding DISTINCT (exact needs "
     "the id set per window). Corpus touched once; grid/window/fold all "
     "dimension-scale; fully oracle-checked.",
-    tags=("ext", "sketch", "timeseries"),
 )(_users_sliding_hll_24h)
 
 
@@ -12497,7 +12265,6 @@ _register(
     "components (shared dedup machinery) + per-cluster roll-up; oracle "
     "closes the pair graph with a recursive CTE. Cluster diameter is "
     "tiny (same-customer blocks), so rounds stay small.",
-    tags=("ext", "analytics", "linkage"),
 )(_invoice_duplicate_clusters)
 
 
@@ -12657,7 +12424,6 @@ _register(
     "any view; every level enforces the 24h deadline) via two cascaded "
     "per-user running maxima - no pair joins, no sequence "
     "materialization; exact-ratio conversions.",
-    tags=("ext", "analytics"),
 )(_events_window_funnel)
 
 
@@ -12780,7 +12546,6 @@ _register(
     "1e-4-unit space (ratio_units - the credit IS a grid quotient) and "
     "sum exactly. Banded user-keyed interval join; the as-of entry is "
     "the last-touch counterpart.",
-    tags=("ext", "analytics", "quotient"),
 )(_purchase_linear_attribution)
 
 
@@ -12898,7 +12663,6 @@ _register(
     "changed / unchanged + per-column change counts - the data-diff "
     "tool shape. Exact cents comparisons; key join co-partitions at "
     "scale.",
-    tags=("ext", "analytics", "warehouse"),
 )(_orders_snapshot_diff)
 
 
@@ -12983,7 +12747,6 @@ _register(
     "tags. Vocab-scale PMI join (AQE broadcast), per-doc rank over the "
     "collocation intersection only; integer micro-nat PMI (pmi_e6 "
     "BIGINT, r8 libm audit) with (pmi_e6, phrase) determinism. Composition over text.word_pmi_pairs(top_k=None).",
-    tags=("ext", "text"),
 )(_docs_keyphrases)
 
 
@@ -13065,7 +12828,6 @@ _register(
     "maximal consecutive-hour runs with error rate > 25% (exact "
     "cross-multiplied compare), islands via t - ROW_NUMBER; windows "
     "run over the qualifying-hours dimension only. Top-10 by length.",
-    tags=("ext", "analytics", "timeseries"),
 )(_hourly_error_streaks)
 
 
@@ -13231,7 +12993,6 @@ _register(
     "sums, boundary-bucket partial sums at value level) - robust mean "
     "with no global sort; one exact integer ratio at the end. Oracle "
     "replays via ORDER BY LIMIT/OFFSET.",
-    tags=("ext", "analytics", "percentile"),
 )(_orders_trimmed_mean_scalable)
 
 
@@ -13327,7 +13088,6 @@ _register(
     "the shared hash_bucket construction), so duplicates never "
     "straddle train/test; per-fold stats + an emitted cross-fold "
     "leakage proof (max distinct folds per cluster = 1, hash-checked).",
-    tags=("ext", "sampling", "pipeline"),
 )(_dataset_grouped_kfold)
 
 
@@ -13393,7 +13153,6 @@ _register(
     "sub-ms ties cannot diverge; NULL types filtered on both sides), "
     "map-side-combined path counts, TakeOrdered with (count, path) "
     "determinism.",
-    tags=("ext", "analytics"),
 )(_events_top_paths)
 
 
@@ -13545,7 +13304,6 @@ _register(
     "integer FRACTIONS; the forecast rate z/p rounds once via "
     "cross-multiplied ratio_round. Part-month dimension windows only; "
     "top-50 by demand history.",
-    tags=("ext", "timeseries", "quotient"),
 )(_part_croston_forecast)
 
 
@@ -13673,7 +13431,6 @@ _register(
     "Python literals on a 1e-6 integer grid (no in-engine logs), DCG/"
     "IDCG exact integer sums, nDCG one ratio_round quotient; R=0 -> "
     "NULL.",
-    tags=("ext", "similarity", "eval", "quotient"),
 )(_retrieval_ndcg)
 
 
@@ -13769,7 +13526,6 @@ _register(
     "per-file zone-map extents that make EITHER-column predicates "
     "prune ~15/16 of files. Pure integer bit ops; one projection + one "
     "256-group aggregate.",
-    tags=("ext", "layout", "analytics"),
 )(_events_zorder_layout)
 
 
@@ -13860,7 +13616,6 @@ _register(
     "rule-based quality gate (score >= 0.5); prob units and deciles "
     "are integer derivations of hash-verified doubles, mean_pred and "
     "pos_rate round via ratio_round.",
-    tags=("ext", "text", "eval", "quotient"),
 )(_classifier_calibration_bins)
 
 
@@ -13948,7 +13703,6 @@ _register(
     "the day-cumulative distribution (whole days never straddle a "
     "boundary); per-split day ranges double as the no-future-leakage "
     "proof. Day-dimension window only.",
-    tags=("ext", "sampling", "pipeline"),
 )(_dataset_temporal_split)
 
 
@@ -14077,7 +13831,6 @@ _register(
     "retrievers [ext/similarity/fusion]: 1/(60+r) weights as shared "
     "1e-12-unit integer literals, fused score an exact BIGINT sum, "
     "(score desc, neighbor_id) ties — no float enters the fusion.",
-    tags=("ext", "similarity", "fusion"),
 )(_retrieval_rrf_fusion)
 
 
@@ -14173,7 +13926,6 @@ _register(
     "[ext/similarity/eval]: reciprocal ranks as shared 1e-9-unit "
     "integer literals, numerator an exact integer sum, MRR and "
     "mean_first_rank grid quotients via ratio_round; zero-hit guard.",
-    tags=("ext", "similarity", "eval", "quotient"),
 )(_retrieval_mrr)
 
 
@@ -14292,7 +14044,6 @@ _register(
     "two-level exact-NDV plan (map-side combine to <=NDV rows per "
     "column, no multi-distinct Expand); one shared column list drives "
     "both engines.",
-    tags=("ext", "stats", "quotient"),
 )(_table_stats_profile)
 
 
@@ -14377,7 +14128,6 @@ _register(
     "(user, type, payload) events within 600 s chain into one burst, "
     "only the head survives; fine-keyed lag window (no hot key), "
     "|types|-row accounting, drop_rate via ratio_round.",
-    tags=("ext", "pipeline", "dedup", "quotient"),
 )(_events_idempotent_dedup)
 
 
@@ -14433,7 +14183,6 @@ _register(
     doc="UNPIVOT/melt reshape of the per-status measure block "
     "[ext/relational/reshape]: aggregate first, Expand the |status|-row "
     "result (never the fact table); all measures exact integers.",
-    tags=("ext", "relational", "reshape"),
 )(_orders_unpivot_measures)
 
 
@@ -14520,7 +14269,6 @@ _register(
     "canonical all-integer row serialization (NULL sentinel — "
     "concat_ws skips NULLs), md5 pieces aggregated with commutative "
     "SUM + BIT_XOR; one partial-aggregated reduction, no sort.",
-    tags=("ext", "integrity"),
 )(_orders_table_checksum)
 
 
@@ -14621,7 +14369,6 @@ _register(
     "map-side-combined aggregate, grid-sized cumulative window, 10-row "
     "re-aggregate; bin assignment exact integer DIV, no per-row NTILE "
     "global sort.",
-    tags=("ext", "stats"),
 )(_price_histogram_equidepth)
 
 
@@ -14708,7 +14455,6 @@ _register(
     "[ext/relational/window]: total (bal, key) order, percent_rank and "
     "cume_dist as ratio_round grid quotients, native NTILE deciles; one "
     "dimension-sized WindowExec pass.",
-    tags=("ext", "relational", "window", "quotient"),
 )(_customer_balance_rank_profile)
 
 
@@ -14825,7 +14571,6 @@ _register(
     "checkpointed for its two consumers. Outlier-proof: no "
     "timespan-sized [min,max] spine (the year-9999 degenerate probe "
     "OOM-killed the unbounded sibling form).",
-    tags=("ext", "timeseries"),
 )(_events_hourly_gapfill_locf)
 
 
@@ -14924,7 +14669,6 @@ _register(
     "normalized prefixes, pairs only within equal 12-char prefix "
     "blocks, hot blocks (>50 docs) dropped whole — |pairs| ~ near-dup "
     "mass, DP cost capped.",
-    tags=("ext", "dedup", "linkage"),
 )(_doc_prefix_edit_pairs)
 
 
@@ -15006,7 +14750,6 @@ _register(
     doc="CBO join-size profile [ext/stats]: exact equi-join cardinality "
     "Sum cnt_A(k)*cnt_B(k) + worst per-key fan-out from the two key-count "
     "tables — key-cardinality-sized plan, the wide join never executes.",
-    tags=("ext", "stats"),
 )(_join_cardinality_profile)
 
 
@@ -15074,7 +14817,6 @@ _register(
     "SUM+XOR md5 lanes per event day — replica diff localizes to the "
     "partitions whose checksums differ; one map-side-combined aggregate "
     "to |days| rows.",
-    tags=("ext", "integrity"),
 )(_events_partition_checksums)
 
 
@@ -15156,7 +14898,6 @@ _register(
     doc="Inverted-index build [ext/text/search]: (term, doc) tf "
     "map-side combine, term-level roll-up with sorted capped posting "
     "heads, (df desc, term asc) top-50 via TakeOrderedAndProject.",
-    tags=("ext", "text", "search"),
 )(_text_inverted_index)
 
 
@@ -15304,7 +15045,6 @@ _register(
     "distinct md5, mean (ratio_round) and value-grid percentile_disc "
     "median length — one plan, every branch grid-sized before its "
     "shuffle.",
-    tags=("ext", "pipeline", "governance", "quotient"),
 )(_dataset_datacard)
 
 
@@ -15402,7 +15142,6 @@ _register(
     "contrastive training [ext/similarity]: one corpus pass, one "
     "(anchor, same-label) window on unrounded cosine with vec_id "
     "ties, anchor-sized pivot; cosines rounded only at output.",
-    tags=("ext", "similarity"),
 )(_similarity_triplets)
 
 
@@ -15521,7 +15260,6 @@ _register(
     "W-window minima over k-gram md5 keys packed with position (exact "
     "integer min, no ties), guarantee-dense ~2/(W+1) sample; per-doc "
     "windows only, density via ratio_round.",
-    tags=("ext", "text", "dedup", "quotient"),
 )(_text_winnowing_fingerprints)
 
 
@@ -15586,7 +15324,6 @@ _register(
     "dedup — weight 1/|cluster| from the proven MinHash-LSH + "
     "connected-components composition, singletons weigh 1; cluster "
     "table checkpointed for its two consumers, weights via ratio_round.",
-    tags=("ext", "dedup", "sampling", "iterative", "quotient"),
 )(_dedup_aware_sample_weights)
 
 
@@ -15688,7 +15425,6 @@ _register(
     "child rows/keys, NULL keys, orphan mass via key-count anti-join — "
     "shuffles key counts, never child rows; one shared relation list "
     "drives both engines.",
-    tags=("ext", "integrity"),
 )(_referential_integrity_audit)
 
 
@@ -15813,7 +15549,6 @@ _register(
     "[ext/eval/monitoring]: even/odd-population shares with add-1 "
     "smoothing, identical left-associated double expressions, per-term "
     "1e-6-unit rounding before the exact integer sum (the chi2 idiom).",
-    tags=("ext", "eval", "monitoring"),
 )(_embedding_psi_drift)
 
 
@@ -15942,7 +15677,6 @@ _register(
     "exact rational slopes, double-quotient ordering with (num, den) "
     "ties, ratio_round output; fact collapses to the day grid and the "
     "window bound keeps the pair table fixed-size.",
-    tags=("ext", "timeseries", "robust", "quotient"),
 )(_orders_theilsen_trend)
 
 
@@ -16090,7 +15824,6 @@ _register(
     "statistics via the two-pass bucket algorithm (no global sort), "
     "clamp to [p05, p95], winsorized mean via ratio_round; floor/cap "
     "mass reported.",
-    tags=("ext", "robust", "quotient"),
 )(_orders_winsorized_stats)
 
 
@@ -16176,7 +15909,6 @@ _register(
     "affected-doc counts at 5 thresholds from ONE exact PPJoin pair "
     "table (grid-rounded jaccard vs unit thresholds — identical "
     "doubles); valid for thresholds >= the 0.6 base.",
-    tags=("ext", "dedup", "ops"),
 )(_dedup_threshold_sweep)
 
 
@@ -16396,7 +16128,6 @@ _register(
     "retrieval]: greedy 7*u_rel - 3*u_div picks in exact integer 1e-5 "
     "units (no float in the ranking), unrolled rounds mirrored CTE for "
     "CTE, query-sized tables throughout.",
-    tags=("ext", "similarity", "retrieval"),
 )(_retrieval_mmr_rerank)
 
 
@@ -16492,7 +16223,6 @@ _register(
     "(N*trace - Sum r_i*c_i over N^2 - Sum r_i*c_i) via ratio_round; "
     "confusion grid from one partial-aggregated scan, checkpointed for "
     "its three consumers; pe=1 guard.",
-    tags=("ext", "eval", "quotient"),
 )(_langid_kappa)
 
 
@@ -16610,7 +16340,6 @@ _register(
     "[ext/timeseries]: centered 25-hour MA trend, hour-of-day "
     "seasonal, residual — all exact integer numerators over known "
     "denominators via ratio_round; hour-grid windows only.",
-    tags=("ext", "timeseries", "quotient"),
 )(_events_seasonal_decompose)
 
 
@@ -16710,7 +16439,6 @@ _register(
     "the empirical read on the MOSS guarantee; hash-keyed joins over "
     "~2/(W+1)-dense fingerprint sets, both stages independently "
     "oracled.",
-    tags=("ext", "dedup", "ops"),
 )(_winnowing_recall_audit)
 
 
@@ -16813,7 +16541,6 @@ _register(
     "[ext/eval/quotient]: Mann-Whitney rank sums with tie averaging "
     "over the bounded cents-value grid — 2R1 stays integral, AUC via "
     "ratio_round, NULL on degenerate classes.",
-    tags=("ext", "eval", "quotient"),
 )(_events_value_auc)
 
 
@@ -16903,7 +16630,6 @@ _register(
     "[ext/pipeline/quotient]: (pos + m·prior)/(cnt + m) as ONE integer "
     "ratio (pos·N + m·S)/((cnt+m)·N), m = 20; raw rate alongside; "
     "dimension-grid aggregate with checkpointed global stats.",
-    tags=("ext", "pipeline", "quotient"),
 )(_segment_priority_target_encoding)
 
 
@@ -16999,7 +16725,6 @@ _register(
     "each score ONE exact rational over 1000·T·W via ratio_round (the "
     "linear-combination rule forbids double-space weighting); zero "
     "shuffles.",
-    tags=("ext", "text", "quotient"),
 )(_text_readability_scores)
 
 
@@ -17123,7 +16848,6 @@ _register(
     "(transcendental, off-grid), IV terms rounded to integer units "
     "before the exact sum (the chi2/PSI idiom); bucket-grid windows "
     "only.",
-    tags=("ext", "stats", "eval"),
 )(_acctbal_woe_iv)
 
 
@@ -17186,7 +16910,6 @@ _register(
     "wedge join fan out to member nodes with a map-side combine; exact "
     "integer counts, lcc = 2T/(d(d-1)) via ratio_round; degree >= 2 "
     "rows only.",
-    tags=("ext", "analytics", "graph"),
 )(_graph_local_clustering)
 
 
@@ -17393,7 +17116,6 @@ _register(
     "cents grid (shared CDF scaffold), argmax location with "
     "smallest-value tie-break, Smirnov p-value as a 1e-6-unit-rounded "
     "transcendental of exact integers.",
-    tags=("ext", "eval", "quotient"),
 )(_events_value_ks_test)
 
 
@@ -17490,7 +17212,6 @@ _register(
     "[ext/timeseries/quotient]: exact integer sign sum over the fixed "
     "pair table, tie-corrected variance kept integral (x18), tau-a via "
     "ratio_round; no z/p (sqrt of a possibly-square rational).",
-    tags=("ext", "timeseries", "quotient"),
 )(_orders_mann_kendall)
 
 
@@ -17538,7 +17259,6 @@ _register(
     "[ext/analytics/graph]: both-orientation symmetry turns Newman's "
     "Pearson-over-edges into one exact integer ratio (no sqrt); "
     "degrees join the edge table, one global aggregate.",
-    tags=("ext", "analytics", "graph"),
 )(_graph_degree_assortativity)
 
 
@@ -17614,7 +17334,6 @@ _register(
     "set, scalar count probe, per-round localCheckpoint); oracle "
     "unrolls 8 peel rounds and rides fixpoint idempotence — the Spark "
     "side raises beyond that budget rather than diverge.",
-    tags=("ext", "analytics", "graph"),
 )(_graph_kcore)
 
 
@@ -17704,7 +17423,6 @@ _register(
     "start, 3 iterations, L1 renormalization by exact floor division "
     "(L2's sqrt leaves integer space; ranking is "
     "normalization-invariant); oracle = unrolled MATERIALIZED CTEs.",
-    tags=("ext", "analytics", "graph"),
 )(_graph_hits)
 
 
@@ -17789,7 +17507,6 @@ _register(
     "pu*20*m <= k*1e6 on the 1e-6-unit p-values, largest passing rank "
     "via a full-frame window; explicit NULLS LAST (Spark/DuckDB "
     "defaults differ).",
-    tags=("ext", "eval"),
 )(_events_ks_fdr)
 
 
@@ -17859,7 +17576,6 @@ _register(
     "spacing summed in DECIMAL/HUGEINT over the bounded cents grid "
     "(shared CDF scaffold), one ratio_round division; the integral "
     "companion of the KS sup.",
-    tags=("ext", "eval", "quotient"),
 )(_events_value_wasserstein)
 
 
@@ -18058,7 +17774,6 @@ _register(
     "integer Poisson-CDF thresholds; replicate means as exact rationals "
     "ordered by the bit-identical double quotient, CI from exact order "
     "statistics; x100 fan with map-side combine, constant-size tail.",
-    tags=("ext", "stats", "quotient"),
 )(_orders_bootstrap_ci)
 
 
@@ -18208,7 +17923,6 @@ _register(
     "ratio rounded to the 1e-6 grid, per-arm adjusted mean as ONE exact "
     "rational over Na*N*1e8; DECIMAL/HUGEINT rollups (N*Sxy brushes "
     "2^63 near sf1).",
-    tags=("ext", "eval", "quotient"),
 )(_events_cuped)
 
 
@@ -18282,7 +17996,6 @@ _register(
     "90-day revenue grid [ext/timeseries/quotient]: exact integer "
     "errors, MAE/WAPE/bias as single ratio_round divisions, gap days "
     "skipped AND counted.",
-    tags=("ext", "timeseries", "quotient"),
 )(_orders_forecast_backtest)
 
 
@@ -18438,7 +18151,6 @@ _register(
     "customers censored at the dataset end; per-factor logs unit-rounded "
     "at 1e-9, exact cumulative sum, exp rounded at 1e-6 (the PSI idiom "
     "applied to a product); died-out risk set emits exact 0.",
-    tags=("ext", "analytics", "survival"),
 )(_customer_repeat_survival)
 
 
@@ -18576,7 +18288,6 @@ _register(
     "md5 hash-split arms x pre/post periods, the four cell means "
     "combined on their common denominator as ONE exact integer ratio "
     "(DECIMAL/HUGEINT cell products); NULL on any empty cell.",
-    tags=("ext", "eval", "quotient"),
 )(_events_did)
 
 
@@ -18737,7 +18448,6 @@ _register(
     "global one (cross-multiplied CDF gaps on the 5-bucket grid), "
     "at-risk flag as one exact integer comparison (never filters the "
     "rounded column).",
-    tags=("ext", "privacy"),
 )(_customer_tcloseness_audit)
 
 
@@ -18803,13 +18513,11 @@ _register(
     "swaps the seed for secret randomness. Completes the privacy "
     "family: PII scan -> k-anonymity -> l-diversity -> t-closeness -> "
     "GDPR delete impact -> DP release.",
-    tags=("ext", "privacy", "dp"),
 )(_events_dp_noisy_counts)
 
 
 _NEGSAMP_SLOTS = 6  # hash draws per node
 _NEGSAMP_K = 3      # negatives kept per node
-_NEGSAMP_IDX_BUCKET = 1024  # node-ids per index bucket (order-aligned)
 
 
 def _graph_negative_samples(spark: SparkSession, sf: str) -> DataFrame:
@@ -18849,7 +18557,7 @@ def _graph_negative_samples(spark: SparkSession, sf: str) -> DataFrame:
     nodes = deg.select("node")
     ncount = nodes.agg(F.count(F.lit(1)).alias("nv"))
     idx = (
-        _rel.ordered_dense_index(nodes, "node", _NEGSAMP_IDX_BUCKET)
+        _rel.ordered_dense_index(nodes, "node")
         .localCheckpoint(eager=False)  # two consumers: fan + partner lookup
     )
     fan = (
@@ -18942,7 +18650,6 @@ _register(
     "training [ext/analytics/graph]: md5 hash draws over a row_number "
     "node index, self/real-edge proposals discarded by anti-join, first "
     "K surviving slots kept — both engines keep identical negatives.",
-    tags=("ext", "analytics", "graph"),
 )(_graph_negative_samples)
 
 
@@ -19004,7 +18711,6 @@ _register(
     "10·n-scaled corpus (L2 ranking is scale-invariant), stage-2 "
     "re-rank — no floats anywhere, vec_id tie-breaks, fully "
     "oracle-replayed including the quantization.",
-    tags=("ext", "similarity", "retrieval"),
 )(
     lambda spark, sf: _quant.rocchio_prf_topk(
         _t(spark, sf, "embeddings"), F.col("vec_id") < 10
@@ -19191,7 +18897,6 @@ _register(
     "predictor and the ceil(0.9*(n+1))-th calibration residual located "
     "as exact order statistics on the bounded cents grid (never a "
     "corpus-row rank window), held-out coverage via ratio_round.",
-    tags=("ext", "eval", "quotient"),
 )(_events_conformal_interval)
 
 
@@ -19263,7 +18968,6 @@ _register(
     "gap sum, MCE an integer max with smallest-bin tie-break; both "
     "engines consume their own side of the bins entry (one audited "
     "copy).",
-    tags=("ext", "eval", "quotient"),
 )(_classifier_ece)
 
 
@@ -19360,7 +19064,6 @@ _register(
     "regressors are 1e-6-unit-rounded transcendentals of exact integer "
     "inputs, OLS moments summed exactly in DECIMAL/HUGEINT, slope as "
     "one ratio_round; one scan collapsing to the category grid.",
-    tags=("ext", "analytics", "quotient"),
 )(_parts_price_elasticity)
 
 
@@ -19386,7 +19089,6 @@ def _events_top_values_salted(spark: SparkSession, sf: str) -> DataFrame:
         ["event_type"],
         [F.desc("value_cents"), F.asc("event_id")],
         salt_src=F.col("event_id"),
-        k=5,
     ).select(
         "event_type",
         F.col("rnk").cast("long").alias("rnk"),
@@ -19406,7 +19108,7 @@ _register(
                    PARTITION BY event_type
                    ORDER BY {cents_sql("value")} DESC, event_id) AS rnk
           FROM events)
-    WHERE rnk <= 5
+    WHERE rnk <= {_rel.SALTED_TOP_K}
     ORDER BY event_type, rnk
     """,
     doc="Top-5 events by value per type via the SALTED two-level top-k "
@@ -19414,7 +19116,6 @@ _register(
     "k*salts survivors - exactly equivalent to the one-level window "
     "(the oracle IS the plain ROW_NUMBER SQL), hub keys never funnel "
     "raw rows through one task.",
-    tags=("ext", "relational", "scale"),
 )(_events_top_values_salted)
 
 
@@ -19512,7 +19213,6 @@ _register(
     "rankings per query [ext/similarity/eval/quotient]: every RBO term "
     "is rational over 10^5*60, so truncated RBO is one exact integer "
     "ratio via precomputed suffix weights; disjoint rankings emit 0.",
-    tags=("ext", "similarity", "eval", "quotient"),
 )(_retrieval_rbo_exact_vs_ivf)
 
 
@@ -19628,7 +19328,6 @@ _register(
     "zero quarters (weekly classed everything Z on sparse TPC-H "
     "demand), one exact integer ratio; classes by cross-multiplied "
     "integer compares; the ABC companion axis.",
-    tags=("ext", "analytics", "quotient"),
 )(_parts_xyz_classes)
 
 
@@ -19794,7 +19493,6 @@ _register(
     "iterations in 1e12 units with exact floor division (the integer "
     "PageRank idiom; sink states keep their mass); oracle = unrolled "
     "MATERIALIZED CTEs.",
-    tags=("ext", "analytics"),
 )(_events_markov_stationary)
 
 
@@ -19945,7 +19643,6 @@ _register(
     "match join (never all-pairs), per-(pair, diagonal) "
     "gaps-and-islands, max island + K-1. Pure integer arithmetic; "
     "islands windows bounded by doc length.",
-    tags=("ext", "dedup", "text"),
 )(_dedup_longest_common_run)
 
 
@@ -20087,14 +19784,13 @@ _register(
     "map-side-combined counts + agg-only argmax (no rank window), "
     "labels checkpointed between rounds; oracle = unrolled "
     "MATERIALIZED CTEs (the iterative-graph idiom).",
-    tags=("ext", "graph", "iterative"),
 )(_graph_lpa_communities)
 
 
 def _graph_link_prediction(spark: SparkSession, sf: str) -> DataFrame:
     from .operators.graph import copurchase_pairs, link_prediction_cn
 
-    return link_prediction_cn(copurchase_pairs(_lineitem_1998(spark, sf)), k=20)
+    return link_prediction_cn(copurchase_pairs(_lineitem_1998(spark, sf)))
 
 
 _register(
@@ -20107,7 +19803,7 @@ _register(
       SELECT src AS node, dst AS nbr FROM und
       UNION ALL SELECT dst AS node, src AS nbr FROM und),
     deg AS MATERIALIZED (SELECT node, COUNT(*) AS d FROM bi GROUP BY 1),
-    hot AS MATERIALIZED (SELECT node FROM deg WHERE d > 1048576),
+    hot AS MATERIALIZED (SELECT node FROM deg WHERE d > {LP_MAX_MIDDLE_DEGREE}),
     capped AS (SELECT CAST(COUNT(*) AS BIGINT) AS capped_middles FROM hot),
     cn AS (
       SELECT b1.nbr AS u, b2.nbr AS w, COUNT(*) AS cn
@@ -20125,7 +19821,7 @@ _register(
            capped.capped_middles
     FROM cand c JOIN deg du ON du.node = c.u JOIN deg dw ON dw.node = c.w
          CROSS JOIN capped
-    ORDER BY c.cn DESC, part_a, part_b LIMIT 20
+    ORDER BY c.cn DESC, part_a, part_b LIMIT {LP_TOP_K}
     """,
     doc="Common-neighbors link prediction [ext/graph]: top-20 NON-edges "
     "of the co-purchase graph by shared-neighbor count (+ exact-ratio "
@@ -20137,11 +19833,10 @@ _register(
     "out-ranks an endpoint, r7 oracle catch), packed-key FINAL-ONLY "
     "pair counts behind an explicit keyed repartition (a map-side "
     "partial agg reduces nothing on near-unique keys), edge anti-join, "
-    "TakeOrderedAndProject top-k (no global sort). max_middle_degree "
-    "(default 2^20, a fixture no-op) is the hub-skew knob: middles "
+    "TakeOrderedAndProject top-k (no global sort). LP_MAX_MIDDLE_DEGREE "
+    "(2^20, a fixture no-op) is the hub-skew knob: middles "
     "above the cap are broadcast-anti-joined out of wedge enumeration "
     "before the self-join; capped_middles audits the drop count.",
-    tags=("ext", "graph", "eval"),
 )(_graph_link_prediction)
 
 
@@ -20329,7 +20024,6 @@ _register(
     "merge fold on both engines (F.aggregate <-> list_reduce). One "
     "corpus pass; every round is vocabulary-bounded work (why BPE "
     "trains at 100 TB). Oracle = unrolled MATERIALIZED CTEs.",
-    tags=("ext", "text", "tokenizer", "iterative"),
 )(_text_bpe_trainer)
 
 
@@ -20398,7 +20092,6 @@ _register(
     "text_bpe_trainer, sharing ONE audited vocabulary chain on each "
     "engine. Merge folds stay vocabulary-bounded; the corpus pays one "
     "explode + equi-join + map-side-combined groupBy.",
-    tags=("ext", "text", "tokenizer"),
 )(_text_bpe_apply)
 
 
@@ -20507,7 +20200,6 @@ _register(
     "lanes both engines replay; one corpus explode + map-side-combined "
     "groupBy; dense zeros from a bounded fan. "
     "Vector crosses as a ' '-joined string (driver-hashable).",
-    tags=("ext", "text", "features"),
 )(_text_hashed_features)
 
 
@@ -20647,7 +20339,6 @@ _register(
     "weight join + two map-side-combined aggregates over the "
     "checkpointed sparse features; weights ride between epochs as a "
     "checkpointed 16-row table. Output: per-bucket weight trajectory.",
-    tags=("ext", "text", "ml", "iterative"),
 )(_text_perceptron_trainer)
 
 
@@ -20731,7 +20422,6 @@ _register(
     "eval half of the train->eval pair, sharing ONE training chain on "
     "each engine (the BPE train->apply pattern). Ratios are exact "
     "integer quotients with zero-denominator guards.",
-    tags=("ext", "text", "ml", "eval"),
 )(_classifier_perceptron_eval)
 
 
@@ -20921,7 +20611,6 @@ _register(
     "intersected with three IVF rankings sharing ONE probe-rank table; "
     "recall as an exact integer ratio (ratio_round). All four rankers "
     "are the already-audited bit-identical cosine subplans.",
-    tags=("ext", "similarity", "eval", "quotient"),
 )(_retrieval_recall_sweep)
 
 
@@ -20977,7 +20666,6 @@ _register(
     "integers end to end, so the oracle is the established kmeans SQL "
     "replay. Scale: one corpus Arrow map emitting <=k partials/batch, a "
     "k*D aggregate, k-row spine join - no data-sized shuffle.",
-    tags=("ext", "similarity", "ivf", "maintenance"),
 )(_ivf_cell_stats_q)
 
 
@@ -20987,13 +20675,11 @@ def _shard_merge_plan_q(spark: SparkSession, sf: str) -> DataFrame:
         "doc_id",
         F.size(F.split(_dedup._norm(F.col("text")), " ")).alias("n_tokens"),
     )
-    packs = _sampling.greedy_pack(
-        tok, "doc_id", "n_tokens", budget=_GP_BUDGET, n_buckets=_GP_NBUCKETS
-    )
+    packs = _sampling.greedy_pack(tok, "doc_id", "n_tokens")
     # simulated post-dedup shrink: drop a third of the docs, leaving
     # previously full packs under-filled — the consolidation trigger
     shrunk = packs.filter(F.col("doc_id") % 3 != 0)
-    return _sampling.shard_merge_plan(shrunk, "n_tokens", budget=_GP_BUDGET)
+    return _sampling.shard_merge_plan(shrunk, "n_tokens")
 
 
 _register(
@@ -21008,13 +20694,13 @@ _register(
       SELECT bucket, pack_ix, pack_tokens,
              SUM(pack_tokens) OVER w - pack_tokens AS prefix
       FROM totals
-      WHERE pack_tokens < {_GP_BUDGET}
+      WHERE pack_tokens < {_sampling.PACK_BUDGET}
       WINDOW w AS (PARTITION BY bucket
                    ORDER BY pack_tokens DESC, pack_ix
                    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)),
     planned AS (
       SELECT bucket, pack_ix, pack_tokens,
-             CAST(prefix // {_GP_BUDGET} AS BIGINT) AS merged_pack_ix
+             CAST(prefix // {_sampling.PACK_BUDGET} AS BIGINT) AS merged_pack_ix
       FROM unders),
     gtot AS (
       SELECT bucket, merged_pack_ix,
@@ -21029,7 +20715,7 @@ _register(
     SELECT bucket, pack_ix, pack_tokens, 'keep' AS action,
            CAST(NULL AS BIGINT) AS merged_pack_ix,
            CAST(NULL AS BIGINT) AS merged_tokens
-    FROM totals WHERE pack_tokens >= {_GP_BUDGET}
+    FROM totals WHERE pack_tokens >= {_sampling.PACK_BUDGET}
     UNION ALL
     SELECT p.bucket, p.pack_ix, p.pack_tokens, 'keep' AS action,
            CAST(NULL AS BIGINT) AS merged_pack_ix,
@@ -21047,7 +20733,6 @@ _register(
     "shards. Scale: "
     "map-side-combined pack rollup, window over PACK-level rows per "
     "bucket, merge-group rollup join - bounded by packs/bucket.",
-    tags=("ext", "sampling", "packing"),
 )(_shard_merge_plan_q)
 
 
@@ -21125,7 +20810,6 @@ _register(
     "exercises every action class. Scale: all inputs cell-sized (k / "
     "k*D rows), merge-target search k^2*D - the corpus pass lives in "
     "ivf_cell_stats.",
-    tags=("ext", "similarity", "ivf", "maintenance"),
 )(_ivf_cell_split_plan_q)
 
 
@@ -21201,7 +20885,6 @@ _register(
     "split-path work bounded by the re-train fraction; the exact-d2 "
     "aggregate map-side folds the D exploded dims per (vector, anchor) "
     "pair.",
-    tags=("ext", "similarity", "ivf", "maintenance"),
 )(_ivf_apply_cell_plan_q)
 
 
@@ -21237,7 +20920,6 @@ _register(
     "groupBy((cell, dim)) with map-side partials <= k'*D per task - "
     "the Lloyd-update shuffle shape. dim is 0-based on both sides "
     "(oracle emits gcomps dim - 1).",
-    tags=("ext", "similarity", "ivf", "maintenance"),
 )(_ivf_post_apply_codebook_q)
 
 
@@ -21301,13 +20983,12 @@ _register(
     "per-row sum. Scale: one corpus assign pass + the applier's two; "
     "cell-sized sufficient statistics lazily checkpointed (two "
     "consumers: re-trained codebook + SSE expansion).",
-    tags=("ext", "similarity", "ivf", "maintenance", "quotient"),
 )(_ivf_maintenance_report_q)
 
 
 def _embedding_bitext_margin_q(spark: SparkSession, sf: str) -> DataFrame:
     emb = _t(spark, sf, "embeddings")
-    return _sim.bitext_margin_pairs(emb, k=4)
+    return _sim.bitext_margin_pairs(emb)
 
 
 _register(
@@ -21328,17 +21009,17 @@ _register(
                    ROW_NUMBER() OVER (PARTITION BY src_id
                                       ORDER BY cos_e6 DESC, tgt_id) AS rn
             FROM mp)
-      WHERE rn <= 4 GROUP BY 1),
+      WHERE rn <= {_sim.BITEXT_MARGIN_K} GROUP BY 1),
     may AS (
       SELECT tgt_id, CAST(SUM(cos_e6) AS BIGINT) AS ays
       FROM (SELECT tgt_id, cos_e6,
                    ROW_NUMBER() OVER (PARTITION BY tgt_id
                                       ORDER BY cos_e6 DESC, src_id) AS rn
             FROM mp)
-      WHERE rn <= 4 GROUP BY 1),
+      WHERE rn <= {_sim.BITEXT_MARGIN_K} GROUP BY 1),
     msc AS MATERIALIZED (
       SELECT p.src_id, p.tgt_id, p.cos_e6,
-             {ratio_round_sql("8 * p.cos_e6", "x.axs + y.ays", 4)} AS margin
+             {ratio_round_sql(str(2 * _sim.BITEXT_MARGIN_K) + " * p.cos_e6", "x.axs + y.ays", 4)} AS margin
       FROM mp p
       JOIN max_ x ON x.src_id = p.src_id
       JOIN may y ON y.tgt_id = p.tgt_id
@@ -21378,7 +21059,6 @@ _register(
     "candidates AND normalizer pools come from the IVF index (ivf_topk "
     "probes), same margin arithmetic. Norms hoisted once per row; "
     "pair and scored tables checkpointed once each (3 and 2 consumers).",
-    tags=("ext", "similarity", "mining", "quotient"),
 )(_embedding_bitext_margin_q)
 
 

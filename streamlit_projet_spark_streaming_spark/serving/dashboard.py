@@ -31,6 +31,12 @@ from ..operators.relational import (
 SATISFACTION_LEVELS = ("Very Satisfied", "Satisfied", "Neutral", "Dissatisfied")
 GENDERS = ("Female", "Male")
 
+#: Chart sizes: top categories shown, amount-histogram bins and rows of
+#: the latest-orders table.
+TOP_CATEGORIES = 10
+AMOUNT_BINS = 50
+LATEST_ORDERS_LIMIT = 1000
+
 
 def overview_metrics(silver: DataFrame) -> DataFrame:
     """Headline metric row + enriched metric row [D8/D9]
@@ -52,24 +58,24 @@ def overview_metrics(silver: DataFrame) -> DataFrame:
     )
 
 
-def category_distribution(silver: DataFrame, n: int = 10) -> DataFrame:
+def category_distribution(silver: DataFrame) -> DataFrame:
     """Top-N category frequency [D16/F6] (``streamlit_app.py:426``)."""
-    return value_counts(silver, "category").limit(n)
+    return value_counts(silver, "category").limit(TOP_CATEGORIES)
 
 
-def category_revenue(silver: DataFrame, n: int = 10) -> DataFrame:
+def category_revenue(silver: DataFrame) -> DataFrame:
     """Top-N category revenue [D17] (``streamlit_app.py:440``)."""
     return (
         silver.groupBy("category")
         .agg(F.round(F.sum("purchase_amount_usd"), 2).alias("revenue"))
         .orderBy(F.desc("revenue"), F.asc("category"))
-        .limit(n)
+        .limit(TOP_CATEGORIES)
     )
 
 
-def amount_histogram(silver: DataFrame, nbins: int = 50) -> DataFrame:
+def amount_histogram(silver: DataFrame) -> DataFrame:
     """Amount distribution histogram [G3] (``streamlit_app.py:455-461``)."""
-    return histogram(silver, "purchase_amount_usd", nbins)
+    return histogram(silver, "purchase_amount_usd", AMOUNT_BINS)
 
 
 def vip_premium_analysis(silver: DataFrame) -> DataFrame:
@@ -147,7 +153,6 @@ def frequency_distribution(silver: DataFrame) -> DataFrame:
 
 def latest_orders(
     silver: DataFrame,
-    limit: int = 1000,
     categories: list[str] | None = None,
     locations: list[str] | None = None,
 ) -> DataFrame:
@@ -178,7 +183,7 @@ def latest_orders(
     return latest_n(
         df,
         "processed_time",
-        limit,
+        LATEST_ORDERS_LIMIT,
         tiebreak=["customer_id", "item_purchased", "purchase_amount_usd"],
     ).select(
         *available

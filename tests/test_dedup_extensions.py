@@ -84,7 +84,7 @@ def test_simhash_banding_is_lossless(spark):
     assert got == expect
 
 
-def test_rh_lsh_recall_on_planted_near_dups(spark):
+def test_rh_lsh_recall_on_planted_near_dups(spark, monkeypatch):
     """SRP-LSH near-dup pairs: exact-verified candidates are a subset of
     the exact quadratic result, with recall >= 0.9 on planted perturbed
     duplicates (the fixture's random vectors have no 0.95-pairs)."""
@@ -98,13 +98,19 @@ def test_rh_lsh_recall_on_planted_near_dups(spark):
     approx = set(
         (r.vec_a, r.vec_b) for r in sim.rh_near_dup_pairs(corpus).collect()
     )
-    exact = set(
-        (r.vec_a, r.vec_b)
-        for r in sim.cosine_near_dup_pairs(corpus, 0.95).collect()
-    )
+    monkeypatch.setattr(sim, "COSINE_NEAR_DUP_THRESHOLD", 0.95)
+    exact = set((r.vec_a, r.vec_b) for r in sim.cosine_near_dup_pairs(corpus).collect())
     assert approx <= exact
     assert len(exact) >= 50
     assert len(approx & exact) / len(exact) >= 0.9
+
+
+def _word_3gram_sets(df):
+    """Distinct word-3-gram set per doc, collected from ``shingles``."""
+    sets_ = {}
+    for r in dedup.shingles(df, 3).collect():
+        sets_.setdefault(r.doc_id, set()).add(r.sh)
+    return sets_
 
 
 def test_ngram_jaccard_prefix_filter_is_lossless(spark):
@@ -130,10 +136,7 @@ def test_ngram_jaccard_prefix_filter_is_lossless(spark):
     df = spark.createDataFrame(docs, ["doc_id", "text"])
 
     # naive exact: distinct word-3-gram sets per doc, all-pairs Jaccard
-    sets_ = {
-        r.doc_id: set(r.shs)
-        for r in dedup.shingle_arrays(df, unit="word").collect()
-    }
+    sets_ = _word_3gram_sets(df)
     for threshold in (0.5, 0.57, 0.6, 0.84):
         expect = set()
         for a, b in itertools.combinations(sorted(sets_), 2):
@@ -192,6 +195,7 @@ def test_validation_errors(spark):
             left_ts="ts",
             right_ts="ts",
             right_vals=["ts", "value"],
+            tiebreak="value",
         )
 
 
@@ -236,7 +240,7 @@ def test_incremental_dedup_tolerates_overlapping_ids(spark):
     )
     got = {
         r.doc_id: (r.is_exact_dup, r.is_near_dup, r.keep)
-        for r in incremental_dedup(corpus, batch, n=3).collect()
+        for r in incremental_dedup(corpus, batch).collect()
     }
     assert got[1] == (False, False, True), got
     assert got[2][0] is True and got[2][2] is False, got
@@ -289,7 +293,7 @@ def test_lsh_quality_report_consistency(spark):
     assert 0 < row["recall"] <= 1.0
 
 
-def test_containment_filters_are_lossless(spark):
+def test_containment_filters_are_lossless(spark, monkeypatch):
     """containment_pairs (A-prefix + length + positional filters) must
     return EXACTLY the naive all-pairs directed containment result at
     several thresholds — including |A|·τ exactly integral (τ=0.75 with
@@ -310,19 +314,14 @@ def test_containment_filters_are_lossless(spark):
     docs.append((100, " ".join(docs[0][1].split()[: max(4, 5)])))
     df = spark.createDataFrame(docs, ["doc_id", "text"])
 
-    sets_ = {
-        r.doc_id: set(r.shs)
-        for r in dedup.shingle_arrays(df, unit="word").collect()
-    }
+    sets_ = _word_3gram_sets(df)
     for threshold in (0.6, 0.75, 0.8):
         expect = set()
         for a, b in itertools.permutations(sorted(sets_), 2):
             if sets_[a] and len(sets_[a] & sets_[b]) / len(sets_[a]) >= threshold:
                 expect.add((a, b))
-        got = set(
-            (r.doc_a, r.doc_b)
-            for r in dedup.containment_pairs(df, threshold=threshold).collect()
-        )
+        monkeypatch.setattr(dedup, "CONTAINMENT_THRESHOLD", threshold)
+        got = set((r.doc_a, r.doc_b) for r in dedup.containment_pairs(df).collect())
         assert got == expect, f"threshold={threshold}"
 
 
@@ -346,7 +345,7 @@ def test_containment_finds_planted_subsumed_doc(spark):
     )
     pairs = {
         (r.doc_a, r.doc_b): r.containment
-        for r in dedup.containment_pairs(corpus, threshold=0.8).collect()
+        for r in dedup.containment_pairs(corpus).collect()
     }
     assert (900001, 1) in pairs
     assert pairs[(900001, 1)] >= 0.99

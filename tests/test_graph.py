@@ -2,6 +2,7 @@
 
 from pyspark.sql import functions as F
 
+from streamlit_projet_spark_streaming_spark.operators import graph
 from streamlit_projet_spark_streaming_spark.operators.graph import (
     SCALE,
     copurchase_edges,
@@ -47,30 +48,29 @@ def test_pagerank_matches_reference_on_tiny_graph(spark):
     df = spark.createDataFrame(edges, ["src", "dst", "w"])
     got = {
         r["part"]: r["pr_scaled"]
-        for r in pagerank_integer(df, iters=3).collect()
+        for r in pagerank_integer(df).collect()
     }
     assert got == _pagerank_reference(edges, 3)
 
 
-def test_pagerank_ranks_sink_nodes(spark):
+def test_pagerank_ranks_sink_nodes(spark, monkeypatch):
     """A directed graph with a sink (dst never a src): the sink is
     ranked (nodes = src ∪ dst), accumulates in-mass + teleport, and
     matches the pure-Python recurrence."""
     edges = [(1, 2, 1), (1, 3, 1), (3, 1, 2)]
     df = spark.createDataFrame(edges, ["src", "dst", "w"])
-    got = {
-        r["part"]: r["pr_scaled"]
-        for r in pagerank_integer(df, iters=2).collect()
-    }
+    monkeypatch.setattr(graph, "PAGERANK_ITERS", 2)
+    got = {r["part"]: r["pr_scaled"] for r in pagerank_integer(df).collect()}
     assert set(got) == {1, 2, 3}
     assert got == _pagerank_reference(edges, 2)
     assert got[2] > (15 * SCALE) // (100 * 3)  # sink got in-mass too
 
 
-def test_pagerank_fixture_invariants(spark):
+def test_pagerank_fixture_invariants(spark, monkeypatch):
     li = load_table(spark, "lineitem", SF_SMOKE)
     edges = copurchase_edges(li)
-    pr = pagerank_integer(edges, iters=2)
+    monkeypatch.setattr(graph, "PAGERANK_ITERS", 2)
+    pr = pagerank_integer(edges)
     rows = pr.collect()
     n = len(rows)
     assert n > 0
@@ -166,19 +166,24 @@ def test_kcore_empty_core(spark):
 
 
 def test_kcore_raises_past_round_budget(spark):
-    """A long path at k=2 peels one node per END per round; with
-    max_rounds=1 the fixpoint is out of reach and kcore must raise
-    rather than emit a partial core (the oracle-divergence guard)."""
+    """A path at k=2 peels one node per END per round, so a 20-node
+    path needs 11 rounds to reach its (empty) fixpoint: past the
+    ``KCORE_MAX_ROUNDS`` budget, kcore must raise rather than emit a
+    partial core (the oracle-divergence guard)."""
     import pytest as _pytest
 
-    from streamlit_projet_spark_streaming_spark.operators.graph import kcore
+    from streamlit_projet_spark_streaming_spark.operators.graph import (
+        KCORE_MAX_ROUNDS,
+        kcore,
+    )
 
-    path = [(i, i + 1) for i in range(1, 10)]
+    path = [(i, i + 1) for i in range(1, 20)]
+    assert len(path) + 1 > 2 * (KCORE_MAX_ROUNDS + 1)
     with _pytest.raises(RuntimeError, match="did not converge"):
-        kcore(_edges_df(spark, path), 2, max_rounds=1)
+        kcore(_edges_df(spark, path), 2)
 
 
-def test_link_prediction_hub_cap_drops_hub_wedges(spark):
+def test_link_prediction_hub_cap_drops_hub_wedges(spark, monkeypatch):
     """Hub 0 — {1..5}, plus 1-2, 1-6, 1-7: with the cap below the
     hub's degree 5 only middles of degree <= 4 (node 1, degree 4, nbrs
     {0, 2, 6, 7}) enumerate wedges, so capped candidates like (2, 6)
@@ -194,10 +199,12 @@ def test_link_prediction_hub_cap_drops_hub_wedges(spark):
         spark,
         [(0, 1), (0, 2), (0, 3), (0, 4), (0, 5), (1, 2), (1, 6), (1, 7)],
     )
-    full = link_prediction_cn(edges, k=50).collect()
+    full = link_prediction_cn(edges).collect()
     assert full and all(r.capped_middles == 0 for r in full)
+    assert len(full) < graph.LP_TOP_K  # every candidate, not a top-k cut
     # hub 0 has degree 5; node 1 has degree 4; the rest <= 2
-    capped = link_prediction_cn(edges, k=50, max_middle_degree=4).collect()
+    monkeypatch.setattr(graph, "LP_MAX_MIDDLE_DEGREE", 4)
+    capped = link_prediction_cn(edges).collect()
     assert capped, "capped candidate list must be NON-empty"
     assert all(r.capped_middles == 1 for r in capped)
     full_pairs = {(r.part_a, r.part_b) for r in full}
@@ -224,7 +231,7 @@ def test_link_prediction_rejects_out_of_range_ids(spark):
 
     edges = _edges_df(spark, [(-3, 1), (1, 2), (-3, 2)])
     with _pytest.raises(Exception, match="node ids must be in"):
-        link_prediction_cn(edges, k=5).collect()
+        link_prediction_cn(edges).collect()
 
 
 def _ppr_reference(edges, seeds, iters):

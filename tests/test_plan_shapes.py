@@ -114,7 +114,7 @@ def test_event_transitions_partial_aggregates_pairs(spark):
     assert "partial_count" in plan, "lost map-side combine for pair counts"
 
 
-def test_basket_affinity_reuses_items_exchange(spark):
+def test_basket_affinity_reuses_items_exchange(spark, monkeypatch):
     """Both sides of the within-order self-join are the same items
     subplan; the executed plan must ship ONE shuffle for it
     (ReusedExchange), not two."""
@@ -122,7 +122,8 @@ def test_basket_affinity_reuses_items_exchange(spark):
 
     li = load_table(spark, "lineitem", SF)
     part = load_table(spark, "part", SF)
-    df = rel.basket_affinity(li, part, min_support=1)
+    monkeypatch.setattr(rel, "BASKET_MIN_SUPPORT", 1)
+    df = rel.basket_affinity(li, part)
     # AQE resolves exchange reuse during execution — read the FINAL plan.
     df.collect()
     plan = _executed_plan(df)
@@ -242,19 +243,17 @@ def test_dim_covariance_shuffle_is_partial_gram_sized(spark):
     )
 
 
-def test_pagerank_iteration_lineage_is_truncated(spark):
+def test_pagerank_iteration_lineage_is_truncated(spark, monkeypatch):
     """Each PageRank round must consume the CHECKPOINTED score table:
     without truncation round k replans rounds 1..k-1 (and the edge
     self-join) once per consumer — the connected-components lesson.
     The executed plan of the final scores therefore contains no
     lineitem scan and no self-join, only the checkpoint scan."""
-    from streamlit_projet_spark_streaming_spark.operators.graph import (
-        copurchase_edges,
-        pagerank_integer,
-    )
+    from streamlit_projet_spark_streaming_spark.operators import graph
 
     li = load_table(spark, "lineitem", SF)
-    pr = pagerank_integer(copurchase_edges(li), iters=2)
+    monkeypatch.setattr(graph, "PAGERANK_ITERS", 2)
+    pr = graph.pagerank_integer(graph.copurchase_edges(li))
     plan = _executed_plan(pr)
     assert "Scan ExistingRDD" in plan or "LocalTableScan" in plan
     assert "parquet" not in plan.lower(), (
@@ -328,20 +327,19 @@ def test_pareto_front_is_window_only(spark):
     assert "Window" in plan
 
 
-def test_ordered_dense_index_not_single_partition(spark):
+def test_ordered_dense_index_not_single_partition(spark, monkeypatch):
     """The dense node index (graph_negative_samples' index builder) must
     use the bucket-offset idiom: its only single-partition exchange is
     the one feeding the BOUNDED bucket-count cumulative window (VERDICT
     r6: the global ROW_NUMBER() OVER (ORDER BY node) was the round's one
     scale-killer). The data-sized ROW_NUMBER must partition by the
     bucket key, and the values must equal the global row number."""
-    from streamlit_projet_spark_streaming_spark.operators.relational import (
-        ordered_dense_index,
-    )
+    from streamlit_projet_spark_streaming_spark.operators import relational as rel
 
     part = load_table(spark, "part", SF)
     nodes = part.select(part.p_partkey.alias("node")).distinct()
-    idx = ordered_dense_index(nodes, "node", 64)
+    monkeypatch.setattr(rel, "DENSE_INDEX_BUCKET", 64)
+    idx = rel.ordered_dense_index(nodes, "node")
     plan = _executed_plan(idx)
     assert plan.count("Exchange SinglePartition") <= 1, plan
     assert "windowspecdefinition(bkt" in plan, (
@@ -530,6 +528,7 @@ def test_every_checkpoint_is_read_twice_or_cuts_a_loop(spark, monkeypatch):
         "dedup_method_agreement",
         "orders_winsorized_stats",
         "events_seasonal_decompose",
+        "graph_kcore",
     ):
         reads.clear()
         calls.clear()
@@ -553,7 +552,7 @@ def test_bitext_margin_rank_pushdown(spark):
     from streamlit_projet_spark_streaming_spark.operators import similarity as sim
 
     emb = load_table(spark, "embeddings", SF)
-    out = sim.bitext_margin_pairs(emb, k=4)
+    out = sim.bitext_margin_pairs(emb)
     out.collect()
     plan = _executed_plan(out)
     assert plan.count("WindowGroupLimit") >= 4

@@ -107,7 +107,7 @@ def test_pq_topk_finds_planted_duplicates(spark, emb):
     assert hits == 5, f"planted duplicate missing from top-5 for {5 - hits} queries"
 
 
-def test_ivfpq_with_full_probe_equals_pq_topk(spark, emb):
+def test_ivfpq_with_full_probe_equals_pq_topk(spark, emb, monkeypatch):
     """nprobe = |cells| probes every inverted list, so IVFPQ must reduce
     exactly to the flat PQ ADC search — same neighbors, distances, ranks."""
     from pyspark.sql import functions as F
@@ -117,11 +117,10 @@ def test_ivfpq_with_full_probe_equals_pq_topk(spark, emb):
         (r["query_id"], r["neighbor_id"], r["dist"], r["rnk"])
         for r in quantize.pq_topk(emb, F.col("vec_id") < 10).collect()
     }
+    monkeypatch.setattr(quantize, "IVFPQ_NPROBE", n_cells)
     full = {
         (r["query_id"], r["neighbor_id"], r["dist"], r["rnk"])
-        for r in quantize.ivfpq_topk(
-            emb, F.col("vec_id") < 10, nprobe=n_cells
-        ).collect()
+        for r in quantize.ivfpq_topk(emb, F.col("vec_id") < 10).collect()
     }
     assert full == flat
 
@@ -139,7 +138,7 @@ def test_ivfpq_candidates_come_from_probed_cells(spark, emb):
         r["vec_id"]: r["centroid_id"]
         for r in ivf_assign(emb, centroids).select("vec_id", "centroid_id").collect()
     }
-    out = quantize.ivfpq_topk(emb, F.col("vec_id") < 10, nprobe=2).collect()
+    out = quantize.ivfpq_topk(emb, F.col("vec_id") < 10).collect()
     # Probes are the top-2 cells by the same assignment scoring; the
     # query's own cell is always rank 1, so at minimum every neighbor
     # shares a cell with SOME probed cell — verify via the operator's
@@ -151,7 +150,7 @@ def test_ivfpq_candidates_come_from_probed_cells(spark, emb):
         assert len(used) <= 2, f"query {q} drew neighbors from {len(used)} cells"
 
 
-def test_pq_topk_honors_n_sub(spark, emb):
+def test_pq_topk_honors_n_sub(spark, emb, monkeypatch):
     """Regression: the ADC subspace index is derived from (D, n_sub), not
     hardcoded to width-8 blocks — distances at n_sub=4 must match a numpy
     recomputation over 16-dim blocks."""
@@ -167,10 +166,11 @@ def test_pq_topk_honors_n_sub(spark, emb):
         codes, key=lambda v: (hashlib.md5(str(v).encode()).hexdigest(), v)
     )[:16]
     cb = np.stack([codes[v] for v in anchors])
-    out = quantize.pq_topk(emb, F.col("vec_id") < 3, n_sub=4).collect()
+    monkeypatch.setattr(quantize, "PQ_SUBSPACES", 4)
+    out = quantize.pq_topk(emb, F.col("vec_id") < 3).collect()
     pq = {
         r["vec_id"]: np.asarray(r["pq_codes"])
-        for r in quantize.pq_codes(emb, n_sub=4).collect()
+        for r in quantize.pq_codes(emb).collect()
     }
     for row in out:
         q, n = row["query_id"], row["neighbor_id"]
@@ -181,7 +181,7 @@ def test_pq_topk_honors_n_sub(spark, emb):
         assert row["dist"] == expect, (q, n, row["dist"], expect)
 
 
-def test_pq_trained_distortion_monotone(spark, emb):
+def test_pq_trained_distortion_monotone(spark, emb, monkeypatch):
     """Lloyd from the anchor-codebook init can only lower the objective:
     total distortion(trained, i iterations) <= distortion(anchors), and
     iteration 2 <= iteration 1. The margins are huge (~20% per step on
@@ -191,13 +191,15 @@ def test_pq_trained_distortion_monotone(spark, emb):
     anchor = (
         quantize.pq_codes(emb).agg(F.sum("distortion").alias("s")).collect()[0]["s"]
     )
-    t1 = (
-        quantize.pq_codes_trained(emb, n_iter=1)
+    assert quantize.LLOYD_ITERS == 2
+    t2 = (
+        quantize.pq_codes_trained(emb)
         .agg(F.sum("distortion").alias("s"))
         .collect()[0]["s"]
     )
-    t2 = (
-        quantize.pq_codes_trained(emb, n_iter=2)
+    monkeypatch.setattr(quantize, "LLOYD_ITERS", 1)
+    t1 = (
+        quantize.pq_codes_trained(emb)
         .agg(F.sum("distortion").alias("s"))
         .collect()[0]["s"]
     )
@@ -206,7 +208,7 @@ def test_pq_trained_distortion_monotone(spark, emb):
 
 
 def test_pq_trained_codes_shape(spark, emb):
-    out = quantize.pq_codes_trained(emb, n_iter=1).collect()
+    out = quantize.pq_codes_trained(emb).collect()
     assert len(out) == emb.count()
     for r in out[:50]:
         assert len(r["pq_codes"]) == 8

@@ -54,15 +54,17 @@ def test_ivf_cell_stats_spine_counts_drift(spark):
         assert r["n_assigned"] == expect.get(j, 0), j
 
 
-def test_shard_merge_plan_exact_groups(spark):
+def test_shard_merge_plan_exact_groups(spark, monkeypatch):
     """Hand-built pack table: bucket 0 has totals {60 (keep), 45, 30, 10}
     at budget 50 → biggest-first chunked fill puts 45+30 in merge group
     0 (prefix 0 and 45); 10 lands alone in group 1 (prefix 75), and a
     SINGLE-pack merge group coalesces nothing, so it plans as a keep
     (idempotency — ADVICE r9). Same for the lone under-filled pack in
     bucket 1."""
+    from streamlit_projet_spark_streaming_spark.operators import sampling
     from streamlit_projet_spark_streaming_spark.operators.sampling import shard_merge_plan
 
+    monkeypatch.setattr(sampling, "PACK_BUDGET", 50)
     rows = [
         # (bucket, pack_ix, n_tokens) — several docs per pack to prove
         # the per-pack rollup
@@ -75,7 +77,7 @@ def test_shard_merge_plan_exact_groups(spark):
     df = spark.createDataFrame(rows, "bucket long, pack_ix long, n_tokens long")
     plan = {
         (r["bucket"], r["pack_ix"]): r
-        for r in shard_merge_plan(df, "n_tokens", budget=50).collect()
+        for r in shard_merge_plan(df, "n_tokens").collect()
     }
     assert len(plan) == 5
     assert plan[(0, 0)]["action"] == "keep"
@@ -96,6 +98,7 @@ def test_shard_merge_plan_on_greedy_pack_after_dedup(spark):
     keeps >= budget, merges < budget, group totals consistent,
     deterministic across runs."""
     from streamlit_projet_spark_streaming_spark.operators.sampling import (
+        PACK_BUDGET,
         greedy_pack,
         shard_merge_plan,
     )
@@ -103,9 +106,9 @@ def test_shard_merge_plan_on_greedy_pack_after_dedup(spark):
     docs = load_table(spark, "documents", SF).select(
         "doc_id", (F.length("text") / 4).cast("long").alias("n_tokens")
     )
-    packs = greedy_pack(docs, "doc_id", "n_tokens", budget=200, n_buckets=4)
+    packs = greedy_pack(docs, "doc_id", "n_tokens")
     shrunk = packs.filter(F.col("doc_id") % 3 != 0)
-    plan = shard_merge_plan(shrunk, "n_tokens", budget=200)
+    plan = shard_merge_plan(shrunk, "n_tokens")
     pdf = plan.toPandas()
     n_packs = shrunk.select("bucket", "pack_ix").distinct().count()
     assert len(pdf) == n_packs
@@ -114,7 +117,7 @@ def test_shard_merge_plan_on_greedy_pack_after_dedup(spark):
     # keeps are at-budget packs OR under-filled packs alone in their
     # merge group (nothing to coalesce); merges are under-filled and
     # every merge group has >= 2 packs
-    assert (merges.pack_tokens < 200).all()
+    assert (merges.pack_tokens < PACK_BUDGET).all()
     assert (
         merges.groupby(["bucket", "merged_pack_ix"]).size() >= 2
     ).all()
@@ -123,7 +126,7 @@ def test_shard_merge_plan_on_greedy_pack_after_dedup(spark):
     for (b, g), tot in grp.items():
         sub = merges[(merges.bucket == b) & (merges.merged_pack_ix == g)]
         assert (sub.merged_tokens == tot).all()
-    pdf2 = shard_merge_plan(shrunk, "n_tokens", budget=200).toPandas()
+    pdf2 = shard_merge_plan(shrunk, "n_tokens").toPandas()
     key = ["bucket", "pack_ix"]
     assert pdf.sort_values(key).reset_index(drop=True).equals(
         pdf2.sort_values(key).reset_index(drop=True)
@@ -398,15 +401,13 @@ def test_bitext_margin_python_recompute(spark):
 
     from streamlit_projet_spark_streaming_spark.operators.numeric import ratio_round_int
     from streamlit_projet_spark_streaming_spark.operators.similarity import (
+        BITEXT_MARGIN_K,
         bitext_margin_pairs,
     )
 
     emb = load_table(spark, "embeddings", SF)
-    k = 4
-    got = {
-        r["src_id"]: r
-        for r in bitext_margin_pairs(emb, k=k).collect()
-    }
+    k = BITEXT_MARGIN_K
+    got = {r["src_id"]: r for r in bitext_margin_pairs(emb).collect()}
 
     rows = emb.select("vec_id", "embedding", "label").collect()
     S = {r["vec_id"]: [float(x) for x in r["embedding"]] for r in rows if r["label"] == 0}

@@ -161,3 +161,105 @@ def test_every_package_function_has_a_production_caller():
     """Every operator is reachable from a ``queries()`` builder or another
     production path; a function only tests call is deleted, not kept."""
     assert _unreached_functions(Path(__file__).resolve().parent.parent) == []
+
+
+#: Optional parameters that keep one production value on purpose, each
+#: with its reason. A parameter earns its place when two production
+#: callers pass different values; tests do not count.
+_ONE_VALUE_ALLOWED = {
+    "start_ingest.processing_time": "perfbench passes its trigger interval",
+    "start_gold_refresh.processing_time": "perfbench passes its trigger interval",
+    "start_ingest.available_now": "deterministic drains; the restart test",
+    "start_gold_refresh.available_now": "deterministic drains; the restart test",
+    "start_ingest.max_files_per_trigger": "deterministic drains; the restart test",
+    "latest_orders.categories": "the reference's multiselect filters (COVERAGE B8)",
+    "latest_orders.locations": "the reference's multiselect filters (COVERAGE B8)",
+    "generate_raw_orders.seed": "perfbench passes a run seed",
+    "shingles.n": "forwarded: callers pass their own n-gram size",
+    "load_table.sf_dir": "forwarded: the registry's _t passes each fixture dir",
+}
+
+
+def _optional_params(fn: ast.FunctionDef) -> tuple[list[str], list]:
+    """Positional parameter names, and (name, default) of every
+    parameter that has a default."""
+    a = fn.args
+    pos = a.posonlyargs + a.args
+    opt = list(zip(pos[len(pos) - len(a.defaults):], a.defaults))
+    opt += [(p, d) for p, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None]
+    return [p.arg for p in pos], [(p.arg, d) for p, d in opt]
+
+
+def _single_valued_params(repo: Path) -> list[str]:
+    """Optional parameters of top-level package functions whose
+    production call sites (the package itself and the production roots,
+    never ``tests/``) pass at most one value, by source text, the default
+    counting where a call omits the parameter. Calls are matched by
+    name; a call through ``*args``/``**kwargs`` is skipped, and a name
+    that more than one package function with defaults carries is
+    reported as ambiguous instead of guessed."""
+    pkg = repo / "streamlit_projet_spark_streaming_spark"
+    files = set(pkg.rglob("*.py"))
+    for rel in _PRODUCTION_ROOTS:
+        path = repo / rel
+        files |= set(path.rglob("*.py")) if path.is_dir() else {path}
+    trees = {path: ast.parse(path.read_text()) for path in sorted(files)}
+    funcs: dict[str, list[tuple[Path, ast.FunctionDef]]] = {}
+    aliases: dict[str, set[str]] = {}
+    for path, tree in trees.items():
+        if path.is_relative_to(pkg):
+            for stmt in tree.body:
+                if isinstance(stmt, ast.FunctionDef):
+                    funcs.setdefault(stmt.name, []).append((path, stmt))
+        for node in ast.walk(tree):
+            if isinstance(node, ast.ImportFrom):
+                for a in node.names:
+                    if a.asname:
+                        aliases.setdefault(a.asname, set()).add(a.name)
+    values: dict[tuple[str, int, str], set[str]] = {}
+    ambiguous = set()
+    for tree in trees.values():
+        for call in ast.walk(tree):
+            if not isinstance(call, ast.Call):
+                continue
+            f = call.func
+            name = getattr(f, "id", None) or getattr(f, "attr", None)
+            targets = [
+                t for n in {name} | aliases.get(name, set()) for t in funcs.get(n, [])
+            ]
+            if not targets or any(
+                isinstance(a, ast.Starred) for a in call.args
+            ) or any(k.arg is None for k in call.keywords):
+                continue
+            if len(targets) > 1:
+                if any(_optional_params(fn)[1] for _, fn in targets):
+                    ambiguous.add(name)
+                continue
+            path, fn = targets[0]
+            pos, opt = _optional_params(fn)
+            given = {k.arg: k.value for k in call.keywords}
+            given.update(zip(pos, call.args))
+            for param, default in opt:
+                values.setdefault((str(path), fn.lineno, param), set()).add(
+                    ast.unparse(given.get(param, default))
+                )
+    found = [f"ambiguous: {name}" for name in sorted(ambiguous)]
+    for defs in funcs.values():
+        for path, fn in defs:
+            for param, _ in _optional_params(fn)[1]:
+                seen = values.get((str(path), fn.lineno, param), set())
+                if len(seen) <= 1 and f"{fn.name}.{param}" not in _ONE_VALUE_ALLOWED:
+                    found.append(
+                        f"{path.relative_to(repo)}:{fn.lineno} "
+                        f"{fn.name}.{param} {sorted(seen)}"
+                    )
+    return sorted(found)
+
+
+def test_every_optional_parameter_takes_two_production_values():
+    """A parameter with a default is an option only when two production
+    callers pass different values; one that every production caller
+    sets alike (or leaves at its default) is a constant, written once
+    as a module constant next to the algorithm. Tests pin other values
+    with ``monkeypatch.setattr`` on that constant."""
+    assert _single_valued_params(Path(__file__).resolve().parent.parent) == []

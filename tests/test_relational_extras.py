@@ -221,11 +221,10 @@ def test_sequence_features_invariants(spark):
         ).filter(F.col("event_id") == prev.event_id).first().event_type
 
 
-def test_salted_join_left_semi_and_skew_spread(spark):
-    """left_semi salting: result equals the plain semi join on a HOT-KEY
-    fixture (90% of big rows share one key), and the salted join actually
-    SPREADS the hot key across multiple shuffle tasks — the runtime
-    effect the plan assert above can't show."""
+def test_salted_join_spreads_a_hot_key(spark):
+    """On a HOT-KEY fixture (90% of big rows share one key) the salted
+    join actually SPREADS the hot key across multiple shuffle tasks —
+    the runtime effect the plan assert above can't show."""
     n = 20_000
     big = spark.range(n).select(
         F.col("id").alias("row_id"),
@@ -234,15 +233,7 @@ def test_salted_join_left_semi_and_skew_spread(spark):
         .otherwise(F.col("id") % 100)
         .alias("k"),
     )
-    small = spark.createDataFrame(
-        [(i,) for i in range(0, 100, 2)], ["k"]
-    )  # even keys only, so the semi actually filters
-    semi = rel.salted_join(big, small, on="k", salt_from="row_id", how="left_semi")
-    expect = big.join(small, "k", "left_semi")
-    assert sorted(r.row_id for r in semi.collect()) == sorted(
-        r.row_id for r in expect.collect()
-    )
-    assert set(semi.columns) == set(big.columns)  # big side's columns only
+    small = spark.createDataFrame([(i,) for i in range(0, 100, 2)], ["k"])
     # runtime spread: the hot key's rows land in >1 shuffle partition
     # after the salted join (plain join puts them all in exactly one).
     # AQE's byte-based coalescing would merge these kilobyte partitions
@@ -322,14 +313,14 @@ def test_basket_affinity_planted_lift(spark):
     part = spark.createDataFrame(
         [(1, "A"), (2, "B"), (3, "C")], "p_partkey long, p_brand string"
     )
-    out = rel.basket_affinity(li, part, min_support=5).collect()
+    out = rel.basket_affinity(li, part).collect()
     assert len(out) == 1
     r = out[0]
     assert (r["item_a"], r["item_b"], r["n_ab"]) == ("A", "B", 10)
     assert r["lift"] == 2.0 and r["support"] == 0.5
 
 
-def test_basket_affinity_dedups_repeated_parts(spark):
+def test_basket_affinity_dedups_repeated_parts(spark, monkeypatch):
     # The same brand twice in one order counts once (DISTINCT basket).
     li = spark.createDataFrame(
         [(1, 1), (1, 1), (1, 2)], "l_orderkey long, l_partkey long"
@@ -337,7 +328,8 @@ def test_basket_affinity_dedups_repeated_parts(spark):
     part = spark.createDataFrame(
         [(1, "A"), (2, "B")], "p_partkey long, p_brand string"
     )
-    out = rel.basket_affinity(li, part, min_support=1).collect()
+    monkeypatch.setattr(rel, "BASKET_MIN_SUPPORT", 1)
+    out = rel.basket_affinity(li, part).collect()
     assert len(out) == 1 and out[0]["n_ab"] == 1
 
 
@@ -456,7 +448,7 @@ def test_active_user_counts_invariants_and_planted(spark):
     assert (big.dau <= big.wau).all() and (big.wau <= big.mau).all()
 
 
-def test_burst_user_flags_planted(spark):
+def test_burst_user_flags_planted(spark, monkeypatch):
     import datetime
 
     base = datetime.datetime(2026, 4, 1, 12, 0, 0)
@@ -467,7 +459,8 @@ def test_burst_user_flags_planted(spark):
         + [(10 + i, base + datetime.timedelta(hours=i), 2) for i in range(6)]
     )
     ev = spark.createDataFrame(rows, "event_id long, ts timestamp, user_id long")
-    out = {r["user_id"]: r for r in rel.burst_user_flags(ev, burst_threshold=5).collect()}
+    monkeypatch.setattr(rel, "BURST_THRESHOLD", 5)
+    out = {r["user_id"]: r for r in rel.burst_user_flags(ev).collect()}
     assert out[1]["burst_flag"] and out[1]["peak_minute_events"] == 6
     assert not out[2]["burst_flag"] and out[2]["peak_minute_events"] == 1
     assert out[1]["total_events"] == out[2]["total_events"] == 6
@@ -505,13 +498,14 @@ def test_orders_open_backlog_matches_naive_count(spark):
         assert out[day] == naive, (day, out[day], naive)
 
 
-def test_salted_topk_equals_one_level_window(spark):
+def test_salted_topk_equals_one_level_window(spark, monkeypatch):
     """top_k_per_group_salted is EXACTLY the one-level window top-k,
     including on a pathologically skewed group (one key holding ~90% of
     rows) and across tie-heavy orderings."""
     from pyspark.sql import functions as F
 
     from streamlit_projet_spark_streaming_spark.operators.relational import (
+        TOP_K_PER_GROUP,
         top_k_per_group,
         top_k_per_group_salted,
     )
@@ -521,10 +515,11 @@ def test_salted_topk_equals_one_level_window(spark):
     ]
     df = spark.createDataFrame(rows, "g string, id long, v long")
     order = [F.desc("v"), F.asc("id")]
-    salted = top_k_per_group_salted(
-        df, ["g"], order, salt_src=F.col("id"), k=4, salts=8
-    ).select("g", "id", "v", "rnk")
-    plain = top_k_per_group(df, ["g"], order, k=4).select("g", "id", "v", "rnk")
+    monkeypatch.setattr(rel, "SALTED_TOP_K", TOP_K_PER_GROUP)
+    salted = top_k_per_group_salted(df, ["g"], order, salt_src=F.col("id")).select(
+        "g", "id", "v", "rnk"
+    )
+    plain = top_k_per_group(df, ["g"], order).select("g", "id", "v", "rnk")
     assert sorted(map(tuple, salted.collect())) == sorted(
         map(tuple, plain.collect())
     )

@@ -56,7 +56,7 @@ def test_benchmark_contamination_planted(spark):
     overlap must be 1.0 and flagged; an unrelated corpus doc must be
     0.0 and unflagged. Bench membership is the deterministic hash split,
     so the fixture picks ids whose bucket is known a priori."""
-    salt, buckets = "bench", 500
+    salt, buckets = "bench", dedup.CONTAM_BENCH_BUCKETS
     bench_id = next(i for i in range(1, 10_000) if _bucket(i, salt) < buckets)
     corp = [i for i in range(1, 10_000) if _bucket(i, salt) >= buckets]
     copied_id, fresh_id, short_id = corp[0], corp[1], corp[2]
@@ -73,61 +73,28 @@ def test_benchmark_contamination_planted(spark):
     )
     out = {
         r["doc_id"]: r
-        for r in dedup.benchmark_contamination(
-            docs, n=5, bench_buckets=buckets
-        ).collect()
+        for r in dedup.benchmark_contamination(docs).collect()
     }
     assert set(out) == {copied_id, fresh_id}
     assert out[copied_id]["contamination_ratio"] == 1.0
     assert out[copied_id]["flagged"]
     assert out[fresh_id]["n_contaminated"] == 0
     assert not out[fresh_id]["flagged"]
-    # the shuffle-join variant (broadcast hint dropped) is row-identical
-    out2 = {
-        r["doc_id"]: r
-        for r in dedup.benchmark_contamination(
-            docs, n=5, bench_buckets=buckets, broadcast_bench=False
-        ).collect()
-    }
-    assert {k: v.asDict() for k, v in out.items()} == {
-        k: v.asDict() for k, v in out2.items()
-    }
 
 
-def test_greedy_pack_boundary_straddle(spark):
+def test_greedy_pack_boundary_straddle(spark, monkeypatch):
     """A document whose tokens straddle the pack budget belongs to the
     pack its FIRST token lands in (fixed-stride packing semantics)."""
     rows = [(i, 100) for i in range(1, 8)]  # 7 docs x 100 tokens, budget 256
     df = spark.createDataFrame(rows, ["doc_id", "n_tokens"])
+    assert sampling.PACK_BUDGET == 256
+    monkeypatch.setattr(sampling, "PACK_BUCKETS", 1)
     out = {
         r["doc_id"]: r["pack_ix"]
-        for r in sampling.greedy_pack(
-            df, "doc_id", "n_tokens", budget=256, n_buckets=1
-        ).collect()
+        for r in sampling.greedy_pack(df, "doc_id", "n_tokens").collect()
     }
     # prefixes 0,100,200,300,...,600 -> packs 0,0,0(straddles 256),1,1,1,2
     assert out == {1: 0, 2: 0, 3: 0, 4: 1, 5: 1, 6: 1, 7: 2}
-
-
-def test_greedy_pack_order_col(spark):
-    """order_col lays the bucket out by the curated order (id as
-    tie-break), changing which docs share a pack."""
-    rows = [(1, 200, 3), (2, 200, 2), (3, 200, 1)]
-    df = spark.createDataFrame(rows, ["doc_id", "n_tokens", "rank"])
-    by_id = {
-        r["doc_id"]: r["pack_ix"]
-        for r in sampling.greedy_pack(
-            df, "doc_id", "n_tokens", budget=256, n_buckets=1
-        ).collect()
-    }
-    by_rank = {
-        r["doc_id"]: r["pack_ix"]
-        for r in sampling.greedy_pack(
-            df, "doc_id", "n_tokens", budget=256, n_buckets=1, order_col="rank"
-        ).collect()
-    }
-    assert by_id == {1: 0, 2: 0, 3: 1}  # id order: 0,200,400
-    assert by_rank == {3: 0, 2: 0, 1: 1}  # rank order reverses the layout
 
 
 def test_rolling_time_features_tie_consistency(spark):
@@ -145,7 +112,7 @@ def test_rolling_time_features_tie_consistency(spark):
     out = {
         r["event_id"]: r
         for r in rolling_time_features(
-            df, "user_id", "ts", "value", "event_id", window_seconds=3600
+            df, "user_id", "ts", "value", "event_id"
         ).collect()
     }
     # tied events 2 and 3 must agree exactly
@@ -155,7 +122,7 @@ def test_rolling_time_features_tie_consistency(spark):
     assert out[4]["n_trailing"] == 1 and out[4]["sum_value_trailing"] == 4.0
 
 
-def test_boilerplate_phrases_planted(spark):
+def test_boilerplate_phrases_planted(spark, monkeypatch):
     """A phrase planted in >= min_docs docs is mined; a rarer one is not;
     ties order by phrase text and k caps the output."""
     boiler = "all rights reserved"
@@ -164,11 +131,14 @@ def test_boilerplate_phrases_planted(spark):
         + [(9, "no shared content in this one at all")],
         ["doc_id", "text"],
     )
-    out = text.boilerplate_phrases(docs, min_docs=4, k=10).collect()
+    monkeypatch.setattr(text, "BOILERPLATE_MIN_DOCS", 4)
+    out = text.boilerplate_phrases(docs).collect()
     phrases = {r["phrase"]: r["n_docs"] for r in out}
     assert phrases[boiler] == 4
     assert all(n >= 4 for n in phrases.values())
-    capped = text.boilerplate_phrases(docs, min_docs=1, k=2).collect()
+    monkeypatch.setattr(text, "BOILERPLATE_MIN_DOCS", 1)
+    monkeypatch.setattr(text, "BOILERPLATE_K", 2)
+    capped = text.boilerplate_phrases(docs).collect()
     assert len(capped) == 2
     # with every n_docs tied at the cap boundary, phrase text breaks ties
     assert capped == sorted(capped, key=lambda r: (-r["n_docs"], r["phrase"]))
@@ -224,7 +194,7 @@ def test_temperature_weights_rebalances(spark):
     assert out["yo"]["w_temp"] > out["yo"]["p"]
 
 
-def test_grouped_rank_tiles_equals_plain_row_number(spark):
+def test_grouped_rank_tiles_equals_plain_row_number(spark, monkeypatch):
     """The distributed rank (higher-count + within-score ordinal) must be
     IDENTICAL to ROW_NUMBER over the global order, ties included, and the
     tile formula must cut where floor((rnk-1)*k/n) says."""
@@ -232,9 +202,10 @@ def test_grouped_rank_tiles_equals_plain_row_number(spark):
 
     rows = [(i, float(s)) for i, s in enumerate([5, 5, 4, 4, 4, 3, 2, 2, 1, 0])]
     df = spark.createDataFrame(rows, ["doc_id", "score"])
+    monkeypatch.setattr(rel, "RANK_TILES", 4)
     got = {
         r["doc_id"]: r
-        for r in rel.grouped_rank_tiles(df, "score", "doc_id", n_tiles=4).collect()
+        for r in rel.grouped_rank_tiles(df, "score", "doc_id").collect()
     }
     w = Window.orderBy(F.desc("score"), F.asc("doc_id"))
     expect = {

@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 
 from streamlit_projet_spark_streaming_spark.operators.sampling import dsir_importance_weights
 from streamlit_projet_spark_streaming_spark.operators.text import (
+    BM25_K,
     CLF_BUCKETS,
     CLF_MULT,
     best_copy_per_group,
@@ -118,7 +119,7 @@ def test_bm25_ranks_heavier_term_usage_higher(spark):
         (3, "engine only no match here", "en"),
         (4, "join vector spark all three terms", "en"),
     ]
-    out = bm25_topk(_docs(spark, rows), k=10).collect()
+    out = bm25_topk(_docs(spark, rows)).collect()
     ids = [r["doc_id"] for r in out]
     scores = {r["doc_id"]: r["bm25"] for r in out}
     assert 3 not in ids                       # no query term -> absent
@@ -129,8 +130,8 @@ def test_bm25_ranks_heavier_term_usage_higher(spark):
 
 def test_bm25_k_cap_and_order(spark):
     rows = [(i, "spark " * (i + 1), "en") for i in range(30)]
-    out = bm25_topk(_docs(spark, rows), k=5).collect()
-    assert len(out) == 5
+    out = bm25_topk(_docs(spark, rows)).collect()
+    assert len(rows) > BM25_K and len(out) == BM25_K
     scores = [r["bm25"] for r in out]
     assert scores == sorted(scores, reverse=True)
 

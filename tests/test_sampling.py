@@ -1,7 +1,6 @@
 """Invariant tests for the deterministic sampling/split operators:
 proportions, stability under corpus growth, and stratum exactness."""
 
-import pytest
 from pyspark.sql import functions as F
 
 from streamlit_projet_spark_streaming_spark.operators import sampling
@@ -32,17 +31,11 @@ def test_hash_split_stable_under_growth(spark):
     assert small == {k: v for k, v in full.items() if k < 100}
 
 
-def test_hash_split_rejects_bad_weights(spark):
-    docs = load_table(spark, "documents", SF_CORRECT).select("doc_id")
-    with pytest.raises(ValueError, match="sum to 1.0"):
-        sampling.hash_split(docs, "doc_id", {"train": 0.5, "test": 0.4})
-
-
-def test_stratified_sample_exact_and_proportional(spark):
+def test_stratified_sample_exact_and_proportional(spark, monkeypatch):
     ev = load_table(spark, "events", SF_CORRECT).select("event_id", "event_type")
+    monkeypatch.setattr(sampling, "STRATIFIED_DEFAULT_FRACTION", 0.0)
     kept = sampling.stratified_sample(
-        ev, "event_type", {"purchase": 1.0, "click": 0.1},
-        id_col="event_id", default_fraction=0.0,
+        ev, "event_type", {"purchase": 1.0, "click": 0.1}, id_col="event_id"
     )
     n_purchase = ev.filter(F.col("event_type") == "purchase").count()
     got = {r["event_type"]: r["n"] for r in kept.groupBy("event_type").agg(F.count("*").alias("n")).collect()}

@@ -53,9 +53,10 @@ def test_overview_metrics_vs_oracle(spark, silver):
     assert not problems, "\n".join(problems)
 
 
-def test_latest_orders_filters(spark, silver):
+def test_latest_orders_filters(spark, silver, monkeypatch):
     cats = ["Clothing", "Footwear"]
-    got = D.latest_orders(silver, limit=200, categories=cats).toPandas()
+    monkeypatch.setattr(D, "LATEST_ORDERS_LIMIT", 200)
+    got = D.latest_orders(silver, categories=cats).toPandas()
     assert len(got) == 200
     assert set(got["category"]) <= set(cats)
 

@@ -4,6 +4,7 @@ heavy, at their exact counts, whatever the partitioning."""
 
 from pyspark.sql import functions as F
 
+from streamlit_projet_spark_streaming_spark.operators import sketch
 from streamlit_projet_spark_streaming_spark.operators.sketch import (
     provable_heavy_hitters,
 )
@@ -14,7 +15,7 @@ from .conftest import SF_CORRECT
 K = 50
 
 
-def test_mg_guarantee_against_exact_counts(spark):
+def test_mg_guarantee_against_exact_counts(spark, monkeypatch):
     """With K counters every key whose true count exceeds N/(K+1)
     survives the MG candidate pass (the sketch's lower bound), so the
     output is exactly those keys at their exact counts. No fixture user
@@ -30,9 +31,10 @@ def test_mg_guarantee_against_exact_counts(spark):
         for r in events.groupBy("user_id").agg(F.count(F.lit(1)).alias("c")).collect()
     }
     n = sum(exact.values())
+    monkeypatch.setattr(sketch, "HEAVY_HITTERS_K", K)
     out = {
         int(r["key"]): r["true_count"]
-        for r in provable_heavy_hitters(events, F.col("user_id"), k=K).collect()
+        for r in provable_heavy_hitters(events, F.col("user_id")).collect()
     }
     heavy = {key: c for key, c in exact.items() if c * (K + 1) > n}
     assert heavy == {-1: 400}
@@ -44,10 +46,10 @@ def test_provable_heavy_hitters_partition_independent(spark):
     identical across radically different partitionings, and exactly the
     keys with true_count*(k+1) > N at their exact counts."""
     events = load_table(spark, "events", SF_CORRECT)
-    k = 8
-    base = provable_heavy_hitters(events, F.col("event_type"), k=k).collect()
+    k = sketch.HEAVY_HITTERS_K
+    base = provable_heavy_hitters(events, F.col("event_type")).collect()
     shuffled = provable_heavy_hitters(
-        events.repartition(13, F.col("value")), F.col("event_type"), k=k
+        events.repartition(13, F.col("value")), F.col("event_type")
     ).collect()
     assert [tuple(r) for r in base] == [tuple(r) for r in shuffled]
     exact = {
