@@ -52,6 +52,14 @@ from pyspark.sql.types import (
 )
 
 from .relational import ordered_array_agg, spread_if_few_splits
+from .similarity import (
+    _cosine_probes,
+    _md5_anchors,
+    _modulus_centroids,
+    dot,
+    ivf_assign,
+    l2_norm,
+)
 
 #: Output schema of scalar quantization.
 #: Scalar quantization levels: int8 codes in [0, 255].
@@ -119,9 +127,7 @@ def _quantize_mapper():
             span = maxs - mins
             ok = span > 0.0
             safe = np.where(ok, span, 1.0)
-            x = np.stack(
-                [np.asarray(a, dtype=np.float64) for a in pdf["embedding"]]
-            )
+            x = _f64_rows(pdf["embedding"])
             # ((x - mn) * top) / span: same IEEE op order as the oracle's
             # (x - mn) * top / (mx - mn) — bit-identical doubles, so the
             # floor (and the defensive clip) agree exactly.
@@ -202,17 +208,7 @@ def _codes_and_codebook(
         spread_if_few_splits(base).crossJoin(F.broadcast(stats))
     )
 
-    h = F.md5(F.col("vec_id").cast("string")).alias("h")
-    anchors = (
-        base.select("vec_id", "embedding", h)
-        .orderBy("h", "vec_id")
-        .limit(PQ_CENTROIDS)
-        .withColumn(
-            "j",
-            F.row_number().over(Window.orderBy("h", "vec_id")) - F.lit(1),
-        )
-        .localCheckpoint(eager=False)
-    )
+    anchors = _md5_anchors(base, PQ_CENTROIDS).localCheckpoint(eager=False)
     anchor_codes = (
         _quantize_with_stats(anchors.crossJoin(F.broadcast(stats)))
         .join(F.broadcast(anchors.select("vec_id", "j")), "vec_id")
@@ -349,37 +345,14 @@ def ivfpq_topk(embeddings: DataFrame, query_pred: Column) -> DataFrame:
     broadcast joins (probes, ADC tables) + one partial-aggregated
     shuffle of |q|·candidates rows.
     """
-    from .similarity import dot, ivf_assign, l2_norm
-
-    k = 5
-    centroid_modulus = 25
-    nprobe = IVFPQ_NPROBE
     n_sub = PQ_SUBSPACES
     codes, anchor_codes, codebook, stats = _codes_and_codebook(embeddings)
     pq = _pq_assign(codes, codebook, n_sub)
-    centroids = embeddings.filter(
-        (F.col("vec_id") % centroid_modulus) == 0
-    ).select(F.col("vec_id").alias("centroid_id"), F.col("embedding").alias("c_emb"))
+    centroids = _modulus_centroids(embeddings)
     cells = ivf_assign(embeddings, centroids).select("vec_id", "centroid_id")
     indexed = pq.join(cells, "vec_id")
-
-    q_base = embeddings.filter(query_pred).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"),
-        l2_norm(F.col("embedding")).alias("q_norm"),
-    )
-    cent = centroids.withColumn("cn", l2_norm(F.col("c_emb")))
-    probe_scored = q_base.crossJoin(F.broadcast(cent)).withColumn(
-        "cos_c",
-        dot(F.col("q_emb"), F.col("c_emb")) / (F.col("q_norm") * F.col("cn")),
-    )
-    probe_w = Window.partitionBy("query_id").orderBy(
-        F.desc("cos_c"), F.asc("centroid_id")
-    )
-    probes = (
-        probe_scored.withColumn("pr", F.row_number().over(probe_w))
-        .filter(F.col("pr") <= nprobe)
-        .select("query_id", F.col("centroid_id").alias("q_centroid"))
+    probes = _cosine_probes(embeddings, query_pred, centroids, IVFPQ_NPROBE).select(
+        "query_id", "q_centroid"
     )
 
     adc = _adc_table(embeddings, query_pred, anchor_codes, stats, n_sub)
@@ -396,7 +369,7 @@ def ivfpq_topk(embeddings: DataFrame, query_pred: Column) -> DataFrame:
         .groupBy("query_id", "vec_id")
         .agg(F.sum("t").alias("dist"))
     )
-    return _rank_topk(scored, k)
+    return _rank_topk(scored, 5)
 
 
 # --------------------------------------------------------------------------
@@ -452,6 +425,21 @@ def _sub_dists(x, cb, n_sub):
     return acc
 
 
+def _f64_rows(arrays) -> "object":
+    """(n, D) float64 matrix of ``n`` equal-length arrays (a pandas column
+    of array values, or the codebook's list of centroids)."""
+    import numpy as np
+
+    return np.stack([np.asarray(a, dtype=np.float64) for a in arrays])
+
+
+def _codebook(pdf) -> "object":
+    """(J, D) float64 matrix of the one-row codebook ``cb`` that a
+    broadcast crossJoin puts on every row of an Arrow batch — every
+    mapper reads it from its batch, on the worker."""
+    return _f64_rows(pdf["cb"].iloc[0])
+
+
 def _code_units(col) -> "object":
     """(n, D) int64 matrix of a pandas column of int8 code arrays."""
     import numpy as np
@@ -476,9 +464,7 @@ def _lloyd_partials_mapper(n_sub: int, col: str, units: Callable):
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            cb = np.stack(
-                [np.asarray(c, dtype=np.float64) for c in pdf["cb"].iloc[0]]
-            )  # (J, D)
+            cb = _codebook(pdf)  # (J, D)
             x = units(pdf[col])  # (n, D)
             n, d = x.shape
             # Ragged batches must fail loudly: the fused SUM(cnt)-per-dim
@@ -520,10 +506,7 @@ def _assign_float_mapper(n_sub: int):
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            cb = np.stack(
-                [np.asarray(c, dtype=np.float64) for c in pdf["cb"].iloc[0]]
-            )
-            d2 = _sub_dists(_code_units(pdf["codes"]), cb, n_sub)  # (n, J, n_sub)
+            d2 = _sub_dists(_code_units(pdf["codes"]), _codebook(pdf), n_sub)
             best = np.argmin(d2, axis=1)
             # Explicit left-to-right chain over blocks (NOT np.sum, whose
             # pairwise reduction order is an implementation detail) — the
@@ -774,15 +757,8 @@ def _res_codes_mapper(n_sub: int):
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            cb = np.stack(
-                [np.asarray(c, dtype=np.float64) for c in pdf["cb"].iloc[0]]
-            )
-            x = np.stack(
-                [np.asarray(c, dtype=np.float64) for c in pdf["embedding"]]
-            ) - np.stack(
-                [np.asarray(c, dtype=np.float64) for c in pdf["c_emb"]]
-            )
-            best = np.argmin(_sub_dists(x, cb, n_sub), axis=1)
+            x = _f64_rows(pdf["embedding"]) - _f64_rows(pdf["c_emb"])
+            best = np.argmin(_sub_dists(x, _codebook(pdf), n_sub), axis=1)
             yield pd.DataFrame(
                 {
                     "vec_id": pdf["vec_id"].to_numpy(),
@@ -805,13 +781,9 @@ def _adc_res_mapper(n_sub: int):
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            cb = np.stack(
-                [np.asarray(c, dtype=np.float64) for c in pdf["cb"].iloc[0]]
-            )
+            cb = _codebook(pdf)
             jn = cb.shape[0]
-            qres = np.stack(
-                [np.asarray(a, dtype=np.float64) for a in pdf["q_emb"]]
-            ) - np.stack([np.asarray(a, dtype=np.float64) for a in pdf["c_emb"]])
+            qres = _f64_rows(pdf["q_emb"]) - _f64_rows(pdf["c_emb"])
             d2 = _sub_dists(qres, cb, n_sub)  # (n, J, n_sub)
             per_row = n_sub * jn
             yield pd.DataFrame(
@@ -854,30 +826,12 @@ def ivfpq_topk_residual(embeddings: DataFrame, query_pred: Column) -> DataFrame:
     |q| rows per doc, then k-bounded rank. Per-query work ∝ nprobe ×
     cell size, per-candidate work = n_sub lookups.
     """
-    from .similarity import dot, ivf_assign, l2_norm
-
-    k = 5
-    centroid_modulus = 25
-    nprobe = IVFPQ_NPROBE
     n_sub = PQ_SUBSPACES
-    centroids = embeddings.filter(
-        (F.col("vec_id") % centroid_modulus) == 0
-    ).select(
-        F.col("vec_id").alias("centroid_id"), F.col("embedding").alias("c_emb")
-    )
+    centroids = _modulus_centroids(embeddings)
     assigned = ivf_assign(embeddings, centroids)  # vec_id, embedding, centroid_id
     with_c = assigned.join(F.broadcast(centroids), "centroid_id")
 
-    h = F.md5(F.col("vec_id").cast("string")).alias("h")
-    anchor_ids = (
-        embeddings.select("vec_id", h)
-        .orderBy("h", "vec_id")
-        .limit(PQ_CENTROIDS)
-        .withColumn(
-            "j",
-            F.row_number().over(Window.orderBy("h", "vec_id")) - F.lit(1),
-        )
-    )
+    anchor_ids = _md5_anchors(embeddings.select("vec_id"), PQ_CENTROIDS)
     # Residuals of the 16 anchors via a SEPARATE 16-row assignment pass —
     # deriving them from ``with_c`` would make the corpus-sized
     # ivf_assign a two-consumer computed subplan (each consumer replays
@@ -923,29 +877,8 @@ def ivfpq_topk_residual(embeddings: DataFrame, query_pred: Column) -> DataFrame:
         _res_codes_mapper(n_sub), _RES_CODE_SCHEMA
     )
 
-    q_base = embeddings.filter(query_pred).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"),
-        l2_norm(F.col("embedding")).alias("q_norm"),
-    )
-    probe_w = Window.partitionBy("query_id").orderBy(
-        F.desc("cos_c"), F.asc("centroid_id")
-    )
-    probes = (
-        q_base.crossJoin(F.broadcast(cent_n))
-        .withColumn(
-            "cos_c",
-            dot(F.col("q_emb"), F.col("c_emb"))
-            / (F.col("q_norm") * F.col("cn")),
-        )
-        .withColumn("pr", F.row_number().over(probe_w))
-        .filter(F.col("pr") <= nprobe)
-        .select(
-            "query_id",
-            F.col("centroid_id").alias("q_centroid"),
-            "q_emb",
-            "c_emb",
-        )
+    probes = _cosine_probes(embeddings, query_pred, centroids, IVFPQ_NPROBE).select(
+        "query_id", "q_centroid", "q_emb", "c_emb"
     )
     adc = probes.crossJoin(F.broadcast(cb_row)).mapInPandas(
         _adc_res_mapper(n_sub), _ADC_RES_SCHEMA
@@ -976,7 +909,7 @@ def ivfpq_topk_residual(embeddings: DataFrame, query_pred: Column) -> DataFrame:
         .agg(ordered_array_agg(doc_m["m"], F.col("t"), ascending=True).alias("ts"))
         .select("query_id", "vec_id", chained.alias("dist"))
     )
-    return _rank_topk(scored, k)
+    return _rank_topk(scored, 5)
 
 
 #: Output schema of binary (1-bit) quantization: 64 sign bits packed as
@@ -1010,9 +943,7 @@ def binary_codes(embeddings: DataFrame) -> DataFrame:
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            x = np.stack(
-                [np.asarray(a, dtype=np.float64) for a in pdf["embedding"]]
-            )
+            x = _f64_rows(pdf["embedding"])
             if x.shape[1] != 64:
                 # The two-half pack AND the registry oracle's SUM(2^dim)
                 # replay are built for D=64; a silent dimension change

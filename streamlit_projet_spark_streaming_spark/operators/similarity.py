@@ -92,9 +92,10 @@ def cosine_pairs(embeddings: DataFrame, query_pred: Column) -> DataFrame:
 def _top_k(
     scored: DataFrame, k: int, keep: tuple[str, ...] = ("query_id", "neighbor_id")
 ) -> DataFrame:
-    """Per-query top-``k`` of :func:`cosine_pairs` rows, ranked on the
-    UNROUNDED cosine with neighbor_id as tie-breaker (determinism rule
-    1); rounding only at output. ``keep`` names the columns carried
+    """Per-query top-``k`` of scored (query_id, neighbor_id, cos) rows
+    (:func:`cosine_pairs`, :func:`_probed_cell_scores`, the Matryoshka
+    re-score), ranked on the UNROUNDED cosine with neighbor_id as
+    tie-breaker (determinism rule 1); rounding only at output. ``keep`` names the columns carried
     before ``cosine`` and ``rnk``."""
     w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
     return (
@@ -176,49 +177,100 @@ def ivf_assign(embeddings: DataFrame, centroids: DataFrame) -> DataFrame:
     )
 
 
-def ivf_topk(embeddings: DataFrame, query_pred: Column, nprobe: int = 1) -> DataFrame:
-    """IVF (inverted-file) approximate top-k with configurable ``nprobe``.
+#: Every vector whose id is a multiple of ``IVF_CENTROID_MODULUS`` is an
+#: untrained IVF centroid (:func:`_modulus_centroids`); the oracles print it.
+IVF_CENTROID_MODULUS = 25
 
-    Deterministic centroid choice (``vec_id % centroid_modulus == 0``, a
-    stand-in for a k-means step) so the DuckDB oracle can reproduce the
-    same partition assignment exactly — the approximation itself is
-    oracle-checkable, at any nprobe.
 
-    Scale path vs brute force: corpus is pre-partitioned by centroid (a
-    one-off shuffle, amortized across queries); each query scores only
-    its ``nprobe`` nearest clusters — at 1000× corpus scale the per-query
-    work grows with nprobe × cluster size, not corpus size, and recall
-    rises monotonically with nprobe. The cluster join is an equi-join on
-    ``centroid_id``, so Spark hashes both sides — no crossJoin.
-    """
-    k = 5
-    centroid_modulus = 25
-    centroids = embeddings.filter((F.col("vec_id") % centroid_modulus) == 0).select(
+def _modulus_centroids(embeddings: DataFrame) -> DataFrame:
+    """The untrained IVF centroid set ``(centroid_id, c_emb)``: every
+    vector with ``vec_id % IVF_CENTROID_MODULUS == 0`` — a deterministic
+    stand-in for a k-means step, so the DuckDB oracle reproduces the same
+    partition assignment exactly."""
+    return embeddings.filter((F.col("vec_id") % IVF_CENTROID_MODULUS) == 0).select(
         F.col("vec_id").alias("centroid_id"), F.col("embedding").alias("c_emb")
     )
-    assigned = ivf_assign(embeddings, centroids)
 
-    # Per-query probe list: top-nprobe centroids by the SAME score +
-    # tie-break as the assignment step (rank 1 == the query's own
-    # cluster, so nprobe=1 degenerates to classic IVF).
-    q_base = embeddings.filter(query_pred).select(
+
+def _query_side(embeddings: DataFrame, query_pred: Column) -> DataFrame:
+    """``(query_id, q_emb, q_norm)`` of the query vectors, norm hoisted."""
+    return embeddings.filter(query_pred).select(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("q_emb"),
         l2_norm(F.col("embedding")).alias("q_norm"),
     )
+
+
+def _cosine_probes(
+    embeddings: DataFrame, query_pred: Column, centroids: DataFrame, nprobe: int
+) -> DataFrame:
+    """Each query's top-``nprobe`` ``centroids`` by the SAME cosine and
+    centroid_id tie-break as :func:`ivf_assign` (rank 1 is the query's
+    own cell, so nprobe=1 is classic IVF): ``(query_id, q_emb, q_norm,
+    pr, q_centroid, c_emb)`` with ``pr`` the probe rank. Callers select
+    what they read; column pruning drops the rest."""
     cent = centroids.withColumn("cn", l2_norm(F.col("c_emb")))
-    probe_scored = q_base.crossJoin(F.broadcast(cent)).withColumn(
-        "cos_c",
-        dot(F.col("q_emb"), F.col("c_emb")) / (F.col("q_norm") * F.col("cn")),
-    )
     probe_w = Window.partitionBy("query_id").orderBy(
         F.desc("cos_c"), F.asc("centroid_id")
     )
-    q = (
-        probe_scored.withColumn("pr", F.row_number().over(probe_w))
+    return (
+        _query_side(embeddings, query_pred)
+        .crossJoin(F.broadcast(cent))
+        .withColumn(
+            "cos_c",
+            dot(F.col("q_emb"), F.col("c_emb")) / (F.col("q_norm") * F.col("cn")),
+        )
+        .withColumn("pr", F.row_number().over(probe_w))
         .filter(F.col("pr") <= nprobe)
-        .select("query_id", "q_emb", "q_norm", F.col("centroid_id").alias("q_centroid"))
+        .select(
+            "query_id",
+            "q_emb",
+            "q_norm",
+            "pr",
+            F.col("centroid_id").alias("q_centroid"),
+            "c_emb",
+        )
     )
+
+
+def _probed_cell_scores(assigned: DataFrame, probes: DataFrame) -> DataFrame:
+    """Every vector of a probed cell scored against its query: ``assigned``
+    (vec_id, embedding, centroid_id), partitioned as the caller gives it,
+    joins the broadcast ``probes`` (query_id, q_emb, q_norm, q_centroid,
+    ...) on the cell — an equi-join, no crossJoin — the self pair
+    dropped. Rows carry every ``probes`` column, ``neighbor_id`` and the
+    unrounded hoisted-norm ``cos`` (bit-identical to
+    :func:`cosine_pairs`)."""
+    c = assigned.select(
+        F.col("vec_id").alias("neighbor_id"),
+        F.col("embedding").alias("n_emb"),
+        l2_norm(F.col("embedding")).alias("n_norm"),
+        "centroid_id",
+    )
+    return (
+        c.join(F.broadcast(probes), F.col("centroid_id") == F.col("q_centroid"))
+        .filter(F.col("query_id") != F.col("neighbor_id"))
+        .withColumn(
+            "cos",
+            dot(F.col("q_emb"), F.col("n_emb")) / (F.col("q_norm") * F.col("n_norm")),
+        )
+    )
+
+
+def ivf_topk(embeddings: DataFrame, query_pred: Column, nprobe: int = 1) -> DataFrame:
+    """IVF (inverted-file) approximate top-k with configurable ``nprobe``
+    over the :func:`_modulus_centroids` cells — the approximation itself
+    is oracle-checkable, at any nprobe.
+
+    Scale path vs brute force: corpus is pre-partitioned by centroid (a
+    one-off shuffle, amortized across queries); each query scores only
+    its ``nprobe`` nearest clusters (:func:`_cosine_probes`) — at 1000×
+    corpus scale the per-query work grows with nprobe × cluster size, not
+    corpus size, and recall rises monotonically with nprobe.
+    """
+    centroids = _modulus_centroids(embeddings)
+    assigned = ivf_assign(embeddings, centroids)
+    probes = _cosine_probes(embeddings, query_pred, centroids, nprobe)
     # Re-spread before the scoring join: the aggregate upstream leaves
     # ``assigned`` in few (byte-coalesced) partitions, but scoring is
     # CPU-bound. UNCONDITIONAL and lazy on purpose: `assigned` contains
@@ -226,31 +278,7 @@ def ivf_topk(embeddings: DataFrame, query_pred: Column, nprobe: int = 1) -> Data
     # materialize the whole quantization subplan at construction time
     # (see spread_if_few_splits docstring).
     par = embeddings.sparkSession.sparkContext.defaultParallelism
-    c = assigned.repartition(par).select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("embedding").alias("c_emb2"),
-        l2_norm(F.col("embedding")).alias("c_norm"),
-        "centroid_id",
-    )
-    scored = (
-        c.join(F.broadcast(q), F.col("centroid_id") == F.col("q_centroid"))
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn(
-            "cos",
-            dot(F.col("q_emb"), F.col("c_emb2")) / (F.col("q_norm") * F.col("c_norm")),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round("cos", 4).alias("cosine"),
-            F.col("rnk").alias("rnk"),
-        )
-    )
+    return _top_k(_probed_cell_scores(assigned.repartition(par), probes), 5)
 
 
 #: Cosine at or above which :func:`cosine_near_dup_pairs` pairs two
@@ -491,8 +519,9 @@ def _gk_units(col) -> "object":
     arithmetic on them is exact."""
     import numpy as np
 
-    x = np.stack([np.asarray(a, dtype=np.float64) for a in col])
-    return np.floor(x * float(GRID_KMEANS_UNIT))
+    from .quantize import _f64_rows
+
+    return np.floor(_f64_rows(col) * float(GRID_KMEANS_UNIT))
 
 
 def _gk_assign_mapper(with_d2: bool = False):
@@ -506,16 +535,13 @@ def _gk_assign_mapper(with_d2: bool = False):
     import numpy as np
     import pandas as pd
 
-    from .quantize import _sub_dists
+    from .quantize import _codebook, _sub_dists
 
     def _assign(batches):
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            cb = np.stack(
-                [np.asarray(c, dtype=np.float64) for c in pdf["cb"].iloc[0]]
-            )
-            d2 = _sub_dists(_gk_units(pdf["embedding"]), cb, 1)[:, :, 0]
+            d2 = _sub_dists(_gk_units(pdf["embedding"]), _codebook(pdf), 1)[:, :, 0]
             best = np.argmin(d2, axis=1)
             out = {
                 "vec_id": pdf["vec_id"].to_numpy(),
@@ -537,6 +563,25 @@ _GK_ASSIGN_SCHEMA = StructType(
         StructField("centroid_id", IntegerType()),
     ]
 )
+
+
+def _md5_anchors(vectors: DataFrame, n: int) -> DataFrame:
+    """The first ``n`` rows of ``vectors`` by ``(md5(vec_id), vec_id)``
+    with that hash ``h`` and their rank ``j`` from 0 — the cross-engine
+    deterministic seed pick of the PQ codebook, the residual codebook and
+    :func:`grid_kmeans` (DuckDB: ``ORDER BY md5(CAST(vec_id AS VARCHAR)),
+    vec_id LIMIT n``). A TakeOrderedAndProject: map-side top-n, no global
+    sort. Not checkpointed; a caller that fans it out checkpoints it."""
+    h = F.md5(F.col("vec_id").cast("string")).alias("h")
+    return (
+        vectors.select("*", h)
+        .orderBy("h", "vec_id")
+        .limit(n)
+        .withColumn(
+            "j",
+            F.row_number().over(Window.orderBy("h", "vec_id")) - F.lit(1),
+        )
+    )
 
 
 def grid_kmeans(
@@ -563,16 +608,7 @@ def grid_kmeans(
     n_clusters = 8
     base = spread_if_few_splits(embeddings.select("vec_id", "embedding"))
 
-    h = F.md5(F.col("vec_id").cast("string")).alias("h")
-    anchors = (
-        embeddings.select("vec_id", "embedding", h)
-        .orderBy("h", "vec_id")
-        .limit(n_clusters)
-        .withColumn(
-            "j",
-            F.row_number().over(Window.orderBy("h", "vec_id")) - F.lit(1),
-        )
-    )
+    anchors = _md5_anchors(embeddings.select("vec_id", "embedding"), n_clusters)
     cb_row = _cb_row_from_rows(
         anchors.select("j", F.posexplode("embedding").alias("dim", "x")).select(
             "j",
@@ -1382,7 +1418,6 @@ def ivf_topk_kmeans(embeddings: DataFrame, query_pred: Column) -> DataFrame:
     """
     from .quantize import _cb_rows
 
-    k = 5
     nprobe = 3
     assigned, cb_row = grid_kmeans(embeddings)
     cent_rows = _cb_rows(cb_row).select(
@@ -1392,11 +1427,7 @@ def ivf_topk_kmeans(embeddings: DataFrame, query_pred: Column) -> DataFrame:
     # Probe: nprobe nearest centers per query by exact integer squared
     # distance in grid units (matches the quantizer's assignment
     # metric), centroid_id tie-break.
-    q_base = embeddings.filter(query_pred).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"),
-        l2_norm(F.col("embedding")).alias("q_norm"),
-    )
+    q_base = _query_side(embeddings, query_pred)
     q_units = q_base.select(
         "query_id", F.posexplode("q_emb").alias("dim", "x")
     ).select(
@@ -1424,31 +1455,7 @@ def ivf_topk_kmeans(embeddings: DataFrame, query_pred: Column) -> DataFrame:
 
     # `assigned` is already spread inside grid_kmeans (Arrow map stage
     # over the spread scan — narrow, exchange-free).
-    c = assigned.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("embedding").alias("c_emb2"),
-        l2_norm(F.col("embedding")).alias("c_norm"),
-        "centroid_id",
-    )
-    scored = (
-        c.join(F.broadcast(q), F.col("centroid_id") == F.col("q_centroid"))
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn(
-            "cos",
-            dot(F.col("q_emb"), F.col("c_emb2")) / (F.col("q_norm") * F.col("c_norm")),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round("cos", 4).alias("cosine"),
-            F.col("rnk").cast("int").alias("rnk"),
-        )
-    )
+    return _top_k(_probed_cell_scores(assigned, q), 5)
 
 
 def label_centroids(embeddings: DataFrame) -> DataFrame:
@@ -1583,19 +1590,7 @@ def matryoshka_topk(embeddings: DataFrame, query_pred: Column) -> DataFrame:
         dot(F.col("q_emb"), F.col("c_emb"))
         / (F.col("q_norm") * F.col("c_norm")),
     )
-    w2 = Window.partitionBy("query_id").orderBy(
-        F.desc("cos"), F.asc("neighbor_id")
-    )
-    return (
-        full.withColumn("rnk", F.row_number().over(w2))
-        .filter(F.col("rnk") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round("cos", 4).alias("cosine"),
-            "rnk",
-        )
-    )
+    return _top_k(full, k)
 
 
 def gram_partial_totals(
@@ -1619,6 +1614,8 @@ def gram_partial_totals(
         ]
     )
 
+    from .quantize import _f64_rows
+
     def _gram(batches: Iterator) -> Iterator:
         import numpy as np
         import pandas as pd
@@ -1626,10 +1623,7 @@ def gram_partial_totals(
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            x = np.stack(
-                [np.asarray(a, dtype=np.float64) for a in pdf["embedding"]]
-            )
-            q = np.floor(x * 1e6).astype(np.int64)
+            q = np.floor(_f64_rows(pdf["embedding"]) * 1e6).astype(np.int64)
             d = q.shape[1]
             g = q.T @ q
             iu, ju = np.triu_indices(d, k=0 if include_diag else 1)

@@ -1374,7 +1374,7 @@ _register(
     f"""
     WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
     cent AS (SELECT vec_id AS centroid_id, emb AS c_emb FROM e
-             WHERE vec_id % 25 = 0),
+             WHERE vec_id % {_sim.IVF_CENTROID_MODULUS} = 0),
     assigned AS (
       {_IVF_ASSIGN_SQL}
     ),
@@ -2610,7 +2610,7 @@ _register(
     f"""
     WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
     cent AS (SELECT vec_id AS centroid_id, emb AS c_emb FROM e
-             WHERE vec_id % 25 = 0),
+             WHERE vec_id % {_sim.IVF_CENTROID_MODULUS} = 0),
     assigned AS (
       {_IVF_ASSIGN_SQL}
     ),
@@ -4389,21 +4389,24 @@ _register(
 )
 
 
+#: Dimensions per PQ sub-block of the 64-dim embeddings.
+_PQ_SUB_DIMS = 64 // _quant.PQ_SUBSPACES
+
 #: DuckDB replay of the PQ codebook + per-(vec, subspace) assignment —
 #: shared by `embedding_pq_codes` and the ADC search `similarity_topk_pq`.
-_PQ_ASSIGN_CTES = """
+_PQ_ASSIGN_CTES = f"""
     anchors AS (
       SELECT vec_id,
              ROW_NUMBER() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR)),
                                 vec_id) - 1 AS j
       FROM embeddings
       ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id
-      LIMIT 16
+      LIMIT {_quant.PQ_CENTROIDS}
     ),
     cb AS (SELECT a.j, q.dim, q.code
            FROM anchors a JOIN qcodes q ON q.vec_id = a.vec_id),
     dist AS (
-      SELECT q.vec_id, (q.dim - 1) // 8 AS m, b.j,
+      SELECT q.vec_id, (q.dim - 1) // {_PQ_SUB_DIMS} AS m, b.j,
              SUM(CAST((q.code - b.code) * (q.code - b.code) AS BIGINT)) AS d2
       FROM qcodes q JOIN cb b ON b.dim = q.dim
       GROUP BY 1, 2, 3
@@ -4450,7 +4453,7 @@ _register(
     {_PQ_ASSIGN_CTES},
     docpq AS (SELECT vec_id, m, j FROM best WHERE rn = 1),
     adc AS (
-      SELECT qc.vec_id AS query_id, (qc.dim - 1) // 8 AS m, b.j,
+      SELECT qc.vec_id AS query_id, (qc.dim - 1) // {_PQ_SUB_DIMS} AS m, b.j,
              SUM(CAST((qc.code - b.code) * (qc.code - b.code) AS BIGINT)) AS t
       FROM qcodes qc JOIN cb b ON b.dim = qc.dim
       WHERE qc.vec_id < 10
@@ -4490,7 +4493,7 @@ _register(
     docpq AS (SELECT vec_id, m, j FROM best WHERE rn = 1),
     e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
     cent AS (SELECT vec_id AS centroid_id, emb AS c_emb FROM e
-             WHERE vec_id % 25 = 0),
+             WHERE vec_id % {_sim.IVF_CENTROID_MODULUS} = 0),
     cells AS (
       SELECT vec_id, centroid_id
       FROM (SELECT e.vec_id, c.centroid_id,
@@ -4507,10 +4510,10 @@ _register(
                      ORDER BY {_COS_SQL.format(a="q.emb", b="c.c_emb")} DESC,
                               c.centroid_id) AS pr
             FROM e q, cent c WHERE q.vec_id < 10)
-      WHERE pr <= 2
+      WHERE pr <= {_quant.IVFPQ_NPROBE}
     ),
     adc AS (
-      SELECT qc.vec_id AS query_id, (qc.dim - 1) // 8 AS m, b.j,
+      SELECT qc.vec_id AS query_id, (qc.dim - 1) // {_PQ_SUB_DIMS} AS m, b.j,
              SUM(CAST((qc.code - b.code) * (qc.code - b.code) AS BIGINT)) AS t
       FROM qcodes qc JOIN cb b ON b.dim = qc.dim
       WHERE qc.vec_id < 10 GROUP BY 1, 2, 3
@@ -5927,16 +5930,15 @@ def _chain_sum(name: str, n: int) -> str:
     return "(" + " + ".join(f"{name}[{t}]" for t in range(1, n + 1)) + ")"
 
 
-#: One unrolled Lloyd step against a FLOAT codebook CTE ``{prev}``
-#: (columns j, dim, val DOUBLE): per-(vec, block) squared distances as
-#: the literal dim-ordered chain `_sub_dists` runs, argmin with
-#: smallest-j ties (np.argmin), then the centroid update — integer
-#: (sum, count) per (j, dim), ONE IEEE division, empty clusters keep the
-#: previous value (the Spark side's left-join + coalesce).
-_LLOYD_STEP_SQL = """
-    d{i} AS (
-      SELECT vec_id, m, j, {chain} AS d2
-      FROM (SELECT q.vec_id, (q.dim - 1) // 8 AS m, b.j,
+def _pq_lloyd_assign_sql(i: str, prev: str) -> str:
+    """One unrolled Lloyd assignment ``d{i}``/``best{i}`` against a FLOAT
+    codebook CTE ``prev`` (columns j, dim, val DOUBLE): per-(vec, block)
+    squared distances as the literal dim-ordered chain `_sub_dists`
+    runs, argmin with smallest-j ties (np.argmin)."""
+    w = _PQ_SUB_DIMS
+    return f"""d{i} AS (
+      SELECT vec_id, m, j, {_chain_sum("ts", w)} AS d2
+      FROM (SELECT q.vec_id, (q.dim - 1) // {w} AS m, b.j,
                    list((CAST(q.code AS DOUBLE) - b.val)
                         * (CAST(q.code AS DOUBLE) - b.val)
                         ORDER BY q.dim) AS ts
@@ -5949,24 +5951,36 @@ _LLOYD_STEP_SQL = """
                                          ORDER BY d2, j) AS rn
             FROM d{i})
       WHERE rn = 1
-    ),
+    )"""
+
+
+def _pq_trained_oracle_sql() -> str:
+    """DuckDB replay of ``quantize.pq_codes_trained``: ``LLOYD_ITERS``
+    unrolled Lloyd rounds from the integer anchor codebook, then the
+    final assignment. Each round's update is integer (sum, count) per
+    (j, dim) and ONE IEEE division; empty clusters keep the previous
+    value (the Spark side's union-seed merge)."""
+    w = _PQ_SUB_DIMS
+    rounds = "".join(
+        f"""
+    {_pq_lloyd_assign_sql(str(i), f"cb{i - 1}")},
     upd{i} AS (
       SELECT b.j, q.dim, SUM(q.code) AS s, COUNT(*) AS n
       FROM best{i} b
-      JOIN qcodes q ON q.vec_id = b.vec_id AND (q.dim - 1) // 8 = b.m
+      JOIN qcodes q ON q.vec_id = b.vec_id AND (q.dim - 1) // {w} = b.m
       GROUP BY 1, 2
     ),
     cb{i} AS MATERIALIZED (
       SELECT c.j, c.dim,
              COALESCE(CAST(u.s AS DOUBLE) / CAST(u.n AS DOUBLE), c.val)
                AS val
-      FROM {prev} c LEFT JOIN upd{i} u ON u.j = c.j AND u.dim = c.dim
+      FROM cb{i - 1} c LEFT JOIN upd{i} u ON u.j = c.j AND u.dim = c.dim
     )
-"""
-
-_register(
-    "embedding_pq_codes_trained",
-    f"""
+,
+    """
+        for i in range(2, _quant.LLOYD_ITERS + 1)
+    )
+    return f"""
     WITH {_QUANT_CTES},
     {_PQ_ASSIGN_CTES},
     -- Iteration 1 assigns under the INTEGER anchor codebook: the float
@@ -5976,7 +5990,7 @@ _register(
     upd1 AS (
       SELECT b.j, q.dim, SUM(q.code) AS s, COUNT(*) AS n
       FROM (SELECT vec_id, m, j FROM best WHERE rn = 1) b
-      JOIN qcodes q ON q.vec_id = b.vec_id AND (q.dim - 1) // 8 = b.m
+      JOIN qcodes q ON q.vec_id = b.vec_id AND (q.dim - 1) // {w} = b.m
       GROUP BY 1, 2
     ),
     cb1 AS MATERIALIZED (
@@ -5985,29 +5999,18 @@ _register(
                       CAST(c.code AS DOUBLE)) AS val
       FROM cb c LEFT JOIN upd1 u ON u.j = c.j AND u.dim = c.dim
     ),
-    {_LLOYD_STEP_SQL.format(i=2, prev="cb1", chain=_chain_sum("ts", 8))},
-    dfin AS (
-      SELECT vec_id, m, j, {_chain_sum("ts", 8)} AS d2
-      FROM (SELECT q.vec_id, (q.dim - 1) // 8 AS m, b.j,
-                   list((CAST(q.code AS DOUBLE) - b.val)
-                        * (CAST(q.code AS DOUBLE) - b.val)
-                        ORDER BY q.dim) AS ts
-            FROM qcodes q JOIN cb2 b ON b.dim = q.dim
-            GROUP BY 1, 2, 3)
-    ),
-    bestfin AS (
-      SELECT vec_id, m, j, d2
-      FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id, m
-                                         ORDER BY d2, j) AS rn
-            FROM dfin)
-      WHERE rn = 1
-    )
+    {rounds}{_pq_lloyd_assign_sql("fin", f"cb{_quant.LLOYD_ITERS}")}
     SELECT vec_id,
            array_to_string(js, ' ') AS pq_codes,
-           {_chain_sum("ds", 8)} AS distortion
+           {_chain_sum("ds", _quant.PQ_SUBSPACES)} AS distortion
     FROM (SELECT vec_id, list(j ORDER BY m) AS js, list(d2 ORDER BY m) AS ds
           FROM bestfin GROUP BY 1)
-    """,
+    """
+
+
+_register(
+    "embedding_pq_codes_trained",
+    _pq_trained_oracle_sql(),
     doc="PQ codes from a TRAINED per-subspace codebook [ext/similarity]: "
     "2 Lloyd iterations in DataFrame space, initialized from the "
     "md5-anchor codebook - so total distortion is provably <= the "
@@ -6042,7 +6045,7 @@ def _res_d2_sql(r: str, v: str, m: str) -> str:
     left-to-right accumulation bit-for-bit (each term is one IEEE
     subtract + one multiply; the chain fixes the summation order the
     same way list_dot_product replays the cosine fold)."""
-    sub = 64 // _quant.PQ_SUBSPACES
+    sub = _PQ_SUB_DIMS
     terms = [
         f"(({r}[{m}*{sub}+{t}] - {v}[{m}*{sub}+{t}])"
         f" * ({r}[{m}*{sub}+{t}] - {v}[{m}*{sub}+{t}]))"
@@ -6061,7 +6064,7 @@ _register(
     WITH e AS MATERIALIZED (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb
                FROM embeddings),
     cent AS MATERIALIZED (SELECT vec_id AS centroid_id, emb AS c_emb FROM e
-             WHERE vec_id % 25 = 0),
+             WHERE vec_id % {_sim.IVF_CENTROID_MODULUS} = 0),
     cells AS MATERIALIZED (
       SELECT vec_id, centroid_id
       FROM (SELECT e.vec_id, c.centroid_id,
@@ -6077,7 +6080,7 @@ _register(
                                 vec_id) - 1 AS j
       FROM embeddings
       ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id
-      LIMIT 16
+      LIMIT {_quant.PQ_CENTROIDS}
     ),
     cb AS MATERIALIZED (
       SELECT a.j, {_RES_DIFF_LIST.format(a="e.emb", b="c.c_emb")} AS v
@@ -6093,7 +6096,7 @@ _register(
       JOIN e ON e.vec_id = cl.vec_id
       JOIN cent c ON c.centroid_id = cl.centroid_id
     ),
-    ms AS MATERIALIZED (SELECT unnest(generate_series(0, 7)) AS m),
+    ms AS MATERIALIZED (SELECT unnest(generate_series(0, {_quant.PQ_SUBSPACES - 1})) AS m),
     dpc AS (
       SELECT d.vec_id, d.centroid_id, ms.m, cb.j,
              {_res_d2_sql("d.r", "cb.v", "ms.m")} AS d2
@@ -6113,7 +6116,7 @@ _register(
                      ORDER BY {_COS_SQL.format(a="q.emb", b="c.c_emb")} DESC,
                               c.centroid_id) AS pr
             FROM e q, cent c WHERE q.vec_id < 10)
-      WHERE pr <= 2
+      WHERE pr <= {_quant.IVFPQ_NPROBE}
     ),
     qres AS (
       SELECT p.query_id, p.q_centroid,
@@ -20443,11 +20446,7 @@ def _retrieval_recall_sweep(spark: SparkSession, sf: str) -> DataFrame:
     rank over that small table — NOT three ivf_topk calls, which would
     pay the corpus quantization per sweep point (review catch; the
     oracle already shared one MATERIALIZED assigned/probe table)."""
-    from pyspark.sql import Window as _W
-
     from .operators import similarity as _simops
-    from .operators.similarity import dot as _dot
-    from .operators.similarity import l2_norm as _l2
 
     emb = _t(spark, sf, "embeddings")
     qp = F.col("vec_id") < 10
@@ -20457,72 +20456,20 @@ def _retrieval_recall_sweep(spark: SparkSession, sf: str) -> DataFrame:
         .select("query_id", "neighbor_id")
         .localCheckpoint(eager=False)
     )
-    centroids = emb.filter((F.col("vec_id") % 25) == 0).select(
-        F.col("vec_id").alias("centroid_id"),
-        F.col("embedding").alias("c_emb"),
-    )
+    centroids = _simops._modulus_centroids(emb)
     assigned = _simops.ivf_assign(emb, centroids)
-    q_base = emb.filter(qp).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"),
-        _l2(F.col("embedding")).alias("q_norm"),
-    )
-    cent = centroids.withColumn("cn", _l2(F.col("c_emb")))
-    probe_w = _W.partitionBy("query_id").orderBy(
-        F.desc("cos_c"), F.asc("centroid_id")
-    )
-    probes = (
-        q_base.crossJoin(F.broadcast(cent))
-        .withColumn(
-            "cos_c",
-            _dot(F.col("q_emb"), F.col("c_emb"))
-            / (F.col("q_norm") * F.col("cn")),
-        )
-        .withColumn("pr", F.row_number().over(probe_w))
-        .filter(F.col("pr") <= max(nprobes))
-        .select(
-            "query_id",
-            "q_emb",
-            "q_norm",
-            "pr",
-            F.col("centroid_id").alias("q_centroid"),
-        )
-    )
+    probes = _simops._cosine_probes(emb, qp, centroids, max(nprobes))
     par = spark.sparkContext.defaultParallelism
-    corpus = assigned.repartition(par).select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("embedding").alias("n_emb"),
-        _l2(F.col("embedding")).alias("n_norm"),
-        "centroid_id",
-    )
     scored = (
-        corpus.join(
-            F.broadcast(probes),
-            F.col("centroid_id") == F.col("q_centroid"),
-        )
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            "pr",
-            (
-                _dot(F.col("q_emb"), F.col("n_emb"))
-                / (F.col("q_norm") * F.col("n_norm"))
-            ).alias("cos"),
-        )
+        _simops._probed_cell_scores(assigned.repartition(par), probes)
+        .select("query_id", "neighbor_id", "pr", "cos")
         .localCheckpoint(eager=False)  # |q|·maxprobe·cellsize rows,
         # consumed once per sweep point
     )
-    rank_w = _W.partitionBy("query_id").orderBy(
-        F.desc("cos"), F.asc("neighbor_id")
-    )
     parts = []
     for np_ in nprobes:
-        ivf = (
-            scored.filter(F.col("pr") <= np_)
-            .withColumn("rnk", F.row_number().over(rank_w))
-            .filter(F.col("rnk") <= 5)
-            .select("query_id", "neighbor_id")
+        ivf = _simops._top_k(scored.filter(F.col("pr") <= np_), 5).select(
+            "query_id", "neighbor_id"
         )
         hits = ivf.join(exact, ["query_id", "neighbor_id"]).agg(
             F.count(F.lit(1)).alias("hits")
@@ -20575,7 +20522,7 @@ def _recall_sweep_oracle_sql() -> str:
     WITH e AS MATERIALIZED (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb
                FROM embeddings),
     cent AS MATERIALIZED (SELECT vec_id AS centroid_id, emb AS c_emb FROM e
-             WHERE vec_id % 25 = 0),
+             WHERE vec_id % {_sim.IVF_CENTROID_MODULUS} = 0),
     assigned AS MATERIALIZED (
       {_IVF_ASSIGN_SQL}),
     q AS MATERIALIZED (SELECT vec_id AS query_id, emb AS q_emb FROM e

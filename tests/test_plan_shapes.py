@@ -156,15 +156,10 @@ def test_ivf_assign_is_agg_only(spark):
     """The coarse quantizer must be an agg-only argmax (partial min_by,
     map-side |C|-to-1 combine) — not a ROW_NUMBER window that ships all
     |C| scored rows per vector through the shuffle."""
-    from pyspark.sql import functions as F
-
     from streamlit_projet_spark_streaming_spark.operators import similarity as sim
 
     emb = load_table(spark, "embeddings", SF)
-    cent = emb.filter((F.col("vec_id") % 25) == 0).select(
-        F.col("vec_id").alias("centroid_id"), F.col("embedding").alias("c_emb")
-    )
-    plan = _executed_plan(sim.ivf_assign(emb, cent))
+    plan = _executed_plan(sim.ivf_assign(emb, sim._modulus_centroids(emb)))
     assert "Window" not in plan, "window argmax reintroduced"
     assert "partial_min_by" in plan or "partial_minby" in plan.lower(), (
         "lost map-side combine in the quantizer argmax"

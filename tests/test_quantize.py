@@ -112,7 +112,11 @@ def test_ivfpq_with_full_probe_equals_pq_topk(spark, emb, monkeypatch):
     exactly to the flat PQ ADC search — same neighbors, distances, ranks."""
     from pyspark.sql import functions as F
 
-    n_cells = emb.filter((F.col("vec_id") % 25) == 0).count()
+    from streamlit_projet_spark_streaming_spark.operators.similarity import (
+        _modulus_centroids,
+    )
+
+    n_cells = _modulus_centroids(emb).count()
     flat = {
         (r["query_id"], r["neighbor_id"], r["dist"], r["rnk"])
         for r in quantize.pq_topk(emb, F.col("vec_id") < 10).collect()
@@ -129,11 +133,12 @@ def test_ivfpq_candidates_come_from_probed_cells(spark, emb):
     """Every reported neighbor must live in one of its query's nprobe
     probed cells (the invariant that bounds per-query work)."""
     from pyspark.sql import functions as F
-    from streamlit_projet_spark_streaming_spark.operators.similarity import ivf_assign
-
-    centroids = emb.filter((F.col("vec_id") % 25) == 0).select(
-        F.col("vec_id").alias("centroid_id"), F.col("embedding").alias("c_emb")
+    from streamlit_projet_spark_streaming_spark.operators.similarity import (
+        _modulus_centroids,
+        ivf_assign,
     )
+
+    centroids = _modulus_centroids(emb)
     cells = {
         r["vec_id"]: r["centroid_id"]
         for r in ivf_assign(emb, centroids).select("vec_id", "centroid_id").collect()
@@ -250,11 +255,12 @@ def test_ivfpq_residual_candidates_from_probed_cells(spark, emb):
     """Neighbors must come from at most nprobe cells per query — the
     invariant that bounds per-query work at scale."""
     from pyspark.sql import functions as F
-    from streamlit_projet_spark_streaming_spark.operators.similarity import ivf_assign
-
-    centroids = emb.filter((F.col("vec_id") % 25) == 0).select(
-        F.col("vec_id").alias("centroid_id"), F.col("embedding").alias("c_emb")
+    from streamlit_projet_spark_streaming_spark.operators.similarity import (
+        _modulus_centroids,
+        ivf_assign,
     )
+
+    centroids = _modulus_centroids(emb)
     cells = {
         r["vec_id"]: r["centroid_id"]
         for r in ivf_assign(emb, centroids).select("vec_id", "centroid_id").collect()
@@ -335,3 +341,26 @@ def test_codebook_row_rejects_sparse_centroid_rows(spark):
     sparse = [r for r in dense if (r[0], r[1]) != (1, 2)]
     with pytest.raises(Exception, match="not a dense"):
         quantize._cb_row_from_rows(spark.createDataFrame(sparse, schema)).collect()
+
+
+def test_pq_trained_oracle_follows_lloyd_iters(spark, monkeypatch):
+    """The trained-PQ oracle is generated from ``quantize.LLOYD_ITERS``,
+    so a third Lloyd round on the Spark side is replayed by the
+    regenerated oracle, and no longer by the registered two-round text."""
+    from streamlit_projet_spark_streaming_spark import registry
+
+    from .conftest import SF_SMOKE
+    from .oracle_harness import compare, duckdb_conn
+
+    name = "embedding_pq_codes_trained"
+    two_rounds = registry.REGISTRY[name].oracle
+    monkeypatch.setattr(quantize, "LLOYD_ITERS", 3)
+    three_rounds = registry._pq_trained_oracle_sql()
+    assert "cb3" in three_rounds and "cb3" not in two_rounds
+    con = duckdb_conn(SF_SMOKE)
+    try:
+        df = registry.REGISTRY[name].builder(spark, SF_SMOKE).localCheckpoint()
+        assert compare(df, con, three_rounds, name) == []
+        assert compare(df, con, two_rounds, name) != []
+    finally:
+        con.close()

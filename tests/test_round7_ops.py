@@ -197,6 +197,24 @@ def test_recall_sweep_is_monotone_in_nprobe(spark):
     assert all(0 <= rec <= 1 for *_, rec in rows)
 
 
+def test_ivf_full_probe_is_exact(spark):
+    """Probing every cell makes IVF score every corpus vector with the
+    brute-force cosine and tie-break, so ``ivf_topk`` returns exactly
+    ``brute_force_topk``'s rows: the probe -> cell scorer -> rank spine
+    end to end."""
+    from streamlit_projet_spark_streaming_spark.operators import similarity as sim
+
+    emb = load_table(spark, "embeddings", SF_CORRECT)
+    pred = F.col("vec_id") < 10
+    n_cells = sim._modulus_centroids(emb).count()
+    ivf = set(map(tuple, sim.ivf_topk(emb, pred, nprobe=n_cells).collect()))
+    exact = set(map(tuple, sim.brute_force_topk(emb, pred).collect()))
+    assert len(exact) == 50
+    assert ivf == exact
+    one = set(map(tuple, sim.ivf_topk(emb, pred, nprobe=1).collect()))
+    assert one != exact
+
+
 def test_dp_noisy_counts_match_python_mechanism(spark):
     """The DP release must equal true count + (lz(x1) − lz(x2)) where
     x1/x2 are the two 28-bit md5 lanes of 'dp:<key>' — a from-scratch

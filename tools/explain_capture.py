@@ -7,10 +7,15 @@ Usage: python tools/explain_capture.py <out_dir> <suffix> <entry> [entry ...]
 capture never overwrites an earlier round's plans by default.
 
 Writes <out_dir>/<entry>_<suffix>.txt with the formatted physical plan
-of the query as built (AQE initial plan — the judge checks plan claims
-against these files). Builds plans only; runs no actions beyond what plan
-construction itself triggers (the conditional-spread probe on scan-rooted
-inputs is job-free).
+of the query as built (AQE initial plan — plan claims in the change
+notes are checked against these files). A checkpointed input shows
+there only as a ``Scan ExistingRDD`` leaf, so for an entry whose build
+calls ``localCheckpoint`` it also writes
+<out_dir>/<entry>_build_<suffix>.txt: the formatted plan of every
+``localCheckpoint`` input, in call order, each under an
+``=== checkpoint input N`` header. Builds plans only; runs
+no actions beyond what plan construction itself triggers (the
+conditional-spread probe on scan-rooted inputs is job-free).
 """
 
 from __future__ import annotations
@@ -22,8 +27,17 @@ from contextlib import redirect_stdout
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from pyspark.sql.classic.dataframe import DataFrame as _ClassicDataFrame
+
 from streamlit_projet_spark_streaming_spark.registry import REGISTRY
 from streamlit_projet_spark_streaming_spark.session import get_spark
+
+
+def _formatted(df) -> str:
+    buf = io.StringIO()
+    with redirect_stdout(buf):
+        df.explain("formatted")
+    return buf.getvalue()
 
 
 def main() -> None:
@@ -46,15 +60,34 @@ def main() -> None:
     os.makedirs(out_dir, exist_ok=True)
     spark = get_spark(app_name="explain-capture")
     spark.sparkContext.setLogLevel("ERROR")
-    for name in names:
-        df = REGISTRY[name].builder(spark, sf_dir)
-        buf = io.StringIO()
-        with redirect_stdout(buf):
-            df.explain("formatted")
-        path = os.path.join(out_dir, f"{name}_{suffix}.txt")
-        with open(path, "w") as fh:
-            fh.write(buf.getvalue())
-        print(f"wrote {path} ({len(buf.getvalue())} bytes)")
+
+    # Patch the concrete class: pyspark.sql.DataFrame is an abstract base
+    # in PySpark 4, and a patch there is never called.
+    inputs: list[str] = []
+    checkpoint = _ClassicDataFrame.localCheckpoint
+
+    def _recording_checkpoint(self, *args, **kwargs):
+        inputs.append(_formatted(self))
+        return checkpoint(self, *args, **kwargs)
+
+    _ClassicDataFrame.localCheckpoint = _recording_checkpoint
+    try:
+        for name in names:
+            inputs.clear()
+            plan = _formatted(REGISTRY[name].builder(spark, sf_dir))
+            files = {f"{name}_{suffix}.txt": plan}
+            if inputs:
+                files[f"{name}_build_{suffix}.txt"] = "".join(
+                    f"=== checkpoint input {i}\n{text}"
+                    for i, text in enumerate(inputs, 1)
+                )
+            for fname, text in files.items():
+                path = os.path.join(out_dir, fname)
+                with open(path, "w") as fh:
+                    fh.write(text)
+                print(f"wrote {path} ({len(text)} bytes)")
+    finally:
+        _ClassicDataFrame.localCheckpoint = checkpoint
     spark.stop()
 
 
